@@ -14,11 +14,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Shuffle sizing derives from the data dir's bytes (util.Sessions —
     // the one policy shared with Verify and the scale probes); no
     // SPARK_GRAFT_SHUFFLE needed at sf1/sf10.
-    val spark = util.Sessions.build(sfDir, cpus)
+    val spark = util.Sessions.build(sfDir)
     // Warmup: JVM/codegen/parquet-footer costs land here, not on the
     // alphabetically-first query (observed ~4 s inflation without it).
     // Runs the flagship shape against the BENCH dataset (entry()

@@ -15,38 +15,47 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.CoreParity.cleanedTransform(spark, "/root/testdata/sf0.001")
 
+  /** Every contributing module's query map and oracle map, listed
+    * once: `queries` and `oracleSql` are their unions (a union keeps
+    * the LAST duplicate name — SparkEntrySpec counts contributions so
+    * a collision fails loudly). */
+  def modules: Seq[(Map[String, (SparkSession, String) => DataFrame],
+                    Map[String, String])] = Seq(
+    ops.CoreParity.queries -> ops.CoreParity.oracle,
+    ops.Relational.queries -> ops.Relational.oracle,
+    ops.Extras.queries -> ops.Extras.oracle,
+    text.TextAnalysis.queries -> text.TextAnalysis.oracle,
+    dedup.Dedup.queries -> dedup.Dedup.oracle,
+    sim.Similarity.queries -> sim.Similarity.oracle,
+    ops.EventOps.queries -> ops.EventOps.oracle,
+    multimodal.Multimodal.queries -> multimodal.Multimodal.oracle,
+    ops.SqlSurface.queries -> ops.SqlSurface.oracle,
+    ops.Advanced.queries -> ops.Advanced.oracle,
+    ops.Wave2.queries -> ops.Wave2.oracle,
+    ops.Wave3.queries -> ops.Wave3.oracle,
+    ops.SkewJoin.queries -> ops.SkewJoin.oracle,
+    ops.Sampling.queries -> ops.Sampling.oracle,
+    text.CorpusStats.queries -> text.CorpusStats.oracle,
+    text.Postings.queries -> text.Postings.oracle,
+    text.Normalize.queries -> text.Normalize.oracle,
+    multimodal.Perceptual.queries -> multimodal.Perceptual.oracle,
+    ops.Quality.queries -> ops.Quality.oracle,
+    ops.Blocklist.queries -> ops.Blocklist.oracle,
+    text.Bpe.queries -> text.Bpe.oracle,
+    sim.KMeans.queries -> sim.KMeans.oracle,
+    sim.Spectral.queries -> sim.Spectral.oracle,
+    text.Sketches.queries -> text.Sketches.oracle,
+    sim.Pq.queries -> sim.Pq.oracle,
+    text.TextVectors.queries -> text.TextVectors.oracle,
+    ops.Fuzzy.queries -> ops.Fuzzy.oracle,
+    text.RetrievalEval.queries -> text.RetrievalEval.oracle,
+    ops.Mining.queries -> ops.Mining.oracle)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.CoreParity.queries ++ ops.Relational.queries ++
-      ops.Extras.queries ++
-      text.TextAnalysis.queries ++ dedup.Dedup.queries ++
-      sim.Similarity.queries ++ ops.EventOps.queries ++
-      multimodal.Multimodal.queries ++ ops.SqlSurface.queries ++
-      ops.Advanced.queries ++ ops.Wave2.queries ++ ops.Wave3.queries ++
-      ops.SkewJoin.queries ++ ops.Sampling.queries ++
-      text.CorpusStats.queries ++ text.Postings.queries ++
-      text.Normalize.queries ++ multimodal.Perceptual.queries ++
-      ops.Quality.queries ++ ops.Blocklist.queries ++
-      text.Bpe.queries ++ sim.KMeans.queries ++ sim.Spectral.queries ++
-      text.Sketches.queries ++ sim.Pq.queries ++
-      text.TextVectors.queries ++ ops.Fuzzy.queries ++
-      text.RetrievalEval.queries ++ ops.Mining.queries
+    modules.map(_._1).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ops.CoreParity.oracle ++ ops.Relational.oracle ++
-      ops.Extras.oracle ++
-      text.TextAnalysis.oracle ++ dedup.Dedup.oracle ++
-      sim.Similarity.oracle ++ ops.EventOps.oracle ++
-      multimodal.Multimodal.oracle ++ ops.SqlSurface.oracle ++
-      ops.Advanced.oracle ++ ops.Wave2.oracle ++ ops.Wave3.oracle ++
-      ops.SkewJoin.oracle ++ ops.Sampling.oracle ++
-      text.CorpusStats.oracle ++ text.Postings.oracle ++
-      text.Normalize.oracle ++ multimodal.Perceptual.oracle ++
-      ops.Quality.oracle ++ ops.Blocklist.oracle ++
-      text.Bpe.oracle ++ sim.KMeans.oracle ++ sim.Spectral.oracle ++
-      text.Sketches.oracle ++ sim.Pq.oracle ++
-      text.TextVectors.oracle ++ ops.Fuzzy.oracle ++
-      text.RetrievalEval.oracle ++ ops.Mining.oracle
+  def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
 }

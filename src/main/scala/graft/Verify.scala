@@ -9,10 +9,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Shared sizing policy (util.Sessions): partitions derive from the
     // data dir's bytes, AQE coalesces undersized shuffles back down.
-    val spark = util.Sessions.build(sfDir, cpus)
+    val spark = util.Sessions.build(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.{Checkpoints, Tokens}
+import graft.util.{Checkpoints, Sessions, Tokens}
 
 /** Deduplication operators over the `documents` table — the dedup
   * toolbox a large-scale training-data pipeline needs (exact, MinHash
@@ -916,32 +916,6 @@ object Dedup {
     * per input partition before the shuffle), and the join-back —
     * while also keyed by u — is an equi-join AQE can skew-split; a
     * window can never be split. Same semantics, skew-tolerant. */
-  /** Dev-probe alias for [[starContractRound]] (r14 QPieces). */
-  private[graft] def starContractRoundProbe(edges: DataFrame): DataFrame =
-    starContractRound(edges)
-
-  /** Dev-probe alias exposing the width knob (r15 CcRoundPlan). */
-  private[graft] def starContractRoundProbe2(edges: DataFrame,
-                                             parts: Option[Int]): DataFrame =
-    starContractRound(edges, parts)
-
-  /** Edges per star-phase shuffle partition (r15). The loop's two
-    * explicit repartitions are AQE-EXEMPT by design (exchange reuse
-    * needs the pinned count), so their width must be derived from the
-    * ROUND's edge count — which the fixpoint check already computes
-    * for free — not inherited from the session constant: a gate-scale
-    * graph (thousands of edges) otherwise pays numShufflePartitions
-    * empty tasks per phase per round, pure scheduling floor (measured
-    * ~1.0 s/round at sf0.1 on 2,658 edges), while a 100 TB edge set
-    * still fans out to the session width. 2M (a, b) pairs ≈ 100 MB of
-    * shuffle rows — guide §2.2's 100 MB–1 GB reduce-partition target. */
-  private val CcEdgesPerPartition = 2000000L
-
-  private def ccRoundParts(s: SparkSession, cnt: Long): Int =
-    math.max(1L, math.min(
-      s.sessionState.conf.numShufflePartitions.toLong,
-      (cnt + CcEdgesPerPartition - 1) / CcEdgesPerPartition)).toInt
-
   private[dedup] def starContractRound(edges: DataFrame,
                                        parts: Option[Int] = None)
       : DataFrame = {
@@ -997,21 +971,6 @@ object Dedup {
       }
   }
 
-  /** Run `f` with AQE disabled when `off` (restored in finally).
-    * Used by the CC loop ONLY for single-partition rounds, where AQE
-    * has nothing to coalesce or skew-split and each of the round's
-    * exchanges otherwise pays a separate query-stage re-optimization
-    * pause — at cluster scale rounds are multi-partition and keep
-    * AQE (including its skew-split of the join-back). */
-  private def withAqeOff[T](s: SparkSession, off: Boolean)(f: => T): T =
-    if (!off) f
-    else {
-      val k = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(k)
-      s.conf.set(k, "false")
-      try f finally s.conf.set(k, prev)
-    }
-
   /** Connected components over an undirected edge list (`a`, `b`
     * columns, any orientation) via alternating LARGE-STAR/SMALL-STAR
     * contraction (Kiveris et al., "Connected Components in MapReduce
@@ -1056,7 +1015,7 @@ object Dedup {
     // (r15): the previous spelling re-counted the prior round inside
     // the convergence test — a job per round that the cached count
     // makes free — and the count now also sizes the next round's
-    // star-phase width (see [[ccRoundParts]]).
+    // star-phase width (see [[Sessions.partsForRows]]).
     var cnt = edges.count()
     var converged = false
     var rounds = 0
@@ -1067,12 +1026,12 @@ object Dedup {
         sys.error("connectedComponents: star contraction did not " +
           "converge in 60 rounds — this exceeds log2 of any physical " +
           "edge count and indicates a bug, not a big input")
-      val parts = ccRoundParts(edges.sparkSession, cnt)
+      val parts = Sessions.partsForRows(edges.sparkSession, cnt)
       // only the round MATERIALIZATION runs under the single-partition
       // AQE guard; the confirming exceptAll stays under session AQE —
       // probed both ways, the AQE-off except pays a session-width
       // un-coalesced exchange and measured a 0.3-0.5 s LOSS per loop
-      val next = withAqeOff(edges.sparkSession, parts == 1) {
+      val next = Sessions.withAqeOff(edges.sparkSession, parts == 1) {
         Checkpoints.root(starContractRound(edges, Some(parts)))
       }
       val nextCnt = next.count()

@@ -157,7 +157,7 @@ object Fuzzy {
       // same round-robin spread as nameMatches (r15): the fam
       // aggregate's output exchange AQE-coalesces to one task on its
       // bytes, which serialized the del-key explode + blocking join +
-      // levenshtein verify through a single core (QPieces: two
+      // levenshtein verify through a single core (Probe time: two
       // 0.5 s single-task stages in q200)
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("name"),

@@ -58,8 +58,8 @@ object SkewJoin {
   }
 
   /** Advisory dial derived from the MEASURED salting regime map
-    * (records/skew_salted_r11.jsonl, tools.SkewBench, local[4] vs
-    * local[32]) — so the 100 TB operator doesn't salt blindly:
+    * (records/skew_salted_r11.jsonl, local[4] vs local[32]) — so the
+    * 100 TB operator doesn't salt blindly:
     *
     *   - AGGREGATES: don't salt for wall time. Map-side partial
     *     aggregation collapses a hot GROUP to one row per input

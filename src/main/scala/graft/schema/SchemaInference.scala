@@ -82,11 +82,14 @@ object SchemaInference {
         { t.toDouble; true }
     } catch { case _: NumberFormatException => false }
 
-  // Only formats the subsequent typed read actually parses (Spark's
-  // default CSV timestamp parsing is ISO-ish): inferring a type the
-  // reader can't parse would silently NULL the whole column.
+  // Only formats the subsequent typed read actually parses (the
+  // ingest's try_cast to timestamp is ISO-ish, seconds optional):
+  // inferring a type the reader can't parse would silently NULL the
+  // whole column. The minute forms matter: one `2025-01-28 14:00` in
+  // the sample otherwise typed a TLC pickup column as string.
   private val TsPatterns = Seq(
-    "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd")
+    "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd'T'HH:mm:ss",
+    "yyyy-MM-dd HH:mm", "yyyy-MM-dd'T'HH:mm", "yyyy-MM-dd")
 
   private def isTimestamp(s: String): Boolean = {
     // strip fractional seconds / trailing zone designator for the match

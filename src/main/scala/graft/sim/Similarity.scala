@@ -296,7 +296,7 @@ object Similarity {
     // ONE corpus signature derivation for BOTH witness legs (r15,
     // §2.4): the single-probe leg previously re-ran knnLsh's own
     // banded pipeline — two heavy stages recomputing the identical
-    // 16-dot signatures (QPieces: 2 × ~8.5 CPU-s). A shared keyed
+    // 16-dot signatures (Probe time: 2 × ~8.5 CPU-s). A shared keyed
     // repartition puts the signature computation in the exchange's
     // MAP side, so the runtime reuses one exchange and both legs'
     // bucket joins read the narrow (vec_id, band, bandVal) rows.
@@ -665,30 +665,6 @@ object Similarity {
       s"srp-shaped:$dir:${ScaledBands}x4:0.45") {
       nearDupPairsShaped(s, dir, ScaledBands, 4, 0.45)
     }.orderBy("id1", "id2")
-
-  /** Dev-probe: bucket occupancy histogram under the SCALED banding —
-    * (bucket size decile view) plus the full-triangle candidate sum
-    * for sub-cap buckets and the member count in capped ones. */
-  private[graft] def scaledBucketStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val emb = corpus(s, dir).select(col("vec_id"), col("embedding"))
-    val (bands, bits) = scaledBandShape(corpus(s, dir).count())
-    bandRows(emb.repartition(s.sparkContext.defaultParallelism),
-        bands, bits)
-      .groupBy(col("band"), col("bandVal"))
-      .agg(count(lit(1)).as("sz"))
-      .select(
-        when(col("sz") > SrpMaxBucket, lit("capped")).otherwise(
-          when(col("sz") > 100, lit("101-1000")).otherwise(
-            when(col("sz") > 10, lit("11-100")).otherwise(lit("<=10"))))
-          .as("size_class"),
-        col("sz"))
-      .groupBy(col("size_class"))
-      .agg(count(lit(1)).as("n_buckets"), sum(col("sz")).as("members"),
-        sum(col("sz") * (col("sz") - 1) / 2).as("triangle_pairs"),
-        max(col("sz")).as("max_sz"))
-      .orderBy(col("size_class"))
-  }
 
   /** The q52 pair zone unsorted — what the clustering consumer reads
     * (CC canonicalizes and checkpoints the edges anyway). */

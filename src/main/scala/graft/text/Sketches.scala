@@ -257,7 +257,7 @@ object Sketches {
   def cmSketchFreq(s: SparkSession, dir: String): DataFrame = {
     // ONE pass over the shingle stream (r15): counters, total and the
     // exact top-k previously each re-derived the zone-scan + 3-gram
-    // explode (QPieces: three serial single-task stages, 1.65 CPU-s).
+    // explode (Probe time: three serial single-task stages, 1.65 CPU-s).
     // All three now branch off the SAME (g, n_exact) aggregate — the
     // g-keyed exchange is one canonical subtree, so the stream pass
     // runs once (runtime-reused) and each branch reduces distinct

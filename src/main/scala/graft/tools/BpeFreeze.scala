@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates [[graft.text.Bpe.FrozenMerges]]: trains BPE on the
   * given corpus dir and prints the merge list as the Scala literal to
   * paste into Bpe.scala. The frozen list is a deployable tokenizer
@@ -14,13 +12,7 @@ object BpeFreeze {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val n = args.lift(1).map(_.toInt).getOrElse(12)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.build(dir)
     val merges = graft.text.Bpe.learnBpe(spark, dir, nMerges = n)
     println("  val FrozenMerges: Seq[Merge] = Seq(")
     merges.foreach { m =>

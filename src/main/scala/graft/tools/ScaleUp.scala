@@ -50,23 +50,10 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("target/sf1")
     val factor = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tables = {
-      val named = args.drop(3).toSeq
-      if (named.isEmpty) Tables.All else named
-    }
-    try {
-      tables.foreach { t =>
-        val n = writeScaled(spark, src, out, t, factor)
-        println(s"[scaleup] $t -> $n rows")
-      }
+    val spark = graft.util.Sessions.build(src)
+    val tables = Some(args.drop(3).toSeq).filter(_.nonEmpty).getOrElse(Tables.All)
+    try tables.foreach { t =>
+      println(s"[scaleup] $t -> ${writeScaled(spark, src, out, t, factor)} rows")
     } finally spark.stop()
   }
 

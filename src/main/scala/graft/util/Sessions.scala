@@ -89,7 +89,10 @@ object Sessions {
   /** Narrow (id-pair-class) rows per key-shuffle partition for an
     * ITERATIVE round's explicit repartitions — the CC loop's sizing
     * rule hoisted for the other fixpoint loops (r15): ≈2M pairs ≈
-    * 100 MB of shuffle rows, guide §2.2's reduce-partition target. */
+    * 100 MB of shuffle rows, guide §2.2's reduce-partition target.
+    * Sized from the round, not the session width: a gate-scale graph
+    * otherwise pays numShufflePartitions empty tasks per phase per
+    * round (measured ~1.0 s/round at sf0.1 on 2,658 edges). */
   private val RowsPerRoundPartition = 2000000L
 
   /** Round width from a relation's row count: ⌈rows / 2M⌉ capped at
@@ -107,9 +110,8 @@ object Sessions {
     * where AQE has nothing to coalesce or skew-split and each of the
     * round's exchanges otherwise pays a separate query-stage
     * re-optimization pause. Multi-partition rounds (cluster scale)
-    * must keep AQE. Mirrors the CC loop's private gate (r14-judged
-    * REAL); probed a LOSS as a blanket session flip — only ever pass
-    * `off = (parts == 1)`. */
+    * must keep AQE. The CC loop's gate (r14-judged REAL); probed a
+    * LOSS as a blanket session flip — only ever pass `off = (parts == 1)`. */
   def withAqeOff[T](s: SparkSession, off: Boolean)(f: => T): T =
     if (!off) f
     else {
@@ -151,12 +153,23 @@ object Sessions {
     )
   }
 
-  /** Build (or reuse) the local session sized for sfDir. */
-  def build(sfDir: String, cpus: Int, logLevel: String = "WARN"): SparkSession = {
+  /** The one cpu-count source: `SPARK_GRAFT_CPUS` when set, else the
+    * processors this JVM sees. */
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def cpusFrom(env: Option[String]): Int =
+    env.map(_.trim).filter(_.nonEmpty).map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Build (or reuse) the local session sized for sfDir — the only
+    * session builder in the program, tests and tools included, so
+    * every plan and timing is taken under the conf that ships. Logs at
+    * WARN: a quieter level would hide the [[Caps]] cap-bound WARN. */
+  def build(sfDir: String, cpus: Int = Sessions.cpus): SparkSession = {
     val b = SparkSession.builder().master(s"local[$cpus]")
     confFor(sfDir, cpus).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel(logLevel)
+    spark.sparkContext.setLogLevel("WARN")
     // set at startup, not lazily on the first events read: every query
     // then runs under one consistent conf regardless of execution order
     // (Tables.loadEvents re-sets it idempotently)

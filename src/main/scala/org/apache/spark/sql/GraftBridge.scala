@@ -46,7 +46,7 @@ object GraftBridge {
     * eagerly materialized, so nothing re-reads the deleted files. */
   /** Drain the shared listener bus — QueryExecutionListener delivery
     * is asynchronous, so a harness that reads listener-accumulated
-    * state right after an action (FullSweep's per-query overcap
+    * state right after an action (the Probe sweep's per-query overcap
     * metrics) must flush first or it races the delivery thread. */
   def waitListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)

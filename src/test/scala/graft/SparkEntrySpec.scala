@@ -18,20 +18,7 @@ class SparkEntrySpec extends AnyFunSuite {
   test("query names are unique across contributing modules") {
     // the map union silently keeps the LAST duplicate — count the
     // contributions so a collision fails loudly instead
-    val parts = Seq(
-      ops.CoreParity.queries, ops.Relational.queries, ops.Extras.queries,
-      text.TextAnalysis.queries, dedup.Dedup.queries,
-      sim.Similarity.queries, ops.EventOps.queries,
-      multimodal.Multimodal.queries, ops.SqlSurface.queries,
-      ops.Advanced.queries, ops.Wave2.queries, ops.Wave3.queries,
-      ops.SkewJoin.queries, ops.Sampling.queries,
-      text.CorpusStats.queries, text.Postings.queries,
-      text.Normalize.queries, multimodal.Perceptual.queries,
-      ops.Quality.queries, ops.Blocklist.queries, text.Bpe.queries,
-      sim.KMeans.queries, sim.Spectral.queries, text.Sketches.queries,
-      sim.Pq.queries, text.TextVectors.queries,
-      ops.Fuzzy.queries, text.RetrievalEval.queries,
-      ops.Mining.queries)
+    val parts = SparkEntry.modules.map(_._1)
     val all = parts.flatMap(_.keys)
     val dups = all.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"duplicate query names: $dups")

@@ -39,6 +39,21 @@ class CsvIngestSpec extends SparkSpec {
     assert(written.count() == 2)
   }
 
+  test("minute-resolution values in the sample still type a timestamp column") {
+    val work = tmpDir()
+    val csv = writeCsv(work, "minutes.csv",
+      "tpep_pickup_datetime,fare",
+      "2025-01-28 13:59:30,1.0",
+      "2025-01-28 14:00,2.0",
+      "2025-01-28T14:05,3.0")
+    val res = CsvIngest.ingest(spark, csv, "raw.minutes", s"$work/zones")
+    val back = spark.read.parquet(res.path)
+    assert(back.schema("tpep_pickup_datetime").dataType == TimestampType)
+    assert(back.where("tpep_pickup_datetime IS NULL").count() == 0)
+    assert(back.where("fare = 2.0 AND " +
+      "tpep_pickup_datetime = TIMESTAMP'2025-01-28 14:00:00'").count() == 1)
+  }
+
   test("re-ingest with a new column evolves additively, keeps old columns") {
     val work = tmpDir()
     val v1 = writeCsv(work, "v1.csv", "id,a", "1,x", "2,y")

@@ -34,7 +34,7 @@ import graft.tools.SkewFixture
   * answers, not wall time: map-side partial aggregation already
   * collapses a hot GROUP to one row per input partition, so sum/count
   * skew never concentrates — measured here, recorded in
-  * records/skew_salted_r11.jsonl (tools.SkewBench); the honest story
+  * records/skew_salted_r11.jsonl; the honest story
   * is that salting the agg is layout insurance, not a speedup.
   */
 class SkewStressSpec extends SparkSpec {
@@ -181,7 +181,7 @@ class SkewStressSpec extends SparkSpec {
     // regime salting exists for. (At this suite's local[4]/4
     // partitions a 1:1 join at the same skew measures NO wall-time
     // win — the hot reducer only wastes cores you have; at
-    // tools.SkewBench's local[32]/64 partitions BOTH regimes measure
+    // local[32]/64 partitions BOTH regimes measure
     // ~2.7× salted — records/skew_salted_r11.jsonl. The spread pin
     // below is the scale claim, the stopwatch corroborates.) The dim
     // is the size that on a cluster would NOT broadcast — recreated
@@ -291,7 +291,7 @@ class SkewStressSpec extends SparkSpec {
         sum(col("psum")).cast("double").as("sum_value"))
       .orderBy("event_type").collect().toSeq
     // the entire contract: identical answers with 90% of rows on one
-    // group. (Wall time is measured and recorded by tools.SkewBench —
+    // group. (Wall time is recorded in records/skew_salted_r11.jsonl —
     // map-side combine collapses the hot group to one row per input
     // partition BEFORE the shuffle, so unlike the join there is no
     // hot reducer for the salt to spread; the spec pins semantics.)
