@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.{Checkpoints, Sessions, Tokens}
+import graft.util.{Checkpoints, Tokens}
 
 /** Deduplication operators over the `documents` table — the dedup
   * toolbox a large-scale training-data pipeline needs (exact, MinHash
@@ -1003,57 +1003,20 @@ object Dedup {
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-    // checkpoint (eager), NOT persist: each round's plan would
-    // otherwise nest every prior round's and optimizer time on the
-    // chain grows super-linearly (measured 65 s of pure planning by
-    // round 3 of the old loop). Checkpointing roots a fresh plan per
-    // round. Checkpoints.root is the durability dial: set
-    // graft.checkpoint.dir and the loop survives executor loss via
-    // reliable checkpoint(); unset, it uses localCheckpoint blocks.
-    var edges = Checkpoints.root(canonical)
-    // one count per materialized round, THREADED through the loop
-    // (r15): the previous spelling re-counted the prior round inside
-    // the convergence test — a job per round that the cached count
-    // makes free — and the count now also sizes the next round's
-    // star-phase width (see [[Sessions.partsForRows]]).
-    var cnt = edges.count()
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      val tRound = System.nanoTime()
-      rounds += 1
-      if (rounds > 60)
-        sys.error("connectedComponents: star contraction did not " +
-          "converge in 60 rounds — this exceeds log2 of any physical " +
-          "edge count and indicates a bug, not a big input")
-      val parts = Sessions.partsForRows(edges.sparkSession, cnt)
-      // only the round MATERIALIZATION runs under the single-partition
-      // AQE guard; the confirming exceptAll stays under session AQE —
-      // probed both ways, the AQE-off except pays a session-width
-      // un-coalesced exchange and measured a 0.3-0.5 s LOSS per loop
-      val next = Sessions.withAqeOff(edges.sparkSession, parts == 1) {
-        Checkpoints.root(starContractRound(edges, Some(parts)))
-      }
-      val nextCnt = next.count()
-      // exact fixpoint test, count-first: counts over checkpointed
-      // RDDs are near-free and DIFFER on every non-final round (the
-      // edge set shrinks), so the shuffle-heavy except runs only on
-      // the confirming round. (A one-job symmetric-difference
-      // spelling pays a double anti-join every round — measured no
-      // better.) Equal counts + empty one-sided except ⟺ set equality
-      // for distinct sets.
-      converged = nextCnt == cnt && next.exceptAll(edges).isEmpty
-      val old = edges
-      edges = next
-      cnt = nextCnt
-      // Dataset.unpersist is a NO-OP for localCheckpoint blocks (they
-      // are RDD-level persisted, never registered with the
-      // CacheManager — review finding); free blocks AND any reliable
-      // checkpoint files of the superseded round via the bridge.
-      Checkpoints.free(old)
-      if (sys.env.contains("GRAFT_DEBUG"))
-        println(f"[cc] round=$rounds edges=$cnt parts=$parts " +
-          f"took=${(System.nanoTime() - tRound) / 1e9}%.2f s")
+    // Checkpoints.iterate roots each round (eager, the durability
+    // dial), NOT persist: each round's plan would otherwise nest every
+    // prior round's, and optimizer time grows super-linearly (65 s of
+    // pure planning by round 3 of the old loop). Fixpoint test,
+    // count-first: counts DIFFER on every non-final round (the edge set
+    // shrinks), so the shuffle-heavy except runs only on the confirming
+    // round (a one-job symmetric difference measured no better); equal
+    // counts + empty one-sided except ⟺ set equality for distinct sets.
+    // 60 rounds exceed log2 of any physical edge count: the cap is a bug.
+    val edges = Checkpoints.iterate("connectedComponents", canonical,
+      Checkpoints.UntilStable(60,
+        (prev, next) => next.exceptAll(prev).isEmpty),
+      Checkpoints.RoundWidth) { (edges, parts) =>
+      Some(starContractRound(edges, Some(parts)))
     }
     // star forest: every non-root appears exactly once as b, rooted at a
     edges.select(col("b").as("id"), col("a").as("label"))

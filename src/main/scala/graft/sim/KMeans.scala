@@ -87,6 +87,15 @@ object KMeans {
     prev.indices.map(j => byCluster.getOrElse(j, prev(j)))
   }
 
+  /** The K centroids after [[Iters]] Lloyd rounds from the first K
+    * vectors by vec_id — q173's fit and the PQ coarse quantizer. */
+  private[sim] def fit(v: DataFrame): Seq[Array[Long]] = {
+    val init: Seq[Array[Long]] = v.orderBy("vec_id").limit(K)
+      .select(col("q")).collect().toSeq
+      .map(_.getSeq[Long](0).toArray)
+    (1 to Iters).foldLeft(init)((c, _) => update(assign(v, c), c))
+  }
+
   /** The fitted assignment (vec_id, cluster, dist2), memoized: the
     * Lloyd loop is a multi-job driver fold, deterministic per
     * (dir, K, Iters, Fp), so it runs once per application and every
@@ -96,13 +105,7 @@ object KMeans {
     graft.util.Scratch.memo(s, "kmeans-assign",
       s"kmeans-assign:$dir:$K:$Iters:$Fp") {
       val v = fixedZone(s, dir)
-      val init: Seq[Array[Long]] = v.orderBy("vec_id").limit(K)
-        .select(col("q")).collect().toSeq
-        .map(_.getSeq[Long](0).toArray)
-      val finalCents = (1 to Iters).foldLeft(init) { (c, _) =>
-        update(assign(v, c), c)
-      }
-      assign(v, finalCents)
+      assign(v, fit(v))
         .select(col("vec_id"), col("cluster"), col("dist2"))
     }
 

@@ -308,23 +308,16 @@ object Pq {
       .orderBy("query_id", "rank")
   }
 
-  /** The K coarse centroids after the q173 fit — the same driver
-    * fold `assignZone` runs, cached per zone key. */
+  /** The K coarse centroids after the q173 fit ([[KMeans.fit]]),
+    * cached per zone key. */
   private val coarseCache =
     new java.util.concurrent.ConcurrentHashMap[String,
       Seq[Array[Long]]]()
   private[sim] def coarseCentroids(s: SparkSession,
                                    dir: String): Seq[Array[Long]] =
     coarseCache.computeIfAbsent(
-      s"$dir:${KMeans.K}:${KMeans.Iters}:${KMeans.Fp}", { _ =>
-        val v = KMeans.fixedZone(s, dir)
-        val init: Seq[Array[Long]] = v.orderBy("vec_id")
-          .limit(KMeans.K).select(col("q")).collect().toSeq
-          .map(_.getSeq[Long](0).toArray)
-        (1 to KMeans.Iters).foldLeft(init) { (c, _) =>
-          KMeans.update(KMeans.assign(v, c), c)
-        }
-      })
+      s"$dir:${KMeans.K}:${KMeans.Iters}:${KMeans.Fp}",
+      _ => KMeans.fit(KMeans.fixedZone(s, dir)))
 
   /** q189: per-cell PQ health report — for each coarse IVF cell: how
     * many vectors, their total and mean quantization error. The

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Checkpoints
 
 /** Spectral embedding analysis: exact fixed-point covariance and a
   * PCA top-component projection — the "what direction does this
@@ -334,21 +335,21 @@ object Spectral {
     * "far" with a real hop count.
     *
     * Scale shape: the q268 undirected-edge derivation (≤ 2·k·n rows,
-    * derived once, localCheckpoint-ed); each round is one src-keyed
+    * derived once, rooted); each round is one src-keyed
     * join + one dst-keyed min rollup — the q180 iterate shape — and
     * the frontier relation is n rows, never collected. All-integer
     * min-plus arithmetic: nothing to drift cross-engine. */
   def seedDistance(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint, NOT the undZone parquet memo: consumed once per
-    // BFS round and memory blocks beat repeated parquet opens (probed
-    // r15: 1.02 → 1.69 s as a zone — reverted)
+    // a rooted relation (the durability dial), NOT the undZone parquet
+    // memo: consumed once per BFS round and checkpoint blocks beat
+    // repeated parquet opens (probed r15: 1.02 → 1.69 s as a zone —
+    // reverted)
     val e = Similarity.knnGraphZone(s, dir)
-    val und = e.select(col("query_id").as("src"),
+    val und = Checkpoints.root(e.select(col("query_id").as("src"),
         col("neighbor_id").as("dst"))
       .union(e.select(col("neighbor_id").as("src"),
         col("query_id").as("dst")))
-      .distinct()
-      .localCheckpoint(true) // consumed once per round — derive ONCE
+      .distinct()) // consumed once per round — derive ONCE
     val nodes = corpus(s, dir).select(col("vec_id").as("id"))
     val dist0 = nodes
       .select(col("id"), when(seedPred(col("id")), lit(0L)).as("d"))
@@ -362,29 +363,25 @@ object Spectral {
     * (id, d) frontier / undirected (src, dst) graph — exposed for
     * SpectralSpec's path-graph contract. */
   private[graft] def bfsIterate(dist0: DataFrame,
-                                und: DataFrame): DataFrame = {
-    // NOT given the q232 round-width/AQE-gate treatment: probed r15 a
-    // 1.49 → 1.98 s LOSS — these rounds' joins were already
-    // AQE-broadcast-cheap, and the pinned single-partition exchanges
-    // serialized them. The treatment pays only where a round's joins
-    // run as no-stats sort-merge at session width (kCore's
-    // checkpointed semi-join sides).
-    var dist = dist0.localCheckpoint(true)
-    for (_ <- 1 to BfsRounds) {
+                                und: DataFrame): DataFrame =
+    // session width, NOT the q232 round-width/AQE-gate treatment:
+    // probed r15 a 1.49 → 1.98 s LOSS — these rounds' joins were
+    // already AQE-broadcast-cheap, and the pinned single-partition
+    // exchanges serialized them (it pays only where rounds run as
+    // no-stats sort-merge at session width: kCore's semi-joins)
+    Checkpoints.iterate("bfsIterate", dist0,
+      Checkpoints.Rounds(BfsRounds)) { (dist, _) =>
       val relax = und
         .join(dist.where(col("d").isNotNull), col("src") === col("id"))
         .groupBy(col("dst")).agg(min(col("d") + lit(1L)).as("nd"))
-      dist = dist.join(relax, dist("id") === relax("dst"), "left")
+      Some(dist.join(relax, dist("id") === relax("dst"), "left")
         .select(dist("id"),
           // least() null semantics differ across engines — spell the
           // three-way min explicitly and identically on both sides
           when(col("d").isNull, col("nd"))
             .when(col("nd").isNull, col("d"))
-            .otherwise(least(col("d"), col("nd"))).as("d"))
-        .localCheckpoint(true) // read twice next round
+            .otherwise(least(col("d"), col("nd"))).as("d")))
     }
-    dist
-  }
 
   /** q276: personalized PageRank from the seed set — q180's damped
     * integer iteration with teleport mass restricted to the trusted
@@ -561,29 +558,24 @@ object Spectral {
     * the survivor relation only shrinks. CRITICAL iteration rule: the
     * survivor set feeds TWO joins per round, so the lineage would
     * recompute 2^rounds times if left lazy — each round's survivors
-    * (and the shared undirected relation) are materialized with an
-    * eager localCheckpoint, the single-app spelling of the
-    * ClusterMaint per-round zone write (the q208 UnionLoop lesson).
+    * (and the shared undirected relation) are eagerly rooted through
+    * [[Checkpoints]], the single-app spelling of the ClusterMaint
+    * per-round zone write (the q208 UnionLoop lesson).
     * Emits every node with its membership flag and in-core degree. */
   def kCore(s: SparkSession, dir: String): DataFrame = {
     val e = Similarity.knnGraphZone(s, dir)
     // mutual edges: one self-join on the reversed pair — symmetric by
     // construction, so no union/distinct pass is needed
-    val und = e.as("a").join(e.as("b"),
+    // consumed 2× per round — derive ONCE
+    val und = Checkpoints.root(e.as("a").join(e.as("b"),
         col("a.query_id") === col("b.neighbor_id") &&
           col("a.neighbor_id") === col("b.query_id"), "left_semi")
-      .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      .localCheckpoint(true) // consumed 2× per round — derive ONCE
+      .select(col("query_id").as("src"), col("neighbor_id").as("dst")))
     val nodes = corpus(s, dir).select(col("vec_id").as("id"))
-    // Scale-adaptive round width + single-partition AQE gate (r15 —
-    // the connectedComponents treatment applied to the peel loop):
-    // the mutual edge set is FIXED, so one count sizes every round's
-    // three exchanges; a gate-scale graph otherwise pays AQE's
-    // query-stage re-optimization pause per exchange per round on
-    // near-empty session-width shuffles. At 100 TB the edge count
-    // derives the session-width cap, rounds stay multi-partition and
-    // AQE stays on (including its semi-join skew split).
-    val parts = graft.util.Sessions.partsForRows(s, und.count())
+    // the CC round width + AQE gate (r15): the mutual edge set is
+    // FIXED, so one count sizes every round's three exchanges; at
+    // 100 TB it derives the session width and AQE stays on
+    val parts = Checkpoints.partsForRows(s, und.count())
     def coreDeg(alive: DataFrame): DataFrame = und
       .repartition(parts, col("src"))
       .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
@@ -591,25 +583,13 @@ object Spectral {
       .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
       .repartition(parts, col("src"))
       .groupBy(col("src")).agg(count(lit(1)).as("d"))
-    def aqeGate[T](f: => T): T = graft.util.Sessions.withAqeOff(
-      s, off = parts == 1)(f)
-    var alive = nodes.localCheckpoint(true)
-    var prev = alive.count()
-    var stable = false
-    var round = 0
-    while (!stable) {
-      round += 1
-      require(round <= CoreRounds,
-        s"k-core peel not stable after $CoreRounds rounds — raise " +
-          "CoreRounds (oracle unroll) to match")
-      alive = aqeGate {
-        coreDeg(alive).where(col("d") >= CoreK)
-          .select(col("src").as("id"))
-          .localCheckpoint(true) // truncate: read twice next round
-      }
-      val n = alive.count()
-      stable = n == prev // monotone-shrinking ⇒ equal count = fixpoint
-      prev = n
+    // survivors are read twice next round (rooted); monotone-shrinking
+    // ⇒ equal count = fixpoint; past CoreRounds, raise it (and the unroll)
+    val alive = Checkpoints.iterate("kCore", nodes,
+      Checkpoints.UntilStable(CoreRounds),
+      Checkpoints.FixedWidth(parts)) { (alive, _) =>
+      Some(coreDeg(alive).where(col("d") >= CoreK)
+        .select(col("src").as("id")))
     }
     val finalDeg = coreDeg(alive)
       .select(col("src").as("id"), col("d").as("deg_core"))
@@ -664,7 +644,7 @@ object Spectral {
     * Scale shape: per round, one edge⋈label join + one (node, label)
     * count + one per-node argmax — all key-partitioned with k-bounded
     * fan-in (≤ 2k votes/node), never a corpus broadcast; round state
-    * is eagerly localCheckpoint-ed (the q232/q208 lineage rule).
+    * is eagerly rooted (the q232/q208 lineage rule).
     * Deterministic argmax = row_number over (count DESC, label ASC),
     * the shared cross-engine tie-break idiom. */
   def labelProp(s: SparkSession, dir: String): DataFrame = {
@@ -683,9 +663,10 @@ object Spectral {
   private[graft] def labelPropIterate(nodes: DataFrame,
                                       und: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var labels = nodes.withColumn("lbl", col("id"))
-      .localCheckpoint(true)
-    for (_ <- 1 to LpRounds) {
+    // each round's labels are read twice next round (+ final sizes)
+    Checkpoints.iterate("labelPropIterate",
+      nodes.withColumn("lbl", col("id")),
+      Checkpoints.Rounds(LpRounds)) { (labels, _) =>
       val votes = und
         .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
@@ -694,12 +675,10 @@ object Spectral {
       val best = votes.withColumn("rn", row_number().over(win))
         .where(col("rn") === 1)
         .select(col("src").as("id"), col("lbl").as("nlbl"))
-      labels = labels.join(best, Seq("id"), "left")
+      Some(labels.join(best, Seq("id"), "left")
         .select(col("id"),
-          coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true) // read twice next round + final sizes
+          coalesce(col("nlbl"), col("lbl")).as("lbl")))
     }
-    labels
   }
 
   /** The symmetrized DISTINCT undirected edge relation of the q155

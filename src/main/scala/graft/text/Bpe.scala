@@ -70,17 +70,13 @@ object Bpe {
     * remains. */
   def learnBpe(s: SparkSession, dir: String, nMerges: Int = 32,
                minFreq: Long = 1L): Seq[Merge] = {
-    import s.implicits._
-    // (symbol sequence, freq) per distinct word — the training state.
-    // Checkpoint per round: same plan-growth reasoning as the CC loop
-    // (each round otherwise nests all prior rounds' plans).
-    // Checkpoints.root = the durability dial (graft.checkpoint.dir ⇒
-    // reliable checkpoint, survives executor loss; unset ⇒ local).
-    var words = Checkpoints.root(wordFreqs(s, dir, minFreq)
-      .select(split(col("word"), "").as("syms"), col("freq")))
+    // (symbol sequence, freq) per distinct word — the training state,
+    // rooted per round like the CC loop; the answer is the driver-side
+    // merge table, so the final round is freed too (keep = false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var round = 0
-    while (round < nMerges) {
+    Checkpoints.iterate("learnBpe", wordFreqs(s, dir, minFreq)
+        .select(split(col("word"), "").as("syms"), col("freq")),
+      Checkpoints.Rounds(nMerges), keep = false) { (words, _) =>
       // adjacent-pair counts, weighted by word frequency; the argmax
       // row is the ONLY thing that reaches the driver
       val best = words
@@ -92,9 +88,9 @@ object Bpe {
         .groupBy("l", "r").agg(sum("freq").as("c"))
         .orderBy(col("c").desc, col("l"), col("r"))
         .limit(1).collect()
-      if (best.isEmpty) round = nMerges
-      else {
-        val (l, r) = (best(0).getString(0), best(0).getString(1))
+      // no pair left: training stops early
+      best.headOption.map { b =>
+        val (l, r) = (b.getString(0), b.getString(1))
         merges += Merge(merges.length, l, r)
         // map-side merge application over the word table: fuse every
         // non-overlapping (l, r) left-to-right — as a COLUMN fold
@@ -102,15 +98,10 @@ object Bpe {
         // Project over the checkpoint, with no
         // DeserializeToObject/SerializeFromObject encoder round-trip
         // per word (the previous typed `.map` spelling paid one)
-        val mergedWords = words.select(
-          applyMergeCol(col("syms"), l, r).as("syms"), col("freq"))
-        val next = Checkpoints.root(mergedWords)
-        Checkpoints.free(words)
-        words = next
-        round += 1
+        words.select(applyMergeCol(col("syms"), l, r).as("syms"),
+          col("freq"))
       }
     }
-    Checkpoints.free(words)
     merges.toSeq
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.Tokens
+import graft.util.{Checkpoints, Tokens}
 
 /** Postings-relation operators: the EXACT set-similarity self-join
   * (prefix filtering — the lossless counterpart to the MinHash/SimHash
@@ -436,8 +436,8 @@ object Postings {
     * each half-step is one key-partitioned join + rollup (the q180
     * iterate shape, alternating which side is the key); the 1-row
     * shift/threshold relations are the sanctioned constant
-    * broadcasts; per-round state is localCheckpoint-ed (the q232
-    * lineage rule). */
+    * broadcasts; per-round state is rooted through
+    * [[graft.util.Checkpoints.iterate]] (the q232 lineage rule). */
   /** Terms inside the [2, (pct·n_docs) div 100] df band from a
     * distinct (doc_id, th) relation — the shared q273/q280 vertex
     * set. The 1-row threshold is the sanctioned constant broadcast. */
@@ -469,12 +469,13 @@ object Postings {
       .select(col("doc_id"), Md5Prefix.h(col("t")).as("th"))
       .distinct()
     val banded = dfBanded(s, dir, pairs)
-    val edges = pairs.join(banded, "th")
-      .localCheckpoint(true) // consumed twice per round — derive ONCE
-    var hub = edges.select(col("doc_id")).distinct()
-      .withColumn("h", lit(1L << HitsBits))
-      .localCheckpoint(true)
-    for (_ <- 1 to HitsRounds) {
+    val edges = Checkpoints.root(pairs.join(banded, "th")) // read 2×/round
+    // session width, NOT the q232 round-width/AQE-gate treatment: probed
+    // r15 a 3.16 → 3.52 s LOSS. Hubs are read twice next round: rooted.
+    val hub = Checkpoints.iterate("hitsHubs",
+      edges.select(col("doc_id")).distinct()
+        .withColumn("h", lit(1L << HitsBits)),
+      Checkpoints.Rounds(HitsRounds)) { (hub, _) =>
       val authRaw = edges.join(hub, "doc_id")
         .groupBy(col("th")).agg(sum(col("h")).as("a"))
       val aSh = authRaw.agg(greatest(lit(0),
@@ -487,9 +488,8 @@ object Postings {
       val hSh = hubRaw.agg(greatest(lit(0),
         length(bin(max(col("hr")))).cast("int") - lit(HitsBits))
         .as("sh"))
-      hub = hubRaw.crossJoin(broadcast(hSh))
-        .select(col("doc_id"), expr("shiftright(hr, sh)").as("h"))
-        .localCheckpoint(true) // read twice next round
+      Some(hubRaw.crossJoin(broadcast(hSh))
+        .select(col("doc_id"), expr("shiftright(hr, sh)").as("h")))
     }
     hub.select(col("doc_id"), col("h").as("hub_fp"))
       .orderBy("doc_id")

@@ -22,35 +22,18 @@ object GraftBridge {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Eagerly free the blocks behind a `localCheckpoint()`ed Dataset.
-    * `Dataset.unpersist` is a no-op for these — it goes through the
-    * CacheManager, but localCheckpoint persists at the RDD level and
-    * never registers there; without this, every iteration of a
-    * checkpointed loop leaves its blocks pinned until GC +
-    * ContextCleaner. Reaches the underlying RDD via the analyzed
-    * `LogicalRDD` node (why this file lives in `org.apache.spark.sql`). */
-  def unpersistLocalCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Free a superseded checkpoint in EITHER mode: unpersist the
     * RDD-level blocks (local checkpoint), and delete the checkpoint
     * files (reliable checkpoint) — Spark cleans those only via the
     * ContextCleaner with `spark.cleaner.referenceTracking
     * .cleanCheckpoints=true`, so a 40-round iterative loop would
     * otherwise leave 40 full copies of its state on the checkpoint
-    * store. Callers free round N's state only after round N+1 is
-    * eagerly materialized, so nothing re-reads the deleted files. */
-  /** Drain the shared listener bus — QueryExecutionListener delivery
-    * is asynchronous, so a harness that reads listener-accumulated
-    * state right after an action (the Probe sweep's per-query overcap
-    * metrics) must flush first or it races the delivery thread. */
-  def waitListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
-
+    * store. `Dataset.unpersist` is a no-op here: it goes through the
+    * CacheManager, but a checkpoint persists at the RDD level and
+    * never registers there, so this reaches the RDD via the analyzed
+    * `LogicalRDD` node (why this file lives in `org.apache.spark.sql`).
+    * Callers free round N's state only after round N+1 is eagerly
+    * materialized, so nothing re-reads the freed blocks or files. */
   def freeCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -60,4 +43,11 @@ object GraftBridge {
             .cleanCheckpoint(lr.rdd.sparkContext, lr.rdd.id)
       case _ => ()
     }
+
+  /** Drain the shared listener bus — QueryExecutionListener delivery
+    * is asynchronous, so a harness that reads listener-accumulated
+    * state right after an action (the Probe sweep's per-query overcap
+    * metrics) must flush first or it races the delivery thread. */
+  def waitListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 }

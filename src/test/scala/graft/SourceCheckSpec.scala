@@ -9,10 +9,15 @@ import graft.util.Sessions
 /** One session builder, one cpu source: outside `util/Sessions.scala`
   * no main or test source may build a SparkSession or read the cpu
   * env var, so every entry point, tool and suite plans under the conf
-  * that the bench times. */
+  * that the bench times. One loop policy: outside
+  * `util/Checkpoints.scala` no main source gates AQE or frees a
+  * checkpoint, so every round-materializing loop goes through
+  * `Checkpoints.iterate`. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
+  private val checkpoints =
+    root.resolve("src/main/scala/graft/util/Checkpoints.scala")
   // this spec names both patterns, so it is exempt like Sessions itself
   private val self = root.resolve("src/test/scala/graft/SourceCheckSpec.scala")
 
@@ -39,6 +44,17 @@ class SourceCheckSpec extends SparkSpec {
   test("SPARK_GRAFT_CPUS is read only in util/Sessions.scala") {
     val bad = offenders("SPARK_GRAFT_CPUS")
     assert(bad.isEmpty, s"take the cpu count from Sessions.cpus: $bad")
+  }
+
+  test("withAqeOff and Checkpoints.free appear in src/main only in util/Checkpoints.scala") {
+    val main = root.resolve("src/main")
+    val bad = for {
+      needle <- Seq("withAqeOff", "Checkpoints.free")
+      p <- sources
+      if p.startsWith(main) && p != checkpoints &&
+        Files.readString(p).contains(needle)
+    } yield s"${root.relativize(p)}: $needle"
+    assert(bad.isEmpty, s"run the loop through Checkpoints.iterate: $bad")
   }
 
   test("Sessions.cpus honours SPARK_GRAFT_CPUS, else the processor count") {

@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.dedup.Dedup
+import graft.sim.Spectral
 
 /** The durability dial: with `graft.checkpoint.dir` set, iterative
   * loops must root each round on RELIABLE checkpoints (files in the
   * configured dir — what survives executor loss on a preemptible
   * cluster), free superseded rounds' files, and produce the same
-  * answers as local mode. */
+  * answers as local mode. [[Checkpoints.iterate]] owns that round
+  * policy, including the loud round cap. Every temp root is deleted. */
 class CheckpointsSpec extends SparkSpec {
 
   private def rddDirs(root: Path): Seq[Path] =
@@ -22,10 +24,23 @@ class CheckpointsSpec extends SparkSpec {
         p.getFileName.toString.startsWith("rdd-"))
       .toSeq
 
-  test("root() writes reliable checkpoint files when the dir is set") {
-    val dir = Files.createTempDirectory("graft-ckpt")
+  /** Run `f` with the dial pointed at a fresh temp dir; afterwards the
+    * dial is unset and the dir deleted with its contents. */
+  private def withDial(prefix: String)(f: Path => Unit): Unit = {
+    val dir = Files.createTempDirectory(prefix)
     spark.conf.set(Checkpoints.DirKey, dir.toString)
-    try {
+    try f(dir)
+    finally {
+      spark.conf.unset(Checkpoints.DirKey)
+      val s = Files.walk(dir)
+      try s.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally s.close()
+    }
+  }
+
+  test("root() writes reliable checkpoint files when the dir is set") {
+    withDial("graft-ckpt") { dir =>
       val rooted = Checkpoints.root(
         spark.range(100).toDF("a").withColumn("b", col("a") + 1))
       assert(rooted.count() == 100)
@@ -35,16 +50,15 @@ class CheckpointsSpec extends SparkSpec {
       Checkpoints.free(rooted)
       assert(rddDirs(dir).isEmpty,
         "free() must delete the reliable checkpoint files")
-    } finally spark.conf.unset(Checkpoints.DirKey)
+    }
   }
 
   test("re-pointing the dir takes effect even when it is a substring") {
     // regression: a substring containment test ignored a re-point
     // from .../ckpt to .../ck (the new dir is a substring of the old)
-    val base = Files.createTempDirectory("graft-repoint")
-    val oldDir = base.resolve("ckpt"); val newDir = base.resolve("ck")
-    Files.createDirectories(oldDir); Files.createDirectories(newDir)
-    try {
+    withDial("graft-repoint") { base =>
+      val oldDir = base.resolve("ckpt"); val newDir = base.resolve("ck")
+      Files.createDirectories(oldDir); Files.createDirectories(newDir)
       spark.conf.set(Checkpoints.DirKey, oldDir.toString)
       Checkpoints.free(Checkpoints.root(spark.range(5).toDF("a")))
       spark.conf.set(Checkpoints.DirKey, newDir.toString)
@@ -53,7 +67,7 @@ class CheckpointsSpec extends SparkSpec {
       assert(rddDirs(newDir).nonEmpty,
         "checkpoints must land in the re-pointed dir, not the old one")
       Checkpoints.free(rooted)
-    } finally spark.conf.unset(Checkpoints.DirKey)
+    }
   }
 
   test("root() stays executor-local when the dir is unset") {
@@ -67,9 +81,7 @@ class CheckpointsSpec extends SparkSpec {
 
   test("connected components under the reliable dial: same labels, bounded files") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ckpt-cc")
-    spark.conf.set(Checkpoints.DirKey, dir.toString)
-    try {
+    withDial("graft-ckpt-cc") { dir =>
       val rnd = new scala.util.Random(7)
       val ids = rnd.shuffle((0L until 200L).toVector)
       val edges = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("a", "b")
@@ -81,6 +93,55 @@ class CheckpointsSpec extends SparkSpec {
       // final edge set may keep its checkpoint on disk
       assert(rddDirs(dir).sizeIs <= 1,
         s"superseded rounds must be freed, found ${rddDirs(dir)}")
-    } finally spark.conf.unset(Checkpoints.DirKey)
+    }
+  }
+
+  test("bfs under the reliable dial: same distances, bounded files") {
+    import spark.implicits._
+    // SpectralSpec's path 0-1-2-3-4-5, seed at 0; BfsRounds = 4
+    val es = (0L to 4L).map(i => (i, i + 1))
+    val und = es.toDF("src", "dst")
+      .union(es.map(_.swap).toDF("src", "dst"))
+    val d0 = (0L to 5L).map(i =>
+      (i, if (i == 0L) Some(0L) else None)).toDF("id", "d")
+    withDial("graft-ckpt-bfs") { dir =>
+      val got = Spectral.bfsIterate(d0, und).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1)))
+        .toMap
+      assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L,
+        4L -> 4L, 5L -> -1L), s"distances: $got")
+      assert(rddDirs(dir).nonEmpty,
+        "bfs rounds must root on reliable checkpoint files")
+      assert(rddDirs(dir).sizeIs <= 1,
+        s"superseded rounds must be freed, found ${rddDirs(dir)}")
+    }
+  }
+
+  test("iterate fails loudly past the round cap, naming the loop") {
+    val err = intercept[RuntimeException] {
+      // the row count doubles every round: never stable
+      Checkpoints.iterate("doubling", spark.range(1).toDF("a"),
+        Checkpoints.UntilStable(3))((df, _) => Some(df.union(df)))
+    }
+    assert(err.getMessage.contains("doubling") &&
+      err.getMessage.contains("3 rounds"), err.getMessage)
+  }
+
+  test("iterate runs exactly n fixed rounds, fewer when the step ends it") {
+    var steps = 0
+    val out = Checkpoints.iterate("fixed", spark.range(3).toDF("a"),
+      Checkpoints.Rounds(4)) { (df, _) =>
+      steps += 1
+      Some(df.select((col("a") + 1).as("a")))
+    }
+    assert(steps == 4)
+    assert(out.collect().map(_.getLong(0)).toSet == Set(4L, 5L, 6L))
+    steps = 0
+    Checkpoints.iterate("early", spark.range(3).toDF("a"),
+      Checkpoints.Rounds(4), keep = false) { (df, _) =>
+      steps += 1
+      if (steps == 2) None else Some(df)
+    }
+    assert(steps == 2)
   }
 }
