@@ -611,6 +611,19 @@ object EventOps {
       .orderBy("event_id")
   }
 
+  /** The day-partitioned events zone — shared by the static-pruning
+    * (q86) and dynamic-pruning (q217) consumers. A `Scratch.memoZone`
+    * keyed by kind and dir: built once per application, app-scoped,
+    * deleted by `Scratch.clear`, and its build counted in
+    * `Scratch.buildSeconds`. */
+  private[ops] def eventsByDayZone(s: SparkSession, dir: String): String =
+    graft.util.Scratch.memoZone(s, "events_by_day", s"events_by_day:$dir") { p =>
+      val ev = Tables.load(s, dir, "events")
+        .withColumn("event_date", to_date(col("ts")))
+      graft.pipeline.Pipeline.materializePartitioned(
+        s, ev, p, Seq("event_date"))
+    }
+
   /** q86: partitioned-zone consumer — the zone layout a 100 TB events
     * table actually uses. Events are materialized partitioned by
     * `event_date` (hive-style day directories,
@@ -618,23 +631,9 @@ object EventOps {
     * back with a 3-of-30-day predicate: the scan's plan shows
     * `PartitionFilters: [... (event_date >= 2024-01-10) ...]` and lists
     * only the three matching day directories — 90% of the table is
-    * never opened (plan audit in PLANS.md). The zone write is
-    * idempotent per scale factor (skipped when present), so the gate
-    * measures the CONSUMER, not the one-time materialization. */
-  /** The day-partitioned events zone (built once per scale dir,
-    * staging+rename publish) — shared by the static-pruning (q86) and
-    * dynamic-pruning (q217) consumers. */
-  private[ops] def eventsByDayZone(s: SparkSession, dir: String): String =
-    // fingerprint-keyed build-once + unique-staging rename publish
-    // (util.Zones): the existence gate only ever sees a FULLY written
-    // zone, and a regenerated data dir gets a fresh one
-    graft.util.Zones.oncePerDir(s, "events_by_day", dir) { staging =>
-      val ev = Tables.load(s, dir, "events")
-        .withColumn("event_date", to_date(col("ts")))
-      graft.pipeline.Pipeline.materializePartitioned(
-        s, ev, staging, Seq("event_date"))
-    }
-
+    * never opened (plan audit in PLANS.md). The zone is built once per
+    * application ([[eventsByDayZone]]), so the gate measures the
+    * CONSUMER, not the one-time materialization. */
   def partitionPruned(s: SparkSession, dir: String): DataFrame = {
     val zone = eventsByDayZone(s, dir)
     s.read.parquet(zone)
@@ -726,23 +725,25 @@ object EventOps {
     * batches (sliced by `event_id % 3`, so every batch is heavily
     * out-of-order relative to event time) must produce bit-identical
     * intervals to the one-shot batch build: the gate runs the SAME
-    * oracle string as q218. Zone built once per scale dir
-    * (staging+rename publish). */
+    * oracle string as q218. Zone built once per application
+    * ([[scd2Zone]]). */
   def scd2Maintained(s: SparkSession, dir: String): DataFrame =
     graft.sinks.Scd2Maintain.read(s, scd2Zone(s, dir))
 
-  /** The three-batch SCD2 zone (built once per scale dir; q223 and
-    * q242 both consume it). */
+  /** The three-batch SCD2 zone (q223 and q242 both consume it). A
+    * `Scratch.memoZone` keyed by kind and dir: built once per
+    * application, app-scoped, deleted by `Scratch.clear`, and its build
+    * counted in `Scratch.buildSeconds`. */
   private[ops] def scd2Zone(s: SparkSession, dir: String): String =
-    graft.util.Zones.oncePerDir(s, "scd2", dir) { staging =>
+    graft.util.Scratch.memoZone(s, "scd2", s"scd2:$dir") { p =>
       val ev = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           unix_millis(col("ts")).as("ms"))
-      graft.sinks.Scd2Maintain.init(s, staging,
+      graft.sinks.Scd2Maintain.init(s, p,
         ev.where(col("event_id") % 3 === 0))
-      graft.sinks.Scd2Maintain.applyBatch(s, staging,
+      graft.sinks.Scd2Maintain.applyBatch(s, p,
         ev.where(col("event_id") % 3 === 1))
-      graft.sinks.Scd2Maintain.applyBatch(s, staging,
+      graft.sinks.Scd2Maintain.applyBatch(s, p,
         ev.where(col("event_id") % 3 === 2))
     }
 

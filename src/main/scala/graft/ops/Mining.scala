@@ -370,9 +370,9 @@ object Mining {
     * AND that later epochs win over tombstones. The reconciled view
     * must equal the oracle's plain set algebra over `documents`.
     *
-    * The zone is built once per scale dir under a staging directory
-    * and published by rename (the q86 crash-safe idiom: the read
-    * path never sees a half-built chain). Scale shape: the reconcile
+    * The zone is built once per application ([[erasureZone]]); the
+    * memo map publishes its path only after the build returns, so the
+    * read path never sees a half-built chain. Scale shape: the reconcile
     * is MergeOnRead's one key-partitioned window; erase and restore
     * cost O(batch) writes regardless of corpus size. */
   def erasureScrub(s: SparkSession, dir: String): DataFrame = {
@@ -382,18 +382,20 @@ object Mining {
       .orderBy("doc_id")
   }
 
-  /** The erase-then-restore zone (built once per scale dir; q219 and
-    * q226 both consume it). */
+  /** The erase-then-restore zone (q219 and q226 both consume it). A
+    * `Scratch.memoZone` keyed by kind and dir: built once per
+    * application, app-scoped, deleted by `Scratch.clear`, and its build
+    * counted in `Scratch.buildSeconds`. */
   private[ops] def erasureZone(s: SparkSession, dir: String): String = {
     import graft.sinks.MergeOnRead
-    graft.util.Zones.oncePerDir(s, "mor_erasure", dir) { staging =>
+    graft.util.Scratch.memoZone(s, "mor_erasure", s"mor_erasure:$dir") { p =>
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
-      MergeOnRead.init(s, staging, docs)
-      MergeOnRead.delete(s, staging,
+      MergeOnRead.init(s, p, docs)
+      MergeOnRead.delete(s, p,
         docs.where(col("doc_id") % 97 === 0).select(col("doc_id")),
         Seq("doc_id"))
-      MergeOnRead.merge(s, staging,
+      MergeOnRead.merge(s, p,
         docs.where(col("doc_id") % 97 === 0 && col("doc_id") % 2 === 0)
           .withColumn("source", lit("restored")),
         Seq("doc_id"))
@@ -428,13 +430,8 @@ object Mining {
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("digest"))
     val src = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
-    // Built once per scale-dir CONTENT (fingerprint-keyed, unique
-    // staging — util.Zones): a concurrent session never reads a
-    // half-written copy, and a regenerated dir never reuses a stale one.
-    val copyPath = graft.util.Zones.oncePerDir(s, "digest_copy", dir) {
-      staging => src.write.mode("overwrite").parquet(staging)
-    }
-    val copy = s.read.parquet(copyPath)
+    // built once per application (Scratch.memo, keyed by kind and dir)
+    val copy = graft.util.Scratch.memo(s, "digest_copy", s"digest_copy:$dir")(src)
     digestOf(src).as("a")
       .join(digestOf(copy).as("b"), Seq("bucket"))
       .select(col("bucket"), col("a.n_rows").as("n_rows"),

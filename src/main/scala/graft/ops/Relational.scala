@@ -285,28 +285,28 @@ object Relational {
     s.sql(MinCostSql)
   }
 
-  /** The five-batch join-view zone (built once per scale dir): the
-    * orders ⋈ customer view folded through
-    * [[graft.sinks.JoinMaintain]] with deliberately out-of-order
-    * sides — odd-custkey customers arrive only AFTER two orders
-    * batches already referenced them (the late-arriving-dimension
-    * case: those orders wait in the bucketed fact store until the
-    * dim batch's pruned scan picks them up). */
+  /** The five-batch join-view zone (a `Scratch.memoZone` keyed by kind
+    * and dir, built once per application): the orders ⋈ customer
+    * view folded through [[graft.sinks.JoinMaintain]] with
+    * deliberately out-of-order sides — odd-custkey customers arrive
+    * only AFTER two orders batches already referenced them (the
+    * late-arriving-dimension case: those orders wait in the bucketed
+    * fact store until the dim batch's pruned scan picks them up). */
   private def joinViewZone(s: SparkSession, dir: String): String =
-    graft.util.Zones.oncePerDir(s, "joinview", dir) { staging =>
+    graft.util.Scratch.memoZone(s, "joinview", s"joinview:$dir") { p =>
       val o = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey").as("custkey"),
           col("o_orderstatus"))
       val c = graft.Tables.load(s, dir, "customer")
         .select(col("c_custkey").as("custkey"), col("c_name"))
       val J = graft.sinks.JoinMaintain
-      J.init(s, staging, o.where(col("o_orderkey") % 3 === 0),
+      J.init(s, p, o.where(col("o_orderkey") % 3 === 0),
         c.where(col("custkey") % 2 === 0), "custkey")
-      J.applyFactBatch(s, staging, "custkey",
+      J.applyFactBatch(s, p, "custkey",
         o.where(col("o_orderkey") % 3 === 1), 1L)
-      J.applyDimBatch(s, staging, "custkey",
+      J.applyDimBatch(s, p, "custkey",
         c.where(col("custkey") % 2 === 1), 2L)
-      J.applyFactBatch(s, staging, "custkey",
+      J.applyFactBatch(s, p, "custkey",
         o.where(col("o_orderkey") % 3 === 2), 3L)
     }
 

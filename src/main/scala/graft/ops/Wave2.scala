@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.util.Exact
+import graft.util.{Exact, Scratch}
 
 /** Fourth coverage tier — the remaining relational/source surface:
   * full-outer join, RANGE-frame moving aggregates, exact correlation
@@ -116,11 +116,6 @@ object Wave2 {
       .orderBy("l_returnflag", "measure")
   }
 
-  private def scratch(dir: String, kind: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_roundtrip/$tag/$kind"
-  }
-
   /** q71: CSV source round-trip — write `customer` as headered CSV
     * (executor-parallel), read it back under the explicit schema, and
     * diff against the parquet original via the oracle. This is the S2
@@ -131,15 +126,12 @@ object Wave2 {
     * emits columns in schema order. */
   def csvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.load(s, dir, "customer")
-    val out = scratch(dir, "csv_customer")
+    val out = Scratch.zone(s, "csv_customer")
     cust.write.mode("overwrite").option("header", "true").csv(out)
     s.read.option("header", "true").schema(cust.schema).csv(out)
       .orderBy("c_custkey")
   }
 
-  /** q72: JSON-lines source round-trip — `orders` through JSON and
-    * back under the explicit schema; timestamps surface as epoch ms so
-    * the comparison is integer-exact. */
   /** q204: ORC write→read round trip — the third columnar surface
     * next to q71's CSV and q72's JSON (Spark's built-in ORC writer;
     * types survive natively, so no schema re-imposition is needed —
@@ -148,7 +140,7 @@ object Wave2 {
     * copy (PushedFilters pinned in PlanAuditSpec). */
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val p = Tables.load(s, dir, "part")
-    val out = scratch(dir, "orc_part")
+    val out = Scratch.zone(s, "orc_part")
     p.write.mode("overwrite").orc(out)
     s.read.orc(out)
       .where(col("p_size") >= 25)
@@ -157,9 +149,12 @@ object Wave2 {
       .orderBy("p_partkey")
   }
 
+  /** q72: JSON-lines source round-trip — `orders` through JSON and
+    * back under the explicit schema; timestamps surface as epoch ms so
+    * the comparison is integer-exact. */
   def jsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.load(s, dir, "orders")
-    val out = scratch(dir, "json_orders")
+    val out = Scratch.zone(s, "json_orders")
     // r14 probe note: spreadScan before this write was tried (q308's
     // one-row-group fix) and REVERTED on measurement — JSON
     // serialization of this table is cheaper than the round-robin
@@ -304,8 +299,7 @@ object Wave2 {
     * the sink — row encoding, per-task digest, temp+rename task
     * commit, driver manifest commit — sits under the hash check. */
   def manifestSink(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_zone_v1/" +
-      s"manifest_sink_${Integer.toHexString(dir.hashCode)}"
+    val out = Scratch.zone(s, "manifest_sink")
     Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
       .repartition(8, col("doc_id"))

@@ -175,10 +175,12 @@ object Probe {
   /** Run every (or each named) query cold, appending one JSON line per
     * query as it completes: a JVM death mid-sweep loses nothing, and a
     * restart SKIPS recorded queries. `sec` = wall (min over passes);
-    * `zone_sec` = the first pass's [[Scratch]] zone builds, so shared
-    * builds separate from a query's own cost; `overcap_rows` (summed
-    * over observe nodes, max over passes) and `max_bucket` appear when
-    * a `graft.cap.*` metric fired; a failure is `err` + that pass's wall.
+    * `zone_sec` = the first pass's [[Scratch]] zone builds (every
+    * memoized zone, the per-dir ones like q86's events-by-day
+    * included), so shared builds separate from a query's own cost;
+    * `overcap_rows` (summed over observe nodes, max over passes) and
+    * `max_bucket` appear when a `graft.cap.*` metric fired; a failure
+    * is `err` + that pass's wall.
     * `<results>.inflight` holds ONLY the query in flight (truncate-
     * written, cleared after its line, deleted on completion): non-empty
     * at startup means the JVM died inside it, recorded as a failure and

@@ -4,11 +4,20 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet scratch zone for shared intermediate relations: a relation
-  * consumed by several plan branches (the shingle sets feeding a
-  * similarity join's postings/df/prefix/verify branches, the CDC chunk
-  * relation scored AND joined back) is written ONCE as column-pruned
-  * parquet and every branch scans the stored copy.
+/** The one store for every directory the engine writes for itself:
+  * it alone allocates, scopes, tracks, times and deletes them. Three
+  * zone shapes, one allocator ([[zone]]):
+  *   - a memoized relation ([[memo]]): a relation consumed by several
+  *     plan branches (the shingle sets feeding a similarity join's
+  *     postings/df/prefix/verify branches, the CDC chunk relation
+  *     scored AND joined back) is written ONCE as column-pruned
+  *     parquet and every branch scans the stored copy;
+  *   - a memoized directory ([[memoZone]]): an operator that writes
+  *     its own layout (a cell-partitioned index, a day-partitioned
+  *     table, a MergeOnRead epoch chain) builds it once per key;
+  *   - a per-call directory ([[zone]]): a fresh path for a write that
+  *     must happen on every call (the round-trip gates measure the
+  *     write itself).
   *
   * This is the 100 TB spelling of "materialize once". The alternative,
   * `localCheckpoint()`, pins the relation as executor-memory/disk
@@ -25,9 +34,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`graft.scratch.dir`) to a shared durable path (HDFS/S3) on a real
   * cluster; it falls back to [[Checkpoints.DirKey]] if that is set,
   * else a driver-local temp root (correct in local mode, where every
-  * "executor" shares the filesystem). Each store gets a unique subdir
-  * — concurrent queries never collide — and the default temp root is
-  * deleted on JVM exit.
+  * "executor" shares the filesystem).
+  *
+  * Nothing outlives the application: every zone is
+  * `<root>/<appId>/<name>-<n>` and every memo key embeds the
+  * application id, so no later application ever reads (or overwrites)
+  * a zone this one built; [[clear]] deletes them all, and the default
+  * temp root is deleted on JVM exit.
   */
 object Scratch {
 
@@ -41,8 +54,8 @@ object Scratch {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   // ---- zone-build accounting (judge round-9 item #6) ----
-  // Wall nanos spent MATERIALIZING zones (memo/memoZone misses and
-  // store writes), so a sweep can report (zone-build s, query s)
+  // Wall nanos spent MATERIALIZING memoized zones (memo/memoZone
+  // misses), so a sweep can report (zone-build s, query s)
   // separately instead of self-declared upper bounds. Nested builds
   // (the pair zone derives through the token zone) count once: only
   // the outermost frame accumulates.
@@ -61,85 +74,74 @@ object Scratch {
     }
   }
 
-  /** Write `df` to `<root>/<appId>/<name>-<n>` as parquet and return a
-    * scan of the stored relation. Eager by design — same contract as
-    * the localCheckpoint it replaces: constructing the consumer
-    * DataFrame materializes the zone once, then every consumer branch
-    * reads it. Paths embed the Spark application id, so two
-    * applications sharing one configured root can never overwrite
-    * each other's zones; the per-JVM sequence keeps queries within an
-    * application apart. Zones accumulate for the life of the
-    * application (a stored relation must outlive every plan that
-    * scans it — there is no ContextCleaner for files); call
-    * [[clear]] at a batch boundary, or rely on the default temp
-    * root's exit cleanup. */
-  def store(df: DataFrame, name: String): DataFrame = {
-    val spark = df.sparkSession
-    val path = s"${root(spark)}/${spark.sparkContext.applicationId}" +
+  /** A fresh, tracked zone path `<root>/<appId>/<name>-<n>`, not yet
+    * written. The application id keeps two applications sharing one
+    * configured root apart; the per-JVM sequence keeps calls within an
+    * application apart, so every call gets its own directory. Zones
+    * accumulate for the life of the application (a stored relation
+    * must outlive every plan that scans it — there is no
+    * ContextCleaner for files); call [[clear]] at a batch boundary, or
+    * rely on the default temp root's exit cleanup. */
+  def zone(spark: SparkSession, name: String): String = {
+    val p = s"${root(spark)}/${spark.sparkContext.applicationId}" +
       s"/$name-${seq.incrementAndGet()}"
-    timedBuild { df.write.mode("overwrite").parquet(path) }
-    stored.add(path)
-    spark.read.parquet(path)
+    stored.add(p)
+    p
   }
 
-  /** [[store]] memoized per (key, application): the first call under a
-    * given key derives and stores the relation; every later call —
-    * same query re-run, or a DIFFERENT query consuming the same shared
-    * relation — returns a scan of the existing zone without
+  /** A parquet zone memoized per (key, application): the first call
+    * under a given key derives and stores the relation; every later
+    * call — same query re-run, or a DIFFERENT query consuming the same
+    * shared relation — returns a scan of the existing zone without
     * re-deriving it. This is the DAG semantics of the reference
     * pipeline (a task's output table is materialized once and every
     * downstream task reads it) applied to intra-engine relations: the
     * near-dup pair table feeds clustering, leakage splits, AND
     * incremental maintenance, and deriving it three times because
     * three queries asked is recomputation a warehouse would never do.
+    * Eager by design, like the localCheckpoint it replaces:
+    * constructing the consumer DataFrame materializes the zone.
     *
     * ONLY for relations that are deterministic functions of the key —
     * callers must fold every derivation input (the input dir, shingle
     * width, threshold) into `key`. An evolving input (a streaming zone,
-    * a MergeOnRead table between epochs) must use [[store]]: memoizing
-    * it would serve stale data. `df` is by-name — never built on a
-    * memo hit. */
+    * a MergeOnRead table that later epochs still modify) must not be
+    * memoized: it would serve stale data. `df` is by-name — never
+    * built on a memo hit. */
   def memo(spark: SparkSession, name: String, key: String)
-          (df: => DataFrame): DataFrame = {
-    val full = s"$key@${spark.sparkContext.applicationId}"
-    // get/putIfAbsent instead of computeIfAbsent: a memoized derivation
-    // may itself memo a sub-relation (the pair zone derives through the
-    // token zone), and nested computeIfAbsent on one map is recursive
-    //-update territory. The race cost is a duplicate derivation whose
-    // zone is simply never read — correct, just wasted.
-    val existing = memoized.get(full)
-    val path =
-      if (existing != null) existing
-      else {
-        val p = s"${root(spark)}/${spark.sparkContext.applicationId}" +
-          s"/$name-${seq.incrementAndGet()}"
-        timedBuild { df.write.mode("overwrite").parquet(p) }
-        stored.add(p)
-        val prev = memoized.putIfAbsent(full, p)
-        if (prev != null) prev else p
-      }
-    spark.read.parquet(path)
-  }
+          (df: => DataFrame): DataFrame =
+    spark.read.parquet(memoDir(spark, name, s"rel:$key") { p =>
+      df.write.mode("overwrite").parquet(p)
+    })
 
-  /** Allocate a managed zone DIRECTORY for operators that write their
-    * own artifact layout (a cell-partitioned index, a multi-file
-    * serve zone) rather than a single parquet relation: the path
-    * lives under the app-scoped scratch root, is tracked like any
-    * stored relation (deleted by [[clear]], and under the default
-    * root on JVM exit), and is memoized per key so repeated
-    * invocations serve the SAME built artifact instead of leaking
-    * one full copy per call. `build` runs once per (key,
-    * application); same determinism contract as [[memo]]. */
+  /** A zone DIRECTORY memoized per (key, application), for operators
+    * that write their own artifact layout (a cell-partitioned index, a
+    * multi-file serve zone, a MergeOnRead epoch chain) rather than a
+    * single parquet relation: repeated invocations serve the SAME
+    * built artifact instead of leaking one full copy per call. `build`
+    * runs once per (key, application); same determinism contract as
+    * [[memo]]. */
   def memoZone(spark: SparkSession, name: String, key: String)
-              (build: String => Unit): String = {
-    val full = s"zone:$key@${spark.sparkContext.applicationId}"
+              (build: String => Unit): String =
+    memoDir(spark, name, s"dir:$key")(build)
+
+  /** The one memo map behind [[memo]] and [[memoZone]] (their key
+    * prefixes keep the two namespaces apart). The path is published
+    * only after `build` returns, so no caller sees a half-built zone.
+    * get/putIfAbsent instead of computeIfAbsent: a memoized derivation
+    * may itself memo a sub-relation (the pair zone derives through the
+    * token zone), and nested computeIfAbsent on one map is
+    * recursive-update territory. The race cost is a duplicate
+    * derivation whose zone is simply never read — correct, just
+    * wasted. */
+  private def memoDir(spark: SparkSession, name: String, key: String)
+                     (build: String => Unit): String = {
+    val full = s"$key@${spark.sparkContext.applicationId}"
     val existing = memoized.get(full)
     if (existing != null) existing
     else {
-      val p = s"${root(spark)}/${spark.sparkContext.applicationId}" +
-        s"/$name-${seq.incrementAndGet()}"
+      val p = zone(spark, name)
       timedBuild { build(p) }
-      stored.add(p)
       val prev = memoized.putIfAbsent(full, p)
       if (prev != null) prev else p
     }
@@ -147,7 +149,7 @@ object Scratch {
 
   /** Delete every zone this application stored. Only call when no
     * live DataFrame still scans a zone (e.g. between batch runs). */
-  def clear(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def clear(spark: SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     stored.forEach { p =>
       val path = new org.apache.hadoop.fs.Path(p)
@@ -160,9 +162,9 @@ object Scratch {
   private def root(spark: SparkSession): String =
     spark.conf.getOption(DirKey)
       .orElse(spark.conf.getOption(Checkpoints.DirKey))
-      .getOrElse(defaultRoot(spark))
+      .getOrElse(tmpRoot)
 
-  // one per JVM, keyed by app id so parallel test sessions don't share
+  // one per JVM; zones inside are app-scoped by their path
   private lazy val tmpRoot: String = {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-scratch-").toFile
@@ -170,8 +172,6 @@ object Scratch {
       deleteRecursively(dir)))
     dir.getAbsolutePath
   }
-
-  private def defaultRoot(spark: SparkSession): String = tmpRoot
 
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()

@@ -60,7 +60,7 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("inputBytes sums regular files recursively") {
-    val dir = java.nio.file.Files.createTempDirectory("sessions-spec")
+    val dir = SparkSpec.tempDir("sessions-spec")
     val sub = java.nio.file.Files.createDirectory(dir.resolve("t.parquet"))
     java.nio.file.Files.write(sub.resolve("part-0"), new Array[Byte](1000))
     java.nio.file.Files.write(dir.resolve("x"), new Array[Byte](24))

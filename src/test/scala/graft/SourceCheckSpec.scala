@@ -12,13 +12,17 @@ import graft.util.Sessions
   * that the bench times. One loop policy: outside
   * `util/Checkpoints.scala` no main source gates AQE or frees a
   * checkpoint, so every round-materializing loop goes through
-  * `Checkpoints.iterate`. */
+  * `Checkpoints.iterate`. One zone store: outside `util/Scratch.scala`
+  * no main source picks a temp location, and outside
+  * `SparkSpec.tempDir` no test creates a temp dir. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
   private val checkpoints =
     root.resolve("src/main/scala/graft/util/Checkpoints.scala")
-  // this spec names both patterns, so it is exempt like Sessions itself
+  private val scratch = root.resolve("src/main/scala/graft/util/Scratch.scala")
+  private val sparkSpec = root.resolve("src/test/scala/graft/SparkSpec.scala")
+  // this spec names every pattern it checks, so it is exempt from all
   private val self = root.resolve("src/test/scala/graft/SourceCheckSpec.scala")
 
   private lazy val sources: Seq[Path] = Seq("src/main", "src/test").flatMap { d =>
@@ -33,7 +37,7 @@ class SourceCheckSpec extends SparkSpec {
       .map(root.relativize(_).toString)
 
   test("sources are found, Sessions and this spec among them") {
-    assert(sources.contains(sessions) && sources.contains(self))
+    assert(Seq(sessions, checkpoints, scratch, sparkSpec, self).forall(sources.contains))
   }
 
   test("SparkSession.builder appears only in util/Sessions.scala") {
@@ -55,6 +59,27 @@ class SourceCheckSpec extends SparkSpec {
         Files.readString(p).contains(needle)
     } yield s"${root.relativize(p)}: $needle"
     assert(bad.isEmpty, s"run the loop through Checkpoints.iterate: $bad")
+  }
+
+  test("temp locations in src/main come only from util/Scratch.scala") {
+    val main = root.resolve("src/main")
+    val examples = main.resolve("scala/graft/examples")
+    val bad = for {
+      p <- sources if p.startsWith(main) && p != scratch
+      needle <- "java.io.tmpdir" +:
+        (if (p.startsWith(examples)) Nil else Seq("createTempDirectory"))
+      if Files.readString(p).contains(needle)
+    } yield s"${root.relativize(p)}: $needle"
+    assert(bad.isEmpty, s"allocate engine-owned dirs through Scratch.zone: $bad")
+  }
+
+  test("createTempDirectory appears in src/test only in SparkSpec.tempDir") {
+    val test = root.resolve("src/test")
+    val bad = sources
+      .filter(p => p.startsWith(test) && p != sparkSpec && p != self &&
+        Files.readString(p).contains("createTempDirectory"))
+      .map(root.relativize(_).toString)
+    assert(bad.isEmpty, s"take test dirs from SparkSpec.tempDir: $bad")
   }
 
   test("Sessions.cpus honours SPARK_GRAFT_CPUS, else the processor count") {

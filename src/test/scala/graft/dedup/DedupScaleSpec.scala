@@ -25,8 +25,7 @@ class DedupScaleSpec extends SparkSpec {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("powerlaw_docs").toString
+    val d = SparkSpec.tempDir("powerlaw_docs").toString
     // per-cluster token streams are fully DISJOINT (every token embeds
     // k) — shared filler words would make the clusters true near-dups
     // of each other, which LSH then correctly (but unhelpfully for

@@ -46,8 +46,7 @@ class DedupSpec extends SparkSpec {
     // clone-heavy fixture: every doc gets a verbatim twin (shifted
     // ids) — the production spelling must signature only the
     // ORIGINALS (reps = min doc_id per distinct text)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-reppairs-").toString
+    val dir = SparkSpec.tempDir("graft-reppairs-").toString
     val base = spark.read.parquet(s"${sf()}/documents.parquet")
       .select($"doc_id", $"text", $"source")
     base.unionByName(
@@ -58,8 +57,7 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // collapse-then-LSH ≡ LSH over the explicitly collapsed corpus
     // (base may itself hold exact dups, so collapse THAT too)
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-repbase-").toString
+    val dir2 = SparkSpec.tempDir("graft-repbase-").toString
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5($"text")).orderBy($"doc_id")
     base.withColumn("rn", row_number().over(w)).where($"rn" === 1)
@@ -81,8 +79,7 @@ class DedupSpec extends SparkSpec {
     // same clone-doubled fixture discipline as the q314 pin: SimHash
     // is a pure per-doc function, so collapse-then-hash must equal
     // hash-over-the-explicitly-collapsed corpus exactly
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-shreppairs-").toString
+    val dir = SparkSpec.tempDir("graft-shreppairs-").toString
     val base = spark.read.parquet(s"${sf()}/documents.parquet")
       .select($"doc_id", $"text", $"source")
     base.unionByName(
@@ -91,8 +88,7 @@ class DedupSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val repPairs = Dedup.simhashRepPairs(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-shrepbase-").toString
+    val dir2 = SparkSpec.tempDir("graft-shrepbase-").toString
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5($"text")).orderBy($"doc_id")
     base.withColumn("rn", row_number().over(w)).where($"rn" === 1)
@@ -203,7 +199,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // 12 identical docs + 2 distinct ones; with maxBucket=5 the
     // identical cluster exceeds the cap in every band
-    val dir = java.nio.file.Files.createTempDirectory("star_docs").toString
+    val dir = SparkSpec.tempDir("star_docs").toString
     val docs = ((0L until 12L).map(i =>
       (i, "the same exact document text repeated for cluster members", "a")) ++
       Seq((20L, "an entirely different document about something else", "a"),
@@ -230,7 +226,7 @@ class DedupSpec extends SparkSpec {
     // 5000 identical docs + 2 distinct: every band collapses the clones
     // into ONE bucket value. Uncapped, that is ~12.5M candidate pairs
     // per band; with maxBucket the expansion is star+chain — linear.
-    val dir = java.nio.file.Files.createTempDirectory("simhash_mass").toString
+    val dir = SparkSpec.tempDir("simhash_mass").toString
     val docs = ((0L until 5000L).map(i =>
       (i, "the same boilerplate paragraph stamped on every mirror page", "a")) ++
       Seq((9000L, "an entirely different document about something else", "a"),
@@ -448,7 +444,7 @@ class DedupSpec extends SparkSpec {
     // band. With it, each delta doc pairs with ≤ maxBucket corpus
     // reps — and every delta doc still gets its is-dup answer.
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("delta_mass").toString
+    val tmp = SparkSpec.tempDir("delta_mass").toString
     val text = (1 to 30).map(i => s"tok$i").mkString(" ")
     (0L until 4200L).map { i =>
       val id = if (i < 4000) i * 10 else i * 10 + 8 // corpus / delta ids
@@ -465,8 +461,7 @@ class DedupSpec extends SparkSpec {
 
   test("q161 winnowing: a shared run of w+k-1 tokens is always caught") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("winnow_docs").toString
+    val dir = SparkSpec.tempDir("winnow_docs").toString
     // the selection guarantee: any shared run of ≥ win+k−1 = 8 tokens
     // yields 4 consecutive shared grams — one FULL window whose min is
     // the same VALUE in both docs, so a fingerprint must match

@@ -12,7 +12,7 @@ import graft.pipeline.Pipeline
 class CsvIngestSpec extends SparkSpec {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft_ingest").toString
+    SparkSpec.tempDir("graft_ingest").toString
 
   private def writeCsv(dir: String, name: String, lines: String*): String = {
     val p = java.nio.file.Paths.get(dir, name)

@@ -91,8 +91,7 @@ class PerceptualSpec extends SparkSpec {
     val text = (1 to 80).map(i => ('a' + i % 26).toChar).mkString
     require(text.length == 80)
     val rotated = text.substring(16) + text.substring(0, 16)
-    val dir = java.nio.file.Files
-      .createTempDirectory("videodup").toString
+    val dir = SparkSpec.tempDir("videodup").toString
     Seq((1L, text), (2L, rotated)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = Perceptual.videoNearDup(spark, dir).collect()

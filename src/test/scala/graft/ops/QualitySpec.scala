@@ -36,7 +36,7 @@ class QualitySpec extends SparkSpec {
 
   test("fkOrphans: duplicate parent keys don't inflate; orphans found") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fk").toString
+    val dir = SparkSpec.tempDir("fk").toString
     // child 3 rows: two valid (42), one orphan (99)
     Seq((1L, 42L), (2L, 42L), (3L, 99L)).toDF("id", "l_orderkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")

@@ -20,7 +20,7 @@ class SamplingSpec extends SparkSpec {
     // a physically smaller corpus (half the docs written to a temp
     // zone) and require assignments to agree with the full-corpus run —
     // a corpus-dependent split (ntile, rand) fails this
-    val tmp = java.nio.file.Files.createTempDirectory("split_half").toString
+    val tmp = SparkSpec.tempDir("split_half").toString
     spark.read.parquet(s"${sf()}/documents.parquet")
       .where(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -89,7 +89,7 @@ class SamplingSpec extends SparkSpec {
     // skewed strata where the remainders decide: sizes 7/5/3,
     // target 10 → quotas 4.67/3.33/2 → bases 4/3/2 (sum 9), the one
     // leftover seat goes to the largest remainder (sA at .67)
-    val dir = java.nio.file.Files.createTempDirectory("strat_docs").toString
+    val dir = SparkSpec.tempDir("strat_docs").toString
     val rows = (0 until 7).map(i => (100L + i, s"t$i", "sA")) ++
       (0 until 5).map(i => (200L + i, s"t$i", "sB")) ++
       (0 until 3).map(i => (300L + i, s"t$i", "sC"))
@@ -117,8 +117,7 @@ class SamplingSpec extends SparkSpec {
       val sizes = Seq.fill(nSrc)(1 + rnd.nextInt(40))
       val n = sizes.sum
       val target = 1 + rnd.nextInt(n)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"ham$case_").toString
+      val dir = SparkSpec.tempDir(s"ham$case_").toString
       sizes.zipWithIndex.flatMap { case (sz, k) =>
         (0 until sz).map(i => (k * 1000L + i, s"t$i", s"s$k"))
       }.toDF("doc_id", "text", "source")
@@ -140,7 +139,7 @@ class SamplingSpec extends SparkSpec {
 
   test("q145: exact span scrub covers precisely the shared-gram tokens") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("span_docs").toString
+    val dir = SparkSpec.tempDir("span_docs").toString
     // docs 1 and 2 share exactly the 5-gram "v w x y z" (positions
     // 2-6 in doc 1, 0-4 in doc 2); doc 3 is disjoint; doc 4 is too
     // short for any gram
@@ -239,7 +238,7 @@ class SamplingSpec extends SparkSpec {
   }
   test("q106: degenerate docs (empty / single token) chunk without crashing") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("cdc_deg").toString
+    val tmp = SparkSpec.tempDir("cdc_deg").toString
     Seq((1L, "", "s"), (2L, "one", "s"), (3L, "a b c d e f g h", "s"))
       .toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -410,7 +409,7 @@ class SamplingSpec extends SparkSpec {
     assert(out.where(col("n_tokens_kept") === 0)
       .where(col("cleaned_text") =!= "").count() == 0)
     // verbatim-duplicated docs: every chunk is shared → nothing survives
-    val tmp = java.nio.file.Files.createTempDirectory("scrub_dup").toString
+    val tmp = SparkSpec.tempDir("scrub_dup").toString
     // ordered before limit: an un-ordered LIMIT is evaluated once per
     // union branch and need not pick the same 5 docs
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
@@ -461,8 +460,7 @@ class SamplingSpec extends SparkSpec {
     // and on a hand-built skewed corpus the property is strict: a
     // 100× token imbalance must yield a >5× per-token upweight
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("tempmix_docs").toString
+    val d = SparkSpec.tempDir("tempmix_docs").toString
     def text(n: Int) = Seq.fill(n)("x").mkString(" ")
     (Seq.tabulate(100)(i => (i.toLong, text(100), "huge")) :+
       (1000L, text(100), "tiny"))

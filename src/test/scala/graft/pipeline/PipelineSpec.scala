@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 
 /** Partition-layout materialization + pruning proof: reading one
@@ -10,7 +8,7 @@ import graft.{SparkSpec, Tables}
 class PipelineSpec extends SparkSpec {
 
   test("partitioned materialize enables partition pruning") {
-    val out = Files.createTempDirectory("graft_part").toString + "/events"
+    val out = SparkSpec.tempDir("graft_part").toString + "/events"
     val events = Tables.load(spark, sf(), "events")
     val n = Pipeline.materializePartitioned(spark, events, out,
       Seq("event_type"))
@@ -31,13 +29,13 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("observed materialize counts in-flight and matches the audit") {
-    val out = Files.createTempDirectory("graft_obs").toString + "/docs"
+    val out = SparkSpec.tempDir("graft_obs").toString + "/docs"
     val docs = Tables.load(spark, sf(), "documents")
     val n = Pipeline.materializeObserved(spark, docs, out)
     assert(n == docs.count()) // observed during the single write pass
     assert(n == spark.read.parquet(out).count())
     // audit-off mode still returns the true count (the 100 TB path)
-    val out2 = Files.createTempDirectory("graft_obs2").toString + "/docs"
+    val out2 = SparkSpec.tempDir("graft_obs2").toString + "/docs"
     assert(Pipeline.materializeObserved(spark, docs, out2,
       auditRecount = false) == n)
   }

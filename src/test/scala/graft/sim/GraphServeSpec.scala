@@ -17,8 +17,8 @@ class GraphServeSpec extends SparkSpec {
   test("maintained graph ≡ one-shot rebuild over any batch split") {
     val emb = graft.Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val full = java.nio.file.Files.createTempDirectory("gs_full").toString
-    val inc = java.nio.file.Files.createTempDirectory("gs_inc").toString
+    val full = SparkSpec.tempDir("gs_full").toString
+    val inc = SparkSpec.tempDir("gs_inc").toString
     GraphServe.build(spark, emb, full)
     // uneven three-way split, folded out of order of vec_id
     GraphServe.build(spark, emb.where(col("vec_id") % 3 === 1), inc)
@@ -31,7 +31,7 @@ class GraphServeSpec extends SparkSpec {
   test("served graph matches the q155 query surface") {
     val emb = graft.Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files.createTempDirectory("gs_q").toString
+    val root = SparkSpec.tempDir("gs_q").toString
     GraphServe.build(spark, emb, root)
     val served = graphRows(root)
     val q155 = Similarity.knnGraph(spark, sf()).collect()
@@ -55,7 +55,7 @@ class GraphServeSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val far = Seq((9L, Array(-1f, -1f, -1f, -1f, -1f, -1f, -1f, -1f)))
       .toDF("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("gs_far").toString
+    val root = SparkSpec.tempDir("gs_far").toString
     GraphServe.build(spark, base, root, k = 2)
     val before = graft.sinks.MergeOnRead
       .epochs(spark, s"$root/graph").lastOption.getOrElse(0L)
@@ -68,7 +68,7 @@ class GraphServeSpec extends SparkSpec {
     assert(touched == Set(9L),
       s"unchanged anchors were rewritten: $touched")
     // and the fold still equals a rebuild
-    val full = java.nio.file.Files.createTempDirectory("gs_far2").toString
+    val full = SparkSpec.tempDir("gs_far2").toString
     GraphServe.build(spark, base.unionByName(far), full, k = 2)
     assert(graphRows(root) == graphRows(full))
   }

@@ -11,8 +11,7 @@ import graft.SparkSpec
 class IvfServeSpec extends SparkSpec {
 
   private lazy val zone: String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("ivf_zone").toString
+    val d = SparkSpec.tempDir("ivf_zone").toString
     IvfServe.build(spark, sf(), d)
     d
   }
@@ -50,12 +49,10 @@ class IvfServeSpec extends SparkSpec {
     // zone built on a PARTIAL corpus (vec_id >= 50), then the missing
     // vectors fold in as a maintenance batch — no re-fit
     val all = graft.Tables.load(spark, sf(), "embeddings")
-    val tmpA = java.nio.file.Files
-      .createTempDirectory("ivf_partial").toString
+    val tmpA = SparkSpec.tempDir("ivf_partial").toString
     all.where(col("vec_id") >= 50)
       .write.mode("overwrite").parquet(s"$tmpA/embeddings.parquet")
-    val zone2 = java.nio.file.Files
-      .createTempDirectory("ivf_zone_inc").toString
+    val zone2 = SparkSpec.tempDir("ivf_zone_inc").toString
     IvfServe.build(spark, tmpA, zone2)
     def files(): Set[String] = {
       val root = new java.io.File(s"$zone2/corpus")

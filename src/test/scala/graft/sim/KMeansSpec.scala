@@ -84,8 +84,7 @@ class KMeansSpec extends SparkSpec {
 
   test("q173: duplicate-heavy corpus keeps empty clusters stable") {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("kmeans_dupes").toString
+    val d = SparkSpec.tempDir("kmeans_dupes").toString
     // 12 vectors but only 3 distinct points: init seeds 8 centroids
     // of which several are identical — ties all break to the lowest
     // cid, so the higher duplicates own ZERO members and must keep

@@ -114,8 +114,8 @@ class PqSpec extends SparkSpec {
 
   test("streaming encode ≡ batch codes, any micro-batch split") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("pq_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("pq_ck").toString
+    val dir = SparkSpec.tempDir("pq_in").toString
+    val ckpt = SparkSpec.tempDir("pq_ck").toString
     graft.Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding"))
       .repartition(3).write.mode("overwrite").json(dir)

@@ -428,8 +428,7 @@ class SimilaritySpec extends SparkSpec {
       val clone = raw.map(_ / n)
       Seq((id, v, 0), (id + 100000L, clone, 0))
     }.toSeq
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-planted-").toString
+    val tmp = SparkSpec.tempDir("graft-planted-").toString
     planted.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val thr = 0.9

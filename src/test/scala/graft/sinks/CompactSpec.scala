@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 
 /** Compaction must reduce file count, preserve data exactly, and
@@ -9,7 +7,7 @@ import graft.{SparkSpec, Tables}
 class CompactSpec extends SparkSpec {
 
   test("compaction merges small files and preserves every row") {
-    val dir = Files.createTempDirectory("compact").toString + "/t.parquet"
+    val dir = SparkSpec.tempDir("compact").toString + "/t.parquet"
     val src = Tables.load(spark, sf(), "customer")
     src.repartition(8).write.parquet(dir)
     val beforeRows = spark.read.parquet(dir).count()
@@ -30,14 +28,14 @@ class CompactSpec extends SparkSpec {
   }
 
   test("empty table compacts to a no-op report, not a read error") {
-    val dir = Files.createTempDirectory("compact_e").toString + "/none"
+    val dir = SparkSpec.tempDir("compact_e").toString + "/none"
     assert(Compact.compact(spark, dir) == Compact.Report(0, 0, 0L, 0L))
     assert(Warehouse.tableStats(spark, dir) ==
       Warehouse.TableStats(0, 0L, 0L, 0))
   }
 
   test("partitioned table root is refused (layout would be destroyed)") {
-    val dir = Files.createTempDirectory("compact_p").toString + "/p.parquet"
+    val dir = SparkSpec.tempDir("compact_p").toString + "/p.parquet"
     Tables.load(spark, sf(), "nation")
       .write.partitionBy("n_regionkey").parquet(dir)
     val e = intercept[IllegalArgumentException](Compact.compact(spark, dir))

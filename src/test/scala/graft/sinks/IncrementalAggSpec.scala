@@ -52,7 +52,7 @@ class IncrementalAggSpec extends SparkSpec {
 
   test("merge-on-read time travel reproduces each historical state") {
     val root =
-      java.nio.file.Files.createTempDirectory("mor_tt").toString + "/t"
+      SparkSpec.tempDir("mor_tt").toString + "/t"
     MergeOnRead.init(spark, root,
       Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "name", "score"))
     MergeOnRead.merge(spark, root,

@@ -8,8 +8,7 @@ import graft.SparkSpec
   * rebuild, out-of-order batches, and O(touched-blocks) write cost. */
 class IndexMaintainSpec extends SparkSpec {
 
-  private def freshRoot(): String = java.nio.file.Files
-    .createTempDirectory("idx_maintain").toString + "/zone"
+  private def freshRoot(): String = SparkSpec.tempDir("idx_maintain").toString + "/zone"
 
   test("three out-of-order batches reconcile to the full rebuild") {
     val docs = graft.Tables.load(spark, sf(), "documents")

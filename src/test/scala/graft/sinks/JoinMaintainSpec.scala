@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,7 +28,7 @@ class JoinMaintainSpec extends SparkSpec {
 
   test("out-of-order 5-batch fold equals the one-shot join") {
     val (o, c) = tables()
-    val root = Files.createTempDirectory("jv_fold").toString + "/z"
+    val root = SparkSpec.tempDir("jv_fold").toString + "/z"
     val J = JoinMaintain
     // interleaving with BOTH late-dim (orders %5∈{1,3} reference
     // odd customers before they arrive) and late-fact rows
@@ -52,7 +50,7 @@ class JoinMaintainSpec extends SparkSpec {
 
   test("a replayed batch (same id) is a no-op: no double-counted pairs") {
     val (o, c) = tables()
-    val root = Files.createTempDirectory("jv_replay").toString + "/z"
+    val root = SparkSpec.tempDir("jv_replay").toString + "/z"
     val J = JoinMaintain
     J.init(spark, root, o.where(col("o_orderkey") % 2 === 0),
       c, "custkey")
@@ -68,7 +66,7 @@ class JoinMaintainSpec extends SparkSpec {
 
   test("a half-applied batch (crash before marker) replays idempotently") {
     val (o, c) = tables()
-    val root = Files.createTempDirectory("jv_crash").toString + "/z"
+    val root = SparkSpec.tempDir("jv_crash").toString + "/z"
     val J = JoinMaintain
     J.init(spark, root, o.where(col("o_orderkey") % 2 === 0),
       c.where(col("custkey") % 2 === 0), "custkey")
@@ -89,7 +87,7 @@ class JoinMaintainSpec extends SparkSpec {
 
   test("a small dim batch's fact scan is bucket-pruned") {
     val (o, c) = tables()
-    val root = Files.createTempDirectory("jv_prune").toString + "/z"
+    val root = SparkSpec.tempDir("jv_prune").toString + "/z"
     JoinMaintain.init(spark, root, o, c.limit(0), "custkey")
     val oneKey = c.where(col("custkey") === 7)
     val plan = JoinMaintain.prunedFactScan(spark, root, "custkey",
@@ -101,7 +99,7 @@ class JoinMaintainSpec extends SparkSpec {
 
   test("a fact row whose dim key never arrives stays out of the view") {
     val (o, c) = tables()
-    val root = Files.createTempDirectory("jv_wait").toString + "/z"
+    val root = SparkSpec.tempDir("jv_wait").toString + "/z"
     val J = JoinMaintain
     J.init(spark, root, o, c.where(col("custkey") % 2 === 0), "custkey")
     val got = rows(J.read(spark, root))

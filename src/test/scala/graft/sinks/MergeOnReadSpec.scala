@@ -11,7 +11,7 @@ class MergeOnReadSpec extends SparkSpec {
   import spark.implicits._
 
   private def newRoot(): String =
-    java.nio.file.Files.createTempDirectory("mor").toString + "/t"
+    SparkSpec.tempDir("mor").toString + "/t"
 
   private def rows(df: DataFrame): Set[(Long, String, Double)] =
     df.select("id", "name", "score").collect()

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ class Scd2MaintainSpec extends SparkSpec {
       unix_millis(col("ts")).as("ms"))
 
   test("interleaved out-of-order batches fold to the batch build") {
-    val root = Files.createTempDirectory("scd2_fold").toString + "/z"
+    val root = SparkSpec.tempDir("scd2_fold").toString + "/z"
     val ev = rawEvents
     Scd2Maintain.init(spark, root, ev.where(col("event_id") % 3 === 0))
     Scd2Maintain.applyBatch(spark, root,
@@ -31,11 +29,11 @@ class Scd2MaintainSpec extends SparkSpec {
   }
 
   test("streamed micro-batches fold to the batch build, idempotently") {
-    val root = Files.createTempDirectory("scd2_stream").toString + "/z"
+    val root = SparkSpec.tempDir("scd2_stream").toString + "/z"
     val ev = rawEvents
     Scd2Maintain.init(spark, root, ev.where(col("event_id") % 3 === 0))
     // remaining slices arrive as a 2-file stream, one file per batch
-    val in = Files.createTempDirectory("scd2_stream_in").toString
+    val in = SparkSpec.tempDir("scd2_stream_in").toString
     ev.where(col("event_id") % 3 === 1).coalesce(1)
       .write.json(s"$in/f1")
     ev.where(col("event_id") % 3 === 2).coalesce(1)
@@ -43,7 +41,7 @@ class Scd2MaintainSpec extends SparkSpec {
     val schema = ev.schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").json(s"$in/f*")
-    val ckpt = Files.createTempDirectory("scd2_stream_ck").toString
+    val ckpt = SparkSpec.tempDir("scd2_stream_ck").toString
     Scd2Maintain.streamApply(spark, root, stream, ckpt)
     val got = Scd2Maintain.read(spark, root).collect().map(_.toSeq)
     val want = graft.ops.EventOps.scd2Intervals(spark, sf())
@@ -57,7 +55,7 @@ class Scd2MaintainSpec extends SparkSpec {
   }
 
   test("a one-user batch touches one bucket and writes one merge row") {
-    val root = Files.createTempDirectory("scd2_touch").toString + "/z"
+    val root = SparkSpec.tempDir("scd2_touch").toString + "/z"
     val ev = rawEvents
     Scd2Maintain.init(spark, root, ev)
     val u = ev.select(col("user_id")).head.getLong(0)

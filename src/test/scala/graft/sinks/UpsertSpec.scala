@@ -1,14 +1,12 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 class UpsertSpec extends SparkSpec {
   import spark.implicits._
 
   test("merge replaces same-key rows and keeps the rest") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_upsert").toString + "/t"
     val v1 = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "name", "score")
     assert(Upsert.merge(spark, dir, v1, Seq("id")) == 3)
@@ -24,7 +22,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("merge is idempotent for identical updates") {
-    val dir = Files.createTempDirectory("graft_upsert2").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_upsert2").toString + "/t"
     val v = Seq((1L, "x")).toDF("id", "v")
     Upsert.merge(spark, dir, v, Seq("id"))
     Upsert.merge(spark, dir, v, Seq("id"))

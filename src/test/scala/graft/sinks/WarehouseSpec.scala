@@ -106,7 +106,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("tableStats reports files, bytes, rows, columns") {
-    val dir = java.nio.file.Files.createTempDirectory("stats").toString + "/t"
+    val dir = SparkSpec.tempDir("stats").toString + "/t"
     graft.Tables.load(spark, sf(), "nation").repartition(3)
       .write.parquet(dir)
     val st = Warehouse.tableStats(spark, dir)

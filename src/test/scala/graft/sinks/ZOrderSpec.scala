@@ -48,7 +48,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("3-dim z-order write clusters and preserves content") {
-    val tmp = java.nio.file.Files.createTempDirectory("zorder3").toString
+    val tmp = SparkSpec.tempDir("zorder3").toString
     val d3 = data.withColumn("c",
       pmod(xxhash64(col("id"), lit(2)), lit(1000000L)))
     ZOrder.writeZOrdered(d3, s"$tmp/z3", Seq("a", "b", "c"), files = 8)
@@ -58,7 +58,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-order layout skips row groups a random layout must read") {
-    val tmp = java.nio.file.Files.createTempDirectory("zorder").toString
+    val tmp = SparkSpec.tempDir("zorder").toString
     data.repartition(16).write.mode("overwrite").parquet(s"$tmp/rand")
     ZOrder.writeZOrdered(data, s"$tmp/zord", "a", "b", files = 16)
     val (randRead, randMatched) = scanRows(s"$tmp/rand")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,7 +16,7 @@ class ManifestSinkSpec extends SparkSpec {
     StructField("n_chars", LongType)))
 
   test("write commits a manifest whose files round-trip the data") {
-    val out = Files.createTempDirectory("manifest_sink").toString
+    val out = SparkSpec.tempDir("manifest_sink").toString
     val src = spark.read.parquet(s"${sf()}/documents.parquet")
       .select(col("doc_id"), col("source"), col("n_chars"))
     src.repartition(4, col("doc_id"))
@@ -51,7 +49,7 @@ class ManifestSinkSpec extends SparkSpec {
   }
 
   test("an aborted task writer leaves no visible file") {
-    val out = Files.createTempDirectory("manifest_abort").toString
+    val out = SparkSpec.tempDir("manifest_abort").toString
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val w = new ManifestWriterFactory(out, schema, conf)

@@ -30,7 +30,7 @@ class KafkaShapedSpec extends SparkSpec {
   }
 
   test("wire schema matches the Kafka source schema field-for-field") {
-    val dir = Files.createTempDirectory("kafka_wire").toString
+    val dir = SparkSpec.tempDir("kafka_wire").toString
     writeTopicFile(dir)
     val wire = KafkaShaped.simulatedTopic(spark, dir)
     // names + types; nullability legitimately differs (lit(0) is
@@ -40,7 +40,7 @@ class KafkaShapedSpec extends SparkSpec {
   }
 
   test("decode routes corrupt values to dead letter with replayable offsets") {
-    val dir = Files.createTempDirectory("kafka_dlq").toString
+    val dir = SparkSpec.tempDir("kafka_dlq").toString
     writeTopicFile(dir)
     val decoded = KafkaShaped.decode(
       KafkaShaped.simulatedTopic(spark, dir), valueSchema)
@@ -68,7 +68,7 @@ class KafkaShapedSpec extends SparkSpec {
   }
 
   test("exactly-once sink: replayed batches do not double-write") {
-    val base = Files.createTempDirectory("kafka_eos").toString
+    val base = SparkSpec.tempDir("kafka_eos").toString
     val in = s"$base/in"; Files.createDirectories(java.nio.file.Paths.get(in))
     writeTopicFile(in)
     val decoded = KafkaShaped.decode(
@@ -92,7 +92,7 @@ class KafkaShapedSpec extends SparkSpec {
   }
 
   test("exactly-once sink refuses a batch-id collision carrying different data") {
-    val base = Files.createTempDirectory("kafka_eos2").toString
+    val base = SparkSpec.tempDir("kafka_eos2").toString
     val in1 = s"$base/in1"; Files.createDirectories(java.nio.file.Paths.get(in1))
     writeTopicFile(in1)
     KafkaShaped.exactlyOnceSink(
@@ -116,7 +116,7 @@ class KafkaShapedSpec extends SparkSpec {
   }
 
   test("high-water marks report max offset and count per partition") {
-    val dir = Files.createTempDirectory("kafka_hwm").toString
+    val dir = SparkSpec.tempDir("kafka_hwm").toString
     writeTopicFile(dir)
     val decoded = KafkaShaped.decode(
       KafkaShaped.simulatedTopic(spark, dir), valueSchema)

@@ -16,8 +16,7 @@ class NearDupMaintSpec extends SparkSpec {
     "delivery, crash replay, and duplicate re-admission") {
     val emb = graft.Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ndmaint-").toString
+    val root = SparkSpec.tempDir("graft-ndmaint-").toString
     // three out-of-order slices (admission order ≠ id order)
     val s0 = emb.where(pmod(col("vec_id"), lit(3)) === 2)
     val s1 = emb.where(pmod(col("vec_id"), lit(3)) === 0)
@@ -67,8 +66,7 @@ class NearDupMaintSpec extends SparkSpec {
     "marker fences folds and reads, re-run converges") {
     val emb = graft.Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding")).limit(120)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ndcrash-").toString
+    val root = SparkSpec.tempDir("graft-ndcrash-").toString
     def slice(k: Int) = emb.where(pmod(col("vec_id"), lit(4)) === k)
     NearDupMaint.foldBatch(slice(0), root, 0L, 8, 4, -1.0)
     NearDupMaint.foldBatch(slice(1), root, 1L, 8, 4, -1.0)
@@ -139,8 +137,7 @@ class NearDupMaintSpec extends SparkSpec {
   test("compact validates every zone before mutating any") {
     val emb = graft.Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding")).limit(60)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ndvalid-").toString
+    val root = SparkSpec.tempDir("graft-ndvalid-").toString
     NearDupMaint.foldBatch(emb.limit(30), root, 0L, 8, 4, 0.45)
     NearDupMaint.foldBatch(emb, root, 1L, 8, 4, 0.45)
     val before = NearDupMaint.readPairs(spark, root).count()
@@ -160,8 +157,7 @@ class NearDupMaintSpec extends SparkSpec {
     }
     assert(NearDupMaint.readPairs(spark, root).count() == before)
     // compacting an empty root is a no-op, not an error
-    val emptyRoot = java.nio.file.Files
-      .createTempDirectory("graft-ndempty-").toString
+    val emptyRoot = SparkSpec.tempDir("graft-ndempty-").toString
     NearDupMaint.compact(spark, emptyRoot, upToEpoch = 0L)
   }
 
@@ -172,10 +168,8 @@ class NearDupMaintSpec extends SparkSpec {
       .collect()
       .map(r => (r.getAs[Long]("vec_id"),
         r.getSeq[Float](1)))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ndsink-").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-ndsink-ckpt-").toString
+    val root = SparkSpec.tempDir("graft-ndsink-").toString
+    val ckpt = SparkSpec.tempDir("graft-ndsink-ckpt-").toString
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Seq[Float])](spark)
     val q = NearDupMaint.sink(
@@ -190,8 +184,7 @@ class NearDupMaintSpec extends SparkSpec {
     // ground truth: brute force over the 60 streamed vectors,
     // intersected with what the banding can see (= the batch path on
     // the same 60 rows, computed via one fold into a fresh zone)
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft-ndsink2-").toString
+    val root2 = SparkSpec.tempDir("graft-ndsink2-").toString
     val sixty = graft.Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding")).limit(60)
     NearDupMaint.foldBatch(sixty, root2, 0L, 8, 4, 0.45)

@@ -22,7 +22,7 @@ class StreamsSpec extends SparkSpec {
     Files.writeString(Paths.get(dir, name), rows.mkString("\n"))
 
   test("file stream → tumbling window counts with watermark") {
-    val in = Files.createTempDirectory("stream_in").toString
+    val in = SparkSpec.tempDir("stream_in").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:10:00Z","user_id":1,"event_type":"click","value":1.0}""",
       """{"event_id":2,"ts":"2024-01-01T00:20:00Z","user_id":1,"event_type":"click","value":2.0}""",
@@ -39,7 +39,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("late file arrival updates the open window") {
-    val in = Files.createTempDirectory("stream_in2").toString
+    val in = SparkSpec.tempDir("stream_in2").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:10:00Z","user_id":1,"event_type":"click","value":1.0}""")
     val stream = Streams.fileStream(spark, in, schema)
@@ -55,7 +55,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("streaming dedup drops duplicate event ids") {
-    val in = Files.createTempDirectory("stream_dedup").toString
+    val in = SparkSpec.tempDir("stream_dedup").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.0}""",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.0}""",
@@ -69,7 +69,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("stream-stream join: purchases pick up preceding clicks") {
-    val in = Files.createTempDirectory("stream_join").toString
+    val in = SparkSpec.tempDir("stream_join").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":5,"event_type":"click","value":1.0}""",
       """{"event_id":2,"ts":"2024-01-01T00:05:00Z","user_id":5,"event_type":"purchase","value":9.0}""",
@@ -87,7 +87,7 @@ class StreamsSpec extends SparkSpec {
 
   test("outer stream-stream join: unmatched purchase emits nulls " +
     "only after the watermark closes its window") {
-    val in = Files.createTempDirectory("stream_join_outer").toString
+    val in = SparkSpec.tempDir("stream_join_outer").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:15:00Z","user_id":5,"event_type":"click","value":1.0}""",
       """{"event_id":2,"ts":"2024-01-01T00:20:00Z","user_id":5,"event_type":"purchase","value":9.0}""",
@@ -129,7 +129,7 @@ class StreamsSpec extends SparkSpec {
   test("native session_window works under a streaming watermark") {
     // the q234 batch operator's streaming twin: sessions close (and
     // emit, in append mode) once the watermark passes their end
-    val in = Files.createTempDirectory("stream_sess").toString
+    val in = SparkSpec.tempDir("stream_sess").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.0}""",
       """{"event_id":2,"ts":"2024-01-01T00:10:00Z","user_id":1,"event_type":"click","value":1.0}""",
@@ -157,9 +157,9 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming parquet sink with checkpoint resumes exactly-once") {
     import org.apache.spark.sql.streaming.Trigger
-    val in = Files.createTempDirectory("stream_pq_in").toString
-    val out = Files.createTempDirectory("stream_pq_out").toString
-    val ckpt = Files.createTempDirectory("stream_pq_ckpt").toString
+    val in = SparkSpec.tempDir("stream_pq_in").toString
+    val out = SparkSpec.tempDir("stream_pq_out").toString
+    val ckpt = SparkSpec.tempDir("stream_pq_ckpt").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.0}""")
     def runOnce(): Unit = {
@@ -182,10 +182,10 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("corrupt records quarantine to the dead-letter sink") {
-    val in = Files.createTempDirectory("stream_dl_in").toString
-    val good = Files.createTempDirectory("stream_dl_good").toString + "/out"
-    val bad = Files.createTempDirectory("stream_dl_bad").toString + "/out"
-    val ckpt = Files.createTempDirectory("stream_dl_ckpt").toString
+    val in = SparkSpec.tempDir("stream_dl_in").toString
+    val good = SparkSpec.tempDir("stream_dl_good").toString + "/out"
+    val bad = SparkSpec.tempDir("stream_dl_bad").toString + "/out"
+    val ckpt = SparkSpec.tempDir("stream_dl_ckpt").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.0}""",
       """this is not json at all""",
@@ -208,7 +208,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("stream-static dimension enrichment joins per micro-batch") {
-    val in = Files.createTempDirectory("stream_dim_in").toString
+    val in = SparkSpec.tempDir("stream_dim_in").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":10,"event_type":"click","value":1.0}""",
       """{"event_id":2,"ts":"2024-01-01T00:01:00Z","user_id":99,"event_type":"view","value":2.0}""")
@@ -225,7 +225,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("flatMapGroupsWithState keeps running per-user totals") {
-    val in = Files.createTempDirectory("stream_state_in").toString
+    val in = SparkSpec.tempDir("stream_state_in").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.5}""",
       """{"event_id":2,"ts":"2024-01-01T00:01:00Z","user_id":1,"event_type":"click","value":2.5}""",
@@ -240,7 +240,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("transformWithState mirrors the v1 running totals across batches") {
-    val in = Files.createTempDirectory("stream_tws_in").toString
+    val in = SparkSpec.tempDir("stream_tws_in").toString
     // two batches so the second read genuinely loads v2 state
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.5}""",
@@ -274,7 +274,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("session windows close on gap") {
-    val in = Files.createTempDirectory("stream_in3").toString
+    val in = SparkSpec.tempDir("stream_in3").toString
     writeBatch(in, "b1.json",
       """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":7,"event_type":"click","value":1.0}""",
       """{"event_id":2,"ts":"2024-01-01T00:10:00Z","user_id":7,"event_type":"click","value":1.0}""",
@@ -287,8 +287,8 @@ class StreamsSpec extends SparkSpec {
     assert(sessions.toSet == Set((7L, 2L), (7L, 1L)))
   }
   test("rate limit: backlog drains as bounded micro-batches") {
-    val in = Files.createTempDirectory("rate_in").toString
-    val ckpt = Files.createTempDirectory("rate_ckpt").toString
+    val in = SparkSpec.tempDir("rate_in").toString
+    val ckpt = SparkSpec.tempDir("rate_ckpt").toString
     // 6 files x 2 rows; cap at 2 files/trigger -> >= 3 batches,
     // each at most 4 rows
     (1 to 6).foreach { i =>
@@ -306,7 +306,7 @@ class StreamsSpec extends SparkSpec {
 
   test("cluster-maint sink: epochs fold to full-CC labels; replay is safe") {
     import spark.implicits._
-    val root = Files.createTempDirectory("clusters_zone").toString
+    val root = SparkSpec.tempDir("clusters_zone").toString
     // three micro-batches whose union is {1,2,3,4}+{7,8} components;
     // batch 2 BRIDGES the first two clusters via (2,3)
     val batches = Seq(
@@ -331,8 +331,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("streaming near-dup flags an edited doc from an EARLIER batch") {
-    val in = Files.createTempDirectory("neardup_in").toString
-    val ckpt = Files.createTempDirectory("neardup_ckpt").toString
+    val in = SparkSpec.tempDir("neardup_in").toString
+    val ckpt = SparkSpec.tempDir("neardup_ckpt").toString
     val base = "the quick brown fox jumps over the lazy dog and then " +
       "runs far away into the deep dark forest tonight"
     val edited = base.replace("lazy", "sleepy") // near-dup, not exact
@@ -371,8 +371,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("heavy hitters accumulate across batches in keyed state") {
-    val in = Files.createTempDirectory("hh_in").toString
-    val ckpt = Files.createTempDirectory("hh_ckpt").toString
+    val in = SparkSpec.tempDir("hh_in").toString
+    val ckpt = SparkSpec.tempDir("hh_ckpt").toString
     val docSchema = StructType(Seq(
       StructField("source", StringType),
       StructField("text", StringType)))
@@ -407,8 +407,8 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming blocklist admission blocks exact content, batch-equal") {
     import org.apache.spark.sql.functions.col
-    val in = Files.createTempDirectory("bloom_in").toString
-    val ckpt = Files.createTempDirectory("bloom_ckpt").toString
+    val in = SparkSpec.tempDir("bloom_in").toString
+    val ckpt = SparkSpec.tempDir("bloom_ckpt").toString
     val bad1 = "forbidden spam content number one"
     val bad2 = "another blocked document entirely"
     val docSchema = StructType(Seq(
@@ -449,8 +449,8 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming fuzzy admission: one-typo names blocked by the exact check") {
     import org.apache.spark.sql.functions.col
-    val in = Files.createTempDirectory("fuzzy_in").toString
-    val ckpt = Files.createTempDirectory("fuzzy_ckpt").toString
+    val in = SparkSpec.tempDir("fuzzy_in").toString
+    val ckpt = SparkSpec.tempDir("fuzzy_ckpt").toString
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("name", StringType)))
@@ -497,9 +497,9 @@ class StreamsSpec extends SparkSpec {
     // watermark row still lands in its (open) window.
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.functions.{col, expr}
-    val in = Files.createTempDirectory("stream_append_in").toString
-    val out = Files.createTempDirectory("stream_append_out").toString
-    val ck = Files.createTempDirectory("stream_append_ck").toString
+    val in = SparkSpec.tempDir("stream_append_in").toString
+    val out = SparkSpec.tempDir("stream_append_out").toString
+    val ck = SparkSpec.tempDir("stream_append_ck").toString
     def runOnce(): Unit = {
       val q = Streams.tumblingCounts(
           Streams.fileStream(spark, in, schema), "1 hour", "1 hour")
@@ -559,8 +559,8 @@ class StreamsSpec extends SparkSpec {
 
   test("funnel stream: keyed state machine ≡ batch greedy parse, out-of-order") {
     import org.apache.spark.sql.functions.{col, unix_millis}
-    val in = Files.createTempDirectory("funnel_in").toString
-    val ckpt = Files.createTempDirectory("funnel_ckpt").toString
+    val in = SparkSpec.tempDir("funnel_in").toString
+    val ckpt = SparkSpec.tempDir("funnel_ckpt").toString
     def ev(id: Long, user: Long, et: String, hhmm: String) =
       s"""{"event_id":$id,"ts":"2024-01-01T$hhmm:00Z","user_id":$user,"event_type":"$et","value":1.0}"""
     // u1 full funnel; u2 click past the 30-min deadline; u3 purchase
@@ -630,7 +630,7 @@ class StreamsSpec extends SparkSpec {
     // exact replayable mode) on the SAME files proves the click was
     // genuinely reachable: there the late view unlocks it (reached=2).
     def fixture(): String = {
-      val in = Files.createTempDirectory("funnel_hz").toString
+      val in = SparkSpec.tempDir("funnel_hz").toString
       def ev(id: Long, user: Long, et: String, hhmm: String) =
         s"""{"event_id":$id,"ts":"2024-01-01T$hhmm:00Z","user_id":$user,"event_type":"$et","value":1.0}"""
       writeBatch(in, "b1.json",
@@ -650,7 +650,7 @@ class StreamsSpec extends SparkSpec {
       in
     }
     def drain(horizon: Option[Long], name: String): Map[Long, Long] = {
-      val ckpt = Files.createTempDirectory(s"funnel_hz_ck_$name").toString
+      val ckpt = SparkSpec.tempDir(s"funnel_hz_ck_$name").toString
       val out = Streams.funnelStream(
         Streams.rateLimitedStream(spark, fixture(), schema,
           maxFilesPerTrigger = 1),
@@ -681,8 +681,8 @@ class StreamsSpec extends SparkSpec {
 
   test("retention stream: final keyed state ≡ batch q128, out-of-order") {
     import org.apache.spark.sql.functions.col
-    val in = Files.createTempDirectory("ret_in").toString
-    val ckpt = Files.createTempDirectory("ret_ckpt").toString
+    val in = SparkSpec.tempDir("ret_in").toString
+    val ckpt = SparkSpec.tempDir("ret_ckpt").toString
     // 6 users × irregular activity days; round-robin batch split makes
     // every user's stream out-of-order (late EARLIER days rebase the
     // cohort — the case that forces re-emission)
@@ -724,8 +724,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("decay-attribution stream: final credits ≡ batch q258, late clicks") {
-    val in = Files.createTempDirectory("decay_in").toString
-    val ckpt = Files.createTempDirectory("decay_ckpt").toString
+    val in = SparkSpec.tempDir("decay_in").toString
+    val ckpt = SparkSpec.tempDir("decay_ckpt").toString
     def ev(id: Long, user: Long, et: String, dayHour: (Int, Int),
            value: Double) =
       s"""{"event_id":$id,"ts":"2024-01-${"%02d".format(dayHour._1)}T${"%02d".format(dayHour._2)}:00:00Z","user_id":$user,"event_type":"$et","value":$value}"""
@@ -779,9 +779,9 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("hourly-count maintenance: streamed anomaly scan ≡ batch q252") {
-    val in = Files.createTempDirectory("hcm_in").toString
-    val ckpt = Files.createTempDirectory("hcm_ckpt").toString
-    val root = Files.createTempDirectory("hcm_zone").toString + "/z"
+    val in = SparkSpec.tempDir("hcm_in").toString
+    val ckpt = SparkSpec.tempDir("hcm_ckpt").toString
+    val root = SparkSpec.tempDir("hcm_zone").toString + "/z"
     // 30 hours of clicks with deterministic per-hour counts and a
     // spike at hour 28 (clear anomaly); sparse 'view' hours exercise
     // the re-densification zeros
@@ -827,8 +827,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("streaming HLL final state ≡ batch q179 sketch, any batch split") {
-    val in = Files.createTempDirectory("hll_in").toString
-    val ckpt = Files.createTempDirectory("hll_ckpt").toString
+    val in = SparkSpec.tempDir("hll_in").toString
+    val ckpt = SparkSpec.tempDir("hll_ckpt").toString
     // the REAL corpus, streamed as 3 arbitrary micro-batches
     graft.Tables.load(spark, sf(), "documents")
       .select(org.apache.spark.sql.functions.col("source"),
@@ -864,8 +864,8 @@ class StreamsSpec extends SparkSpec {
   test("transition stream: k time-ordered batches ≡ batch bigram counts") {
     import org.apache.spark.sql.functions.{col, count, lit, unix_millis, lead}
     import org.apache.spark.sql.expressions.Window
-    val in = Files.createTempDirectory("trans_in").toString
-    val ckpt = Files.createTempDirectory("trans_ckpt").toString
+    val in = SparkSpec.tempDir("trans_in").toString
+    val ckpt = SparkSpec.tempDir("trans_ckpt").toString
     def ev(id: Long, user: Long, et: String, hhmm: String) =
       s"""{"event_id":$id,"ts":"2024-01-01T$hhmm:00Z","user_id":$user,"event_type":"$et","value":1.0}"""
     // batch boundaries cut INSIDE user sequences — the pair spanning
@@ -925,9 +925,9 @@ class StreamsSpec extends SparkSpec {
   test("transition stream: checkpointed restart emits nothing new and " +
     "resumes across the boundary") {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val in = Files.createTempDirectory("trans_rs_in").toString
-    val ckpt = Files.createTempDirectory("trans_rs_ckpt").toString
-    val sink = Files.createTempDirectory("trans_rs_sink").toString
+    val in = SparkSpec.tempDir("trans_rs_in").toString
+    val ckpt = SparkSpec.tempDir("trans_rs_ckpt").toString
+    val sink = SparkSpec.tempDir("trans_rs_sink").toString
     def ev(id: Long, user: Long, et: String, hhmm: String) =
       s"""{"event_id":$id,"ts":"2024-01-01T$hhmm:00Z","user_id":$user,"event_type":"$et","value":1.0}"""
     // the memory sink can't recover a checkpoint — restart semantics

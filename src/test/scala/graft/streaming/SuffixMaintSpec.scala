@@ -27,8 +27,7 @@ class SuffixMaintSpec extends SparkSpec {
   test("delta-admitted ≡ full rebuild, hash-identical q313 output, " +
     "under replay and re-admission") {
     val dir = sf()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sfxmaint-").toString
+    val root = SparkSpec.tempDir("graft-sfxmaint-").toString
     val docs = docsOf(dir)
     // init on ~60%, then two out-of-order batches; 8 buckets so a
     // batch genuinely touches a subset and neighbors matter
@@ -51,8 +50,7 @@ class SuffixMaintSpec extends SparkSpec {
 
   test("single-bucket layout and empty batches behave") {
     val dir = sf()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sfxmaint1-").toString
+    val root = SparkSpec.tempDir("graft-sfxmaint1-").toString
     val docs = docsOf(dir)
     SuffixMaint.init(spark, docs.where(col("doc_id") % 2 === 0),
       root, buckets = 1)
@@ -68,8 +66,7 @@ class SuffixMaintSpec extends SparkSpec {
   test("inflight marker fences reads AND other folds; only the same " +
     "batchId replays and converges") {
     val dir = sf()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sfxmaint2-").toString
+    val root = SparkSpec.tempDir("graft-sfxmaint2-").toString
     val docs = docsOf(dir)
     SuffixMaint.init(spark, docs.where(col("doc_id") % 2 === 0),
       root, buckets = 4)
@@ -101,10 +98,8 @@ class SuffixMaintSpec extends SparkSpec {
     // a corpus dominated by ONE repeated text makes most sampled
     // suffix keys identical — reference-equality distinct kept them
     // all (round-11 ADVICE), wasting permanently-empty buckets
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sfxsplit-").toString
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sfxsplitdocs-").toString
+    val root = SparkSpec.tempDir("graft-sfxsplit-").toString
+    val dir = SparkSpec.tempDir("graft-sfxsplitdocs-").toString
     val docs = ((0L until 60L).map(i =>
       (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
         "lambda mu nu xi omicron pi rho sigma tau upsilon")) ++
@@ -127,8 +122,7 @@ class SuffixMaintSpec extends SparkSpec {
   test("compact: squashed zones read identically, later folds still " +
     "converge, crash windows fence and re-run converges") {
     val dir = sf()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sfxcompact-").toString
+    val root = SparkSpec.tempDir("graft-sfxcompact-").toString
     val docs = docsOf(dir)
     SuffixMaint.init(spark, docs.where(pmod(col("doc_id"), lit(5)) < 2),
       root, buckets = 8)
@@ -222,8 +216,7 @@ class SuffixMaintSpec extends SparkSpec {
 
   test("compactNeeded triggers on run-log depth; compact resets it") {
     val dir = sf()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sfxneed-").toString
+    val root = SparkSpec.tempDir("graft-sfxneed-").toString
     val docs = docsOf(dir)
     // ONE bucket so every fold deepens the same run log
     SuffixMaint.init(spark, docs.where(pmod(col("doc_id"), lit(6)) === 0),
@@ -247,8 +240,7 @@ class SuffixMaintSpec extends SparkSpec {
   test("corrupt/empty markers degrade to the documented resolve-by-" +
     "hand refusal, not a parse error") {
     val dir = sf()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sfxcorrupt-").toString
+    val root = SparkSpec.tempDir("graft-sfxcorrupt-").toString
     val docs = docsOf(dir)
     SuffixMaint.init(spark, docs.limit(5), root, buckets = 1)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(

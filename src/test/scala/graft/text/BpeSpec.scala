@@ -12,7 +12,7 @@ class BpeSpec extends SparkSpec {
     // widest×3 (no end-of-word marker) — first merges hand-derivable:
     // (e,s) ties (s,t) at 9 → lexicographic; then (es,t)=9; then
     // (l,o) ties (o,w) at 7 → lexicographic; then (lo,w)=7
-    val tmp = java.nio.file.Files.createTempDirectory("bpe").toString
+    val tmp = SparkSpec.tempDir("bpe").toString
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
     Seq((1L, text, "en", "src0", text.length.toLong))

@@ -13,8 +13,7 @@ class CorpusStatsSpec extends SparkSpec {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("repetition_docs").toString
+    val d = SparkSpec.tempDir("repetition_docs").toString
     Seq(
       (0L, Seq.fill(50)("spam").mkString(" "), "a"), // degenerate
       (1L, (0 until 50).map(i => s"w$i").mkString(" "), "a"), // diverse
@@ -90,8 +89,7 @@ class CorpusStatsSpec extends SparkSpec {
 
   test("q159: exact rank-selection quantiles on hand-built lengths") {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("quantile_docs").toString
+    val d = SparkSpec.tempDir("quantile_docs").toString
     def text(n: Int) = Seq.fill(n)("x").mkString(" ")
     Seq(
       (0L, text(10), "s"), (1L, text(20), "s"),
@@ -171,8 +169,7 @@ class CorpusStatsSpec extends SparkSpec {
       (4L, "w0 z1 z2 z3 z4 z5 z6 w7"),               // cross-doc share
       (5L, y), (6L, y)                               // window-cap clones
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-dupsub-").toString
+    val tmp = SparkSpec.tempDir("graft-dupsub-").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = CorpusStats.dupSubstrings(spark, tmp).collect()
       .map(r => (r.getAs[String]("sub"), r.getAs[Long]("tok_len"),

@@ -89,8 +89,7 @@ class PostingsSpec extends SparkSpec {
       (3L, "one two three four five six seven"),   // disjoint
       (4L, "alpha beta gamma delta epsilon eta")   // near-dup of 1
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("setsim").toString
+    val dir = SparkSpec.tempDir("setsim").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = Postings.setSimJoin(spark, dir)
       .select("a", "b", "jaccard").collect()
@@ -122,8 +121,7 @@ class PostingsSpec extends SparkSpec {
     val quote = "alpha beta gamma delta epsilon zeta"
     val page = s"intro words here $quote " +
       (1 to 30).map(i => s"filler$i").mkString(" ")
-    val dir = java.nio.file.Files
-      .createTempDirectory("containment").toString
+    val dir = SparkSpec.tempDir("containment").toString
     Seq((1L, quote), (2L, page)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val c = Postings.containmentJoin(spark, dir)
@@ -137,8 +135,7 @@ class PostingsSpec extends SparkSpec {
 
   test("q123 keyword search: integer scoring and tie-break semantics") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("kwsearch").toString
+    val dir = SparkSpec.tempDir("kwsearch").toString
     // 4 docs; terms: "spark" df=2, "data" df=4 (idf weight N DIV df:
     // spark -> 2, data -> 1)
     Seq(
@@ -191,8 +188,7 @@ class PostingsSpec extends SparkSpec {
 
   test("q152 phrase search: exact positions, overlaps counted, case folded") {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("phrase_docs").toString
+    val d = SparkSpec.tempDir("phrase_docs").toString
     Seq(
       (0L, "alpha beta gamma alpha beta", "a"), // matches at 0 and 3
       (1L, "beta alpha nothing here", "a"), // reversed — no match

@@ -99,8 +99,8 @@ class SketchesSpec extends SparkSpec {
   test("hll zone: incrementally maintained ≡ rebuilt; summary matches q179") {
     import org.apache.spark.sql.functions.col
     val docs = graft.Tables.load(spark, sf(), "documents")
-    val full = java.nio.file.Files.createTempDirectory("hll_full").toString
-    val inc = java.nio.file.Files.createTempDirectory("hll_inc").toString
+    val full = SparkSpec.tempDir("hll_full").toString
+    val inc = SparkSpec.tempDir("hll_inc").toString
     Sketches.hllZoneBuild(docs, full)
     Sketches.hllZoneBuild(docs.where(col("doc_id") % 2 === 0), inc)
     Sketches.hllZoneApplyBatch(spark, inc,
@@ -134,8 +134,8 @@ class SketchesSpec extends SparkSpec {
   test("cm zone: incrementally maintained ≡ rebuilt (sum is the merge)") {
     import org.apache.spark.sql.functions.col
     val docs = graft.Tables.load(spark, sf(), "documents")
-    val full = java.nio.file.Files.createTempDirectory("cm_full").toString
-    val inc = java.nio.file.Files.createTempDirectory("cm_inc").toString
+    val full = SparkSpec.tempDir("cm_full").toString
+    val inc = SparkSpec.tempDir("cm_inc").toString
     Sketches.cmZoneBuild(docs, full)
     Sketches.cmZoneBuild(docs.where(col("doc_id") % 2 === 0), inc)
     Sketches.cmZoneApplyBatch(spark, inc,

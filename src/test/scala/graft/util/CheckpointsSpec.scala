@@ -27,7 +27,7 @@ class CheckpointsSpec extends SparkSpec {
   /** Run `f` with the dial pointed at a fresh temp dir; afterwards the
     * dial is unset and the dir deleted with its contents. */
   private def withDial(prefix: String)(f: Path => Unit): Unit = {
-    val dir = Files.createTempDirectory(prefix)
+    val dir = SparkSpec.tempDir(prefix)
     spark.conf.set(Checkpoints.DirKey, dir.toString)
     try f(dir)
     finally {

@@ -2,20 +2,22 @@ package graft.util
 
 import graft.SparkSpec
 
-/** Pins the scratch-zone contract: the conf dial routes the parquet
-  * zone, the stored relation round-trips, and concurrent stores never
+/** Pins the scratch-zone contract: the conf dial routes a zone, a
+  * stored relation round-trips, and two zones of one name never
   * collide. The per-query plan pins (PostingsSpec, PlanAuditSpec)
   * prove consumers actually read the zone. */
 class ScratchSpec extends SparkSpec {
 
-  test("store round-trips and lands under graft.scratch.dir when set") {
+  test("zone lands under graft.scratch.dir as <appId>/<name>-<n>") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("scratch-spec").toString
+    val dir = SparkSpec.tempDir("scratch-spec").toString
     spark.conf.set(Scratch.DirKey, dir)
     try {
-      val got = Scratch.store(
-        Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "unit")
+      val p = Scratch.zone(spark, "unit")
+      assert(p.matches(
+        s"\\Q$dir/${spark.sparkContext.applicationId}/unit-\\E[0-9]+"), p)
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(p)
+      val got = spark.read.parquet(p)
       assert(got.orderBy("id").collect().map(_.getString(1)).toSeq ==
         Seq("a", "b"))
       // zones live under <root>/<appId>/<name>-<n>
@@ -27,12 +29,15 @@ class ScratchSpec extends SparkSpec {
     } finally spark.conf.unset(Scratch.DirKey)
   }
 
-  test("unique store paths: same name twice never collides") {
+  test("unique zone paths: same name twice never collides") {
     import spark.implicits._
-    val a = Scratch.store(Seq(1L).toDF("x"), "twice")
-    val b = Scratch.store(Seq(2L).toDF("x"), "twice")
-    assert(a.collect().map(_.getLong(0)).toSeq == Seq(1L))
-    assert(b.collect().map(_.getLong(0)).toSeq == Seq(2L))
+    val a = Scratch.zone(spark, "twice")
+    val b = Scratch.zone(spark, "twice")
+    assert(a != b)
+    Seq(1L).toDF("x").write.parquet(a)
+    Seq(2L).toDF("x").write.parquet(b)
+    assert(spark.read.parquet(a).collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(spark.read.parquet(b).collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
   test("memo: one derivation per key; the by-name relation never builds on a hit") {

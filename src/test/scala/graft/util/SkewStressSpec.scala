@@ -42,8 +42,7 @@ class SkewStressSpec extends SparkSpec {
   private val Clones = 1200 // > Caps.BandBucketCap = 1000: binds
 
   private lazy val fix: (String, SkewFixture.Planted) = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-skewfix-").toString
+    val dir = SparkSpec.tempDir("graft-skewfix-").toString
     val planted = SkewFixture.write(spark, sf("0.001"), dir, Clones)
     (dir, planted)
   }
@@ -152,8 +151,7 @@ class SkewStressSpec extends SparkSpec {
     // triangle is COMPLETE (block seams invisible) and that the
     // non-binding cap reports nothing.
     val n = Caps.BandBucketCap
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-nearcap-").toString
+    val dir = SparkSpec.tempDir("graft-nearcap-").toString
     val docs = ((0L until n.toLong).map(i =>
       (i, "the very same boilerplate paragraph stamped onto every " +
         "member of the near-cap clone family", "a")) ++
