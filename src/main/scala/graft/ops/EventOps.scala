@@ -636,7 +636,7 @@ object EventOps {
     * CONSUMER, not the one-time materialization. */
   def partitionPruned(s: SparkSession, dir: String): DataFrame = {
     val zone = eventsByDayZone(s, dir)
-    s.read.parquet(zone)
+    Tables.read(s, zone)
       .where(col("event_date").between("2024-01-10", "2024-01-12"))
       .groupBy(col("event_date").cast("string").as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -664,7 +664,7 @@ object EventOps {
       .agg(count(lit(1)).as("cnt"))
       .where(col("cnt") % 2 === 0)
       .select(col("d"))
-    val fact = s.read.parquet(zone)
+    val fact = Tables.read(s, zone)
     fact.join(dim, fact("event_date") === dim("d"))
       .groupBy(col("event_date").cast("string").as("day"),
         col("event_type"))

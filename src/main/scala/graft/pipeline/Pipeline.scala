@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.Tables
+
 /** The reference's orchestration semantics as plain Scala sequencing
   * (SURVEY.md §2.9): a linear task DAG (C1) with fail-fast quality
   * gates (C2), ordinary return values instead of XCom (C3), and
@@ -30,7 +32,7 @@ object Pipeline {
   def materialize(spark: SparkSession, df: DataFrame,
                   path: String): Long = {
     df.write.mode(SaveMode.Overwrite).parquet(path)
-    spark.read.parquet(path).count()
+    Tables.read(spark, path).count()
   }
 
   /** Partition-layout materialize: the 100 TB default. Output is laid
@@ -45,7 +47,7 @@ object Pipeline {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCols: _*)
       .parquet(path)
-    spark.read.parquet(path).count()
+    Tables.read(spark, path).count()
   }
 
   /** [[materialize]] with the row count OBSERVED during the write
@@ -64,7 +66,7 @@ object Pipeline {
       .write.mode(SaveMode.Overwrite).parquet(path)
     val n = obs.get("n").asInstanceOf[Long]
     if (auditRecount) {
-      val back = spark.read.parquet(path).count()
+      val back = Tables.read(spark, path).count()
       require(back == n,
         s"sink recount $back != observed $n — corrupt write at $path")
     }
@@ -81,7 +83,7 @@ object Pipeline {
     val rawCount = qualityGate(raw, "raw input")
     val cleaned = transform(raw)
     val written = materialize(spark, cleaned, targetPath)
-    val back = spark.read.parquet(targetPath)
+    val back = Tables.read(spark, targetPath)
     val summaryRows = summarize(back).count()
     RunReport(Seq(
       StageReport("validate_raw", rawCount),

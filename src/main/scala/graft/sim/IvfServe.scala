@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** The IVF index as a SERVED ARTIFACT — the 100 TB shape of
   * approximate nearest neighbor, where q53 computes the index inside
   * one query: [[build]] writes the corpus PARTITIONED BY CELL (the
@@ -42,7 +44,7 @@ object IvfServe {
     * assigned cell's centroid — the per-row k-means objective. */
   private def withD2(s: SparkSession, zoneDir: String,
                      assigned: DataFrame): DataFrame = {
-    val cdf = s.read.parquet(s"$zoneDir/centroids")
+    val cdf = Tables.read(s, s"$zoneDir/centroids")
       .withColumnRenamed("cell", "c_cell")
     assigned.join(broadcast(cdf), col("cell") === col("c_cell"))
       .withColumn("d2", expr(
@@ -74,7 +76,7 @@ object IvfServe {
     * ≤ nCells centroid table broadcasts, the batch streams. */
   def assignByCentroids(s: SparkSession, zoneDir: String,
                         vectors: DataFrame): DataFrame = {
-    val cdf = s.read.parquet(s"$zoneDir/centroids")
+    val cdf = Tables.read(s, s"$zoneDir/centroids")
     // argmin as a partial-aggregated min(struct(d2, cell)) — map-side
     // combine reduces the nCells candidate rows per vector before any
     // exchange; a window spelling would shuffle all of them
@@ -119,7 +121,7 @@ object IvfServe {
     * relation; O(1) in the corpus. No batches yet → no drift. */
   def driftNeeded(s: SparkSession, zoneDir: String,
                   tol: Double = 0.2): Boolean = {
-    val st = s.read.parquet(s"$zoneDir/stats")
+    val st = Tables.read(s, s"$zoneDir/stats")
       .groupBy(col("kind"))
       .agg(sum(col("n")).as("n"), sum(col("sum_d2")).as("sd"))
       .collect().map(r => r.getString(0) ->
@@ -137,7 +139,7 @@ object IvfServe {
   def search(s: SparkSession, zoneDir: String, queries: DataFrame,
              k: Int = 5, nProbe: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val cdf = s.read.parquet(s"$zoneDir/centroids")
+    val cdf = Tables.read(s, s"$zoneDir/centroids")
     val probed = queries.crossJoin(broadcast(cdf))
       .withColumn("cdot",
         call_function("float_dot", col("qv"), col("cvec")))
@@ -148,7 +150,7 @@ object IvfServe {
       .select(col("query_id"), col("qv"), col("cell"))
     val cells = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val zone = s.read.parquet(s"$zoneDir/corpus")
+    val zone = Tables.read(s, s"$zoneDir/corpus")
       .where(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
     val scored = zone.join(broadcast(probed),
         zone("cell") === probed("cell") &&

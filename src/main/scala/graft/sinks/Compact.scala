@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
+import graft.Tables
+
 /** Small-file compaction for parquet zone tables.
   *
   * Streaming appends and per-batch ingests accrete many small files;
@@ -43,7 +45,7 @@ object Compact {
 
     val staging = new Path(tablePath + ".compacting")
     val backup = new Path(tablePath + ".old")
-    val df = spark.read.parquet(tablePath)
+    val df = Tables.read(spark, tablePath)
     var rows = 0L
     try {
       // coalesce = narrow repartitioning: no shuffle, tasks concatenate
@@ -51,7 +53,7 @@ object Compact {
       // table already wider than `desired` only ever shrinks.)
       df.coalesce(desired).write.mode(SaveMode.Overwrite)
         .parquet(staging.toString)
-      rows = spark.read.parquet(staging.toString).count()
+      rows = Tables.read(spark, staging.toString).count()
       SwapPublish.publish(fs, staging, target, backup, targetExists = true)
     } finally fs.delete(staging, true)
     Report(before.size, SwapPublish.parquetFiles(fs, target).size, bytes, rows)

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Incremental maintenance of a materialized equi-JOIN view — the
   * third member of the IVM family ([[IncrementalAgg]] = scalar
   * aggregates, [[IndexMaintain]] = collect-style aggregates, this =
@@ -119,7 +121,7 @@ object JoinMaintain {
   def applyFactBatch(s: SparkSession, root: String, key: String,
                      batch: DataFrame, batchId: Long): Unit = {
     if (committed(s, root, batchId)) return
-    val dim = s.read.parquet(dimPath(root)).drop("batch")
+    val dim = Tables.read(s, dimPath(root)).drop("batch")
     commitViewDelta(s, root, batch.join(dim, key), batchId)
     batch.withColumn("kb", kb(key))
       .write.mode(SaveMode.Overwrite).partitionBy("kb")
@@ -139,7 +141,7 @@ object JoinMaintain {
     val buckets = batch
       .select(pmod(hash(col(key)), lit(Buckets)).as("kb"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val fact = s.read.parquet(factPath(root))
+    val fact = Tables.read(s, factPath(root))
       .where(col("kb").isin(buckets: _*)).drop("kb", "batch")
     commitViewDelta(s, root, fact.join(batch, key), batchId)
     batch.write.mode(SaveMode.Overwrite)
@@ -153,7 +155,7 @@ object JoinMaintain {
     * batch can ever be marked, so readers behind the single writer
     * see exactly the committed fold. */
   def read(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(viewRoot(root)).drop("epoch")
+    Tables.read(s, viewRoot(root)).drop("epoch")
 
   /** The pruned-scan witness for the spec: the fact scan a dim batch
     * of these keys performs (its plan must carry PartitionFilters on
@@ -164,7 +166,7 @@ object JoinMaintain {
     val buckets = batch
       .select(pmod(hash(col(key)), lit(Buckets)).as("kb"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    s.read.parquet(factPath(root))
+    Tables.read(s, factPath(root))
       .where(col("kb").isin(buckets: _*))
   }
 }

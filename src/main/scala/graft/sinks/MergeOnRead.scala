@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Merge-on-read zone table: keyed MERGE with O(delta) write cost.
   *
   * [[Upsert.merge]] is copy-on-write — every merge rewrites the whole
@@ -81,7 +83,7 @@ object MergeOnRead {
   def merge(spark: SparkSession, root: String, updates: DataFrame,
             keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
-    val base = spark.read.parquet(basePath(root))
+    val base = Tables.read(spark, basePath(root))
     // cast through the base schema: a caller-typed INT key against a
     // BIGINT base would otherwise write an epoch dir whose parquet
     // physical type conflicts and break every later read
@@ -96,7 +98,7 @@ object MergeOnRead {
   def delete(spark: SparkSession, root: String, keys: DataFrame,
              keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "delete requires at least one key column")
-    val base = spark.read.parquet(basePath(root))
+    val base = Tables.read(spark, basePath(root))
     val tombstones = keys.select(keyCols.map(c =>
       col(c).cast(base.schema(c).dataType).as(c)): _*)
     val widened = base.columns.foldLeft(tombstones) { (df, c) =>
@@ -132,7 +134,7 @@ object MergeOnRead {
   private def readView(spark: SparkSession, root: String,
                        keyCols: Seq[String], asOf: Long,
                        touched: Option[DataFrame]): DataFrame = {
-    val base = spark.read.parquet(basePath(root))
+    val base = Tables.read(spark, basePath(root))
       .withColumn(OpCol, lit("u")).withColumn(EpochCol, lit(0L))
     val es = epochs(spark, root).filter(_ <= asOf)
     val all =
@@ -177,7 +179,7 @@ object MergeOnRead {
     val es = epochs(spark, root).filter(e => e > fromEpoch && e <= toEpoch)
     val touched =
       if (es.isEmpty)
-        spark.read.parquet(basePath(root))
+        Tables.read(spark, basePath(root))
           .select(keyCols.map(col): _*).limit(0)
       else spark.read
         .option("basePath", deltaRoot(root))

@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.Tables
+
 /** Keyed upsert (MERGE) over parquet zone tables — the incremental
   * alternative to the reference's TRUNCATE+INSERT full refresh (M1):
   * rows in `updates` replace same-key rows in the target; everything
@@ -28,7 +30,7 @@ object Upsert {
     val probe = new org.apache.hadoop.fs.Path(targetPath)
     val probeFs = probe.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing =
-      if (probeFs.exists(probe)) Some(spark.read.parquet(targetPath))
+      if (probeFs.exists(probe)) Some(Tables.read(spark, targetPath))
       else None
 
     val merged = existing match {
@@ -58,6 +60,6 @@ object Upsert {
       SwapPublish.publish(fs, staging, target, backup,
         targetExists = existing.isDefined)
     } finally fs.delete(staging, true) // no orphaned staging on failure
-    spark.read.parquet(targetPath).count()
+    Tables.read(spark, targetPath).count()
   }
 }

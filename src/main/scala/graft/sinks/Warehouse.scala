@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
+import graft.Tables
 import graft.schema.SchemaEvolver
 
 /** Warehouse-facing utilities mirroring the reference's service edges
@@ -29,7 +30,7 @@ object Warehouse {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = SwapPublish.parquetFiles(fs, p)
     if (files.isEmpty) return TableStats(0, 0L, 0L, 0)
-    val df = spark.read.parquet(path)
+    val df = Tables.read(spark, path)
     TableStats(files.size, files.map(_.getLen).sum, df.count(),
       df.columns.length)
   }

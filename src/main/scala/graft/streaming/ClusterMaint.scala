@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.dedup.Dedup
 
 /** Streaming maintenance of a near-dup cluster zone: each micro-batch
@@ -70,7 +71,7 @@ object ClusterMaint {
     import spark.implicits._
     epochs(spark, root).filter(e => beforeEpoch.forall(e < _))
       .maxOption match {
-      case Some(e) => spark.read.parquet(s"$root/epoch=$e")
+      case Some(e) => Tables.read(spark, s"$root/epoch=$e")
       case None => Seq.empty[(Long, Long)].toDF("id", "label")
     }
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
+
 /** Streaming maintenance of the q252 anomaly monitor's hourly-count
   * state: each micro-batch of raw events folds into a persistent
   * (event_type, t, c) table — t the absolute hour, c the exact event
@@ -87,7 +89,7 @@ object HourlyCountMaint {
     import spark.implicits._
     epochs(spark, root).filter(e => beforeEpoch.forall(e < _))
       .maxOption match {
-      case Some(e) => spark.read.parquet(s"$root/epoch=$e")
+      case Some(e) => Tables.read(spark, s"$root/epoch=$e")
       case None =>
         Seq.empty[(String, Long, Long)].toDF("event_type", "t", "c")
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
+
 /** Kafka-SHAPED source plumbing — everything around a Kafka topic
   * except the broker connection (no Kafka client ships in this build;
   * `spark-sql-kafka` exposes exactly this schema, so swapping
@@ -108,7 +110,7 @@ object KafkaShaped {
           if (fs.exists(out)) {
             if (fs.exists(offs)) {
               // replay: the committed offsets must describe THIS batch
-              val committed = spark.read.parquet(offs.toString)
+              val committed = Tables.read(spark, offs.toString)
                 .collect().map(_.toSeq).toSet
               val current = hwm.collect().map(_.toSeq).toSet
               if (committed != current)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.sim.Similarity
 
 /** Streaming ADMISSION twin of the corpus-scaled embedding near-dup
@@ -230,7 +231,7 @@ object NearDupMaint {
       val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
       val squash = all.filter(_ <= upToEpoch)
       if (squash.size > 1) {
-        val union = spark.read.parquet(
+        val union = Tables.read(spark,
           squash.map(e => s"$dir/epoch=$e"): _*).distinct()
         publish(union, dir, upToEpoch)
         squash.filter(_ != upToEpoch).foreach { e =>
@@ -273,7 +274,7 @@ object NearDupMaint {
       .filter(e => beforeEpoch.forall(e < _))
       .map(e => s"$dir/epoch=$e")
     if (paths.isEmpty) empty
-    else spark.read.parquet(paths: _*)
+    else Tables.read(spark, paths: _*)
   }
 
   private def emptyVectors(spark: SparkSession): DataFrame =

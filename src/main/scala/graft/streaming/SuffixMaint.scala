@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.Tables
 import graft.text.CorpusStats
 
 /** Incremental ADMISSION twin of the q313 corpus-wide duplicate-
@@ -266,7 +267,7 @@ object SuffixMaint {
     // (b) admitted: squash the id epochs ≤ upToEpoch into one
     val adm = batches.filter(_ <= upToEpoch)
     if (adm.size > 1) {
-      val union = s.read.parquet(
+      val union = Tables.read(s,
         adm.map(e => s"$root/admitted/epoch=$e"): _*).distinct()
       graft.sinks.SwapPublish.writeEpoch(union, s"$root/admitted",
         upToEpoch)
@@ -643,7 +644,7 @@ object SuffixMaint {
 
   private def readSplits(s: SparkSession,
                          root: String): (Array[Array[String]], Int, Int) = {
-    val rows = s.read.parquet(s"$root/splits").collect()
+    val rows = Tables.read(s, s"$root/splits").collect()
     require(rows.nonEmpty, s"split zone missing/empty under $root")
     val sorted = rows.filter(_.getInt(0) >= 0).sortBy(_.getInt(0))
     (sorted.map(_.getSeq[String](1).toArray),
@@ -670,7 +671,7 @@ object SuffixMaint {
                          root: String): Map[Int, (Array[String], Array[String])] = {
     val es = graft.sinks.SwapPublish.listEpochs(s, s"$root/bounds")
     if (es.isEmpty) return Map.empty
-    s.read.parquet(s"$root/bounds/epoch=${es.max}").collect()
+    Tables.read(s, s"$root/bounds/epoch=${es.max}").collect()
       .map(r => r.getInt(0) -> (r.getSeq[String](1).toArray,
         r.getSeq[String](2).toArray)).toMap
   }
@@ -684,7 +685,7 @@ object SuffixMaint {
     val paths = graft.sinks.SwapPublish.listEpochs(s, dir)
       .filter(e => beforeEpoch.forall(e < _))
       .map(e => s"$dir/epoch=$e")
-    if (paths.isEmpty) empty else s.read.parquet(paths: _*)
+    if (paths.isEmpty) empty else Tables.read(s, paths: _*)
   }
 
   private def emptyIds(s: SparkSession): DataFrame =

@@ -323,7 +323,7 @@ object Sketches {
     * spec-pinned). */
   def cmZoneApplyBatch(s: SparkSession, path: String,
                        batch: DataFrame): Unit = {
-    val merged = s.read.parquet(path)
+    val merged = Tables.read(s, path)
       .unionByName(cmCounters(
         batch.select(Tokens.whitespace(col("text")).as("w"))
           .where(size(col("w")) >= 3)
@@ -334,7 +334,7 @@ object Sketches {
     import scala.jdk.CollectionConverters._
     val out = s.createDataFrame(
       merged.toSeq.asJava,
-      s.read.parquet(path).schema)
+      Tables.read(s, path).schema)
     out.write.mode("overwrite").parquet(path)
   }
 
@@ -439,7 +439,7 @@ object Sketches {
     * constant-bounded zone. */
   def hllZoneApplyBatch(s: SparkSession, path: String,
                         batch: DataFrame): Unit = {
-    val merged = s.read.parquet(path)
+    val merged = Tables.read(s, path)
       .unionByName(registersOf(batch))
       .groupBy(col("source"), col("reg"))
       .agg(max(col("m")).as("m"))
@@ -447,13 +447,13 @@ object Sketches {
     import scala.jdk.CollectionConverters._
     val out = s.createDataFrame(
       merged.toSeq.asJava,
-      s.read.parquet(path).schema)
+      Tables.read(s, path).schema)
     out.write.mode("overwrite").parquet(path)
   }
 
   /** Read a register zone back as the q179-shaped summary. */
   def hllZoneSummary(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Tables.read(s, path)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_regs_hit"),
         sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(55 - m AS INT))"))

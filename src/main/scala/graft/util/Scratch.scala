@@ -2,6 +2,8 @@ package graft.util
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one store for every directory the engine writes for itself:
@@ -110,7 +112,7 @@ object Scratch {
     * built on a memo hit. */
   def memo(spark: SparkSession, name: String, key: String)
           (df: => DataFrame): DataFrame =
-    spark.read.parquet(memoDir(spark, name, s"rel:$key") { p =>
+    graft.Tables.read(spark, memoDir(spark, name, s"rel:$key") { p =>
       df.write.mode("overwrite").parquet(p)
     })
 
@@ -147,14 +149,16 @@ object Scratch {
     }
   }
 
-  /** Delete every zone this application stored. Only call when no
-    * live DataFrame still scans a zone (e.g. between batch runs). */
+  /** Delete every zone this application stored, and the schemas
+    * [[graft.Tables.read]] holds for paths inside them. Only call when
+    * no live DataFrame still scans a zone (e.g. between batch runs). */
   def clear(spark: SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     stored.forEach { p =>
       val path = new org.apache.hadoop.fs.Path(p)
       path.getFileSystem(conf).delete(path, true): Unit
     }
+    graft.Tables.forget(spark, stored.asScala)
     stored.clear()
     memoized.clear()
   }

@@ -14,7 +14,9 @@ import graft.util.Sessions
   * checkpoint, so every round-materializing loop goes through
   * `Checkpoints.iterate`. One zone store: outside `util/Scratch.scala`
   * no main source picks a temp location, and outside
-  * `SparkSpec.tempDir` no test creates a temp dir. */
+  * `SparkSpec.tempDir` no test creates a temp dir. One parquet read:
+  * outside `Tables.scala` no main source reads parquet the plain way,
+  * so every such read reuses `Tables.read`'s inferred schema. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
@@ -22,6 +24,7 @@ class SourceCheckSpec extends SparkSpec {
     root.resolve("src/main/scala/graft/util/Checkpoints.scala")
   private val scratch = root.resolve("src/main/scala/graft/util/Scratch.scala")
   private val sparkSpec = root.resolve("src/test/scala/graft/SparkSpec.scala")
+  private val tables = root.resolve("src/main/scala/graft/Tables.scala")
   // this spec names every pattern it checks, so it is exempt from all
   private val self = root.resolve("src/test/scala/graft/SourceCheckSpec.scala")
 
@@ -37,7 +40,8 @@ class SourceCheckSpec extends SparkSpec {
       .map(root.relativize(_).toString)
 
   test("sources are found, Sessions and this spec among them") {
-    assert(Seq(sessions, checkpoints, scratch, sparkSpec, self).forall(sources.contains))
+    assert(Seq(sessions, checkpoints, scratch, sparkSpec, tables, self)
+      .forall(sources.contains))
   }
 
   test("SparkSession.builder appears only in util/Sessions.scala") {
@@ -80,6 +84,18 @@ class SourceCheckSpec extends SparkSpec {
         Files.readString(p).contains("createTempDirectory"))
       .map(root.relativize(_).toString)
     assert(bad.isEmpty, s"take test dirs from SparkSpec.tempDir: $bad")
+  }
+
+  test("the plain .read.parquet( appears in src/main only in Tables.scala") {
+    val main = root.resolve("src/main/scala/graft")
+    val exempt = Seq("examples", "tools").map(main.resolve)
+    val plain = """\.read\s*\.parquet\(""".r
+    val bad = sources
+      .filter(p => p.startsWith(main) && p != tables &&
+        !exempt.exists(p.startsWith) &&
+        plain.findFirstIn(Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString)
+    assert(bad.isEmpty, s"read parquet through Tables.read: $bad")
   }
 
   test("Sessions.cpus honours SPARK_GRAFT_CPUS, else the processor count") {

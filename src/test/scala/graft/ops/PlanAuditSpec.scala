@@ -395,8 +395,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q133: sketch is lazy (no compute job at construction), one scan") {
-    // every registry query pays Tables.load's 1-task parquet footer
-    // metadata job ("parquet at Tables.scala") at construction; the
+    // the first Tables.load of a table in the JVM runs a 1-task parquet
+    // footer job ("parquet at Tables.scala") at construction, and a
+    // repeat load of the unchanged table runs none (TablesReadSpec), so
+    // whether one ran here depends on the suites before it; the
     // eagerness under test is a COMPUTE job — the old stat.freqItems
     // spelling ran a corpus aggregate synchronously at call time
     @volatile var names = List.empty[String]

@@ -54,9 +54,27 @@ class ScratchSpec extends SparkSpec {
       Seq((2L, "y")).toDF("id", "v"))
     assert(c.head().getLong(0) == 2L && builds == 1)
   }
+
+  test("clear drops the schemas read inside its zones, and only those") {
+    import spark.implicits._
+    val dir = SparkSpec.tempDir("scratch-clear").toString
+    spark.conf.set(Scratch.DirKey, dir)
+    try {
+      val zone = Scratch.zone(spark, "clear")
+      val inZone = s"${Scratch.zone(spark, "clear")}/centroids"
+      val table = SparkSpec.tempDir("scratch-clear-table").resolve("t.parquet").toString
+      for (p <- Seq(zone, inZone, table)) {
+        Seq(1L).toDF("x").write.parquet(p)
+        graft.Tables.read(spark, p)
+        assert(graft.Tables.holds(spark, p), p)
+      }
+      Scratch.clear(spark)
+      assert(!graft.Tables.holds(spark, zone) && !graft.Tables.holds(spark, inZone))
+      assert(!new java.io.File(zone).exists)
+      assert(graft.Tables.holds(spark, table), "a table outside every zone stays")
+    } finally spark.conf.unset(Scratch.DirKey)
+  }
 }
-// NOTE: Scratch.clear() is deliberately untested here — suites share
-// one JVM-wide session and run in parallel, and a global clear would
-// delete zones a concurrent suite is scanning. Its memo-map reset is
-// two lines audited by eye; calling it belongs to batch boundaries,
-// not to a shared-session test run.
+// NOTE: suites run one at a time in the forked test JVM, so the global
+// Scratch.clear above deletes only zones of suites that have finished;
+// it also resets the memo map, so a later suite rebuilds what it needs.
