@@ -23,11 +23,10 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * its schema while the key still matches. The key covers every input
   * of the inference: the (file, length, mtime) of every file under the
   * path, from one recursive listing, and every set reader conf
-  * ([[ReaderConfs]]) — `loadEvents`' session-wide nanosAsLong flip
-  * included. A changed file, an overwrite or a conf flip is a miss
-  * that infers again and replaces the path's entry, so the map holds
-  * one entry per distinct path; [[graft.util.Scratch.clear]] drops the
-  * entries under the zones it deletes.
+  * ([[ReaderConfs]]). A changed file, an overwrite or a conf flip is
+  * a miss that infers again and replaces the path's entry, so the map
+  * holds one entry per distinct path; [[graft.util.Scratch.clear]]
+  * drops the entries under the zones it deletes.
   *
   * Only schemas are shared, never relations: a hit is a fresh
   * `spark.read.schema(s).parquet(path)` with fresh attribute ids. A
@@ -54,15 +53,7 @@ object Tables {
   }
 
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    // Session-wide by necessity: the conf is consulted both at schema
-    // resolution and at scan execution, so it cannot be set-and-
-    // restored around this read. Documented trade-off: after events is
-    // touched, INT64-nanos timestamp columns in OTHER parquet sources
-    // read as raw longs instead of erroring (they would otherwise
-    // fail the read outright — Spark has no lossless nanos path). The
-    // flip is a reader conf, so it is part of [[read]]'s schema key: a
-    // schema inferred before it is not reused after it.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // nanosAsLong is on in every session (graft.util.Sessions.confFor)
     val df = read(spark, s"$dir/events.parquet")
     // Two generator layouts exist: INT64 nanoseconds (reads as LONG
     // under nanosAsLong; truncate to micros with integer `div` —

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, LongType}
 
 /** Optimizer rule: dot-product fusion.
@@ -20,8 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, L
   *
   * Users who write the declarative spelling get the fast path without
   * knowing the custom expression exists — the Spark-first way to ship
-  * a kernel. Registered via [[GraftExtensions]]
-  * (`spark.sql.extensions`) or [[DotFusion.install]] on a live session.
+  * a kernel. Every session carries it: [[GraftExtensions]] injects it
+  * at session build, and only plans holding a higher-order function
+  * are walked (one tree-pattern bit test otherwise). Turn it off for a
+  * reference run with
+  * `spark.sql.optimizer.excludedRules=graft.functions.DotFusion`.
   */
 object DotFusion extends Rule[LogicalPlan] {
 
@@ -86,7 +89,8 @@ object DotFusion extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(
+        _.containsPattern(TreePattern.HIGH_ORDER_FUNCTION)) {
       case ArrayAggregate(ZipWith(a, b, zipFn), Literal(0.0, DoubleType),
           merge, finish)
           if isFloatArray(a) && isFloatArray(b) &&
@@ -102,10 +106,4 @@ object DotFusion extends Rule[LogicalPlan] {
             isIdentityFinish(finish) =>
         Int8Dot(a, b)
     }
-
-  /** Hook the rule into a live session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(DotFusion))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ DotFusion
 }

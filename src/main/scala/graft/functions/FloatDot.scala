@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSession
 
 /** Native dot product over two `array<float>` columns.
   *
@@ -87,63 +86,46 @@ case class FloatDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration: `GraftFunctions.register(spark)` (idempotent), after
-  * which `float_dot(a, b)` and `nfc_normalize(s)` are available to SQL
-  * and `expr(...)`. Also usable via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
-object GraftFunctions {
-  private val info = new ExpressionInfo(
-    classOf[FloatDot].getName, "float_dot")
-  private val nfcInfo = new ExpressionInfo(
-    classOf[NfcNormalize].getName, "nfc_normalize")
-  private val int8Info = new ExpressionInfo(
-    classOf[Int8Dot].getName, "int8_dot")
+/** The engine's session extension, declared once by
+  * [[graft.util.Sessions.build]] through `spark.sql.extensions` (so
+  * every session of the app, `newSession()` included, carries it):
+  * the `float_dot` / `int8_dot` / `nfc_normalize` SQL functions, the
+  * [[DotFusion]] optimizer rule and the [[graft.plans.TopKStrategy]]
+  * planner strategy. */
+class GraftExtensions
+    extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+  import GraftExtensions._
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    def fn(name: String, cls: Class[_],
+           build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    fn("float_dot", classOf[FloatDot], buildFloatDot)
+    fn("nfc_normalize", classOf[NfcNormalize], buildNfc)
+    fn("int8_dot", classOf[Int8Dot], buildInt8Dot)
+    ext.injectOptimizerRule(_ => DotFusion)
+    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+  }
+}
 
+object GraftExtensions {
   // arity-checked builders: without the match, extra SQL arguments
   // would be SILENTLY DROPPED (children.head) — wrong results with no
   // diagnostic — and zero arguments would throw a raw
   // NoSuchElementException instead of an analysis error
-  private[functions] val buildFloatDot: Seq[Expression] => Expression = {
+  private val buildFloatDot: Seq[Expression] => Expression = {
     case Seq(a, b) => FloatDot(a, b)
     case args => throw new IllegalArgumentException(
       s"float_dot requires exactly 2 arguments, got ${args.length}")
   }
-  private[functions] val buildNfc: Seq[Expression] => Expression = {
+  private val buildNfc: Seq[Expression] => Expression = {
     case Seq(c) => NfcNormalize(c)
     case args => throw new IllegalArgumentException(
       s"nfc_normalize requires exactly 1 argument, got ${args.length}")
   }
-  private[functions] val buildInt8Dot: Seq[Expression] => Expression = {
+  private val buildInt8Dot: Seq[Expression] => Expression = {
     case Seq(a, b) => Int8Dot(a, b)
     case args => throw new IllegalArgumentException(
       s"int8_dot requires exactly 2 arguments, got ${args.length}")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("float_dot"), info, buildFloatDot)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("nfc_normalize"), nfcInfo, buildNfc)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("int8_dot"), int8Info, buildInt8Dot)
-  }
-}
-
-/** `SparkSessionExtensions` hook for config-based injection: the
-  * float_dot / nfc_normalize functions plus the [[DotFusion]]
-  * optimizer rule. */
-class GraftExtensions
-    extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "float_dot"),
-      GraftFunctions.buildFloatDot))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      GraftFunctions.buildNfc))
-    ext.injectFunction((FunctionIdentifier("int8_dot"),
-      new ExpressionInfo(classOf[Int8Dot].getName, "int8_dot"),
-      GraftFunctions.buildInt8Dot))
-    ext.injectOptimizerRule(_ => DotFusion)
   }
 }

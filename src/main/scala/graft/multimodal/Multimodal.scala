@@ -411,7 +411,6 @@ object Multimodal {
     * replays the whole chain (raster → luma grid → normalize → dot →
     * rank), so the embedding math itself is hash-gated. */
   def mediaEmbedKnn(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val media = asMediaTable(renderedBlobs(s, dir), "doc_id", "blob")
     val emb = extractFeatures(media, dim = 16)
       .select(col("media_id"), col("features"))

@@ -126,7 +126,7 @@ object Perceptual {
     * pigeonhole claim above holds only for sub-cap buckets — so the
     * pass carries a `graft.cap.perceptual.*` observe metric counting
     * the band rows routed past the cap and the densest bucket seen;
-    * [[graft.util.Caps.registerCapListener]] WARNs whenever it is
+    * [[graft.util.CapListener]] WARNs whenever it is
     * non-zero (never at gate scale — CapsSpec pins that).
     *
     * `memoKey = None` (the default here, for tiny test relations)

@@ -15,10 +15,7 @@ object Advanced {
   /** q91: GROUPING SETS ((flag), (status), ()) with grouping_id so
     * subtotal NULLs are distinguishable from data NULLs. */
   def groupingSets(s: SparkSession, dir: String): DataFrame = {
-    // register only the table this query touches — registerViews loads
-    // all 10 zone tables (10 driver-side parquet schema reads) inside
-    // what Bench times as this query
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    SqlSurface.registerViews(s, dir, "lineitem")
     s.sql(
       s"""SELECT l_returnflag, l_linestatus,
          |  grouping(l_returnflag) AS g_flag,

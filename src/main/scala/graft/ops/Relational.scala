@@ -281,7 +281,7 @@ object Relational {
       |ORDER BY partkey""".stripMargin
 
   def minCostSupplier(s: SparkSession, dir: String): DataFrame = {
-    SqlSurface.registerViews(s, dir)
+    SqlSurface.registerViews(s, dir, "lineitem")
     s.sql(MinCostSql)
   }
 

@@ -16,16 +16,17 @@ import graft.util.Exact
   */
 object SqlSurface {
 
-  /** Register every testdata table as a temp view (idempotent). */
-  def registerViews(s: SparkSession, dir: String): Unit =
-    Tables.All.foreach { t =>
+  /** Register the named testdata tables — those the caller's SQL
+    * reads — as temp views (idempotent). */
+  def registerViews(s: SparkSession, dir: String, tables: String*): Unit =
+    tables.foreach { t =>
       Tables.load(s, dir, t).createOrReplaceTempView(t)
     }
 
   /** q90: a TPC-H Q3-shape query issued as a SQL string — shipped
     * revenue of BUILDING-segment customers by order, top 10. */
   def sqlTopRevenue(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "customer", "orders", "lineitem")
     s.sql(
       s"""SELECT o_orderkey,
          |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -46,7 +47,7 @@ object SqlSurface {
     * actually land in the physical plan). The hint comment is legal
     * SQL, so the oracle runs the identical text. */
   def sqlJoinHints(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "customer", "nation", "orders")
     s.sql(
       s"""SELECT /*+ BROADCAST(nation), SHUFFLE_MERGE(orders) */
          |  n_name, count(*) AS n_orders,
@@ -75,7 +76,7 @@ object SqlSurface {
     * The oracle runs the IDENTICAL recursive text over its own
     * (brute-force) edge CTE. */
   def sqlRecursiveReach(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "customer")
     // DISTINCT-NAME edges, not member-expanded pairs: typo distance
     // is a property of the NAME, and walk volume on the name graph is
     // degree^depth of DISTINCT names — the member-expanded graph
@@ -133,7 +134,7 @@ object SqlSurface {
     * spelling of per-group top-k (the q15/q100 operators' front-end
     * face). One SQL string, both engines. */
   def sqlLateralTopN(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "nation", "customer")
     s.sql(LateralSql)
   }
 
@@ -154,7 +155,7 @@ object SqlSurface {
     * string-spliced). Same optimization as inline literals: the bound
     * predicate still reaches PushedFilters. */
   def sqlParameterized(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "customer", "nation")
     s.sql(ParamSqlText, Map("minBal" -> 1000, "seg" -> "BUILDING"))
   }
 
@@ -166,7 +167,7 @@ object SqlSurface {
     * contract); `DECLARE OR REPLACE` keeps the call idempotent per
     * session. */
   def sqlSessionVars(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "customer", "nation")
     s.sql("DECLARE OR REPLACE VARIABLE min_bal DOUBLE DEFAULT 0.0")
     s.sql("DECLARE OR REPLACE VARIABLE seg STRING DEFAULT ''")
     s.sql("SET VAR min_bal = 1000.0")
@@ -191,7 +192,7 @@ object SqlSurface {
       |FROM lineitem GROUP BY ALL ORDER BY ALL""".stripMargin
 
   def sqlGroupByAll(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "lineitem")
     s.sql(GroupByAllSql)
   }
 
@@ -206,7 +207,7 @@ object SqlSurface {
       |FROM customer ORDER BY c_custkey LIMIT 20 OFFSET 40""".stripMargin
 
   def sqlPagination(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "customer")
     s.sql(PaginationSql)
   }
 
@@ -273,7 +274,7 @@ object SqlSurface {
     * oracle spells the equivalent conditional aggregation — which is
     * also exactly what Spark's analyzer rewrites PIVOT into. */
   def sqlPivotClause(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "orders")
     s.sql(
       """SELECT * FROM (
         |  SELECT o_orderstatus, o_orderpriority FROM orders)
@@ -309,7 +310,7 @@ object SqlSurface {
       |  COALESCE(day, '')""".stripMargin
 
   def sqlRollup(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "events")
     s.sql(RollupSql)
   }
 
@@ -330,7 +331,7 @@ object SqlSurface {
       |  COALESCE(lang, '')""".stripMargin
 
   def sqlCube(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "documents")
     s.sql(CubeSql)
   }
 
@@ -349,7 +350,7 @@ object SqlSurface {
       |  COALESCE(lang, '')""".stripMargin
 
   def sqlGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "documents")
     s.sql(GroupingSetsSql)
   }
 
@@ -361,7 +362,7 @@ object SqlSurface {
     * rewrites UNPIVOT into (an Expand node: map-side, no shuffle
     * beyond the metric rollup itself). */
   def sqlUnpivot(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "documents")
     s.sql(
       """SELECT source, metric, val FROM (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -380,7 +381,7 @@ object SqlSurface {
     * never as SQL). The oracle inlines the resolved name — the q221
     * binding ≡ inlining contract, applied to identifiers. */
   def sqlIdentifier(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "nation")
     s.sql(
       """SELECT n_regionkey, CAST(count(*) AS BIGINT) AS n_nations
         |FROM IDENTIFIER(:tbl)
@@ -395,7 +396,7 @@ object SqlSurface {
     * variable contains — dynamic dispatch must be a pure indirection
     * with zero semantic effect on the plan. */
   def sqlExecuteImmediate(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "orders")
     s.sql("DECLARE OR REPLACE VARIABLE qtext STRING DEFAULT ''")
     s.sql("SET VAR qtext = " +
       "'SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders, " +
@@ -414,7 +415,7 @@ object SqlSurface {
     * contract, applied to function bodies). Decimal accumulators
     * inside, one double exit (the q241 rule). */
   def sqlUdf(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "lineitem")
     s.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION disc_price(
         |  price DOUBLE, disc DOUBLE)
@@ -438,7 +439,7 @@ object SqlSurface {
     * inlining contract as q278: the body is analyzed into the plan,
     * the oracle runs the body with the argument substituted. */
   def sqlTableUdf(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "orders")
     s.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION orders_of(
         |  status STRING)
@@ -463,7 +464,7 @@ object SqlSurface {
     * is exactly lowercase equality, which is the cross-engine
     * contract this query pins. */
   def sqlCollation(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "nation")
     s.sql(
       """WITH m AS (
         |  SELECT n_name AS name FROM nation
@@ -503,7 +504,7 @@ object SqlSurface {
     * row_number, percent_rank, cume_dist, ntile) — see
     * [[RankFamilySql]]. */
   def sqlRankFamily(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "orders")
     s.sql(RankFamilySql)
   }
 
@@ -536,7 +537,7 @@ object SqlSurface {
   /** q305: the ANSI value window-function family — see
     * [[ValueWindowsSql]]. */
   def sqlValueWindows(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "customer")
     s.sql(ValueWindowsSql)
   }
 
@@ -560,7 +561,7 @@ object SqlSurface {
     * safe — use the two-pass exact rank-filter shape the oracle
     * spells via cume_dist, or approx_percentile. */
   def sqlPercentileDisc(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "lineitem")
     // r14 optimization: the three `percentile_disc(p) WITHIN GROUP`
     // aggregates each buffered EVERY group value in an object
     // aggregate — three full per-group value lists, three sorts
@@ -611,7 +612,7 @@ object SqlSurface {
     * oracle spells the tie-broken argmax window — the definition is
     * the contract, the builtin the surface. */
   def sqlModeAgg(s: SparkSession, dir: String): DataFrame = {
-    registerViews(s, dir)
+    registerViews(s, dir, "orders")
     s.sql(
       """SELECT o_orderstatus,
         |  mode(o_orderpriority, true) AS mode_priority,

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -91,7 +91,9 @@ case class TopKPerGroupExec(k: Int, group: Seq[Expression],
     copy(child = c)
 }
 
-/** Plans the logical node; everything else falls through to Spark. */
+/** Plans the logical node; everything else falls through to Spark.
+  * Every session carries it: [[graft.functions.GraftExtensions]]
+  * injects it at session build. */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroupNode(k, g, o, t, child) =>
@@ -102,17 +104,6 @@ object TopKStrategy extends SparkStrategy {
 
 object TopK {
 
-  /** Idempotent runtime registration (`experimental.extraStrategies` —
-    * the documented injection point that needs no session rebuild;
-    * `SparkSessionExtensions.injectPlannerStrategy` is the
-    * build-time equivalent). */
-  def install(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraStrategies.contains(TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-  }
-
   /** Exact top-`k` rows per `groupCols`, ranked by `orderCol`
     * descending with `tieCol` ascending as the deterministic
     * tiebreak. */
@@ -122,7 +113,6 @@ object TopK {
     require(groupCols.nonEmpty,
       "topKPerGroup requires at least one group column (for global " +
         "top-k use orderBy(...).limit(k) — Spark plans TakeOrdered)")
-    install(df.sparkSession)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute = analyzed.output
       .find(_.name.equalsIgnoreCase(name))

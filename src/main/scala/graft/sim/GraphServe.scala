@@ -54,7 +54,6 @@ object GraphServe {
   /** Build both zones from an initial embedding relation. */
   def build(s: SparkSession, emb: DataFrame, root: String,
             k: Int = Similarity.GraphK): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val codes = Similarity.quantize(emb)
       .select(col("vec_id"), col("q_vec"), col("q_scale"))
     MergeOnRead.init(s, codesRoot(root), codes)
@@ -75,7 +74,6 @@ object GraphServe {
   /** Fold a batch of new vectors into both zones. */
   def applyBatch(s: SparkSession, root: String, batch: DataFrame,
                  k: Int = Similarity.GraphK): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val newCodes = Similarity.quantize(batch)
       .select(col("vec_id"), col("q_vec"), col("q_scale"))
       .localCheckpoint()

@@ -138,7 +138,6 @@ object IvfServe {
     * partition-pruned; the per-cell re-rank is the exact FloatDot. */
   def search(s: SparkSession, zoneDir: String, queries: DataFrame,
              k: Int = 5, nProbe: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cdf = Tables.read(s, s"$zoneDir/centroids")
     val probed = queries.crossJoin(broadcast(cdf))
       .withColumn("cdot",

@@ -101,16 +101,15 @@ object Similarity {
     call_function("float_dot", v,
       array(proj.map(lit): _*).cast("array<float>"))
 
-  /** Codegen'd native dot product (graft.functions.FloatDot) — callers
-    * must have run GraftFunctions.register(spark) first. Bit-identical
-    * to the aggregate(zip_with(...)) spelling it replaces. */
+  /** Codegen'd native dot product (graft.functions.FloatDot).
+    * Bit-identical to the aggregate(zip_with(...)) spelling it
+    * replaces. */
   private def dotCol(a: Column, b: Column): Column =
     call_function("float_dot", a, b)
 
   /** Codegen'd native int8 dot (graft.functions.Int8Dot) — exact
     * BIGINT arithmetic, bit-identical to the aggregate(zip_with(...))
-    * spelling it replaces (pinned in Int8DotSpec); callers must have
-    * run GraftFunctions.register(spark) first. */
+    * spelling it replaces (pinned in Int8DotSpec). */
   private[sim] def int8DotCol(a: Column, b: Column): Column =
     call_function("int8_dot", a, b)
 
@@ -151,7 +150,6 @@ object Similarity {
     * The query side is tiny → broadcast; corpus side streams through
     * one scan. */
   def knnBrute(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val all = corpus(s, dir)
     val q = all.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -180,7 +178,6 @@ object Similarity {
     * production path would rank on the served zones (q155/q163). */
   def dimAblation(s: SparkSession, dir: String, k: Int = 5,
                   d: Int = AblateDim): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val all = corpus(s, dir)
     val q = all.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -211,7 +208,6 @@ object Similarity {
     * (any shared band) then exact re-rank. Recall < 1 by construction;
     * measured against q50 in tests. */
   def knnLsh(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Band rows carry ONLY (vec_id, band, bandVal) — as in nearDupPairs,
     // the 64-float vectors never ride through the explode/join/distinct;
     // they are re-attached to the deduped candidate id pairs instead.
@@ -266,7 +262,6 @@ object Similarity {
     * side is untouched. */
   def knnLshMultiProbe(s: SparkSession, dir: String,
                        k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = corpus(s, dir).select(col("vec_id"), col("embedding"))
     val banded = emb
       .repartition(s.sparkContext.defaultParallelism)
@@ -386,7 +381,6 @@ object Similarity {
 
   def knnIvf(s: SparkSession, dir: String, k: Int = 5,
              nCells: Int = IvfCells, nProbe: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (assigned, cdf) = ivfFit(s, dir, nCells)
     // probe set: nProbe closest centroids per query (unit vectors →
     // max dot = min angle)
@@ -422,7 +416,6 @@ object Similarity {
 
   private[graft] def nearDupPairsDerive(s: SparkSession, dir: String,
                                         threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Band rows carry ONLY (vec_id, band, bandVal): the 64-float
     // vectors never ride through the explode/join/distinct (at sf0.1
     // that alone was ~4× the shuffle volume). Dedup candidate pairs on
@@ -550,7 +543,6 @@ object Similarity {
   /** Dev-probe view of the q52 LSH bucket occupancy (band, bandVal,
     * size) — the candidate volume is Σ C(sz, 2) over these rows. */
   private[graft] def bucketSizes(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     corpus(s, dir).select(col("vec_id"), col("embedding"))
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("vec_id"), signature(col("embedding")).as("sig"))
@@ -633,7 +625,6 @@ object Similarity {
 
   def nearDupPairsShaped(s: SparkSession, dir: String, bands: Int,
                          bits: Int, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = corpus(s, dir).select(col("vec_id"), col("embedding"))
     val bandVals = scaledBandVals(bands, bits)
     // ordering key for the chain's contiguity only: the first ≤ 32
@@ -715,7 +706,6 @@ object Similarity {
     * 4× less vector bandwidth than float32 — the reason a 100 TB
     * corpus quantizes its serving copy at all. */
   def knnQuantized(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val all = quantizedZone(s, dir)
     val q = all.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("q_vec").as("qq"),
@@ -779,7 +769,6 @@ object Similarity {
     * point of the banded variant. */
   private def knnGraphDerive(s: SparkSession, dir: String,
                              k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // spread the streamed side: the quantized corpus is a few MB of
     // parquet → ONE input split, and an all-pairs join over one
     // split runs its O(n²) scoring on ONE core (measured at the 10×
@@ -828,7 +817,6 @@ object Similarity {
     * scan, anchor side broadcast. */
   private[graft] def exactAnchorGraph(s: SparkSession, dir: String,
                                       k: Int, nAnchors: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val all = quantizedZone(s, dir)
       .repartition(s.sparkContext.defaultParallelism)
     // bottom-K by hash: TakeOrdered, never a global sort
@@ -886,7 +874,6 @@ object Similarity {
     * instead of blowing up. */
   def knnGraphBanded(s: SparkSession, dir: String, k: Int = GraphK,
                      maxBucket: Int = GraphMaxBucket): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = corpus(s, dir).select(col("vec_id"), col("embedding"))
     // CORPUS-SCALED banding (round-10: the q309 scaledBandShape
     // lesson applied to the graph). The original fixed 16-bit/4-band
@@ -1125,7 +1112,6 @@ object Similarity {
     * documented dial (more rounds or a medoid entry for higher
     * recall). */
   def graphSearch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val codes = quantizedZone(s, dir)
     val q = codes.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("q_vec").as("qq"),
@@ -1401,7 +1387,6 @@ object Similarity {
     * rides in the join condition, so same-class pairs are rejected
     * during the scan and never materialize. */
   def hardNegatives(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val all = corpus(s, dir)
     val q = all.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -1440,7 +1425,6 @@ object Similarity {
   def semanticDecontam(s: SparkSession, dir: String,
                        tau: Double = SemTau): DataFrame = {
     import graft.dedup.Md5Prefix
-    graft.functions.GraftFunctions.register(s)
     val codes = quantizedZone(s, dir)
     val isEval =
       Md5Prefix.h(col("vec_id").cast("string")) % DecontamMod === 0
@@ -1500,7 +1484,6 @@ object Similarity {
     * Scale shape: the pair relation is the existing bucketed LSH
     * derivation; vectors re-attach by id (unhinted); one rollup. */
   def textEmbedAlign(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // int8_dot
     val pairs = graft.dedup.Dedup
       .minhashLshPairs(s, dir, hash = graft.dedup.Md5Prefix)
       .select(col("id1"), col("id2"))

@@ -78,7 +78,6 @@ object NearDupMaint {
                 bands: Int, bits: Int, threshold: Double): Unit = {
     val spark = batch0.sparkSession
     requireNoInflightCompact(spark, root)
-    graft.functions.GraftFunctions.register(spark)
     val prevVecs = readEpochs(spark, s"$root/vectors",
       beforeEpoch = Some(batchId), emptyVectors(spark))
     // .distinct() first: a source retry that lands INSIDE one trigger

@@ -109,7 +109,6 @@ object RetrievalEval {
     * (witness on). */
   def retrievalEval(s: SparkSession, dir: String,
                     withWitness: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val ch = CorpusStats.chunkZone(s, dir)
     // sampled gold pairs: anchor (doc, j) → positive (doc, j+1)
     val gold = ch.as("a").join(ch.as("b"),

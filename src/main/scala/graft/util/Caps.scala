@@ -2,7 +2,7 @@ package graft.util
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ONE place for the hand-set scale caps that used to live as four
@@ -57,7 +57,7 @@ object Caps {
     * `observe` node summing the rows whose bucket size exceeds the
     * cap, named `graft.cap.<family>.<n>` (unique per call — one plan
     * may band several modalities). The metric costs nothing extra
-    * (it rides the existing pass), and [[registerCapListener]] turns
+    * (it rides the existing pass), and [[CapListener]] turns
     * any non-zero value into a WARN with the family, the binding
     * row count and the densest bucket seen — so a caller whose
     * recall silently degrades to star+chain gets a signal at run
@@ -97,37 +97,30 @@ object Caps {
     df.observe(s"graft.cap.$family.${obsId.incrementAndGet()}",
       sum(col(szCol)).as("overcap_rows"),
       max(col(szCol)).as("max_bucket"))
+}
 
-  // Tracked PER SESSION, not per JVM: listenerManager is session
-  // state, so a flag shared across sessions would leave every session
-  // after the first without the WARN hook (getOrCreate usually reuses
-  // one session, but stop()+rebuild and test harnesses do not).
-  private val hookedSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+/** The "no silent caps" WARN: logs (on logger `graft.util.Caps`)
+  * every `graft.cap.*` observed metric of a successful query whose
+  * over-cap count is non-zero. [[Sessions.build]] declares it in
+  * `spark.sql.queryExecutionListeners`, so Spark gives every session
+  * of the app (`newSession()` included) its own instance, and each
+  * query is logged once, by the session that ran it. */
+class CapListener extends org.apache.spark.sql.util.QueryExecutionListener {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.util.Caps")
 
-  /** Idempotently hook the observed-metrics WARN logger onto the
-    * session (called from [[Sessions.build]]). */
-  def registerCapListener(spark: SparkSession): Unit = synchronized {
-    if (!hookedSessions.add(spark)) return
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        private val log =
-          org.slf4j.LoggerFactory.getLogger("graft.util.Caps")
-        override def onSuccess(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               durationNs: Long): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith("graft.cap.") &&
-                !row.isNullAt(0) && row.getLong(0) > 0L)
-              log.warn(s"cap bound: $name overcap_rows=${row.getLong(0)} " +
-                s"(rows of the observed relation — see observeOvercap) " +
-                s"max_bucket=${row.get(1)} — pair expansion degraded " +
-                "to the capped shape for the over-cap buckets")
-          }
-        override def onFailure(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               exception: Exception): Unit = ()
-      })
-  }
+  override def onSuccess(funcName: String,
+                         qe: org.apache.spark.sql.execution.QueryExecution,
+                         durationNs: Long): Unit =
+    qe.observedMetrics.foreach { case (name, row) =>
+      if (name.startsWith("graft.cap.") &&
+          !row.isNullAt(0) && row.getLong(0) > 0L)
+        log.warn(s"cap bound: $name overcap_rows=${row.getLong(0)} " +
+          s"(rows of the observed relation — see observeOvercap) " +
+          s"max_bucket=${row.get(1)} — pair expansion degraded " +
+          "to the capped shape for the over-cap buckets")
+    }
+
+  override def onFailure(funcName: String,
+                         qe: org.apache.spark.sql.execution.QueryExecution,
+                         exception: Exception): Unit = ()
 }

@@ -106,7 +106,15 @@ object Sessions {
     * parallelismFirst = false and the advisory target = the same
     * 2 MiB the input-bytes rule uses; undersized stages still
     * coalesce (floor = 1 MiB default minPartitionSize), state-heavy
-    * stages keep their partitions. */
+    * stages keep their partitions.
+    *
+    * The last three entries declare what every session of the app
+    * carries, `newSession()` included, with nothing installed at run
+    * time: the engine's functions, optimizer rule and planner strategy
+    * ([[graft.functions.GraftExtensions]]), the cap-bound WARN
+    * ([[CapListener]]), and nanosAsLong, so `events.ts` (INT64 nanos,
+    * which Spark's reader rejects) reads as a long that
+    * [[graft.Tables.load]] rebuilds as a timestamp. */
   def confFor(sfDir: String, cpus: Int): Map[String, String] = {
     val parts = derivedPartitions(sfDir, cpus)
     Map(
@@ -119,6 +127,9 @@ object Sessions {
         TargetBytesPerPartition.toString,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
+      "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName,
+      "spark.sql.queryExecutionListeners" -> classOf[CapListener].getName,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     )
   }
 
@@ -133,19 +144,12 @@ object Sessions {
   /** Build (or reuse) the local session sized for sfDir — the only
     * session builder in the program, tests and tools included, so
     * every plan and timing is taken under the conf that ships. Logs at
-    * WARN: a quieter level would hide the [[Caps]] cap-bound WARN. */
+    * WARN: a quieter level would hide the [[CapListener]] WARN. */
   def build(sfDir: String, cpus: Int = Sessions.cpus): SparkSession = {
     val b = SparkSession.builder().master(s"local[$cpus]")
     confFor(sfDir, cpus).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // set at startup, not lazily on the first events read: every query
-    // then runs under one consistent conf regardless of execution order
-    // (Tables.loadEvents re-sets it idempotently)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // "no silent caps": WARN whenever a graft.cap.* observe metric
-    // reports a band bucket over its cap (see util.Caps)
-    Caps.registerCapListener(spark)
     spark
   }
 }

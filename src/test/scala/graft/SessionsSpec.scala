@@ -59,6 +59,14 @@ class SessionsSpec extends AnyFunSuite {
       === (2L << 20).toString)
   }
 
+  test("conf: every session declares the engine's extension, the cap " +
+    "listener and nanosAsLong at build, as fixed values") {
+    val conf = Sessions.confFor("/nonexistent-dir", 32)
+    assert(conf("spark.sql.extensions") === "graft.functions.GraftExtensions")
+    assert(conf("spark.sql.queryExecutionListeners") === "graft.util.CapListener")
+    assert(conf("spark.sql.legacy.parquet.nanosAsLong") === "true")
+  }
+
   test("inputBytes sums regular files recursively") {
     val dir = SparkSpec.tempDir("sessions-spec")
     val sub = java.nio.file.Files.createDirectory(dir.resolve("t.parquet"))

@@ -16,7 +16,10 @@ import graft.util.Sessions
   * no main source picks a temp location, and outside
   * `SparkSpec.tempDir` no test creates a temp dir. One parquet read:
   * outside `Tables.scala` no main source reads parquet the plain way,
-  * so every such read reuses `Tables.read`'s inferred schema. */
+  * so every such read reuses `Tables.read`'s inferred schema. One
+  * declared session: nothing installs a function, rule, strategy,
+  * listener or conf into a live session, so every session carries
+  * what `Sessions.build` declared and nothing a call path added. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
@@ -96,6 +99,31 @@ class SourceCheckSpec extends SparkSpec {
         plain.findFirstIn(Files.readString(p)).isDefined)
       .map(root.relativize(_).toString)
     assert(bad.isEmpty, s"read parquet through Tables.read: $bad")
+  }
+
+  test("no source installs a function, rule or strategy into a live session") {
+    val bad = for {
+      needle <- Seq("registerFunction", "extraStrategies", "extraOptimizations",
+        "experimental.extra", "GraftFunctions.register", "DotFusion.install",
+        "TopK.install", "registerCapListener")
+      p <- sources if p != self && Files.readString(p).contains(needle)
+    } yield s"${root.relativize(p)}: $needle"
+    assert(bad.isEmpty, s"declare extensions in Sessions.confFor: $bad")
+  }
+
+  test("listenerManager.register appears only in tools/Probe.scala; " +
+    "a session conf.set( in src/main only there and in util/Checkpoints.scala") {
+    val probe = root.resolve("src/main/scala/graft/tools/Probe.scala")
+    val bad = for {
+      (needle, scope, allowed) <- Seq(
+        ("listenerManager.register", root.resolve("src"), Seq(probe)),
+        ("conf.set(", root.resolve("src/main"), Seq(probe, checkpoints)))
+      p <- sources
+      if p.startsWith(scope) && p != self && !allowed.contains(p) &&
+        Files.readString(p).contains(needle)
+    } yield s"${root.relativize(p)}: $needle"
+    assert(bad.isEmpty, s"declare listeners and confs in Sessions.confFor: $bad")
+    assert(Files.readString(probe).contains("listenerManager.register"))
   }
 
   test("Sessions.cpus honours SPARK_GRAFT_CPUS, else the processor count") {

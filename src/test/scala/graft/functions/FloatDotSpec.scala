@@ -10,9 +10,8 @@ import graft.SparkSpec
   * its null semantics (null on length mismatch, null-propagation on
   * null elements, null on null input arrays). */
 class FloatDotSpec extends SparkSpec {
+  import FloatDotSpec.unfused
   import spark.implicits._
-
-  GraftFunctions.register(spark)
 
   private val composable =
     "aggregate(zip_with(a, b, (x, y) -> x * y), cast(0 as double), (acc, x) -> acc + x)"
@@ -24,9 +23,9 @@ class FloatDotSpec extends SparkSpec {
   ).toDF("a", "b")
 
   test("bit-identical to the composable spelling on equal-length arrays") {
-    val rows = df.select(
-      expr("float_dot(a, b)").as("fast"),
-      expr(composable).as("slow")).collect()
+    val rows = df.select(expr("float_dot(a, b)")).collect()
+      .zip(unfused(df, expr(composable))).map { case (f, s) => Row(f(0), s(0)) }
+    assert(rows.length == 3)
     rows.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)), r.toString)
@@ -47,40 +46,34 @@ class FloatDotSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("b",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType, containsNull = true)))))
-    val rows = weird.select(
-      expr("float_dot(a, b)").as("fast"),
-      expr(composable).as("slow")).collect()
+    val rows = weird.select(expr("float_dot(a, b)")).collect()
+      .zip(unfused(weird, expr(composable))).map { case (f, s) => Row(f(0), s(0)) }
+    assert(rows.length == 4)
     rows.foreach { r => assert(r.isNullAt(0) == r.isNullAt(1), r.toString) }
     assert(rows(0).isNullAt(0) && rows(1).isNullAt(0) && rows(2).isNullAt(0))
     assert(rows(3).getDouble(0) == 2.0)
   }
 
   test("DotFusion rewrites the composable spelling to FloatDot") {
-    DotFusion.install(spark)
-    try {
-      // a parquet-backed source: a purely local relation would be
-      // constant-folded away before the fused expression is observable
-      val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
-        .select(col("vec_id"), col("embedding").as("a"))
-        .limit(50)
-      val comp =
-        "aggregate(zip_with(a, a, (x, y) -> x * y), cast(0 as double), (acc, x) -> acc + x)"
-      val df2 = emb.select(expr(comp).as("d"))
-      val fused = df2.queryExecution.optimizedPlan.collectFirst {
-        case p if p.expressions.exists(_.exists(_.isInstanceOf[FloatDot])) => p
-      }.isDefined
-      assert(fused, df2.queryExecution.optimizedPlan.toString)
-      // fused results bit-match the direct expression
-      val a = df2.collect().map(_.getDouble(0))
-      val b = emb.select(expr("float_dot(a, a)")).collect().map(_.getDouble(0))
-      assert(a.zip(b).forall { case (x, y) =>
-        java.lang.Double.doubleToLongBits(x) ==
-          java.lang.Double.doubleToLongBits(y)
-      })
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == DotFusion)
-    }
+    // a parquet-backed source: a purely local relation would be
+    // constant-folded away before the fused expression is observable
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").as("a"))
+      .limit(50)
+    val comp =
+      "aggregate(zip_with(a, a, (x, y) -> x * y), cast(0 as double), (acc, x) -> acc + x)"
+    val df2 = emb.select(expr(comp).as("d"))
+    val fused = df2.queryExecution.optimizedPlan.collectFirst {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[FloatDot])) => p
+    }.isDefined
+    assert(fused, df2.queryExecution.optimizedPlan.toString)
+    // fused results bit-match the direct expression
+    val a = df2.collect().map(_.getDouble(0))
+    val b = emb.select(expr("float_dot(a, a)")).collect().map(_.getDouble(0))
+    assert(a.zip(b).forall { case (x, y) =>
+      java.lang.Double.doubleToLongBits(x) ==
+        java.lang.Double.doubleToLongBits(y)
+    })
   }
 
   test("interpreted eval agrees with codegen") {
@@ -102,5 +95,31 @@ class FloatDotSpec extends SparkSpec {
         Seq(3.0f, 4.0f), org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType, false)))
     assert(mismatch.eval(null) == null)
+  }
+}
+
+object FloatDotSpec {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.scalatest.Assertions._
+
+  /** The reference side of a bit-identity check: `d.select(cols)`
+    * planned and collected with [[DotFusion]] in
+    * `spark.sql.optimizer.excludedRules` (restored after), so the
+    * composable spelling is not rewritten into the kernel it is
+    * compared against — asserted on its optimized plan. */
+  def unfused(d: DataFrame, cols: Column*): Array[Row] = {
+    val conf = d.sparkSession.conf
+    val k = "spark.sql.optimizer.excludedRules"
+    val prev = conf.getOption(k)
+    conf.set(k, DotFusion.ruleName)
+    try {
+      val ref = d.select(cols: _*)
+      val plan = ref.queryExecution.optimizedPlan
+      assert(!plan.exists(_.expressions.exists(_.exists {
+        case _: FloatDot | _: Int8Dot => true
+        case _ => false
+      })), plan.toString)
+      ref.collect()
+    } finally prev.fold(conf.unset(k))(conf.set(k, _))
   }
 }

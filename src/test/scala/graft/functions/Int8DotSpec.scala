@@ -13,8 +13,7 @@ import graft.SparkSpec
   * "bit-identical" here is plain equality. */
 class Int8DotSpec extends SparkSpec {
   import spark.implicits._
-
-  GraftFunctions.register(spark)
+  import FloatDotSpec.unfused
 
   private val composable =
     "aggregate(zip_with(a, b, (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), " +
@@ -30,9 +29,9 @@ class Int8DotSpec extends SparkSpec {
   ).toDF("a", "b")
 
   test("equal to the composable spelling, extremes included") {
-    val rows = df.select(
-      expr("int8_dot(a, b)").as("fast"),
-      expr(composable).as("slow")).collect()
+    val rows = df.select(expr("int8_dot(a, b)")).collect()
+      .zip(unfused(df, expr(composable))).map { case (f, s) => Row(f(0), s(0)) }
+    assert(rows.length == 3)
     rows.foreach { r => assert(r.getLong(0) == r.getLong(1), r.toString) }
     assert(rows(0).getLong(0) == 32L)
     assert(rows(1).getLong(0) == 127L * 127 - 128L * 127)
@@ -51,38 +50,32 @@ class Int8DotSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("a", t),
         org.apache.spark.sql.types.StructField("b", t))))
-    val rows = weird.select(
-      expr("int8_dot(a, b)").as("fast"),
-      expr(composable).as("slow")).collect()
+    val rows = weird.select(expr("int8_dot(a, b)")).collect()
+      .zip(unfused(weird, expr(composable))).map { case (f, s) => Row(f(0), s(0)) }
+    assert(rows.length == 4)
     rows.foreach { r => assert(r.isNullAt(0) == r.isNullAt(1), r.toString) }
     assert(rows(0).isNullAt(0) && rows(1).isNullAt(0) && rows(2).isNullAt(0))
     assert(rows(3).getLong(0) == 6L)
   }
 
   test("DotFusion rewrites the composable int8 spelling to Int8Dot") {
-    DotFusion.install(spark)
-    try {
-      // parquet-backed: a local relation would constant-fold away
-      val codes = graft.sim.Similarity
-        .quantize(spark.read.parquet(s"${sf()}/embeddings.parquet"))
-        .select(col("vec_id"), col("q_vec").as("a"))
-        .limit(50)
-      val selfDot =
-        "aggregate(zip_with(a, a, (x, y) -> CAST(x AS BIGINT) * " +
-          "CAST(y AS BIGINT)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-      val df2 = codes.select(expr(selfDot).as("d"))
-      val fused = df2.queryExecution.optimizedPlan.collectFirst {
-        case p if p.expressions.exists(_.exists(_.isInstanceOf[Int8Dot])) => p
-      }.isDefined
-      assert(fused, df2.queryExecution.optimizedPlan.toString)
-      val x = df2.collect().map(_.getLong(0))
-      val y = codes.select(expr("int8_dot(a, a)")).collect()
-        .map(_.getLong(0))
-      assert(x.sameElements(y))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == DotFusion)
-    }
+    // parquet-backed: a local relation would constant-fold away
+    val codes = graft.sim.Similarity
+      .quantize(spark.read.parquet(s"${sf()}/embeddings.parquet"))
+      .select(col("vec_id"), col("q_vec").as("a"))
+      .limit(50)
+    val selfDot =
+      "aggregate(zip_with(a, a, (x, y) -> CAST(x AS BIGINT) * " +
+        "CAST(y AS BIGINT)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    val df2 = codes.select(expr(selfDot).as("d"))
+    val fused = df2.queryExecution.optimizedPlan.collectFirst {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[Int8Dot])) => p
+    }.isDefined
+    assert(fused, df2.queryExecution.optimizedPlan.toString)
+    val x = df2.collect().map(_.getLong(0))
+    val y = codes.select(expr("int8_dot(a, a)")).collect()
+      .map(_.getLong(0))
+    assert(x.sameElements(y))
   }
 
   test("q155 scoring through int8_dot matches the HOF spelling on testdata") {
@@ -94,10 +87,18 @@ class Int8DotSpec extends SparkSpec {
       .select(col("vec_id"), col("q_vec"))
     val pairs = codes.as("x").join(codes.as("y"),
         col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.q_vec").as("a"), col("y.q_vec").as("b"))
-    val rows = pairs.select(
-      expr("int8_dot(a, b)").as("fast"),
-      expr(composable).as("slow")).collect()
+      .select(col("x.vec_id").as("x"), col("y.vec_id").as("y"),
+        col("x.q_vec").as("a"), col("y.q_vec").as("b"))
+    // the two sides run as separate jobs: line them up by pair
+    def byPair(rows: Array[Row]): Seq[((Long, Long), Long)] = rows.toSeq
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue) ->
+        r.getLong(2))
+      .sortBy(_._1)
+    val fast = byPair(pairs.select(col("x"), col("y"), expr("int8_dot(a, b)"))
+      .collect())
+    val slow = byPair(unfused(pairs, col("x"), col("y"), expr(composable)))
+    assert(fast.map(_._1) == slow.map(_._1))
+    val rows = fast.zip(slow).map { case ((_, f), (_, s)) => Row(f, s) }
     assert(rows.nonEmpty)
     rows.foreach { r => assert(r.getLong(0) == r.getLong(1)) }
   }

@@ -12,7 +12,6 @@ class NfcNormalizeSpec extends SparkSpec {
 
   private def nfcOf(input: String): String = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(input).toDF("s")
       .select(expr("nfc_normalize(s)").as("n"))
       .collect()(0).getString(0)
@@ -38,7 +37,6 @@ class NfcNormalizeSpec extends SparkSpec {
 
   test("wrong arity is rejected, not silently truncated") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(("a", "b")).toDF("x", "y")
     // extra argument must ERROR — children.head would silently compute
     // nfc(x) and drop y
@@ -54,7 +52,6 @@ class NfcNormalizeSpec extends SparkSpec {
 
   test("null propagates; non-string input rejected at analysis") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq[(Integer, String)]((1, null)).toDF("i", "s")
       .select(expr("nfc_normalize(s)")).collect()(0)
     assert(r.isNullAt(0))

@@ -62,7 +62,6 @@ class SimilaritySpec extends SparkSpec {
     // everywhere (random unit vectors, int8 noise ≪ cosine gaps)
     val exact = Similarity.knnBrute(spark, sf(), k = 5).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    graft.functions.GraftFunctions.register(spark)
     val qemb = dq.select(col("vec_id"), col("dq_vec").as("embedding"))
     val q = qemb.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -96,7 +95,6 @@ class SimilaritySpec extends SparkSpec {
     val thr = 0.5
     val emb = graft.Tables.load(spark, sf("0.1"), "embeddings")
       .select(col("vec_id"), col("embedding"))
-    graft.functions.GraftFunctions.register(spark)
     val brute = emb.as("a").join(emb.as("b"),
         col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"),
@@ -432,7 +430,6 @@ class SimilaritySpec extends SparkSpec {
     planted.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val thr = 0.9
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$tmp/embeddings.parquet")
     val brute = emb.as("a").join(emb.as("b"),
         col("a.vec_id") < col("b.vec_id"))
