@@ -97,21 +97,8 @@ object JoinMaintain {
       .partitionBy("kb").parquet(s"${factPath(root)}/batch=0")
     dim0.write.mode(SaveMode.Overwrite)
       .parquet(s"${dimPath(root)}/batch=0")
-    commitViewDelta(s, root, fact0.join(dim0, key), 0L)
+    SwapPublish.writeEpoch(fact0.join(dim0, key), viewRoot(root), 0L)
     mark(s, root, 0L)
-  }
-
-  private def commitViewDelta(s: SparkSession, root: String,
-                              delta: DataFrame, batchId: Long): Unit = {
-    val f = fs(s, root)
-    val staging = new Path(s"${viewRoot(root)}/.staging-$batchId")
-    val target = new Path(s"${viewRoot(root)}/epoch=$batchId")
-    val backup = new Path(s"${viewRoot(root)}/.backup-$batchId")
-    try {
-      delta.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      SwapPublish.publish(f, staging, target, backup,
-        targetExists = f.exists(target))
-    } finally { f.delete(staging, true); () }
   }
 
   /** Insert a fact batch: `ΔV = batch ⋈ dim_current`, then append the
@@ -122,7 +109,7 @@ object JoinMaintain {
                      batch: DataFrame, batchId: Long): Unit = {
     if (committed(s, root, batchId)) return
     val dim = Tables.read(s, dimPath(root)).drop("batch")
-    commitViewDelta(s, root, batch.join(dim, key), batchId)
+    SwapPublish.writeEpoch(batch.join(dim, key), viewRoot(root), batchId)
     batch.withColumn("kb", kb(key))
       .write.mode(SaveMode.Overwrite).partitionBy("kb")
       .parquet(s"${factPath(root)}/batch=$batchId")
@@ -143,7 +130,7 @@ object JoinMaintain {
       .distinct().collect().map(_.getInt(0)).toSeq
     val fact = Tables.read(s, factPath(root))
       .where(col("kb").isin(buckets: _*)).drop("kb", "batch")
-    commitViewDelta(s, root, fact.join(batch, key), batchId)
+    SwapPublish.writeEpoch(fact.join(batch, key), viewRoot(root), batchId)
     batch.write.mode(SaveMode.Overwrite)
       .parquet(s"${dimPath(root)}/batch=$batchId")
     mark(s, root, batchId)

@@ -28,9 +28,10 @@ import graft.Tables
   *    clears the deltas (bounding the delta chain), publishing with the
   *    same backup-then-swap used by every copy-on-write sink here.
   *
-  * Epoch publish is directory-rename atomic (write to `.staging`, then
-  * rename to `epoch=N`), single writer assumed — multi-writer commit
-  * coordination is what a real table format's transaction log adds.
+  * Epoch publish is directory-rename atomic ([[SwapPublish.writeEpoch]]:
+  * staged write, then rename to `epoch=N`), single writer assumed —
+  * multi-writer commit coordination is what a real table format's
+  * transaction log adds.
   */
 object MergeOnRead {
 
@@ -52,26 +53,13 @@ object MergeOnRead {
 
   /** Committed delta epochs, ascending (directory listing — no data
     * read; a `.staging` dir from a crashed writer is ignored). */
-  def epochs(spark: SparkSession, root: String): Seq[Long] = {
-    val dr = new Path(deltaRoot(root))
-    val f = fs(spark, root)
-    if (!f.exists(dr)) Seq.empty
-    else f.listStatus(dr).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-      .map(_.getPath.getName.stripPrefix("epoch=").toLong).sorted
-  }
+  def epochs(spark: SparkSession, root: String): Seq[Long] =
+    SwapPublish.listEpochs(spark, deltaRoot(root))
 
   private def appendDelta(spark: SparkSession, root: String,
                           delta: DataFrame): Long = {
     val next = epochs(spark, root).lastOption.getOrElse(0L) + 1
-    val f = fs(spark, root)
-    val staging = new Path(s"${deltaRoot(root)}/.staging-$next")
-    val committed = new Path(s"${deltaRoot(root)}/epoch=$next")
-    try {
-      delta.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      if (!f.rename(staging, committed))
-        sys.error(s"merge-on-read: could not commit $staging to $committed")
-    } finally f.delete(staging, true)
+    SwapPublish.writeEpoch(delta, deltaRoot(root), next)
     next
   }
 
@@ -144,7 +132,7 @@ object MergeOnRead {
         // every committed epoch; basePath keeps the partition column
         val deltas = spark.read
           .option("basePath", deltaRoot(root))
-          .parquet(es.map(e => s"${deltaRoot(root)}/epoch=$e"): _*)
+          .parquet(es.map(SwapPublish.epochPath(deltaRoot(root), _)): _*)
           .withColumn(EpochCol, col("epoch").cast("long")).drop("epoch")
         base.unionByName(deltas.select(base.columns.map(col).toIndexedSeq: _*))
       }
@@ -183,7 +171,7 @@ object MergeOnRead {
           .select(keyCols.map(col): _*).limit(0)
       else spark.read
         .option("basePath", deltaRoot(root))
-        .parquet(es.map(e => s"${deltaRoot(root)}/epoch=$e"): _*)
+        .parquet(es.map(SwapPublish.epochPath(deltaRoot(root), _)): _*)
         .select(keyCols.map(col): _*).distinct()
     // the restriction rides BELOW read's reconcile window (see
     // readView) — above it, the whole base ∪ deltas would shuffle

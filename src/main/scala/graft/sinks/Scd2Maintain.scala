@@ -1,8 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 
 /** Incrementally-maintained SCD Type-2 zone — the IVM companion of
   * [[graft.ops.EventOps.scd2Intervals]] (q218), following the
@@ -35,27 +34,21 @@ object Scd2Maintain {
   private def eventsRoot(root: String) = s"$root/events"
   private def ivRoot(root: String) = s"$root/intervals"
 
-  private def fs(s: SparkSession, p: String) =
-    new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
-
   private def withBucket(batch: DataFrame): DataFrame =
     batch.withColumn("bucket", pmod(col("user_id"), lit(Buckets)))
 
-  private def nextEpoch(s: SparkSession, root: String): Long = {
-    val er = new Path(eventsRoot(root))
-    val f = fs(s, root)
-    if (!f.exists(er)) 1L
-    else f.listStatus(er).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      .map(_.getPath.getName.stripPrefix("epoch=").toLong)
-      .maxOption.getOrElse(0L) + 1L
-  }
+  /** Publish `batch` as raw-events epoch `epoch`, bucket-partitioned:
+    * staged, so the epoch directory appears only complete. */
+  private def commitEvents(batch: DataFrame, root: String,
+                           epoch: Long): Unit =
+    SwapPublish.writeEpoch(withBucket(batch), eventsRoot(root), epoch,
+      "bucket")
 
   private def appendEvents(s: SparkSession, root: String,
                            batch: DataFrame): Unit =
-    withBucket(batch)
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("bucket")
-      .parquet(s"${eventsRoot(root)}/epoch=${nextEpoch(s, root)}")
+    commitEvents(batch, root,
+      SwapPublish.listEpochs(s, eventsRoot(root)).lastOption
+        .getOrElse(0L) + 1L)
 
   /** One row per user: the interval list packed as a sorted array —
     * the shape that makes interval replacement a single-key MERGE. */
@@ -110,19 +103,19 @@ object Scd2Maintain {
   private val StreamEpochBase = 1000L
 
   /** [[applyBatch]] keyed by a CALLER-supplied batch id — the
-    * foreachBatch retry contract. The raw-events commit is the
-    * idempotency marker and runs LAST: a batch whose marker exists is
-    * skipped entirely (returns false); a crash after the interval
-    * MERGE but before the marker makes the retry re-merge the same
-    * rows, which converges (a later epoch re-asserting identical
-    * values leaves the reconciled view unchanged). So the zone is
-    * exactly-once in effect under at-least-once delivery. */
+    * foreachBatch retry contract. The raw-events epoch is the
+    * idempotency marker and is committed LAST: a batch whose epoch
+    * exists is skipped entirely (returns false); a crash after the
+    * interval MERGE but before the commit makes the retry re-merge
+    * the same rows, which converges (a later epoch re-asserting
+    * identical values leaves the reconciled view unchanged). The
+    * commit is staged, so a crash mid-write leaves a `.staging-` dir,
+    * not a half-written epoch that would read as committed. So the
+    * zone is exactly-once in effect under at-least-once delivery. */
   def applyBatchIdempotent(s: SparkSession, root: String,
                            batch: DataFrame, batchId: Long): Boolean = {
-    val marker = new Path(
-      s"${eventsRoot(root)}/epoch=${StreamEpochBase + batchId}")
-    val f = fs(s, root)
-    if (f.exists(marker)) false
+    val epoch = StreamEpochBase + batchId
+    if (SwapPublish.listEpochs(s, eventsRoot(root)).contains(epoch)) false
     else {
       val b = batch.persist() // read twice: recompute + marker commit
       try {
@@ -134,9 +127,7 @@ object Scd2Maintain {
             col("event_type"), col("ms")))
         MergeOnRead.merge(s, ivRoot(root),
           pack(graft.ops.EventOps.scd2Of(ev)), Seq("user_id"))
-        withBucket(b)
-          .write.mode(SaveMode.ErrorIfExists).partitionBy("bucket")
-          .parquet(marker.toString)
+        commitEvents(b, root, epoch)
       } finally b.unpersist()
       true
     }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.Tables
 import graft.dedup.Dedup
 
 /** Streaming maintenance of a near-dup cluster zone: each micro-batch
@@ -69,13 +68,8 @@ object ClusterMaint {
   def readLabels(spark: SparkSession, root: String,
                  beforeEpoch: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    epochs(spark, root).filter(e => beforeEpoch.forall(e < _))
-      .maxOption match {
-      case Some(e) => Tables.read(spark, s"$root/epoch=$e")
-      case None => Seq.empty[(Long, Long)].toDF("id", "label")
-    }
+    graft.sinks.SwapPublish.readNewest(spark, root,
+      Seq.empty[(Long, Long)].toDF("id", "label"),
+      beforeEpoch.getOrElse(Long.MaxValue))
   }
-
-  private def epochs(spark: SparkSession, root: String): Seq[Long] =
-    graft.sinks.SwapPublish.listEpochs(spark, root)
 }

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.Tables
-
 /** Streaming maintenance of the q252 anomaly monitor's hourly-count
   * state: each micro-batch of raw events folds into a persistent
   * (event_type, t, c) table — t the absolute hour, c the exact event
@@ -65,19 +63,7 @@ object HourlyCountMaint {
           .unionByName(delta)
           .groupBy(col("event_type"), col("t"))
           .agg(sum(col("c")).as("c"))
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val target =
-          new org.apache.hadoop.fs.Path(s"$root/epoch=$batchId")
-        val staging =
-          new org.apache.hadoop.fs.Path(s"$root/.staging-$batchId")
-        val backup =
-          new org.apache.hadoop.fs.Path(s"$root/.backup-$batchId")
-        val fs = target.getFileSystem(hconf)
-        try {
-          merged.write.mode("overwrite").parquet(staging.toString)
-          graft.sinks.SwapPublish.publish(fs, staging, target, backup,
-            targetExists = fs.exists(target))
-        } finally { fs.delete(staging, true); () }
+        graft.sinks.SwapPublish.writeEpoch(merged, root, batchId)
       }
     } finally { delta.unpersist(); () }
   }
@@ -87,12 +73,9 @@ object HourlyCountMaint {
   def readCounts(spark: SparkSession, root: String,
                  beforeEpoch: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    epochs(spark, root).filter(e => beforeEpoch.forall(e < _))
-      .maxOption match {
-      case Some(e) => Tables.read(spark, s"$root/epoch=$e")
-      case None =>
-        Seq.empty[(String, Long, Long)].toDF("event_type", "t", "c")
-    }
+    graft.sinks.SwapPublish.readNewest(spark, root,
+      Seq.empty[(String, Long, Long)].toDF("event_type", "t", "c"),
+      beforeEpoch.getOrElse(Long.MaxValue))
   }
 
   /** The monitor's readout: the maintained counts, re-densified and
@@ -100,13 +83,4 @@ object HourlyCountMaint {
   def anomalies(spark: SparkSession, root: String): DataFrame =
     graft.ops.EventOps.anomalyOf(
       graft.ops.EventOps.densify(readCounts(spark, root)))
-
-  private def epochs(spark: SparkSession, root: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("epoch="))
-      .map(_.stripPrefix("epoch=").toLong)
-  }
 }

@@ -124,14 +124,8 @@ object KafkaShaped {
               hwm.write.mode("overwrite").parquet(offs.toString)
             }
           } else {
-            val staging =
-              new org.apache.hadoop.fs.Path(s"$outDir/.staging-$batchId")
-            try {
-              batch.write.mode("overwrite").parquet(staging.toString)
-              graft.sinks.SwapPublish.publish(fs, staging, out,
-                new org.apache.hadoop.fs.Path(s"$outDir/.old-$batchId"),
-                targetExists = false)
-            } finally fs.delete(staging, true)
+            graft.sinks.SwapPublish.writeStaged(batch, outDir,
+              out.getName, batchId)
             hwm.write.mode("overwrite").parquet(offs.toString)
           }
         } finally batch.unpersist()

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.Tables
 import graft.sim.Similarity
+import graft.sinks.SwapPublish
 
 /** Streaming ADMISSION twin of the corpus-scaled embedding near-dup
   * path (judge round-9 item #7): new documents' embeddings fold into
@@ -77,9 +77,9 @@ object NearDupMaint {
   def foldBatch(batch0: DataFrame, root: String, batchId: Long,
                 bands: Int, bits: Int, threshold: Double): Unit = {
     val spark = batch0.sparkSession
-    requireNoInflightCompact(spark, root)
-    val prevVecs = readEpochs(spark, s"$root/vectors",
-      beforeEpoch = Some(batchId), emptyVectors(spark))
+    unfenced(spark, root)
+    val prevVecs = SwapPublish.readAll(spark, s"$root/vectors",
+      emptyVectors(spark), before = batchId)
     // .distinct() first: a source retry that lands INSIDE one trigger
     // (duplicate identical rows) dedups exactly; dropDuplicates then
     // guards the vectors zone's one-row-per-id invariant even against
@@ -93,8 +93,8 @@ object NearDupMaint {
     try {
       if (!batch.isEmpty) {
         val bBands = Similarity.bandRows(batch, bands, bits)
-        val zBands = readEpochs(spark, s"$root/bands",
-          beforeEpoch = Some(batchId), emptyBands(spark))
+        val zBands = SwapPublish.readAll(spark, s"$root/bands",
+          emptyBands(spark), before = batchId)
         // batch × zone: the zone member is the EARLIER admission
         val cross = bBands
           .join(zBands.select(col("band"), col("bandVal"),
@@ -118,9 +118,9 @@ object NearDupMaint {
             call_function("float_dot", col("v1"), col("v2"))
               .as("cosine"))
           .where(col("cosine") >= threshold)
-        publish(pairs, s"$root/pairs", batchId)
-        publish(bBands, s"$root/bands", batchId)
-        publish(batch, s"$root/vectors", batchId)
+        SwapPublish.writeEpoch(pairs, s"$root/pairs", batchId)
+        SwapPublish.writeEpoch(bBands, s"$root/bands", batchId)
+        SwapPublish.writeEpoch(batch, s"$root/vectors", batchId)
       }
     } finally { batch.unpersist(); () }
   }
@@ -130,17 +130,16 @@ object NearDupMaint {
     * [[foldBatch]]): mid-crash the squashed epoch and its surviving
     * originals would double the duplicated pairs. */
   def readPairs(spark: SparkSession, root: String): DataFrame = {
-    requireNoInflightCompact(spark, root)
-    readEpochs(spark, s"$root/pairs", beforeEpoch = None,
-      emptyPairs(spark)).orderBy("id1", "id2")
+    unfenced(spark, root)
+    SwapPublish.readAll(spark, s"$root/pairs", emptyPairs(spark))
+      .orderBy("id1", "id2")
   }
 
   /** The admitted vector zone (newest view — epochs are disjoint by
     * the anti-join guard). Fails fast on a half-finished compact. */
   def readVectors(spark: SparkSession, root: String): DataFrame = {
-    requireNoInflightCompact(spark, root)
-    readEpochs(spark, s"$root/vectors", beforeEpoch = None,
-      emptyVectors(spark))
+    unfenced(spark, root)
+    SwapPublish.readAll(spark, s"$root/vectors", emptyVectors(spark))
   }
 
   /** Squash every epoch ≤ `upToEpoch` of all three zones into one
@@ -176,42 +175,30 @@ object NearDupMaint {
     *      three zones (they publish together in [[foldBatch]], so
     *      they must compact together) — a bad argument can no longer
     *      leave pairs compacted but bands/vectors untouched.
-    *   2. A recovery pass restores orphaned `.backup-<e>` dirs left
-    *      by a crash inside [[graft.sinks.SwapPublish.publish]]'s
-    *      rename window (target moved aside, staging not yet swapped
-    *      in): the backup is the SOLE surviving copy of that epoch —
-    *      the naive re-run would both miss it (epoch listing skips
-    *      dot-dirs) and destroy it (publish begins by deleting the
-    *      backup). Backups whose target exists are post-swap
-    *      leftovers (the target already holds a superset) and drop.
-    *   3. An inflight marker (`_compact_inflight` at the root) is
-    *      held across the mutation phase; [[foldBatch]]/[[readPairs]]
-    *      /[[readVectors]] fail fast while it exists, so a crash
-    *      between the epoch swap and the old-epoch deletes cannot be
-    *      folded over as duplicated predecessor state — the operator
-    *      MUST re-run compact (same `upToEpoch`), which unions the
-    *      squashed epoch with the surviving originals, whose rows are
-    *      bitwise duplicates, `.distinct()`s them back to exactly the
-    *      original content (pairs/bands/vectors all carry full row
-    *      identity), and clears the marker. Convergent, no baked-in
-    *      duplication, enforced ordering. */
+    *   2. A recovery pass ([[SwapPublish.recoverOrphanBackups]])
+    *      restores the epochs a crash inside the publish rename
+    *      window left only as backups.
+    *   3. A fence (`_compact_inflight` at the root) carrying
+    *      `upToEpoch` is held across the mutation phase;
+    *      [[foldBatch]]/[[readPairs]]/[[readVectors]] fail fast while
+    *      it exists, so a crash between the epoch swap and the
+    *      old-epoch deletes cannot be folded over as duplicated
+    *      predecessor state. A re-run with a DIFFERENT `upToEpoch` is
+    *      refused (squashing the survivors into a second epoch while
+    *      the first squash holds the same rows would duplicate them);
+    *      the re-run with the SAME value unions the squashed epoch
+    *      with the surviving originals, whose rows are bitwise
+    *      duplicates, `.distinct()`s them back to exactly the original
+    *      content (pairs/bands/vectors all carry full row identity),
+    *      and releases the fence. Convergent, no baked-in duplication,
+    *      enforced ordering. */
   def compact(spark: SparkSession, root: String, upToEpoch: Long): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val zones = Seq("pairs", "bands", "vectors")
+    val zones = Seq("pairs", "bands", "vectors").map(z => s"$root/$z")
     // Phase 1 — recover orphan backups, then validate EVERY zone
     // before mutating ANY (zones move together; a require failure on
     // the second zone must not leave the first already squashed)
-    val epochsByZone = zones.map { zone =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/$zone")
-      val fs = p.getFileSystem(hconf)
-      recoverOrphanBackups(fs, p)
-      val all =
-        if (!fs.exists(p)) Seq.empty[Long]
-        else fs.listStatus(p).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("epoch="))
-          .map(_.stripPrefix("epoch=").toLong)
-      zone -> all
-    }
+    zones.foreach(SwapPublish.recoverOrphanBackups(spark, _))
+    val epochsByZone = zones.map(z => z -> SwapPublish.listEpochs(spark, z))
     if (epochsByZone.forall(_._2.isEmpty)) return // nothing folded yet
     epochsByZone.foreach { case (zone, all) =>
       require(all.nonEmpty && upToEpoch < all.max,
@@ -220,61 +207,28 @@ object NearDupMaint {
           s"${if (all.isEmpty) "(none)" else all.max.toString} " +
           "— the only batch Structured Streaming can replay")
     }
-    // Phase 2 — mutate under the inflight marker (readers/folds fail
-    // fast until a compact run reaches the marker delete below)
-    val marker = new org.apache.hadoop.fs.Path(s"$root/$InflightMarker")
-    val mfs = marker.getFileSystem(hconf)
-    mfs.create(marker, true).close()
-    epochsByZone.foreach { case (zone, all) =>
-      val dir = s"$root/$zone"
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
-      val squash = all.filter(_ <= upToEpoch)
-      if (squash.size > 1) {
-        val union = Tables.read(spark,
-          squash.map(e => s"$dir/epoch=$e"): _*).distinct()
-        publish(union, dir, upToEpoch)
-        squash.filter(_ != upToEpoch).foreach { e =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/epoch=$e"),
-            true): Unit
-        }
-      }
+    // Phase 2 — mutate under the fence (readers/folds fail fast until
+    // a compact run with the same upToEpoch releases it)
+    SwapPublish.holdFence(spark, root, InflightMarker, upToEpoch) { held =>
+      s"a compact($held) of $root crashed mid-run — re-run compact " +
+        s"with upToEpoch=$held to convergence before compacting to " +
+        s"$upToEpoch"
     }
-    mfs.delete(marker, false): Unit
+    zones.foreach(SwapPublish.squash(spark, _, upToEpoch))
+    SwapPublish.releaseFence(spark, root, InflightMarker)
   }
 
-  /** Root-level marker held by a running [[compact]]; present ⇒ a
+  /** Root-level fence held by a running [[compact]]; present ⇒ a
     * compact crashed mid-mutation and must be re-run before any fold
     * or read. */
-  private[streaming] val InflightMarker = "_compact_inflight"
+  private[streaming] val InflightMarker = SwapPublish.CompactFence
 
-  private def requireNoInflightCompact(spark: SparkSession,
-                                       root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$InflightMarker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(p),
-      s"a compact() of $root crashed mid-run (marker $p present) — " +
-        "re-run compact(root, <same upToEpoch>) before folding or " +
-        "reading; it converges and clears the marker")
-  }
-
-  /** See [[compact]] window 2 — the shared
-    * [[graft.sinks.SwapPublish.recoverOrphanBackups]]. */
-  private def recoverOrphanBackups(fs: org.apache.hadoop.fs.FileSystem,
-                                   dir: org.apache.hadoop.fs.Path): Unit =
-    graft.sinks.SwapPublish.recoverOrphanBackups(fs, dir)
-
-  private def publish(df: DataFrame, dir: String, batchId: Long): Unit =
-    graft.sinks.SwapPublish.writeEpoch(df, dir, batchId)
-
-  private def readEpochs(spark: SparkSession, dir: String,
-                         beforeEpoch: Option[Long],
-                         empty: => DataFrame): DataFrame = {
-    val paths = graft.sinks.SwapPublish.listEpochs(spark, dir)
-      .filter(e => beforeEpoch.forall(e < _))
-      .map(e => s"$dir/epoch=$e")
-    if (paths.isEmpty) empty
-    else Tables.read(spark, paths: _*)
-  }
+  private def unfenced(spark: SparkSession, root: String): Unit =
+    SwapPublish.requireNoFence(spark, root, InflightMarker) {
+      s"a compact() of $root crashed mid-run (fence $InflightMarker " +
+        "present) — re-run compact(root, <same upToEpoch>) before " +
+        "folding or reading; it converges and releases the fence"
+    }
 
   private def emptyVectors(spark: SparkSession): DataFrame =
     spark.createDataFrame(

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Tables
+import graft.sinks.SwapPublish
 import graft.text.CorpusStats
 
 /** Incremental ADMISSION twin of the q313 corpus-wide duplicate-
@@ -71,7 +72,7 @@ object SuffixMaint {
   /** Root-level marker held by a running [[compact]]; present ⇒ a
     * compact crashed mid-mutation and must be re-run (same
     * `upToEpoch`) before any fold or read. */
-  private[streaming] val CompactMarker = "_compact_inflight"
+  private[streaming] val CompactMarker = SwapPublish.CompactFence
 
   /** Build the zone layout from the initial corpus. `docs` carries
     * (doc_id, text); `buckets` fixes the split layout for the life
@@ -81,7 +82,6 @@ object SuffixMaint {
            minLen: Int = CorpusStats.DupSubMinLen,
            window: Int = CorpusStats.DupSubWindow): Unit = {
     require(buckets >= 1, "need at least one bucket")
-    val fs = fsOf(s, root)
     val tokenized = tokenize(docs)
     val sfx = CorpusStats.suffixRows(tokenized, minLen, window)
     // sample split points the RangePartitioner way: a bounded sorted
@@ -114,9 +114,9 @@ object SuffixMaint {
           else acc :+ k
         }.toArray
       }
-    writeSplits(s, fs, root, splits, minLen, window)
+    writeSplits(s, root, splits, minLen, window)
     foldAccepted(s, root, sfx, batchId = 0L)
-    writeEpoch(docs.select(col("doc_id")), s"$root/admitted", 0L)
+    SwapPublish.writeEpoch(docs.select(col("doc_id")), s"$root/admitted", 0L)
   }
 
   /** Admit one batch of (doc_id, text) documents. Re-runnable: a
@@ -124,11 +124,10 @@ object SuffixMaint {
   def foldBatch(s: SparkSession, batchDocs: DataFrame, root: String,
                 batchId: Long): Unit = {
     require(batchId > 0, "batch ids start at 1 (init holds epoch 0)")
-    val fs = fsOf(s, root)
-    require(!fs.exists(new Path(s"$root/$CompactMarker")),
+    SwapPublish.requireNoFence(s, root, CompactMarker) {
       s"a SuffixMaint compact of $root crashed mid-run — re-run it " +
-        "(same upToEpoch) to convergence before folding")
-    val marker = new Path(s"$root/$InflightMarker")
+        "(same upToEpoch) to convergence before folding"
+    }
     // fold fence, not just a read fence (round-11 ADVICE — the
     // NearDupMaint.foldBatch discipline): the marker carries the
     // inflight batchId, and a fold may start only when none is
@@ -138,23 +137,22 @@ object SuffixMaint {
     // yet in `admitted`) would delete the marker on success and
     // unfence readers over a zone that is neither pre- nor post- the
     // crashed batch.
-    if (fs.exists(marker)) {
-      val prior = readMarkerBatch(fs, marker)
-      require(prior == batchId,
-        s"a SuffixMaint fold of batch $prior crashed mid-run under " +
-          s"$root — re-run batch $prior to convergence before " +
-          s"folding batch $batchId")
-    } else writeMarkerAtomic(fs, marker, batchId)
+    SwapPublish.holdFence(s, root, InflightMarker, batchId) { prior =>
+      s"a SuffixMaint fold of batch $prior crashed mid-run under " +
+        s"$root — re-run batch $prior to convergence before " +
+        s"folding batch $batchId"
+    }
     val (_, minLen, window) = readSplits(s, root)
-    val admitted = readAllEpochs(s, s"$root/admitted",
-      beforeEpoch = Some(batchId), emptyIds(s))
+    val admitted = SwapPublish.readAll(s, s"$root/admitted", emptyIds(s),
+      before = batchId)
     val fresh = batchDocs.select(col("doc_id"), col("text"))
       .dropDuplicates("doc_id")
       .join(admitted, Seq("doc_id"), "left_anti")
     val sfx = CorpusStats.suffixRows(tokenize(fresh), minLen, window)
     foldAccepted(s, root, sfx, batchId)
-    writeEpoch(fresh.select(col("doc_id")), s"$root/admitted", batchId)
-    fs.delete(marker, false): Unit
+    SwapPublish.writeEpoch(fresh.select(col("doc_id")), s"$root/admitted",
+      batchId)
+    SwapPublish.releaseFence(s, root, InflightMarker)
   }
 
   /** Squash the zone's accumulated epoch logs (judge round-11 item
@@ -192,50 +190,41 @@ object SuffixMaint {
     *
     * QUIESCE: offline, between folds — like every zone compaction. */
   def compact(s: SparkSession, root: String, upToEpoch: Long): Unit = {
-    val fs = fsOf(s, root)
-    require(!fs.exists(new Path(s"$root/$InflightMarker")),
+    SwapPublish.requireNoFence(s, root, InflightMarker) {
       s"a SuffixMaint fold of $root crashed mid-run — re-run that " +
-        "batch to convergence before compacting")
+        "batch to convergence before compacting"
+    }
     // Phase 1 — recover, then validate, BEFORE mutating anything
-    bucketDirs(fs, s"$root/sfx").foreach(
-      graft.sinks.SwapPublish.recoverOrphanBackups(fs, _))
-    graft.sinks.SwapPublish.recoverOrphanBackups(
-      fs, new Path(s"$root/admitted"))
-    val batches = graft.sinks.SwapPublish.listEpochs(s, s"$root/admitted")
+    val sfxRoot = s"$root/sfx"
+    (bucketDirs(s, sfxRoot) :+ s"$root/admitted")
+      .foreach(SwapPublish.recoverOrphanBackups(s, _))
+    val batches = SwapPublish.listEpochs(s, s"$root/admitted")
     require(batches.nonEmpty && upToEpoch < batches.max,
       s"compact($upToEpoch) must stay strictly below the newest " +
         s"admitted batch ${if (batches.isEmpty) "(none)"
         else batches.max.toString} — the only batch a stream replays")
-    // Phase 2 — mutate under the compact marker. The marker carries
-    // upToEpoch (round-12 ADVICE — the foldBatch batchId fence,
-    // mirrored): after a crash inside the sfx publish loop a partial
-    // squash sits at epoch=<upToEpoch>; re-running with a DIFFERENT
-    // upToEpoch U2 would squash the surviving originals into U2 and
-    // leave the U1 partial holding the same rows — run epochs no
-    // longer disjoint, q313 counts inflate. Equality is ENFORCED,
-    // not just documented; a legacy/corrupt marker reads as -1 and
-    // the operator resolves it by hand.
-    val marker = new Path(s"$root/$CompactMarker")
-    if (fs.exists(marker)) {
-      val prior = readMarkerBatch(fs, marker)
-      require(prior == upToEpoch,
-        s"a SuffixMaint compact($prior) of $root crashed mid-run — " +
-          s"re-run compact with upToEpoch=$prior to convergence " +
-          s"before compacting to $upToEpoch")
-    } else writeMarkerAtomic(fs, marker, upToEpoch)
+    // Phase 2 — mutate under the compact fence. It carries upToEpoch
+    // (round-12 ADVICE — the foldBatch batchId fence, mirrored): after
+    // a crash inside the sfx publish loop a partial squash sits at
+    // epoch <upToEpoch>; re-running with a DIFFERENT upToEpoch U2
+    // would squash the surviving originals into U2 and leave the U1
+    // partial holding the same rows — run epochs no longer disjoint,
+    // q313 counts inflate. Equality is ENFORCED, not just documented;
+    // a legacy/corrupt fence reads as -1 and the operator resolves it
+    // by hand.
+    SwapPublish.holdFence(s, root, CompactMarker, upToEpoch) { prior =>
+      s"a SuffixMaint compact($prior) of $root crashed mid-run — " +
+        s"re-run compact with upToEpoch=$prior to convergence " +
+        s"before compacting to $upToEpoch"
+    }
     // (a) sfx: one partitioned staging write for every bucket with
     // ≥ 2 runs at or below upToEpoch, then a per-bucket backup-swap
-    val sfxRoot = s"$root/sfx"
-    val toSquash: Seq[(Int, Seq[Long])] = bucketDirs(fs, sfxRoot)
-      .map { b =>
-        b.getName.stripPrefix("bucket=").toInt ->
-          epochDirs(fs, b.toString)
-            .map(_.getName.stripPrefix("epoch=").toLong)
-            .filter(_ <= upToEpoch)
-      }.filter(_._2.size > 1)
+    val toSquash: Seq[(String, Seq[Long])] = bucketDirs(s, sfxRoot)
+      .map(b => b -> SwapPublish.listEpochs(s, b).filter(_ <= upToEpoch))
+      .filter(_._2.size > 1)
     if (toSquash.nonEmpty) {
       val paths = toSquash.flatMap { case (b, es) =>
-        es.map(e => s"$sfxRoot/bucket=$b/epoch=$e")
+        es.map(SwapPublish.epochPath(b, _))
       }
       // .distinct(): a no-op on healthy logs (each (doc_id, p) holds
       // one suffix globally); after the publish-then-crash window it
@@ -246,52 +235,24 @@ object SuffixMaint {
         .parquet(paths: _*)
         .drop("epoch")
         .distinct()
-      val staging = new Path(s"$sfxRoot/.compact-staging")
-      fs.delete(staging, true)
-      union.repartition(math.max(1, toSquash.size), col("bucket"))
-        .sortWithinPartitions("bucket", "key", "doc_id", "p")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(staging.toString)
+      SwapPublish.writePartEpochs(
+        union.repartition(math.max(1, toSquash.size), col("bucket"))
+          .sortWithinPartitions("bucket", "key", "doc_id", "p"),
+        sfxRoot, "bucket", upToEpoch)
       toSquash.foreach { case (b, es) =>
-        val src = new Path(s"$staging/bucket=$b")
-        val target = new Path(s"$sfxRoot/bucket=$b/epoch=$upToEpoch")
-        val backup = new Path(s"$sfxRoot/bucket=$b/.backup-$upToEpoch")
-        graft.sinks.SwapPublish.publish(fs, src, target, backup,
-          targetExists = fs.exists(target))
-        es.filter(_ != upToEpoch).foreach { e =>
-          fs.delete(new Path(s"$sfxRoot/bucket=$b/epoch=$e"), true): Unit
-        }
+        SwapPublish.dropEpochs(s, b, es.filter(_ != upToEpoch))
       }
-      fs.delete(staging, true)
     }
     // (b) admitted: squash the id epochs ≤ upToEpoch into one
-    val adm = batches.filter(_ <= upToEpoch)
-    if (adm.size > 1) {
-      val union = Tables.read(s,
-        adm.map(e => s"$root/admitted/epoch=$e"): _*).distinct()
-      graft.sinks.SwapPublish.writeEpoch(union, s"$root/admitted",
-        upToEpoch)
-      adm.filter(_ != upToEpoch).foreach { e =>
-        fs.delete(new Path(s"$root/admitted/epoch=$e"), true): Unit
-      }
-    }
+    SwapPublish.squash(s, s"$root/admitted", upToEpoch)
     // (c) hits: whole-bucket rewrites, newest wins — drop superseded
     // epochs (safe at ANY epoch: a replay of the newest batch
     // recomputes its buckets from sfx and overwrites its own epoch,
-    // never reading an older hits epoch)
-    bucketDirs(fs, s"$root/hits").foreach { b =>
-      val es = epochDirs(fs, b.toString)
-        .map(_.getName.stripPrefix("epoch=").toLong)
-      if (es.nonEmpty) es.filter(_ < es.max).foreach { e =>
-        fs.delete(new Path(s"$b/epoch=$e"), true): Unit
-      }
-    }
-    // (d) bounds: whole-zone rewrites, newest wins — ditto
-    val bnd = graft.sinks.SwapPublish.listEpochs(s, s"$root/bounds")
-    if (bnd.nonEmpty) bnd.filter(_ < bnd.max).foreach { e =>
-      fs.delete(new Path(s"$root/bounds/epoch=$e"), true): Unit
-    }
-    fs.delete(marker, false): Unit
+    // never reading an older hits epoch); (d) bounds: whole-zone
+    // rewrites, newest wins — ditto
+    (bucketDirs(s, s"$root/hits") :+ s"$root/bounds")
+      .foreach(SwapPublish.dropSuperseded(s, _))
+    SwapPublish.releaseFence(s, root, CompactMarker)
   }
 
   /** Compact trigger policy (judge round-12 item #5 — the
@@ -311,18 +272,28 @@ object SuffixMaint {
     * amortizing the squash over the folds between triggers. */
   def compactNeeded(s: SparkSession, root: String,
                     maxRuns: Int = 8): Boolean = {
-    val fs = fsOf(s, root)
-    bucketDirs(fs, s"$root/sfx")
-      .exists(b => epochDirs(fs, b.toString).size >= maxRuns)
+    bucketDirs(s, s"$root/sfx")
+      .exists(b => SwapPublish.listEpochs(s, b).size >= maxRuns)
   }
 
   /** The q313 report off the maintained zones: pruned newest-hits
     * union + the content-bounded group-by. Hash-identical to
     * [[CorpusStats.dupSubstrings]] over the admitted documents. */
   def readDupSubstrings(s: SparkSession, root: String): DataFrame = {
-    requireNoInflight(s, root)
-    val fs = fsOf(s, root)
-    val paths = newestHitPaths(fs, s"$root/hits")
+    SwapPublish.requireNoFence(s, root, InflightMarker) {
+      s"a SuffixMaint fold of $root crashed mid-run ($InflightMarker " +
+        "present) — re-run foldBatch with the same batchId before " +
+        "reading; it converges and clears the marker"
+    }
+    SwapPublish.requireNoFence(s, root, CompactMarker) {
+      s"a SuffixMaint compact of $root crashed mid-run ($CompactMarker" +
+        " present) — re-run compact with the same upToEpoch before " +
+        "reading; it converges and clears the marker"
+    }
+    // hits are whole-bucket rewrites: each bucket's newest epoch is
+    // its current one
+    val paths = bucketDirs(s, s"$root/hits")
+      .flatMap(SwapPublish.newestEpoch(s, _))
     val hits =
       if (paths.isEmpty) s.createDataFrame(
         s.sparkContext.emptyRDD[Row], hitSchema)
@@ -340,7 +311,6 @@ object SuffixMaint {
 
   private def foldAccepted(s: SparkSession, root: String,
                            sfx0: DataFrame, batchId: Long): Unit = {
-    val fs = fsOf(s, root)
     val (splits, minLen, _) = readSplits(s, root)
     val bc = s.sparkContext.broadcast(splits)
     // SANCTIONED udf — the engine's only one (PLANS.md discipline
@@ -356,9 +326,9 @@ object SuffixMaint {
     // append this batch's suffixes as one sorted-run epoch per
     // touched bucket (staged partitionBy write + per-bucket rename —
     // replay overwrites the same epoch dirs)
-    val touched = writeBucketEpoch(s, fs,
+    val touched = SwapPublish.writePartEpochs(
       sfx.select(col("doc_id"), col("p"), col("key"), col("bucket")),
-      s"$root/sfx", batchId)
+      s"$root/sfx", "bucket", batchId).map(_.toInt)
     // affected = touched ∪ nearest non-empty neighbors (edge-LCP
     // blast radius of an insertion); bounds are ≤ buckets rows
     val oldBounds = readBounds(s, root)
@@ -372,8 +342,8 @@ object SuffixMaint {
     val aff = affected.toSeq
     // re-derive the affected buckets from their full run logs: a
     // PRUNED read (only these buckets' dirs), bucket-local sort
-    val runPaths = aff.flatMap(b => epochDirs(fs, s"$root/sfx/bucket=$b")
-      .map(_.toString))
+    val runPaths = aff.map(b => s"$root/sfx/bucket=$b").flatMap(d =>
+      SwapPublish.listEpochs(s, d).map(SwapPublish.epochPath(d, _)))
     // basePath: the bucket (and epoch) live in the DIRECTORY names —
     // without it, partition discovery roots at each epoch dir and the
     // bucket column would vanish from the scan
@@ -442,10 +412,10 @@ object SuffixMaint {
         def next(): Row = { val r = cur; advance(); r }
       }
     }
-    writeBucketEpoch(s,
-      fs, s.createDataFrame(hits, hitSchema.add("bucket",
+    SwapPublish.writePartEpochs(
+      s.createDataFrame(hits, hitSchema.add("bucket",
         org.apache.spark.sql.types.IntegerType)),
-      s"$root/hits", batchId): Unit
+      s"$root/hits", "bucket", batchId): Unit
     writeBoundsEpoch(s, root, allBounds, batchId)
   }
 
@@ -518,115 +488,18 @@ object SuffixMaint {
     StructField("tok_len", LongType, nullable = false),
     StructField("doc_id", LongType, nullable = false)))
 
-  private def fsOf(s: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** The batchId the inflight marker fences (−1 for a legacy empty
-    * OR corrupt marker, which no replay can match — the operator
-    * must resolve it by hand, the honest answer for a pre-fence
-    * crash; round-12 ADVICE: a raw NumberFormatException would
-    * replace the actionable require message with a parse error). */
-  private def readMarkerBatch(fs: FileSystem, marker: Path): Long = {
-    val in = fs.open(marker)
-    try {
-      val txt = scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim
-      scala.util.Try(txt.toLong).getOrElse(-1L)
-    } finally in.close()
-  }
-
-  /** Create `marker` holding `value` ATOMICALLY: write a temp name,
-    * then rename into place (round-12 ADVICE — create-then-write
-    * leaves a crash window where an EMPTY marker reads as batch −1
-    * and even the legitimate replay is refused). Callers only invoke
-    * this when the marker is absent, so the rename never collides; a
-    * crash before the rename leaves only the ignorable temp file,
-    * overwritten by the next attempt. */
-  private def writeMarkerAtomic(fs: FileSystem, marker: Path,
-                                value: Long): Unit = {
-    val tmp = new Path(marker.getParent, s".${marker.getName}.tmp")
-    val out = fs.create(tmp, true)
-    out.write(value.toString.getBytes("UTF-8"))
-    out.close()
-    require(fs.rename(tmp, marker),
-      s"could not publish inflight marker $marker")
-  }
-
-  private def requireNoInflight(s: SparkSession, root: String): Unit = {
-    val fs = fsOf(s, root)
-    val p = new Path(s"$root/$InflightMarker")
-    require(!fs.exists(p),
-      s"a SuffixMaint fold of $root crashed mid-run ($p present) — " +
-        "re-run foldBatch with the same batchId before reading; it " +
-        "converges and clears the marker")
-    val c = new Path(s"$root/$CompactMarker")
-    require(!fs.exists(c),
-      s"a SuffixMaint compact of $root crashed mid-run ($c present)" +
-        " — re-run compact with the same upToEpoch before reading; " +
-        "it converges and clears the marker")
-  }
-
-  private def bucketDirs(fs: FileSystem, zone: String): Seq[Path] = {
+  private def bucketDirs(s: SparkSession, zone: String): Seq[String] = {
     val z = new Path(zone)
+    val fs = z.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(z)) Seq.empty
     else fs.listStatus(z).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("bucket="))
-  }
-
-  /** Stage-write `df` (with a `bucket` column) partitioned by bucket,
-    * then move each bucket's directory to
-    * `<zone>/bucket=<b>/epoch=<epoch>`. Replay-idempotent: the same
-    * epoch dirs are deleted and rewritten. Returns the touched
-    * bucket ids. */
-  private def writeBucketEpoch(s: SparkSession, fs: FileSystem,
-                               df: DataFrame, zone: String,
-                               epoch: Long): Seq[Int] = {
-    val staging = new Path(s"$zone/.staging-$epoch")
-    fs.delete(staging, true)
-    df.write.mode("overwrite").partitionBy("bucket")
-      .parquet(staging.toString)
-    val touched = fs.listStatus(staging).toSeq
-      .map(_.getPath).filter(_.getName.startsWith("bucket="))
-    val ids = touched.map { child =>
-      val b = child.getName.stripPrefix("bucket=").toInt
-      val target = new Path(s"$zone/bucket=$b/epoch=$epoch")
-      fs.mkdirs(target.getParent)
-      fs.delete(target, true)
-      require(fs.rename(child, target),
-        s"could not publish $child to $target")
-      b
-    }
-    fs.delete(staging, true)
-    ids
-  }
-
-  private def epochDirs(fs: FileSystem, bucketDir: String): Seq[Path] = {
-    val p = new Path(bucketDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("epoch="))
-  }
-
-  /** Newest hits epoch per bucket — hits are whole-bucket rewrites,
-    * so only the max epoch is current (older epochs are garbage a
-    * compaction pass may drop). */
-  private def newestHitPaths(fs: FileSystem, zone: String): Seq[String] = {
-    val z = new Path(zone)
-    if (!fs.exists(z)) return Seq.empty
-    fs.listStatus(z).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("bucket="))
-      .flatMap { b =>
-        val es = epochDirs(fs, b.toString)
-        if (es.isEmpty) None
-        else Some(es.maxBy(_.getName.stripPrefix("epoch=").toLong)
-          .toString)
-      }
+      .filter(_.getName.startsWith("bucket=")).map(_.toString)
   }
 
   /** Splits carry (minLen, window) on every row; a sentinel row
     * (i = −1, empty key) makes the zone non-empty even in the
     * single-bucket layout, so the params always round-trip. */
-  private def writeSplits(s: SparkSession, fs: FileSystem, root: String,
+  private def writeSplits(s: SparkSession, root: String,
                           splits: Array[Array[String]], minLen: Int,
                           window: Int): Unit = {
     import scala.jdk.CollectionConverters._
@@ -662,31 +535,18 @@ object SuffixMaint {
       StructField("bucket", org.apache.spark.sql.types.IntegerType),
       StructField("lo", org.apache.spark.sql.types.ArrayType(StringType)),
       StructField("hi", org.apache.spark.sql.types.ArrayType(StringType))))
-    graft.sinks.SwapPublish.writeEpoch(
+    SwapPublish.writeEpoch(
       s.createDataFrame(rows.asJava, schema).coalesce(1),
       s"$root/bounds", epoch)
   }
 
   private def readBounds(s: SparkSession,
-                         root: String): Map[Int, (Array[String], Array[String])] = {
-    val es = graft.sinks.SwapPublish.listEpochs(s, s"$root/bounds")
-    if (es.isEmpty) return Map.empty
-    Tables.read(s, s"$root/bounds/epoch=${es.max}").collect()
-      .map(r => r.getInt(0) -> (r.getSeq[String](1).toArray,
-        r.getSeq[String](2).toArray)).toMap
-  }
-
-  private def writeEpoch(df: DataFrame, dir: String, epoch: Long): Unit =
-    graft.sinks.SwapPublish.writeEpoch(df, dir, epoch)
-
-  private def readAllEpochs(s: SparkSession, dir: String,
-                            beforeEpoch: Option[Long],
-                            empty: => DataFrame): DataFrame = {
-    val paths = graft.sinks.SwapPublish.listEpochs(s, dir)
-      .filter(e => beforeEpoch.forall(e < _))
-      .map(e => s"$dir/epoch=$e")
-    if (paths.isEmpty) empty else Tables.read(s, paths: _*)
-  }
+                         root: String): Map[Int, (Array[String], Array[String])] =
+    SwapPublish.newestEpoch(s, s"$root/bounds").fold(
+      Map.empty[Int, (Array[String], Array[String])])(
+      Tables.read(s, _).collect()
+        .map(r => r.getInt(0) -> (r.getSeq[String](1).toArray,
+          r.getSeq[String](2).toArray)).toMap)
 
   private def emptyIds(s: SparkSession): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[Row],

@@ -19,7 +19,11 @@ import graft.util.Sessions
   * so every such read reuses `Tables.read`'s inferred schema. One
   * declared session: nothing installs a function, rule, strategy,
   * listener or conf into a live session, so every session carries
-  * what `Sessions.build` declared and nothing a call path added. */
+  * what `Sessions.build` declared and nothing a call path added. One
+  * epoch store: outside `sinks/SwapPublish.scala` no main source spells
+  * the `<dir>/epoch=N` layout or its staging and backup siblings, so
+  * every epoch-keeping module lists, reads, publishes, squashes and
+  * fences through it. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
@@ -124,6 +128,18 @@ class SourceCheckSpec extends SparkSpec {
     } yield s"${root.relativize(p)}: $needle"
     assert(bad.isEmpty, s"declare listeners and confs in Sessions.confFor: $bad")
     assert(Files.readString(probe).contains("listenerManager.register"))
+  }
+
+  test("the epoch layout is spelled in src/main only in sinks/SwapPublish.scala") {
+    val main = root.resolve("src/main")
+    val store = main.resolve("scala/graft/sinks/SwapPublish.scala")
+    val bad = for {
+      p <- sources if p.startsWith(main) && p != store
+      needle <- Seq("epoch=$", "\"epoch=\"", ".staging-$", ".backup-$")
+      if Files.readString(p).contains(needle)
+    } yield s"${root.relativize(p)}: $needle"
+    assert(bad.isEmpty, s"go through the SwapPublish epoch store: $bad")
+    assert(Files.readString(store).contains(".backup-$"))
   }
 
   test("Sessions.cpus honours SPARK_GRAFT_CPUS, else the processor count") {

@@ -10,17 +10,17 @@ import graft.SparkSpec
   * its null semantics (null on length mismatch, null-propagation on
   * null elements, null on null input arrays). */
 class FloatDotSpec extends SparkSpec {
-  import FloatDotSpec.unfused
+  import FloatDotSpec.{onParquet, unfused}
   import spark.implicits._
 
   private val composable =
     "aggregate(zip_with(a, b, (x, y) -> x * y), cast(0 as double), (acc, x) -> acc + x)"
 
-  private def df = Seq(
+  private lazy val df = onParquet(Seq(
     (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),   // plain
     (Array(0.1f, 0.2f), Array(0.3f, 0.7f)),               // inexact floats
     (Array.empty[Float], Array.empty[Float])              // empty → 0.0
-  ).toDF("a", "b")
+  ).toDF("a", "b"))
 
   test("bit-identical to the composable spelling on equal-length arrays") {
     val rows = df.select(expr("float_dot(a, b)")).collect()
@@ -33,7 +33,7 @@ class FloatDotSpec extends SparkSpec {
   }
 
   test("length mismatch and null elements return null, like zip_with") {
-    val weird = spark.createDataFrame(
+    val weird = onParquet(spark.createDataFrame(
       java.util.Arrays.asList(
         Row(Seq(1.0f, 2.0f), Seq(3.0f)),                    // mismatch
         Row(Seq(1.0f, null), Seq(3.0f, 4.0f)),              // null element
@@ -45,7 +45,7 @@ class FloatDotSpec extends SparkSpec {
             org.apache.spark.sql.types.FloatType, containsNull = true)),
         org.apache.spark.sql.types.StructField("b",
           org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, containsNull = true)))))
+            org.apache.spark.sql.types.FloatType, containsNull = true))))))
     val rows = weird.select(expr("float_dot(a, b)")).collect()
       .zip(unfused(weird, expr(composable))).map { case (f, s) => Row(f(0), s(0)) }
     assert(rows.length == 4)
@@ -101,6 +101,18 @@ class FloatDotSpec extends SparkSpec {
 object FloatDotSpec {
   import org.apache.spark.sql.{Column, DataFrame}
   import org.scalatest.Assertions._
+
+  /** `d` written to parquet and read back in its row order. Both sides
+    * of a bit-identity check must run over a scan: over a local
+    * relation, `ConvertToLocalRelation` evaluates both spellings with
+    * interpreted `eval` before [[DotFusion]] runs, so neither the
+    * codegen'd kernel nor the HOF is ever compared. */
+  def onParquet(d: DataFrame): DataFrame = {
+    val dir = graft.SparkSpec.tempDir("graft-dot-").resolve("t").toString
+    d.withColumn("_i", monotonically_increasing_id()).coalesce(1)
+      .write.parquet(dir)
+    d.sparkSession.read.parquet(dir).orderBy("_i").drop("_i")
+  }
 
   /** The reference side of a bit-identity check: `d.select(cols)`
     * planned and collected with [[DotFusion]] in

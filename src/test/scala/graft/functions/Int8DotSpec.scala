@@ -13,7 +13,7 @@ import graft.SparkSpec
   * "bit-identical" here is plain equality. */
 class Int8DotSpec extends SparkSpec {
   import spark.implicits._
-  import FloatDotSpec.unfused
+  import FloatDotSpec.{onParquet, unfused}
 
   private val composable =
     "aggregate(zip_with(a, b, (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), " +
@@ -21,12 +21,12 @@ class Int8DotSpec extends SparkSpec {
 
   // Seq[Byte], not Array[Byte]: the Array encoder maps to BINARY,
   // the Seq encoder to array<tinyint> — int8_dot wants the latter
-  private def df = Seq(
+  private lazy val df = onParquet(Seq(
     (Seq(1.toByte, 2.toByte, 3.toByte),
       Seq(4.toByte, 5.toByte, 6.toByte)),                   // plain
     (Seq(127.toByte, -128.toByte), Seq(127.toByte, 127.toByte)), // extremes
     (Seq.empty[Byte], Seq.empty[Byte])                      // empty → 0
-  ).toDF("a", "b")
+  ).toDF("a", "b"))
 
   test("equal to the composable spelling, extremes included") {
     val rows = df.select(expr("int8_dot(a, b)")).collect()
@@ -41,7 +41,7 @@ class Int8DotSpec extends SparkSpec {
   test("length mismatch and null elements return null, like zip_with") {
     val t = org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.ByteType, containsNull = true)
-    val weird = spark.createDataFrame(
+    val weird = onParquet(spark.createDataFrame(
       java.util.Arrays.asList(
         Row(Seq(1.toByte, 2.toByte), Seq(3.toByte)),        // mismatch
         Row(Seq(1.toByte, null), Seq(3.toByte, 4.toByte)),  // null element
@@ -49,7 +49,7 @@ class Int8DotSpec extends SparkSpec {
         Row(Seq(2.toByte), Seq(3.toByte))),                 // control
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("a", t),
-        org.apache.spark.sql.types.StructField("b", t))))
+        org.apache.spark.sql.types.StructField("b", t)))))
     val rows = weird.select(expr("int8_dot(a, b)")).collect()
       .zip(unfused(weird, expr(composable))).map { case (f, s) => Row(f(0), s(0)) }
     assert(rows.length == 4)

@@ -54,6 +54,26 @@ class Scd2MaintainSpec extends SparkSpec {
     assert(after.toSeq == want.toSeq)
   }
 
+  test("a crashed stream commit's staging leftover is not a commit") {
+    val root = SparkSpec.tempDir("scd2_staged").toString + "/z"
+    val ev = rawEvents
+    Scd2Maintain.init(spark, root, ev.where(col("event_id") % 2 === 0))
+    // a JVM killed while committing stream batch 0's raw events (epoch
+    // 1000 + id) leaves only the staging dir's uncommitted job output
+    val rest = ev.where(col("event_id") % 2 === 1)
+    val staging = s"$root/events/.staging-1000"
+    rest.limit(5).write.parquet(s"$staging/_temporary/0/bucket=0")
+    // the retry sees no commit, folds the batch and cleans the leftover
+    assert(Scd2Maintain.applyBatchIdempotent(spark, root, rest, 0L))
+    assert(!new java.io.File(staging).exists())
+    val want = graft.ops.EventOps.scd2Intervals(spark, sf())
+      .collect().map(_.toSeq)
+    assert(Scd2Maintain.read(spark, root).collect().map(_.toSeq).toSeq ==
+      want.toSeq)
+    // and now the batch is committed: a redelivery is a no-op
+    assert(!Scd2Maintain.applyBatchIdempotent(spark, root, rest, 0L))
+  }
+
   test("a one-user batch touches one bucket and writes one merge row") {
     val root = SparkSpec.tempDir("scd2_touch").toString + "/z"
     val ev = rawEvents

@@ -84,7 +84,8 @@ class NearDupMaintSpec extends SparkSpec {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     assert(fs.rename(p(s"$root/pairs/epoch=1"),
       p(s"$root/pairs/.backup-1")))
-    fs.create(p(s"$root/${NearDupMaint.InflightMarker}"), true).close()
+    val m1 = fs.create(p(s"$root/${NearDupMaint.InflightMarker}"), true)
+    m1.write("1".getBytes("UTF-8")); m1.close()
     // marker fences the fold AND both readers
     intercept[IllegalArgumentException] {
       NearDupMaint.foldBatch(slice(3), root, 3L, 8, 4, -1.0)
@@ -115,7 +116,8 @@ class NearDupMaintSpec extends SparkSpec {
     val dupUnion = spark.read.parquet(
       s"$root/vectors/epoch=1", s"$root/vectors/epoch=2").distinct()
     graft.sinks.SwapPublish.writeEpoch(dupUnion, s"$root/vectors", 2L)
-    fs.create(p(s"$root/${NearDupMaint.InflightMarker}"), true).close()
+    val m2 = fs.create(p(s"$root/${NearDupMaint.InflightMarker}"), true)
+    m2.write("2".getBytes("UTF-8")); m2.close()
     // the duplicated predecessor state is fenced off...
     intercept[IllegalArgumentException] {
       NearDupMaint.readVectors(spark, root)
@@ -132,6 +134,41 @@ class NearDupMaintSpec extends SparkSpec {
     assert(NearDupMaint.readPairs(spark, root).collect()
       .map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2"))).toSet
       .nonEmpty)
+  }
+
+  test("a compact re-run with a different upToEpoch is refused, " +
+    "naming the held one") {
+    val emb = graft.Tables.load(spark, sf(), "embeddings")
+      .select(col("vec_id"), col("embedding")).limit(120)
+    val root = SparkSpec.tempDir("graft-ndfence-").toString
+    def slice(k: Int) = emb.where(pmod(col("vec_id"), lit(4)) === k)
+    (0 to 3).foreach(k =>
+      NearDupMaint.foldBatch(slice(k), root, k.toLong, 8, 4, -1.0))
+    def pairs = NearDupMaint.readPairs(spark, root).collect()
+      .map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2"))).toSeq
+    val want = pairs
+    assert(want.nonEmpty && want.distinct.length == want.length)
+    // a compact(2) that crashed after publishing the squashed pairs at
+    // epoch=2 but before deleting epochs 0 and 1: both hold their pairs
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    graft.sinks.SwapPublish.writeEpoch(spark.read.parquet(
+      (0 to 2).map(e => s"$root/pairs/epoch=$e"): _*).distinct(),
+      s"$root/pairs", 2L)
+    val m = fs.create(p(s"$root/${NearDupMaint.InflightMarker}"), true)
+    m.write("2".getBytes("UTF-8")); m.close()
+    // squashing the survivors into epoch 1 would leave batches 0 and
+    // 1's pairs in both epoch=1 and epoch=2 and release the fence
+    val e = intercept[IllegalArgumentException] {
+      NearDupMaint.compact(spark, root, upToEpoch = 1L)
+    }
+    assert(e.getMessage.contains("upToEpoch=2"), e.getMessage)
+    assert(fs.exists(p(s"$root/${NearDupMaint.InflightMarker}")))
+    // the re-run with the held value converges to the original pairs
+    NearDupMaint.compact(spark, root, upToEpoch = 2L)
+    assert(!fs.exists(p(s"$root/${NearDupMaint.InflightMarker}")))
+    assert(pairs.sorted == want.sorted)
   }
 
   test("compact validates every zone before mutating any") {
