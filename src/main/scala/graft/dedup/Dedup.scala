@@ -1,8 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
 import graft.util.{Checkpoints, Tokens}
@@ -972,14 +975,24 @@ object Dedup {
   }
 
   /** Connected components over an undirected edge list (`a`, `b`
-    * columns, any orientation) via alternating LARGE-STAR/SMALL-STAR
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) — O(log n) rounds REGARDLESS of topology.
-    * An earlier min-label-propagation + pointer-jump spelling here
-    * was Θ(diameter) on adversarial inputs (labels don't point along
-    * the graph, so jumping compresses nothing — measured ~n/2 rounds
-    * on a shuffled n-node path; star contraction measures 7-13 rounds
-    * up to n = 50k).
+    * columns, any orientation). Returns (id, label) for every
+    * edge-endpoint node, labelled with its component's minimum id;
+    * isolated nodes are absent (callers coalesce).
+    *
+    * One small-graph policy: the canonical edge set is rooted once and
+    * counted ([[Checkpoints.iterateAbove]]). Up to [[DriverEdges]]
+    * bigint edges it is collected and folded by a path-compressing
+    * union-find on the driver, and the labels come back as a
+    * `LocalRelation` — a gate-scale or metadata-scale graph pays no
+    * contraction round. Above the bound the rooted edges run
+    * alternating LARGE-STAR/SMALL-STAR contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14) —
+    * O(log n) rounds REGARDLESS of topology. An earlier
+    * min-label-propagation + pointer-jump spelling here was
+    * Θ(diameter) on adversarial inputs (labels don't point along the
+    * graph, so jumping compresses nothing — measured ~n/2 rounds on a
+    * shuffled n-node path; star contraction measures 7-13 rounds up
+    * to n = 50k).
     *
     *  - large-star(u): every neighbor v > u re-hooks to
     *    m = min(Γ(u) ∪ u);
@@ -994,33 +1007,79 @@ object Dedup {
     * EXACTLY (count short-circuit, then a one-sided anti-join on the
     * confirming round), not by a hashed signature; a 60-round
     * cap (≫ log₂ of any real corpus) fails LOUDLY rather than ever
-    * returning partial labels. Returns (id, label) for every
-    * edge-endpoint node; isolated nodes are absent (callers coalesce).
+    * returning partial labels. Both branches return the same rows
+    * under the same schema (pinned in DedupSpec).
     */
-  def connectedComponents(edges0: DataFrame): DataFrame = {
+  def connectedComponents(edges0: DataFrame): DataFrame =
+    connectedComponents(edges0, DriverEdges)
+
+  /** ≤ 500k edges fold on the driver: 8 MB as two longs each (the
+    * bounded-collect discipline of IndexMaintain's touched blocks); a
+    * distributed contraction on a graph this size pays shuffle rounds
+    * for milliseconds of union-find. */
+  private val DriverEdges = 500000
+
+  private val LabelSchema = StructType(Seq(
+    StructField("id", LongType), StructField("label", LongType)))
+
+  /** [[connectedComponents]] with its driver bound as a parameter:
+    * tests pass 0 to run the contraction loop on a small graph. */
+  private[graft] def connectedComponents(edges0: DataFrame,
+                                         driverEdges: Int): DataFrame = {
     val canonical = edges0
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-    // Checkpoints.iterate roots each round (eager, the durability
-    // dial), NOT persist: each round's plan would otherwise nest every
-    // prior round's, and optimizer time grows super-linearly (65 s of
-    // pure planning by round 3 of the old loop). Fixpoint test,
+    // the union-find indexes ids as longs; other id types take the loop
+    val bound = if (canonical.schema("a").dataType == LongType) driverEdges
+      else -1
+    // Checkpoints roots each round (eager, the durability dial), NOT
+    // persist: each round's plan would otherwise nest every prior
+    // round's, and optimizer time grows super-linearly (65 s of pure
+    // planning by round 3 of the old loop). Fixpoint test,
     // count-first: counts DIFFER on every non-final round (the edge set
     // shrinks), so the shuffle-heavy except runs only on the confirming
     // round (a one-job symmetric difference measured no better); equal
     // counts + empty one-sided except ⟺ set equality for distinct sets.
     // 60 rounds exceed log2 of any physical edge count: the cap is a bug.
-    val edges = Checkpoints.iterate("connectedComponents", canonical,
+    Checkpoints.iterateAbove("connectedComponents", canonical, bound,
       Checkpoints.UntilStable(60,
         (prev, next) => next.exceptAll(prev).isEmpty),
       Checkpoints.RoundWidth) { (edges, parts) =>
       Some(starContractRound(edges, Some(parts)))
+    } match {
+      case Right(edges) =>
+        // star forest: every non-root appears exactly once as b,
+        // rooted at a
+        edges.select(col("b").as("id"), col("a").as("label"))
+          .union(edges.select(col("a").as("id"), col("a").as("label"))
+            .distinct())
+      case Left(rows) =>
+        // endpoints indexed by sorted position: a union keeps the
+        // smaller index, so each component's root is its minimum id
+        val ids = rows.flatMap(r => Seq(r.getLong(0), r.getLong(1)))
+          .sorted.distinct
+        def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+        val parent = Array.range(0, ids.length)
+        // ITERATIVE find with path compression — a recursive spelling
+        // overflows the (~1 MB) worker-thread stack on a long chain,
+        // and a streaming foreachBatch replaying the same batch would
+        // crash-loop on it
+        def find(x: Int): Int = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x
+          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        rows.foreach { r =>
+          val (ra, rb) = (find(at(r.getLong(0))), find(at(r.getLong(1))))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val labels = ids.indices.map(j => Row(ids(j), ids(find(j))))
+        edges0.sparkSession.createDataFrame(labels.asJava, LabelSchema)
     }
-    // star forest: every non-root appears exactly once as b, rooted at a
-    edges.select(col("b").as("id"), col("a").as("label"))
-      .union(edges.select(col("a").as("id"), col("a").as("label")).distinct())
   }
 
   /** q98: near-dup CLUSTERS and survivor choice — what a dedup pipeline
@@ -1248,17 +1307,16 @@ object Dedup {
     * labels gives a CLUSTER-LEVEL graph (≤ 2·|batch| nodes) whose
     * connected components — computed by the same
     * [[connectedComponents]] operator — have as min-node exactly the
-    * min member id of every merged cluster. One contraction on the
-    * tiny meta graph relabels arbitrarily many corpus rows. Endpoints
+    * min member id of every merged cluster. One CC over the tiny
+    * meta graph relabels arbitrarily many corpus rows. Endpoints
     * absent from `labels` (brand-new docs) enter as their own label.
     *
-    * Cost: O(|batch|) for the meta graph — union-find on the driver
-    * while it fits `maxDriverEdges` (the bounded-collect discipline
-    * of IndexMaintain's touched blocks; a distributed contraction on
-    * a metadata-scale graph would pay shuffle rounds for milliseconds
-    * of work), the [[connectedComponents]] loop beyond — plus one
-    * pass over `labels` for the rewrite (the meta map rides in as a
-    * broadcast, so a mega-cluster's shared label is never a shuffle
+    * Cost: O(|batch|) for the meta graph — [[connectedComponents]]
+    * folds it on the driver up to its bound (a distributed
+    * contraction on a metadata-scale graph would pay shuffle rounds
+    * for milliseconds of work) and runs its loop only beyond — plus
+    * one pass over `labels` for the rewrite (the meta map rides in as
+    * a broadcast, so a mega-cluster's shared label is never a shuffle
     * key — no skew).
     * On a zone-backed label table only rows whose label appears in
     * the meta map change; [[graft.sinks.MergeOnRead.merge]] applies
@@ -1266,55 +1324,23 @@ object Dedup {
     * to full recompute at every batch boundary is pinned by
     * DedupSpec (random graphs, random batch partitions) and by
     * q144's oracle (≡ the q98 full-graph fixpoint). */
-  def applyEdgeBatch(labels: DataFrame, edges: DataFrame,
-                     maxDriverEdges: Int = 500000): DataFrame = {
-    val spark = labels.sparkSession
-    val lifted = edges
+  def applyEdgeBatch(labels: DataFrame, edges: DataFrame): DataFrame =
+    applyEdgeBatch(labels, edges, DriverEdges)
+
+  /** [[applyEdgeBatch]] with the meta graph's [[connectedComponents]]
+    * driver bound as a parameter (tests pass 0 to run the loop). */
+  private[graft] def applyEdgeBatch(labels: DataFrame, edges: DataFrame,
+                                    driverEdges: Int): DataFrame = {
+    // The meta graph is batch-bounded BY CONTRACT (≤ 2·|batch| nodes)
+    // — metadata-scale, like IndexMaintain's touched-block set; the
+    // operator roots it once, so the two label joins run once
+    val meta = connectedComponents(edges
       .join(labels.select(col("id").as("a"), col("label").as("la0")),
         Seq("a"), "left")
       .join(labels.select(col("id").as("b"), col("label").as("lb0")),
         Seq("b"), "left")
-      .select(least(coalesce(col("la0"), col("a")),
-          coalesce(col("lb0"), col("b"))).as("a"),
-        greatest(coalesce(col("la0"), col("a")),
-          coalesce(col("lb0"), col("b"))).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    // The meta graph is batch-bounded BY CONTRACT (≤ 2·|batch| nodes)
-    // — metadata-scale, like IndexMaintain's touched-block set. A
-    // distributed contraction loop on a few thousand edges pays
-    // multiple shuffle rounds + checkpoints for milliseconds of
-    // union-find, so up to `maxDriverEdges` (8 MB at the default) the
-    // fold runs driver-side; a larger batch falls back to the
-    // distributed loop. take(n+1) bounds driver memory either way.
-    // persist before take: the fallback's contraction loop would
-    // otherwise recompute the two label joins from scratch
-    lifted.persist()
-    val head = lifted.take(maxDriverEdges + 1)
-    val meta: DataFrame =
-      if (head.length <= maxDriverEdges) {
-        import spark.implicits._
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        // ITERATIVE find with path compression — a recursive spelling
-        // overflows the (~1 MB) worker-thread stack on a long lifted
-        // chain, and a streaming foreachBatch replaying the same batch
-        // would crash-loop on it
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        head.foreach { r =>
-          val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        parent.keys.toSeq.map(x => (x, find(x))).toDF("id", "label")
-      } else connectedComponents(lifted)
-    // safe either way: the driver map is local, and the distributed
-    // loop eagerly checkpointed its first round before returning
-    lifted.unpersist()
+      .select(coalesce(col("la0"), col("a")).as("a"),
+        coalesce(col("lb0"), col("b")).as("b")), driverEdges)
     val newNodes = edges
       .select(explode(array(col("a"), col("b"))).as("id")).distinct()
       .join(labels.select("id"), Seq("id"), "left_anti")

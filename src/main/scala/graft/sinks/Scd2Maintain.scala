@@ -44,11 +44,18 @@ object Scd2Maintain {
     SwapPublish.writeEpoch(withBucket(batch), eventsRoot(root), epoch,
       "bucket")
 
+  /** Publish `batch` as the next sequential epoch. Sequential epochs
+    * live below [[StreamEpochBase]]: numbered past the newest stream
+    * epoch, one would take a later stream batch's commit marker and
+    * that batch would be skipped as committed. */
   private def appendEvents(s: SparkSession, root: String,
-                           batch: DataFrame): Unit =
-    commitEvents(batch, root,
-      SwapPublish.listEpochs(s, eventsRoot(root)).lastOption
-        .getOrElse(0L) + 1L)
+                           batch: DataFrame): Unit = {
+    val epoch = SwapPublish.listEpochs(s, eventsRoot(root))
+      .filter(_ < StreamEpochBase).lastOption.getOrElse(0L) + 1L
+    require(epoch < StreamEpochBase,
+      s"$root: sequential event epochs 1..${StreamEpochBase - 1} are all taken")
+    commitEvents(batch, root, epoch)
+  }
 
   /** One row per user: the interval list packed as a sorted array —
     * the shape that makes interval replacement a single-key MERGE. */
@@ -99,7 +106,7 @@ object Scd2Maintain {
 
   /** Epoch-dir namespace offset for stream batches, so retried
     * foreachBatch ids can never collide with [[applyBatch]]'s
-    * sequential epochs. */
+    * sequential epochs, which stay below it. */
   private val StreamEpochBase = 1000L
 
   /** [[applyBatch]] keyed by a CALLER-supplied batch id — the

@@ -1,11 +1,14 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
 /** The durability dial for iterative loops, and the one loop
   * combinator ([[iterate]]) that every round-materializing loop runs
   * through: connected components, BPE training, the k-core peel, BFS,
-  * label propagation and HITS. Each round must root a fresh plan —
+  * label propagation and HITS. Connected components enters through
+  * [[iterateAbove]], so its rounds run only above its driver bound; a
+  * smaller edge set is rooted once, collected and labelled on the
+  * driver. Each round must root a fresh plan —
   * otherwise round N's plan nests every prior round's and optimizer
   * time grows super-linearly — but HOW it roots is a deployment
   * decision:
@@ -35,9 +38,10 @@ object Checkpoints {
     * loops use reliable `checkpoint()`; unset ⇒ `localCheckpoint()`. */
   val DirKey = "graft.checkpoint.dir"
 
-  /** Eagerly materialize `df` and root a fresh plan, reliable or
-    * local per the [[DirKey]] conf. */
-  def root(df: DataFrame): DataFrame =
+  /** Root `df` in a fresh plan, reliable or local per the [[DirKey]]
+    * conf, materialized now (`eager`) or by the first job that reads
+    * it. */
+  def root(df: DataFrame, eager: Boolean = true): DataFrame =
     df.sparkSession.conf.getOption(DirKey) match {
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
@@ -51,8 +55,8 @@ object Checkpoints {
         if (!current.exists(c => c == normalized ||
             c.startsWith(normalized + "/")))
           sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
+        df.checkpoint(eager)
+      case None => df.localCheckpoint(eager)
     }
 
   /** Free a superseded round's checkpoint (blocks and/or files). Only
@@ -121,9 +125,56 @@ object Checkpoints {
   def iterate(name: String, init: DataFrame, stop: Stop,
               width: Width = SessionWidth, keep: Boolean = true)
              (step: (DataFrame, Int) => Option[DataFrame]): DataFrame = {
-    val s = init.sparkSession
-    val counted = stop.isInstanceOf[UntilStable] || width == RoundWidth
-    def count(df: DataFrame): Long = if (counted) df.count() else -1L
+    val first = root(init)
+    rounds(name, first, if (counted(stop, width)) first.count() else -1L,
+      stop, width, keep)(step)
+  }
+
+  private def counted(stop: Stop, width: Width): Boolean =
+    stop.isInstanceOf[UntilStable] || width == RoundWidth
+
+  /** [[iterate]] behind a driver bound: roots `init` once and counts
+    * it. At most `bound` rows ⇒ the rows are collected, the root is
+    * freed and no round runs (Left: the caller finishes on the
+    * driver). Above ⇒ Right: the loop's final state, continuing from
+    * that same root and count. The root is lazy and the count is its
+    * materialization: one job counts every partition and ships its
+    * rows while they fit its share of the bound. The shares sum to at
+    * most `bound`, so the driver never holds more, and the job stands
+    * in for the loop's eager root and first count. A partition past
+    * its share (a skewed small input) is read by one more collect; a
+    * `take(bound + 1)` would scan partitions in a data-dependent
+    * number of jobs. */
+  def iterateAbove(name: String, init: DataFrame, bound: Long, stop: Stop,
+                   width: Width = SessionWidth)
+                  (step: (DataFrame, Int) => Option[DataFrame])
+      : Either[Array[Row], DataFrame] = {
+    val first = root(init, eager = false)
+    val share = bound / math.max(1, first.rdd.getNumPartitions)
+    val parts = first.rdd.mapPartitions { it =>
+      val fits = Array.newBuilder[Row]
+      var n = 0L
+      it.foreach { r => n += 1; if (n <= share) fits += r }
+      Iterator((n, if (n <= share) Some(fits.result()) else None))
+    }.collect()
+    val rows = parts.map(_._1).sum
+    if (rows > bound) Right(rounds(name, first, rows, stop, width, keep = true)(step))
+    else {
+      val local =
+        if (parts.forall(_._2.isDefined)) parts.flatMap(_._2.get)
+        else first.collect()
+      free(first)
+      Left(local)
+    }
+  }
+
+  /** The loop itself, from a rooted `first` state and its count. */
+  private def rounds(name: String, first: DataFrame, firstRows: Long,
+                     stop: Stop, width: Width, keep: Boolean)
+                    (step: (DataFrame, Int) => Option[DataFrame]): DataFrame = {
+    val s = first.sparkSession
+    def count(df: DataFrame): Long =
+      if (counted(stop, width)) df.count() else -1L
 
     @annotation.tailrec
     def loop(cur: DataFrame, rows: Long, round: Int): DataFrame = {
@@ -140,7 +191,7 @@ object Checkpoints {
       }
       if (done) cur
       else withAqeOff(s, width != SessionWidth && parts == 1) {
-        step(cur, parts).map(root)
+        step(cur, parts).map(root(_))
       } match {
         case None => cur
         case Some(nx) =>
@@ -154,8 +205,7 @@ object Checkpoints {
       }
     }
 
-    val first = root(init)
-    val last = loop(first, count(first), 0)
+    val last = loop(first, firstRows, 0)
     if (!keep) free(last)
     last
   }

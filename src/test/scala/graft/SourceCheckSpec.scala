@@ -23,7 +23,9 @@ import graft.util.Sessions
   * epoch store: outside `sinks/SwapPublish.scala` no main source spells
   * the `<dir>/epoch=N` layout or its staging and backup siblings, so
   * every epoch-keeping module lists, reads, publishes, squashes and
-  * fences through it. */
+  * fences through it. One connected-components operator: the one
+  * union-find in `src/main` is `Dedup.connectedComponents`' driver
+  * branch, so no caller keeps a private small-graph fold. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
@@ -70,6 +72,23 @@ class SourceCheckSpec extends SparkSpec {
         Files.readString(p).contains(needle)
     } yield s"${root.relativize(p)}: $needle"
     assert(bad.isEmpty, s"run the loop through Checkpoints.iterate: $bad")
+  }
+
+  test("the union-find def find( appears in src/main only in Dedup.connectedComponents") {
+    val main = root.resolve("src/main")
+    val dedup = main.resolve("scala/graft/dedup/Dedup.scala")
+    val bad = sources
+      .filter(p => p.startsWith(main) && p != dedup &&
+        Files.readString(p).contains("def find("))
+      .map(root.relativize(_).toString)
+    assert(bad.isEmpty, s"label small graphs through connectedComponents: $bad")
+    val text = Files.readString(dedup)
+    val start = text.indexOf("private[graft] def connectedComponents(")
+    val end = text.indexOf("\n  /**", start)
+    val at = text.indexOf("def find(")
+    assert(start >= 0 && at > start && at < end &&
+      text.indexOf("def find(", at + 1) < 0,
+      "Dedup.scala's one def find( must sit in connectedComponents")
   }
 
   test("temp locations in src/main come only from util/Scratch.scala") {

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
@@ -14,35 +13,6 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
   * path that cannot be listed fails as Spark fails. */
 class TablesReadSpec extends SparkSpec {
   import spark.implicits._
-
-  private val Barrier = "tables-read-spec barrier"
-
-  /** `f`'s result and the Spark jobs it submitted. A barrier job
-    * flushes the listener bus (an RDD action, so no AQE side jobs), then
-    * the job list must hold still for 500 ms. */
-  private def jobsDuring[T](f: => T): (T, List[String]) = {
-    @volatile var jobs = List.empty[String]
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties == null ||
-            j.properties.getProperty("spark.job.description") != Barrier)
-          jobs ::= j.stageInfos.map(_.name).mkString("|")
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val result = f
-      spark.sparkContext.setJobDescription(Barrier)
-      try spark.sparkContext.parallelize(Seq(1)).count()
-      finally spark.sparkContext.setJobDescription(null)
-      var (seen, stableSince) = (jobs.size, System.currentTimeMillis)
-      while (System.currentTimeMillis - stableSince < 500) {
-        if (jobs.size != seen) { seen = jobs.size
-          stableSince = System.currentTimeMillis }
-        Thread.sleep(20)
-      }
-      (result, jobs)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("a second load of an unchanged table launches no job") {
     val dir = SparkSpec.tempDir("tables-read").toString

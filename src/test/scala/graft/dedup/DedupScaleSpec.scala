@@ -261,7 +261,8 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val pairs = Dedup.minhashLshPairs(spark, dir, maxBucket = 100)
       .select(col("id1").as("a"), col("id2").as("b"))
-    val labels = Dedup.connectedComponents(pairs)
+    // the loop, forced: this case exists to test it at scale
+    val labels = Dedup.connectedComponents(pairs, 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == totalClones)
     for ((k, sz) <- clusterSizes; i <- Seq(0, sz - 1))

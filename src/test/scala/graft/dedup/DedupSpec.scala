@@ -1,6 +1,8 @@
 package graft.dedup
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Ground-truth checks for the probabilistic dedup operators: a
@@ -13,6 +15,21 @@ class DedupSpec extends SparkSpec {
     spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  /** CC through both branches — the driver union-find and the
+    * contraction loop (driver bound 0) — which must return the same
+    * (id, label) rows under the same schema; the labels as a map. */
+  private def ccBothWays(edges: DataFrame): Map[Long, Long] = {
+    val driver = Dedup.connectedComponents(edges)
+    val loop = Dedup.connectedComponents(edges, 0)
+    assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      "a small graph must take the driver branch")
+    assert(driver.schema === loop.schema)
+    val rows = driver.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.sorted.toSeq ===
+      loop.collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq)
+    rows.toMap
+  }
 
   private def shingle(text: String, n: Int = 3): Set[String] = {
     val w = text.trim.split("\\s+")
@@ -331,10 +348,31 @@ class DedupSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val ids = rnd.shuffle((0L until 200L).toVector)
     val edges = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("a", "b")
-    val labels = Dedup.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = ccBothWays(edges)
     assert(labels.size == 200)
     assert(labels.values.forall(_ == 0L), "one component rooted at min id")
+  }
+
+  test("connectedComponents: a gate-scale graph launches no contraction round") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val rnd = new scala.util.Random(5)
+    val ids = rnd.shuffle((0L until 1000L).toVector)
+    val edges = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("a", "b")
+    // a contraction round joins each node's star minimum back onto its
+    // edges; rooting, counting and collecting the edge set join nothing
+    def joinPlans(events: List[SparkListenerEvent]) =
+      events.collect { case e: SparkListenerSQLExecutionStart
+        if e.physicalPlanDescription.contains("Join") => e.description }
+    def jobs(events: List[SparkListenerEvent]) =
+      events.count(_.isInstanceOf[SparkListenerJobStart])
+    val (_, driver) = eventsDuring(Dedup.connectedComponents(edges).collect())
+    val (_, loop) = eventsDuring(Dedup.connectedComponents(edges, 0).collect())
+    assert(joinPlans(loop).nonEmpty, "the forced loop must show its rounds")
+    assert(joinPlans(driver).isEmpty,
+      s"contraction plans on a gate-scale graph: ${joinPlans(driver)}")
+    assert(jobs(driver) < jobs(loop), s"jobs ${jobs(driver)} vs ${jobs(loop)}")
   }
 
   test("connectedComponents: 100k-spoke star — no window gather, hub converges") {
@@ -353,7 +391,8 @@ class DedupSpec extends SparkSpec {
     val physical = round.queryExecution.executedPlan.toString
     assert(!physical.contains("Window"),
       s"contraction round must not use WindowExec:\n$physical")
-    val labels = Dedup.connectedComponents(edges)
+    // the loop, forced: this case exists to test its hub convergence
+    val labels = Dedup.connectedComponents(edges, 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == n + 1, "hub + every spoke labeled")
     assert(labels.values.forall(_ == 5L), "all rooted at the hub id (min)")
@@ -370,19 +409,22 @@ class DedupSpec extends SparkSpec {
       .toSeq.sortBy(_._1).map(_._2)
     var labels = (0L until n.toLong).map(i => (i, i)).toDF("id", "label")
     var seen = Seq.empty[(Long, Long)]
-    // alternate the driver union-find path and the distributed
-    // fallback (maxDriverEdges = 0) — both must land identically
-    var useDriver = true
-    for (batch <- batches) {
-      labels = Dedup.applyEdgeBatch(labels, batch.toDF("a", "b"),
-          maxDriverEdges = if (useDriver) 500000 else 0)
+    // every fold runs the meta graph through both CC branches, and the
+    // next fold continues from each branch in turn
+    for ((batch, i) <- batches.zipWithIndex) {
+      val driver = Dedup.applyEdgeBatch(labels, batch.toDF("a", "b"))
         .localCheckpoint() // root each fold like a real ingest loop
-      useDriver = !useDriver
+      val loop = Dedup.applyEdgeBatch(labels, batch.toDF("a", "b"), 0)
+        .localCheckpoint()
+      assert(driver.schema === loop.schema)
+      val rows = driver.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.sorted.toSeq ===
+        loop.collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq)
+      val got = rows.toMap
+      labels = if (i % 2 == 0) driver else loop
       seen ++= batch
       // ground truth: full CC over every edge folded so far
-      val full = Dedup.connectedComponents(seen.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val full = ccBothWays(seen.toDF("a", "b"))
       val touched = seen.flatMap(p => Seq(p._1, p._2)).toSet
       touched.foreach { x =>
         assert(got(x) == full(x),
@@ -409,8 +451,8 @@ class DedupSpec extends SparkSpec {
     val compMin = (0 until n).groupBy(find).flatMap { case (_, members) =>
       val m = members.min; members.map(_ -> m)
     }
-    val got = Dedup.connectedComponents(pairs.toDF("a", "b"))
-      .collect().map(r => r.getLong(0).toInt -> r.getLong(1).toInt).toMap
+    val got = ccBothWays(pairs.toDF("a", "b"))
+      .map { case (k, v) => k.toInt -> v.toInt }
     // every edge-connected node must carry its component minimum
     val touched = pairs.flatMap(p => Seq(p._1.toInt, p._2.toInt)).toSet
     touched.foreach { x =>

@@ -316,10 +316,11 @@ class PlanAuditSpec extends SparkSpec {
     // via broadcast(base) where base = connectedComponents(oldEdges) —
     // the edge-PARTICIPANT relation that is O(corpus) on a near-dup-
     // heavy web corpus. The hint is gone; the ONLY sanctioned hinted
-    // build side left in this plan is applyEdgeBatch's driver-folded
-    // meta relation, which is a LocalRelation bounded by the batch
-    // contract (maxRows statically known). Anything scan-backed that
-    // carries a strategy hint fails here.
+    // build side left in this plan is applyEdgeBatch's meta relation,
+    // which connectedComponents labels on the driver at this scale: a
+    // LocalRelation bounded by its driver bound (maxRows statically
+    // known). Anything scan-backed that carries a strategy hint fails
+    // here.
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val df = graft.dedup.Dedup.incrementalClusters(spark, sf())
     val hinted = df.queryExecution.optimizedPlan.collect {

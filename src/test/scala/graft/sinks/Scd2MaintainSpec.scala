@@ -54,6 +54,23 @@ class Scd2MaintainSpec extends SparkSpec {
     assert(after.toSeq == want.toSeq)
   }
 
+  test("a batch applied between stream batches takes no stream epoch") {
+    val root = SparkSpec.tempDir("scd2_mixed").toString + "/z"
+    val ev = rawEvents
+    Scd2Maintain.init(spark, root, ev.where(col("event_id") % 4 === 0))
+    assert(Scd2Maintain.applyBatchIdempotent(spark, root,
+      ev.where(col("event_id") % 4 === 1), 0L))
+    Scd2Maintain.applyBatch(spark, root, ev.where(col("event_id") % 4 === 2))
+    // stream batch 1's marker is epoch 1001: the sequential batch above
+    // must not have taken it
+    assert(Scd2Maintain.applyBatchIdempotent(spark, root,
+      ev.where(col("event_id") % 4 === 3), 1L))
+    val want = graft.ops.EventOps.scd2Intervals(spark, sf())
+      .collect().map(_.toSeq)
+    assert(Scd2Maintain.read(spark, root).collect().map(_.toSeq).toSeq ==
+      want.toSeq)
+  }
+
   test("a crashed stream commit's staging leftover is not a commit") {
     val root = SparkSpec.tempDir("scd2_staged").toString + "/z"
     val ev = rawEvents

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -85,15 +86,46 @@ class CheckpointsSpec extends SparkSpec {
       val rnd = new scala.util.Random(7)
       val ids = rnd.shuffle((0L until 200L).toVector)
       val edges = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("a", "b")
-      val labels = Dedup.connectedComponents(edges)
+      // the loop, forced: a 199-edge graph is otherwise labelled on
+      // the driver and roots no round
+      val labels = Dedup.connectedComponents(edges, 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels.size == 200 && labels.values.forall(_ == 0L),
         "reliable mode must not change the fixpoint")
+      assert(rddDirs(dir).nonEmpty,
+        "the loop's rounds must root on reliable checkpoint files")
       // every superseded round's files were freed — only the live
       // final edge set may keep its checkpoint on disk
       assert(rddDirs(dir).sizeIs <= 1,
         s"superseded rounds must be freed, found ${rddDirs(dir)}")
     }
+  }
+
+  test("iterateAbove: at the bound it collects and frees its root; " +
+    "above it runs no more jobs than iterate, from that root") {
+    // four partitions of 2-3 rows: a bound of 10 gives each a share of
+    // 2, so two partitions exceed it and are collected separately
+    val init = spark.range(0, 10, 1, 4).toDF("id")
+    val stop = Checkpoints.UntilStable(5)
+    val step: (DataFrame, Int) => Option[DataFrame] =
+      (df, _) => Some(df.where(col("id") < 3))
+    withDial("graft-ckpt-above") { dir =>
+      for (bound <- Seq(10L, 1000L)) {
+        val small = Checkpoints.iterateAbove("above", init, bound, stop)(step)
+        assert(small.left.toOption.map(_.map(_.getLong(0)).sorted.toSeq)
+          .contains(0L until 10L), s"bound $bound: $small")
+        assert(rddDirs(dir).isEmpty, "the collected root must be freed")
+      }
+    }
+    val (viaIterate, iterJobs) = jobsDuring(
+      Checkpoints.iterate("plain", init, stop)(step).collect())
+    val (viaAbove, aboveJobs) = jobsDuring(
+      Checkpoints.iterateAbove("above", init, 9, stop)(step)
+        .map(_.collect()).toOption.get)
+    assert(viaAbove.map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 2L))
+    assert(viaIterate.map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 2L))
+    assert(aboveJobs.size <= iterJobs.size,
+      s"the bound check must cost no job: $aboveJobs vs $iterJobs")
   }
 
   test("bfs under the reliable dial: same distances, bounded files") {
