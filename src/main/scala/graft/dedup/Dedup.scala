@@ -1494,11 +1494,7 @@ object Dedup {
                         win: Int): DataFrame =
     graft.util.Scratch.memo(s, "winnow-fps",
       s"winnow-fps:$dir:$k:$win") {
-      val docs = graft.util.Scratch.memo(s, "span-tokens",
-        s"span-tokens:$dir")(
-        Tables.load(s, dir, "documents")
-          .select(col("doc_id"),
-            graft.util.Tokens.whitespace(col("text")).as("w")))
+      val docs = Tokens.spanTokens(s, dir)
       // the size guard keeps ngramsOf in its sliding branch only: docs
       // shorter than k emit NO fingerprints (both engines)
       val grams = docs.where(size(col("w")) >= k)
@@ -1580,10 +1576,7 @@ object Dedup {
     // array column — passing whitespace(text) straight into ngramsOf
     // inlines the split into the per-element lambda (O(tokens²) per
     // document; the Tokens.scala contract, measured 12× on q89).
-    val toks = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val toks = Tokens.spanTokens(s, dir)
     val sh = toks.select(col("doc_id"),
       array_distinct(Tokens.ngramsOf(col("w"), 3)).as("sh"))
     val verified = lsh

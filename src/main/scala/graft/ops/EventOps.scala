@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.util.Checkpoints
 
 /** Event-time operators over the `events` table: tumbling windows,
   * gap-based sessionization, and as-of join — the batch semantics that
@@ -419,7 +420,7 @@ object EventOps {
   def markovStationary(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ms"), col("event_id"))
-    val cells = Tables.load(s, dir, "events")
+    val cells = Checkpoints.root(Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_millis(col("ts")).as("ms"))
       .withColumn("to_type", lead(col("event_type"), 1).over(w))
@@ -427,11 +428,10 @@ object EventOps {
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
       .withColumn("n_from", sum(col("n"))
-        .over(Window.partitionBy(col("from_type"))))
-      .localCheckpoint(true) // consumed once per round — derive ONCE
-    // NOT checkpointed although it appears 9× in the unrolled plan:
-    // a localCheckpoint turns `types` into a LogicalRDD whose size
-    // estimate is defaultSizeInBytes, which demotes every per-round
+        .over(Window.partitionBy(col("from_type"))))) // once per round
+    // NOT rooted although it appears 9× in the unrolled plan: a root
+    // turns `types` into a LogicalRDD whose size estimate is
+    // defaultSizeInBytes, which demotes every per-round
     // broadcast join to sort-merge — probed r15: 1.56 → 3.74 s. The
     // repeated scan+distinct is the cheaper side of that trade.
     val types = Tables.load(s, dir, "events")

@@ -315,15 +315,7 @@ object Mining {
     // the ≥3-consumer rule: materialize once or the whole
     // tokenize→explode→distinct pipeline replays per consumer
     // (measured: 17 corpus scans in the unmemoized plan)
-    val it = graft.util.Scratch.memo(s, "assoc-items",
-      s"assoc-items:$dir")(
-      graft.util.Scratch.memo(s, "span-tokens",
-        s"span-tokens:$dir")(
-        Tables.load(s, dir, "documents")
-          .select(col("doc_id"),
-            graft.util.Tokens.whitespace(col("text")).as("w")))
-        .select(col("doc_id"), explode(col("w")).as("tok"))
-        .distinct())
+    val it = graft.util.Tokens.assocItems(s, dir)
     val nRel = Tables.load(s, dir, "documents")
       .agg(count(lit(1)).as("n_docs"))
     val ic = it.groupBy(col("tok")).agg(count(lit(1)).as("c"))

@@ -230,11 +230,7 @@ object SqlSurface {
     * depth×). The oracle inlines the same derivations as CTEs. */
   def sqlGreedyDecode(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tk = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      graft.Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.util.Tokens.whitespace(col("text")).as("w")))
+    val tk = graft.util.Tokens.spanTokens(s, dir)
       .select(col("doc_id"), posexplode(col("w")).as(Seq("i", "tok")))
     def tri = tk.as("a")
       .join(tk.as("b"), col("b.doc_id") === col("a.doc_id") &&

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.MergeOnRead
+import graft.util.Checkpoints
 
 /** SERVED kNN-graph zone with incremental maintenance — the q155
   * exact graph as a persisted artifact that ingest batches fold into
@@ -73,18 +74,16 @@ object GraphServe {
 
   /** Fold a batch of new vectors into both zones. */
   def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-                 k: Int = Similarity.GraphK): Unit = {
-    val newCodes = Similarity.quantize(batch)
-      .select(col("vec_id"), col("q_vec"), col("q_scale"))
-      .localCheckpoint()
-    val oldCodes = readCodes(s, root).localCheckpoint()
-    val oldGraph = MergeOnRead.read(s, graphRoot(root),
+                 k: Int = Similarity.GraphK): Unit = Checkpoints.scoped { rooted =>
+    val newCodes = rooted(Similarity.quantize(batch)
+      .select(col("vec_id"), col("q_vec"), col("q_scale")))
+    val oldCodes = rooted(readCodes(s, root))
+    val oldGraph = rooted(MergeOnRead.read(s, graphRoot(root),
         Seq("query_id", "rank"))
       .select(col("query_id"), col("neighbor_id"), col("qdot"),
-        col("approx_cos"))
-      .localCheckpoint()
+        col("approx_cos")))
     // batch candidates scored against every old anchor (old × batch)
-    val oldXnew = score(oldCodes, newCodes).localCheckpoint()
+    val oldXnew = rooted(score(oldCodes, newCodes))
     // an old anchor changes iff some batch candidate beats its
     // CURRENT k-th entry under the rank order (or it has fewer than
     // k neighbors) — the exact no-other-anchor-changes argument is in

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Checkpoints
 
 /** The IVF index as a SERVED ARTIFACT — the 100 TB shape of
   * approximate nearest neighbor, where q53 computes the index inside
@@ -104,8 +105,8 @@ object IvfServe {
     * each vec_id arrives exactly once across build + batches (the
     * IndexMaintain exactly-once contract). Returns rows appended. */
   def applyBatch(s: SparkSession, zoneDir: String,
-                 batch: DataFrame): Long = {
-    val assigned = assignByCentroids(s, zoneDir, batch).localCheckpoint()
+                 batch: DataFrame): Long = Checkpoints.scoped { rooted =>
+    val assigned = rooted(assignByCentroids(s, zoneDir, batch))
     assigned.select(col("vec_id"), col("embedding"), col("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(s"$zoneDir/corpus")

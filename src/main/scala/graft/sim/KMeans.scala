@@ -337,15 +337,7 @@ object KMeans {
     import org.apache.spark.sql.expressions.Window
     val lab = kmeansTopics(s, dir)
       .select(col("vec_id").as("doc_id"), col("cluster"))
-    val it = graft.util.Scratch.memo(s, "assoc-items",
-      s"assoc-items:$dir")(
-      graft.util.Scratch.memo(s, "span-tokens",
-        s"span-tokens:$dir")(
-        graft.Tables.load(s, dir, "documents")
-          .select(col("doc_id"),
-            graft.util.Tokens.whitespace(col("text")).as("w")))
-        .select(col("doc_id"), explode(col("w")).as("tok"))
-        .distinct())
+    val it = graft.util.Tokens.assocItems(s, dir)
     val dfTot = it.groupBy(col("tok")).agg(count(lit(1)).as("df_tot"))
     val nDocs = lab.agg(count(lit(1)).as("n_docs"))
     val sizes = lab.groupBy(col("cluster")).agg(count(lit(1)).as("size_c"))

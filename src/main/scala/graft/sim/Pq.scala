@@ -190,12 +190,12 @@ object Pq {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("adc_dist2"), col("neighbor_id"))
-    val top = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= SearchK)
-      // consumed twice (overlap + output join): without the eager
-      // checkpoint the ADC scoring join is planned twice (the q168
-      // r15 audit shape); NQueries·SearchK rows
-      .localCheckpoint(true)
+    // consumed twice (overlap + output join): without the eager root
+    // the ADC scoring join is planned twice (the q168 r15 audit
+    // shape); NQueries·SearchK rows
+    val top = graft.util.Checkpoints.root(
+      scored.withColumn("rank", row_number().over(w))
+        .where(col("rank") <= SearchK))
     // exact witness: true top-k on full fixed-point vectors
     val exScored = fz
       .join(broadcast(q.select(col("query_id"), col("qq"))),
@@ -210,13 +210,13 @@ object Pq {
         .orderBy(col("d2"), col("neighbor_id"))))
       .where(col("rank") <= SearchK)
       .select(col("query_id"), col("neighbor_id"))
-    val overlap = top.select(col("query_id"), col("neighbor_id"))
-      .join(exTop, Seq("query_id", "neighbor_id"))
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_overlap"))
-      // consumed twice (corpus total + per-query join): the exact
-      // witness scoring otherwise plans twice; ≤ NQueries rows
-      .localCheckpoint(true)
+    // consumed twice (corpus total + per-query join): the exact
+    // witness scoring otherwise plans twice; ≤ NQueries rows
+    val overlap = graft.util.Checkpoints.root(
+      top.select(col("query_id"), col("neighbor_id"))
+        .join(exTop, Seq("query_id", "neighbor_id"))
+        .groupBy(col("query_id"))
+        .agg(count(lit(1)).as("n_overlap")))
     // corpus-level mean recall from the exact integer total — never
     // an average of inexact per-query doubles (order-dependent ulps)
     val tot = overlap.agg(sum(col("n_overlap")).as("total_overlap"))

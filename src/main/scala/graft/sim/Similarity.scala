@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Checkpoints
 
 /** Similarity search over the `embeddings` table (unit-norm
   * `Array[Float]`, 64-dim → cosine ≡ dot product).
@@ -1036,19 +1037,18 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
     val banded = bandedG
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val per = exact
+    // eager root: `per` is consumed TWICE (corpus total below + the
+    // output rows), and without it the ENTIRE banded scoring pipeline
+    // — the expensive subtree of this query — is planned twice (r15
+    // plan audit: every Exchange/Window/WindowGroupLimit of
+    // knnGraphBanded appeared 2×; runtime exchange reuse does not
+    // cover the post-shuffle stages). One row per query: the same
+    // O(result) footprint as q198's witness checkpoint.
+    val per = Checkpoints.root(exact
       .join(banded, Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      // eager checkpoint: `per` is consumed TWICE (corpus total below
-      // + the output rows), and without it the ENTIRE banded scoring
-      // pipeline — the expensive subtree of this query — is planned
-      // twice (r15 plan audit: every Exchange/Window/WindowGroupLimit
-      // of knnGraphBanded appeared 2×; runtime exchange reuse does
-      // not cover the post-shuffle stages). One row per query: the
-      // same O(result) footprint as q198's witness checkpoint.
-      .localCheckpoint(true)
+        sum(coalesce(col("hit"), lit(0L))).as("n_hit")))
     // corpus-level recall: exact BIGINT sums, ONE double division
     // (the q106 discipline) — rides a 1-row broadcast constant
     val tot = per.agg(
@@ -1174,10 +1174,10 @@ object Similarity {
     // TWICE (the per-row membership join and the corpus-level recall
     // aggregate), which re-executed the entire unrolled walk subtree
     // per consumer and doubled the ~1200-operator plan the optimizer
-    // must chew. One eager localCheckpoint of the final round's
-    // candidate set (O(|queries|·beam·k) rows — bounded at every
-    // scale) runs the walk once and truncates the witness lineage.
-    scored = scored.localCheckpoint(true)
+    // must chew. One eager root of the final round's candidate set
+    // (O(|queries|·beam·k) rows — bounded at every scale) runs the
+    // walk once and truncates the witness lineage.
+    scored = Checkpoints.root(scored)
     // final contract: top-k of the LAST round's scored candidate set,
     // self excluded (k ≤ beam, so the explicit beam cut is subsumed)
     val result = rankTopK(

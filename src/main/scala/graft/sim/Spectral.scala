@@ -297,16 +297,11 @@ object Spectral {
     * existing-edge exclusion is one anti-join against the same edge
     * zone. */
   def linkPrediction(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint, NOT the undZone parquet memo: all 4 consumers
-    // are in THIS query, and in-memory blocks beat 4 re-opened parquet
-    // scans (probed r15: 0.44 → 0.77 s as a zone — reverted)
-    val e = Similarity.knnGraphZone(s, dir)
-    val und = e.select(col("query_id").as("src"),
-        col("neighbor_id").as("dst"))
-      .union(e.select(col("neighbor_id").as("src"),
-        col("query_id").as("dst")))
-      .distinct()
-      .localCheckpoint(true) // 4 consumers below — derive ONCE
+    // a root, not the undZone memo: all 4 consumers are in THIS query,
+    // and in-memory blocks beat 4 re-opened parquet scans (probed r15:
+    // 0.44 → 0.77 s as a zone — reverted)
+    val und = Checkpoints.root(
+      undirected(Similarity.knnGraphZone(s, dir))) // 4 consumers below
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val cand = und.select(col("src").as("x"), col("dst").as("z"))
       .join(und.select(col("src").as("z"), col("dst").as("y")), "z")
@@ -340,16 +335,11 @@ object Spectral {
     * the frontier relation is n rows, never collected. All-integer
     * min-plus arithmetic: nothing to drift cross-engine. */
   def seedDistance(s: SparkSession, dir: String): DataFrame = {
-    // a rooted relation (the durability dial), NOT the undZone parquet
-    // memo: consumed once per BFS round and checkpoint blocks beat
-    // repeated parquet opens (probed r15: 1.02 → 1.69 s as a zone —
-    // reverted)
-    val e = Similarity.knnGraphZone(s, dir)
-    val und = Checkpoints.root(e.select(col("query_id").as("src"),
-        col("neighbor_id").as("dst"))
-      .union(e.select(col("neighbor_id").as("src"),
-        col("query_id").as("dst")))
-      .distinct()) // consumed once per round — derive ONCE
+    // a root, not the undZone memo: consumed once per BFS round and
+    // checkpoint blocks beat repeated parquet opens (probed r15: 1.02
+    // → 1.69 s as a zone — reverted)
+    val und = Checkpoints.root(
+      undirected(Similarity.knnGraphZone(s, dir))) // once per round
     val nodes = corpus(s, dir).select(col("vec_id").as("id"))
     val dist0 = nodes
       .select(col("id"), when(seedPred(col("id")), lit(0L)).as("d"))
@@ -681,22 +671,26 @@ object Spectral {
     }
   }
 
-  /** The symmetrized DISTINCT undirected edge relation of the q155
-    * kNN graph — derived identically by SIX consumers (q268/q275/
-    * q285/q288/q289/q300), so it is a [[graft.util.Scratch]] zone
-    * (guide §2.4 one-derivation-many-consumers), not a per-query
-    * localCheckpoint: ONE union+distinct per application, every
-    * consumer scans the stored ≤2k·n-row relation. Deterministic
-    * function of (dir, GraphK) — the memo contract. */
+  /** The [[undirected]] q155 kNN graph, read by q268/q288/q300, so it
+    * is a [[graft.util.Scratch]] zone (guide §2.4
+    * one-derivation-many-consumers), not a per-query root: ONE
+    * union+distinct per application, every consumer scans the stored
+    * ≤2k·n-row relation. Deterministic function of (dir, GraphK) — the
+    * memo contract. */
   private def undZone(s: SparkSession, dir: String): DataFrame =
     graft.util.Scratch.memo(s, "knn-und",
-      s"knn-und:$dir:${Similarity.GraphK}") {
-      val e = Similarity.knnGraphZone(s, dir)
-      e.select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        .union(e.select(col("neighbor_id").as("src"),
-          col("query_id").as("dst")))
-        .distinct()
-    }
+      s"knn-und:$dir:${Similarity.GraphK}")(
+      undirected(Similarity.knnGraphZone(s, dir)))
+
+  /** The symmetrized DISTINCT (src, dst) edge set of a directed kNN
+    * edge relation (query_id → neighbor_id) — the one derivation
+    * behind the `knn-und` zone and the in-query roots of q275, q285
+    * and q289. */
+  private def undirected(e: DataFrame): DataFrame =
+    e.select(col("query_id").as("src"), col("neighbor_id").as("dst"))
+      .union(e.select(col("neighbor_id").as("src"),
+        col("query_id").as("dst")))
+      .distinct()
 
   /** The q268 label relation (node → LP community label) — consumed
     * by q268 (sizes), q288 (modularity) and q300 (purity), each of
@@ -787,15 +781,10 @@ object Spectral {
     * each edge with its endpoint degrees, then one partial-agg
     * reduction to a single row. */
   def assortativity(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint, NOT the undZone parquet memo (probed r15:
-    // 0.37 → 0.48 s as a zone — reverted; 3 in-query consumers)
-    val e = Similarity.knnGraphZone(s, dir)
-    val und = e.select(col("query_id").as("src"),
-        col("neighbor_id").as("dst"))
-      .union(e.select(col("neighbor_id").as("src"),
-        col("query_id").as("dst")))
-      .distinct()
-      .localCheckpoint(true) // degree + both tag joins — derive ONCE
+    // a root, not the undZone memo (probed r15: 0.37 → 0.48 s as a
+    // zone — reverted; 3 in-query consumers)
+    val und = Checkpoints.root(
+      undirected(Similarity.knnGraphZone(s, dir))) // degree + both tags
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val tagged = und
       .join(deg.select(col("src"), col("deg").as("x")), "src")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.Postings
+import graft.util.Checkpoints
 
 /** Incremental maintenance of the sharded inverted index
   * ([[graft.text.Postings.invertedIndex]]'s relational shape) over a
@@ -50,10 +51,10 @@ object IndexMaintain {
     * postings and merged as one delta epoch — O(touched), and the
     * epoch layout keeps every pre-batch index state time-travelable. */
   def applyBatch(spark: SparkSession, root: String, batch: DataFrame,
-                 blockSize: Int = 100): Long = {
+                 blockSize: Int = 100): Long = Checkpoints.scoped { rooted =>
     // materialized once: the driver collect below and the merge write
     // would otherwise each re-run the batch tokenize/shuffle
-    val btf = Postings.tfRelation(batch, blockSize).localCheckpoint()
+    val btf = rooted(Postings.tfRelation(batch, blockSize))
     val touched = btf.select(col("blk")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val existing = MergeOnRead.read(spark, root, Seq("term", "blk"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.Tokens
+import graft.util.{Checkpoints, Tokens}
 
 /** Corpus-relative document statistics — operators whose score for one
   * document depends on aggregates over the WHOLE corpus (unlike the
@@ -289,10 +289,7 @@ object CorpusStats {
     * materialization. */
   def pmiCollocations(s: SparkSession, dir: String,
                       minSupport: Int = 5, topK: Int = 50): DataFrame = {
-    val docs = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val docs = Tokens.spanTokens(s, dir)
     val uni = docs.select(explode(col("w")).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("c"))
     val tt = uni.agg(sum(col("c")).as("t_total"))
@@ -558,7 +555,7 @@ object CorpusStats {
     // task (measured 0.67 + 0.52 s serial at sf0.1). Short docs keep
     // ngramsOf's whole-doc fallback gram via the explicit union (the
     // zone stores only the sliding-window regime, q145's guard).
-    val docsZone = spanTokens(s, dir)
+    val docsZone = Tokens.spanTokens(s, dir)
     val short = docsZone.where(size(col("w")) < n)
       .select(col("doc_id"),
         graft.dedup.Md5Prefix.h(concat_ws(" ", col("w"))).as("g"))
@@ -574,6 +571,49 @@ object CorpusStats {
       .select(col("doc_id"), col("n_grams"), col("n_dup"),
         (col("n_dup") / col("n_grams")).as("dup_fraction"))
       .orderBy("doc_id")
+  }
+
+  /** Positioned k-gram hashes (doc_id, p, gh) over the span-tokens
+    * zone, materialized ONCE per (dir, k) (r14): every caller
+    * (q145's scrub, q269's report, q140's fraction) consumes the
+    * gram relation from TWO plan branches — the corpus-wide shared
+    * aggregate and the join back — and deriving it inline ran the
+    * posexplode + per-gram md5 (the family's whole CPU) once per
+    * branch, serially, on the zone's single-row-group scan task
+    * (measured 1.15 + 0.78 s at sf0.1 in q145 alone). The build
+    * spreads to the derived width first (Sessions.spreadScan);
+    * consumers scan 3 fixed-width columns. The size ≥ k guard keeps
+    * Tokens.ngramsOf in its sliding-window branch only — short docs
+    * have NO rows here (the whole-doc fallback would fabricate one);
+    * callers that NEED the fallback add it explicitly (q140). */
+  private[text] def spanGramZone(s: SparkSession, dir: String,
+                                 k: Int): DataFrame =
+    graft.util.Scratch.memo(s, s"span-grams-$k",
+      s"span-grams:$dir:$k")(
+      graft.util.Sessions.spreadScan(s, dir, Tokens.spanTokens(s, dir))
+        .where(size(col("w")) >= k)
+        .select(col("doc_id"),
+          posexplode(Tokens.ngramsOf(col("w"), k)).as(Seq("p", "g")))
+        .select(col("doc_id"), col("p"),
+          graft.dedup.Md5Prefix.h(col("g")).as("gh")))
+
+  /** The tokenized corpus zone + cross-doc-covered positions shared
+    * by q145 (scrub) and q269 (span report): (docs, covered) where
+    * covered = DISTINCT (doc_id, pos) for every token position inside
+    * a k-gram that occurs verbatim in ANOTHER document. */
+  private def coveredPositions(s: SparkSession, dir: String,
+                               k: Int): (DataFrame, DataFrame) = {
+    val docs = Tokens.spanTokens(s, dir)
+    val grams = spanGramZone(s, dir, k)
+    val shared = grams.groupBy(col("gh"))
+      .agg(countDistinct(col("doc_id")).as("nd"))
+      .where(col("nd") > 1)
+      .select(col("gh"))
+    val covered = grams.join(shared, "gh")
+      .select(col("doc_id"),
+        explode(sequence(col("p"), col("p") + lit(k - 1))).as("pos"))
+      .distinct()
+    (docs, covered)
   }
 
   /** q145: EXACT duplicated-span scrub (Lee et al., "Deduplicating
@@ -597,57 +637,6 @@ object CorpusStats {
     * k coverage positions each (k× a vanishing fraction — only
     * SHARED occurrences expand); survivors reassemble per doc via
     * the bounded collect_list-sort (q113's invariant). */
-  /** The tokenized corpus zone + cross-doc-covered positions shared
-    * by q145 (scrub) and q269 (span report): (docs, covered) where
-    * covered = DISTINCT (doc_id, pos) for every token position inside
-    * a k-gram that occurs verbatim in ANOTHER document. */
-  /** The shared span-tokens scratch zone (one tokenization per
-    * application — the q145/q151 discipline). */
-  private def spanTokens(s: SparkSession, dir: String): DataFrame =
-    graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
-
-  /** Positioned k-gram hashes (doc_id, p, gh) over the span-tokens
-    * zone, materialized ONCE per (dir, k) (r14): every caller
-    * (q145's scrub, q269's report, q140's fraction) consumes the
-    * gram relation from TWO plan branches — the corpus-wide shared
-    * aggregate and the join back — and deriving it inline ran the
-    * posexplode + per-gram md5 (the family's whole CPU) once per
-    * branch, serially, on the zone's single-row-group scan task
-    * (measured 1.15 + 0.78 s at sf0.1 in q145 alone). The build
-    * spreads to the derived width first (Sessions.spreadScan);
-    * consumers scan 3 fixed-width columns. The size ≥ k guard keeps
-    * Tokens.ngramsOf in its sliding-window branch only — short docs
-    * have NO rows here (the whole-doc fallback would fabricate one);
-    * callers that NEED the fallback add it explicitly (q140). */
-  private[text] def spanGramZone(s: SparkSession, dir: String,
-                                 k: Int): DataFrame =
-    graft.util.Scratch.memo(s, s"span-grams-$k",
-      s"span-grams:$dir:$k")(
-      graft.util.Sessions.spreadScan(s, dir, spanTokens(s, dir))
-        .where(size(col("w")) >= k)
-        .select(col("doc_id"),
-          posexplode(Tokens.ngramsOf(col("w"), k)).as(Seq("p", "g")))
-        .select(col("doc_id"), col("p"),
-          graft.dedup.Md5Prefix.h(col("g")).as("gh")))
-
-  private def coveredPositions(s: SparkSession, dir: String,
-                               k: Int): (DataFrame, DataFrame) = {
-    val docs = spanTokens(s, dir)
-    val grams = spanGramZone(s, dir, k)
-    val shared = grams.groupBy(col("gh"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .where(col("nd") > 1)
-      .select(col("gh"))
-    val covered = grams.join(shared, "gh")
-      .select(col("doc_id"),
-        explode(sequence(col("p"), col("p") + lit(k - 1))).as("pos"))
-      .distinct()
-    (docs, covered)
-  }
-
   def exactSpanScrub(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val (docs, covered) = coveredPositions(s, dir, k)
     val tokens = docs
@@ -791,10 +780,7 @@ object CorpusStats {
                                          minLen: Int = DupSubMinLen,
                                          window: Int = DupSubWindow)
       : (DataFrame, Int) = {
-    val docs = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val docs = Tokens.spanTokens(s, dir)
     val sfx = suffixRows(
       graft.util.Sessions.spreadScan(s, dir, docs), minLen, window)
     val baseParts = s.conf.get("spark.sql.shuffle.partitions").toInt
@@ -884,14 +870,13 @@ object CorpusStats {
     // it (a) squeezes execution memory for every later query in the
     // same session and (b) lets a plan-identical re-invocation
     // silently serve the cached sort instead of recomputing.
-    // localCheckpoint blocks ARE RDD-level and GC-freed, and the
-    // aggregate is the query's own output size. Only the final
-    // orderBy stays lazy (deterministic, same rows either way).
-    val agg = s.createDataFrame(hits, schema)
+    // a root's blocks ARE RDD-level and GC-freed, and the aggregate
+    // is the query's own output size. Only the final orderBy stays
+    // lazy (deterministic, same rows either way).
+    val agg = Checkpoints.root(s.createDataFrame(hits, schema)
       .groupBy(col("sub"), col("tok_len"))
       .agg(count(lit(1)).as("n_starts"),
-        countDistinct(col("doc_id")).as("n_docs"))
-      .localCheckpoint(true)
+        countDistinct(col("doc_id")).as("n_docs")))
     ranged.unpersist(false)
     agg.orderBy(col("tok_len").desc, col("sub"))
   }
@@ -989,10 +974,7 @@ object CorpusStats {
     * UNHINTED — broadcast is AQE's call below threshold, shuffle
     * above), and the corpus total rides a 1-row cross join. */
   def surprisalFilter(s: SparkSession, dir: String): DataFrame = {
-    val toks = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val toks = Tokens.spanTokens(s, dir)
       .select(col("doc_id"), explode(col("w")).as("tok"))
     val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("t"))
@@ -1028,10 +1010,7 @@ object CorpusStats {
     * map-side, so the only shuffle is the 2-long-column doc rollup. */
   def linearQuality(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Md5Prefix
-    val toks = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val toks = Tokens.spanTokens(s, dir)
       .select(col("doc_id"), explode(col("w")).as("tok"))
     toks
       .select(col("doc_id"),
@@ -1154,10 +1133,7 @@ object CorpusStats {
     * histogram scan. Nothing grows faster than the corpus. */
   def dsirWeights(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Md5Prefix
-    val zone = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val zone = Tokens.spanTokens(s, dir)
     val langs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"))
     val b = zone.join(langs, "doc_id")
@@ -1223,10 +1199,7 @@ object CorpusStats {
     * broadcasts small, shuffles large: the q151 discipline); V rides
     * a 1-row cross join; the per-doc reduce is one integer rollup. */
   def bigramLm(s: SparkSession, dir: String): DataFrame = {
-    val zone = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val zone = Tokens.spanTokens(s, dir)
     val langs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"))
     val bg = zone.join(langs, "doc_id")
@@ -1277,10 +1250,7 @@ object CorpusStats {
     * q151/q172 discipline); T rides a 1-row broadcast; per-doc
     * reduce is one integer rollup. Coverage: every ≥3-token doc. */
   def trigramLm(s: SparkSession, dir: String): DataFrame = {
-    val zone = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val zone = Tokens.spanTokens(s, dir)
     val langs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"))
     val base = zone.join(langs, "doc_id")

@@ -352,6 +352,15 @@ object Postings {
       .limit(k)
   }
 
+  /** The `lc-tokens` zone: (doc_id, w = whitespace tokens of the
+    * lower-cased text), tokenized once per (dir, application) and read
+    * by phrase search, HITS, TextRank, BM25 and vocabulary growth. */
+  private def lcTokens(s: SparkSession, dir: String): DataFrame =
+    graft.util.Scratch.memo(s, "lc-tokens", s"lc-tokens:$dir")(
+      Tables.load(s, dir, "documents")
+        .select(col("doc_id"),
+          Tokens.whitespace(lower(col("text"))).as("w")))
+
   /** q152: exact phrase search — consecutive-token phrase occurrences
     * across the corpus (the "grep the corpus" primitive a curation
     * pipeline runs for boilerplate strings, eval-prompt leaks, or
@@ -386,10 +395,7 @@ object Postings {
     val matchAt = (i: Column) => phrase.zipWithIndex.map { case (t, j) =>
       element_at(w, (i + lit(j) + 1).cast("int")) === t
     }.reduce(_ && _)
-    graft.util.Scratch.memo(s, "lc-tokens", s"lc-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          Tokens.whitespace(lower(col("text"))).as("w")))
+    lcTokens(s, dir)
       .withColumn("hits",
         when(size(w) < k, expr("CAST(array() AS ARRAY<BIGINT>)"))
           .otherwise(filter(
@@ -459,11 +465,7 @@ object Postings {
 
   def hitsHubs(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Md5Prefix
-    val toks = graft.util.Scratch.memo(s, "lc-tokens",
-      s"lc-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          Tokens.whitespace(lower(col("text"))).as("w")))
+    val toks = lcTokens(s, dir)
     val pairs = toks
       .select(col("doc_id"), explode(col("w")).as("t"))
       .select(col("doc_id"), Md5Prefix.h(col("t")).as("th"))
@@ -574,11 +576,7 @@ object Postings {
     * round state has MULTIPLE consumers (q273's shift scalars). */
   def textrankTerms(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Md5Prefix
-    val toks = graft.util.Scratch.memo(s, "lc-tokens",
-      s"lc-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          Tokens.whitespace(lower(col("text"))).as("w")))
+    val toks = lcTokens(s, dir)
     // distinct (doc, term) for the df band + the hash→term names
     val docTerm = toks
       .select(col("doc_id"), explode(col("w")).as("t"))
@@ -586,9 +584,8 @@ object Postings {
       .distinct()
     val banded = dfBanded(s, dir,
       docTerm.select(col("doc_id"), col("th")))
-    val names = docTerm.join(banded, "th")
-      .groupBy(col("th")).agg(min(col("t")).as("term"))
-      .localCheckpoint(true) // nodes: consumed per round + at exit
+    val names = Checkpoints.root(docTerm.join(banded, "th")
+      .groupBy(col("th")).agg(min(col("t")).as("term"))) // per round + exit
     // adjacent-pair occurrences, both directions, banded endpoints
     val adj = toks.where(size(col("w")) >= 2)
       .select(explode(expr(
@@ -597,15 +594,14 @@ object Postings {
       .where(col("p.a") =!= col("p.b"))
       .select(Md5Prefix.h(col("p.a")).as("x"),
         Md5Prefix.h(col("p.b")).as("y"))
-    val edges = adj.select(col("x"), col("y"))
+    val edges = Checkpoints.root(adj.select(col("x"), col("y"))
       .union(adj.select(col("y").as("x"), col("x").as("y")))
       .join(banded.select(col("th").as("x")), "x")
       .join(banded.select(col("th").as("y")), "y")
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("wt"))
       .withColumn("wdeg", sum(col("wt"))
         .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("x"))))
-      .localCheckpoint(true) // consumed once per round — derive ONCE
+          .partitionBy(col("x"))))) // consumed once per round
     var rank = names.select(col("th"), lit(TrScale).as("r"))
     for (_ <- 1 to TrRounds) {
       val inflow = edges.join(rank, edges("x") === rank("th"))
@@ -727,11 +723,7 @@ object Postings {
     * scores the lexical gate verifies. */
   private def bm25Parts(s: SparkSession, dir: String, terms: Seq[String])
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val toks = graft.util.Scratch.memo(s, "lc-tokens",
-      s"lc-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          Tokens.whitespace(lower(col("text"))).as("w")))
+    val toks = lcTokens(s, dir)
     val dl = toks.select(col("doc_id"),
       size(col("w")).cast("long").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"),
@@ -909,11 +901,7 @@ object Postings {
   def vocabGrowth(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Md5Prefix
     import org.apache.spark.sql.expressions.Window
-    val toks = graft.util.Scratch.memo(s, "lc-tokens",
-      s"lc-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          Tokens.whitespace(lower(col("text"))).as("w")))
+    val toks = lcTokens(s, dir)
     val maxId = toks.agg(max(col("doc_id")).as("max_id"))
     // integer ceil bucket, clamped to [1, STEPS] (doc_id 0 would
     // otherwise land in bucket 0): pure BIGINT arithmetic — no

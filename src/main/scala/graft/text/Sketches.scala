@@ -223,10 +223,7 @@ object Sketches {
   /** The global 3-gram-shingle stream (shingle STRING, not hash —
     * each Count-Min row salts its own hash from the text). */
   private def shingles(s: SparkSession, dir: String): DataFrame = {
-    val zone = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val zone = Tokens.spanTokens(s, dir)
     zone.where(size(col("w")) >= 3)
       .select(explode(Tokens.ngramsOf(col("w"), 3)).as("g"))
   }
@@ -356,10 +353,7 @@ object Sketches {
     * A source with an empty epoch reports NULL drift (no
     * distribution to compare), never an infinity. */
   def tokenDrift(s: SparkSession, dir: String): DataFrame = {
-    val toks = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val toks = Tokens.spanTokens(s, dir)
       .join(Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source")), "doc_id")
     tokenDriftOf(toks)

@@ -36,10 +36,7 @@ object TextVectors {
 
   /** q191: the hashed-TF relation (doc_id, dim, v). */
   def hashedTf(s: SparkSession, dir: String): DataFrame = {
-    val zone = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val zone = Tokens.spanTokens(s, dir)
     zone.select(col("doc_id"), explode(col("w")).as("tok"))
       .select(col("doc_id"),
         (graft.dedup.Md5Prefix.h(col("tok")) % Dim).cast("int")
@@ -199,10 +196,7 @@ object TextVectors {
     * corpus×corpus anything. */
   def rocchioConfusion(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Md5Prefix
-    val zone = graft.util.Scratch.memo(s, "span-tokens",
-      s"span-tokens:$dir")(
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), Tokens.whitespace(col("text")).as("w")))
+    val zone = Tokens.spanTokens(s, dir)
     val tf = zone.select(col("doc_id"), explode(col("w")).as("tok"))
       .select(col("doc_id"),
         (Md5Prefix.h(col("tok")) % Dim).cast("int").as("dim"))

@@ -2,17 +2,19 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
-/** The durability dial for iterative loops, and the one loop
-  * combinator ([[iterate]]) that every round-materializing loop runs
-  * through: connected components, BPE training, the k-core peel, BFS,
-  * label propagation and HITS. Connected components enters through
-  * [[iterateAbove]], so its rounds run only above its driver bound; a
-  * smaller edge set is rooted once, collected and labelled on the
-  * driver. Each round must root a fresh plan —
-  * otherwise round N's plan nests every prior round's and optimizer
-  * time grows super-linearly — but HOW it roots is a deployment
-  * decision:
+/** The materialization policy. A relation derived once and read many
+  * times is spelled one of three ways, each with one owner:
+  *  - a cross-query zone, [[Scratch.memo]]/[[Scratch.memoZone]], with
+  *    one defining def per memo name ([[Tokens.spanTokens]]);
+  *  - an in-query root, [[root]]: a relation several branches or
+  *    rounds of one query read, and every loop round of [[iterate]]
+  *    (CC enters through [[iterateAbove]] and runs rounds only above
+  *    its driver bound);
+  *  - a per-batch root, [[scoped]], freed when the batch returns.
   *
+  * Each loop round must root a fresh plan — otherwise round N's plan
+  * nests every prior round's and optimizer time grows super-linearly
+  * — but HOW a root is kept is a deployment decision:
   *  - `localCheckpoint()` (the default): executor-memory/disk blocks,
   *    fastest, but blocks die with their executor — on a preemptible
   *    cluster that kills a 40-round job near the end with no way to
@@ -21,16 +23,16 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
   *    store (HDFS/S3), survives executor loss.
   *
   * Set the session conf [[Checkpoints.DirKey]] (`graft.checkpoint.dir`)
-  * to a durable path to flip every loop to reliable mode — same loop
-  * code, no call-site changes. Superseded rounds are freed in either
-  * mode ([[org.apache.spark.sql.GraftBridge.freeCheckpoint]]): blocks
-  * unpersisted, reliable checkpoint files deleted once the next round
-  * is materialized.
+  * to a durable path to flip every root to reliable mode — same code,
+  * no call-site changes. Superseded rounds and finished batches are
+  * freed in either mode
+  * ([[org.apache.spark.sql.GraftBridge.freeCheckpoint]]): blocks
+  * unpersisted, reliable checkpoint files deleted.
   *
   * The unrolled loops (PageRank, PPR, TextRank, Markov, the graph
-  * walk, the k-means and PQ folds) read each round once and root
-  * nothing: a per-round root measured as pure job-barrier overhead
-  * (r14 TextRank A/B, r15 Markov probe).
+  * walk, the k-means and PQ folds) root nothing per round: a per-round
+  * root measured as pure job-barrier overhead (r14 TextRank A/B, r15
+  * Markov probe).
   */
 object Checkpoints {
 
@@ -40,7 +42,12 @@ object Checkpoints {
 
   /** Root `df` in a fresh plan, reliable or local per the [[DirKey]]
     * conf, materialized now (`eager`) or by the first job that reads
-    * it. */
+    * it; unset, this IS `df.localCheckpoint(eager)`. Not every cache
+    * is a root: the streaming batch bodies, `Scd2Maintain` and
+    * `CorpusStats`' suffix sort keep `persist()` … `finally
+    * unpersist()`, a lazy cache its first consumer fills; an eager
+    * root would add a job and change the cache format, which needs
+    * its own A/B. */
   def root(df: DataFrame, eager: Boolean = true): DataFrame =
     df.sparkSession.conf.getOption(DirKey) match {
       case Some(dir) =>
@@ -63,6 +70,16 @@ object Checkpoints {
     * call after the NEXT round is eagerly materialized. */
   def free(df: Dataset[_]): Unit =
     org.apache.spark.sql.GraftBridge.freeCheckpoint(df)
+
+  /** Run `f` with a [[root]] that [[free]]s every root it took when
+    * `f` returns or throws — under the dial a maintenance batch would
+    * otherwise leave its checkpoint files on the store for good. `f`
+    * must finish every job over its roots and return nothing lazy. */
+  def scoped[T](f: (DataFrame => DataFrame) => T): T = {
+    val taken = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try f { df => val r = root(df); taken += r; r }
+    finally taken.foreach(free)
+  }
 
   /** How a loop stops: after exactly `n` rounds (fewer if the step
     * ends it), uncounted; or once a round's count equals its
@@ -126,12 +143,18 @@ object Checkpoints {
               width: Width = SessionWidth, keep: Boolean = true)
              (step: (DataFrame, Int) => Option[DataFrame]): DataFrame = {
     val first = root(init)
-    rounds(name, first, if (counted(stop, width)) first.count() else -1L,
+    rounds(name, first, if (counted(stop, width)) rowCount(first) else -1L,
       stop, width, keep)(step)
   }
 
   private def counted(stop: Stop, width: Width): Boolean =
     stop.isInstanceOf[UntilStable] || width == RoundWidth
+
+  /** A rooted state's row count in one job over its blocks:
+    * `Dataset.count()` plans an aggregate with an exchange over the
+    * root, which AQE runs as two jobs and two stages. */
+  private def rowCount(rooted: DataFrame): Long =
+    rooted.queryExecution.toRdd.count()
 
   /** [[iterate]] behind a driver bound: roots `init` once and counts
     * it. At most `bound` rows ⇒ the rows are collected, the root is
@@ -174,7 +197,7 @@ object Checkpoints {
                     (step: (DataFrame, Int) => Option[DataFrame]): DataFrame = {
     val s = first.sparkSession
     def count(df: DataFrame): Long =
-      if (counted(stop, width)) df.count() else -1L
+      if (counted(stop, width)) rowCount(df) else -1L
 
     @annotation.tailrec
     def loop(cur: DataFrame, rows: Long, round: Int): DataFrame = {

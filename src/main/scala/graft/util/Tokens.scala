@@ -1,7 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{split, trim}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, explode, split, trim}
 
 /** Shared whitespace tokenizer for the text/dedup/array operators.
   *
@@ -17,10 +17,29 @@ import org.apache.spark.sql.functions.{split, trim}
   * would silently break the byte-identity gate on any document
   * containing a VT. The class below IS Java's `\s` — behavior is
   * unchanged on the Spark side; the oracle side gained VT.
+  *
+  * [[spanTokens]] and [[assocItems]] are likewise the one body of
+  * their zones: a memo serves whichever body built its key first, so
+  * a drifted copy would make answers depend on query order.
   */
 object Tokens {
   def whitespace(c: Column): Column =
     split(trim(c), "[ \\t\\n\\x0B\\f\\r]+")
+
+  /** The `span-tokens` zone: (doc_id, w = [[whitespace]] tokens of the
+    * text), tokenized once per (dir, application). */
+  def spanTokens(s: SparkSession, dir: String): DataFrame =
+    Scratch.memo(s, "span-tokens", s"span-tokens:$dir")(
+      graft.Tables.load(s, dir, "documents")
+        .select(col("doc_id"), whitespace(col("text")).as("w")))
+
+  /** The `assoc-items` zone: DISTINCT (doc_id, tok) over
+    * [[spanTokens]] — association-rule items, topic-term doc counts. */
+  def assocItems(s: SparkSession, dir: String): DataFrame =
+    Scratch.memo(s, "assoc-items", s"assoc-items:$dir")(
+      spanTokens(s, dir)
+        .select(col("doc_id"), explode(col("w")).as("tok"))
+        .distinct())
 
   /** Word n-grams (space-joined) over an ALREADY-tokenized array
     * column; arrays shorter than `n` collapse to ONE n-gram of the

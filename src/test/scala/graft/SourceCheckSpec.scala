@@ -25,7 +25,13 @@ import graft.util.Sessions
   * every epoch-keeping module lists, reads, publishes, squashes and
   * fences through it. One connected-components operator: the one
   * union-find in `src/main` is `Dedup.connectedComponents`' driver
-  * branch, so no caller keeps a private small-graph fold. */
+  * branch, so no caller keeps a private small-graph fold. One root:
+  * outside `util/Checkpoints.scala` no main source calls
+  * `.localCheckpoint(` or `.checkpoint(`, so every in-query, loop and
+  * per-batch root honours the durability dial. One def per zone: each
+  * `Scratch.memo`/`memoZone` name (an interpolated name by its literal
+  * prefix) is spelled at exactly one call site in `src/main`, so no
+  * memo key can be built by two bodies. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
@@ -72,6 +78,32 @@ class SourceCheckSpec extends SparkSpec {
         Files.readString(p).contains(needle)
     } yield s"${root.relativize(p)}: $needle"
     assert(bad.isEmpty, s"run the loop through Checkpoints.iterate: $bad")
+  }
+
+  test(".localCheckpoint( and .checkpoint( appear in src/main only in util/Checkpoints.scala") {
+    val main = root.resolve("src/main")
+    val bad = for {
+      needle <- Seq(".localCheckpoint(", ".checkpoint(")
+      p <- sources
+      if p.startsWith(main) && p != checkpoints &&
+        Files.readString(p).contains(needle)
+    } yield s"${root.relativize(p)}: $needle"
+    assert(bad.isEmpty, s"root through Checkpoints.root or scoped: $bad")
+    assert(Files.readString(checkpoints).contains(".localCheckpoint("))
+  }
+
+  test("every Scratch.memo/memoZone name is spelled at one call site in src/main") {
+    val main = root.resolve("src/main")
+    val call = """Scratch\.memo(?:Zone)?\(\s*[^,()]+,\s*s?"([^"$]*)""".r
+    val sites = for {
+      p <- sources if p.startsWith(main)
+      m <- call.findAllMatchIn(Files.readString(p))
+    } yield m.group(1) -> root.relativize(p).toString
+    val byName = sites.groupBy(_._1)
+    assert(Seq("span-tokens", "pair-bands", "shingles-").forall(byName.contains),
+      s"the call pattern must find the engine's memo sites: ${byName.keySet}")
+    val dup = byName.collect { case (n, at) if at.size > 1 => s"$n: ${at.map(_._2)}" }
+    assert(dup.isEmpty, s"define each shared zone in one def: $dup")
   }
 
   test("the union-find def find( appears in src/main only in Dedup.connectedComponents") {

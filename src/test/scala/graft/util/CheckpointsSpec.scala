@@ -10,13 +10,17 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.dedup.Dedup
 import graft.sim.Spectral
+import graft.sinks.IndexMaintain
 
 /** The durability dial: with `graft.checkpoint.dir` set, iterative
   * loops must root each round on RELIABLE checkpoints (files in the
   * configured dir — what survives executor loss on a preemptible
   * cluster), free superseded rounds' files, and produce the same
   * answers as local mode. [[Checkpoints.iterate]] owns that round
-  * policy, including the loud round cap. Every temp root is deleted. */
+  * policy, including the loud round cap and a one-job count per
+  * round. In-query roots and per-batch roots ([[Checkpoints.scoped]])
+  * follow the same dial; a batch frees its roots. Every temp root is
+  * deleted. */
 class CheckpointsSpec extends SparkSpec {
 
   private def rddDirs(root: Path): Seq[Path] =
@@ -175,5 +179,54 @@ class CheckpointsSpec extends SparkSpec {
       if (steps == 2) None else Some(df)
     }
     assert(steps == 2)
+  }
+
+  test("a counted round launches one job for its count") {
+    // the same roots either way; UntilStable adds the first count and
+    // round 1's count, and the step's plan is stable at round 1
+    val init = spark.range(0, 50, 1, 4).toDF("a")
+    val step: (DataFrame, Int) => Option[DataFrame] =
+      (df, _) => Some(df.select(col("a")))
+    val (plain, plainJobs) = jobsDuring(
+      Checkpoints.iterate("plain", init, Checkpoints.Rounds(1))(step))
+    val (counted, countedJobs) = jobsDuring(
+      Checkpoints.iterate("counted", init, Checkpoints.UntilStable(3))(step))
+    assert(countedJobs.size - plainJobs.size == 2,
+      s"two counts must cost two jobs: $countedJobs vs $plainJobs")
+    assert(plain.count() == 50 && counted.count() == 50)
+    Seq(plain, counted).foreach(Checkpoints.free)
+  }
+
+  test("an in-query root under the reliable dial: same rows, rdd-* files") {
+    // local mode first: the knn-graph zone it builds is memoized under
+    // the default scratch root, not under the dial's dir
+    val local = Spectral.assortativity(spark, sf()).collect().toSeq
+    withDial("graft-ckpt-assort") { dir =>
+      val reliable = Spectral.assortativity(spark, sf()).collect().toSeq
+      assert(reliable == local)
+      assert(rddDirs(dir).nonEmpty,
+        "q289's undirected edge root must write reliable checkpoint files")
+    }
+  }
+
+  test("a maintenance batch under the reliable dial: same state, roots freed") {
+    val docs = graft.Tables.load(spark, sf(), "documents")
+    def state(): Set[Seq[Any]] = {
+      val root = SparkSpec.tempDir("graft-ckpt-idx").toString + "/zone"
+      IndexMaintain.init(spark, root, docs.where(col("doc_id") < 40),
+        blockSize = 8)
+      IndexMaintain.applyBatch(spark, root,
+        docs.where(col("doc_id") >= 40), blockSize = 8)
+      IndexMaintain.read(spark, root).collect().map(_.toSeq).toSet
+    }
+    val local = state()
+    withDial("graft-ckpt-idx-dial") { dir =>
+      assert(state() == local)
+      assert(spark.sparkContext.getCheckpointDir
+          .exists(_.contains(dir.getFileName.toString)),
+        "applyBatch must root through the reliable dial")
+      assert(rddDirs(dir).isEmpty,
+        s"applyBatch must free its roots, found ${rddDirs(dir)}")
+    }
   }
 }
