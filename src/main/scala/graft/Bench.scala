@@ -72,10 +72,17 @@ object Bench {
     // contention robustness; default stays 2 for driver rounds.
     val passes =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
+    // generated classes compiled per pass (Spark's JVM-wide count): a
+    // warm pass that recompiles shows here, not only in its timings
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c0 = compiles()
     val pass1 = named.map { case (n, f) => timeOne(n, f) }
+    val c1 = compiles()
     val pass2 =
       if (passes > 1) named.map { case (n, f) => timeOne(n, f) }
       else pass1
+    val c2 = if (passes > 1) compiles() else c1
     val results = named.zip(pass1.zip(pass2)).map { case ((name, fn), (a, b)) =>
       val ts = Seq(a, b).filter(_ >= 0)
       val t =
@@ -86,6 +93,15 @@ object Bench {
       name -> t
     }
     val loadAfter = load1()
+    // what the run keeps live: heap after a full GC and class metadata
+    // (generated classes among it), in MiB
+    System.gc()
+    val heapMb = java.lang.management.ManagementFactory.getMemoryMXBean
+      .getHeapMemoryUsage.getUsed >> 20
+    val metaMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .toArray(Array.empty[java.lang.management.MemoryPoolMXBean])
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed >> 20).sum
+    def passSec(ts: Seq[Double]): Double = ts.filter(_ >= 0).sum
     val qs = results.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
       .mkString("{", ",", "}")
     val spreads = named.map(_._1).zip(pass1.zip(pass2)).collect {
@@ -111,7 +127,9 @@ object Bench {
     // capture must still carry the headline numbers (round-7 judge
     // note: BENCH_r07.json kept only ~78 of 250 queries).
     val line1 = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","n_queries":${results.size},"failed_tail":$failed,"total_sec":$total%.3f}"""
-    val diag = f""""load1_before":$loadBefore%.2f,"load1_after":$loadAfter%.2f,"noisy_queries":$noisy,"pass_spread":$spreadJson"""
+    val diag = f""""load1_before":$loadBefore%.2f,"load1_after":$loadAfter%.2f,"noisy_queries":$noisy,""" +
+      f""""pass_sec":[${passSec(pass1)}%.3f,${passSec(pass2)}%.3f],"pass_compiles":[${c1 - c0},${c2 - c1}],""" +
+      s""""heap_after_gc_mb":$heapMb,"metaspace_mb":$metaMb,"pass_spread":$spreadJson"""
     println(line1)
     System.err.println(s"""[bench] diagnostics: {$diag}""")
     try {

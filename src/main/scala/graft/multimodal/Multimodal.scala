@@ -43,13 +43,6 @@ import graft.Tables
   */
 object Multimodal {
 
-  val MediaMetaType: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("size_bytes", LongType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-
   val PpmMime = "image/x-portable-pixmap"
   val PgmMime = "image/x-portable-graymap"
   val Y4mMime = "video/x-yuv4mpeg"

@@ -6,8 +6,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -20,8 +22,8 @@ import graft.util.{Scratch, Sessions}
   *
   * Usage: runMain graft.tools.Probe <cmd> <sfDir> [args...]
   *   time    <sfDir> [--passes=N] q...  construct/plan/exec per pass
-  *           (default 2: zone builds land in pass 1), jobs, and the
-  *           slowest stages of the last pass
+  *           (default 2: zone builds land in pass 1), jobs, generated
+  *           classes compiled, and the slowest stages of the last pass
   *   sweep   <sfDir> <results.jsonl> [--retry-inflight] [--passes=N]
   *           [q...]  resumable, one JSON line per query ([[sweep]])
   *   plan    <sfDir> q...|all   formatted physical plan
@@ -73,14 +75,16 @@ object Probe {
         val rec = new Recorder(spark)
         for (n <- names; pass <- 1 to passes) {
           rec.reset()
+          val c0 = Compiles.now()
           val (df, tc) = timed(query(n)(spark, dir))
           val jc = rec.jobs.get()
           val (_, tp) = timed(df.queryExecution.executedPlan)
           val (_, te) = timed(df.write.format("noop").mode("overwrite").save())
           rec.drain(n)
+          val c = Compiles.now() - c0
           println(f"[time] $n p$pass total=${tc + tp + te}%.2f construct=$tc%.2f " +
             f"plan=$tp%.2f exec=$te%.2f jobsC=$jc jobsE=${rec.jobs.get() - jc} " +
-            s"stages=${rec.stages.size}")
+            f"stages=${rec.stages.size} compiles=${c.count} compileMs=${c.nanos / 1e6}%.0f")
           if (pass == passes) rec.stages.sortBy(-_.wallMs).take(4).foreach { s =>
             println(f"[time]   stage=${s.id} wall=${s.wallMs / 1e3}%.2f " +
               f"taskRun=${s.runMs / 1e3}%.2f taskCpu=${s.cpuMs / 1e3}%.2f tasks=${s.tasks}")
@@ -121,6 +125,19 @@ object Probe {
     val t0 = System.nanoTime()
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** The JVM's generated-class compiles so far: the count Spark's
+    * `CodegenMetrics` histogram has recorded and the compile nanos
+    * `CodeGenerator` sums (exact, where the histogram keeps only a
+    * sample of its values). Both are JVM-wide, so a delta over a pass
+    * is that pass's compiles; a cache hit adds nothing. */
+  private final case class Compiles(count: Long, nanos: Long) {
+    def -(o: Compiles): Compiles = Compiles(count - o.count, nanos - o.nanos)
+  }
+  private object Compiles {
+    def now(): Compiles =
+      Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
   }
 
   private final case class Stage(id: Int, wallMs: Long, runMs: Long, cpuMs: Long, tasks: Int)
@@ -178,6 +195,8 @@ object Probe {
     * `zone_sec` = the first pass's [[Scratch]] zone builds (every
     * memoized zone, the per-dir ones like q86's events-by-day
     * included), so shared builds separate from a query's own cost;
+    * `compiles` = the generated classes its passes compiled, so a
+    * class recompiled after an earlier query's compile shows up;
     * `overcap_rows` (summed over observe nodes, max over passes) and
     * `max_bucket` appear when a `graft.cap.*` metric fired; a failure
     * is `err` + that pass's wall.
@@ -215,6 +234,7 @@ object Probe {
     for (((name, fn), i) <- todo.zipWithIndex) {
       setMarker(name)
       val z0 = Scratch.buildSeconds
+      val c0 = Compiles.now()
       var (best, zoneSec, oc, ocMax) = (Double.MaxValue, 0.0, 0L, 0L)
       var err: Option[(Throwable, Double)] = None
       for (pass <- 1 to passes if err.isEmpty) { // stop at the first failure
@@ -230,15 +250,16 @@ object Probe {
             ocMax = math.max(ocMax, rec.capMax.get())
         }
       }
+      val compiles = (Compiles.now() - c0).count
       val line = err match {
         case Some((e, sec)) =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\n\r\t]", " ").take(300)
-          f"""{"name":"$name","sec":$sec%.1f,"zone_sec":${Scratch.buildSeconds - z0}%.1f,"err":"$msg"}"""
+          f"""{"name":"$name","sec":$sec%.1f,"zone_sec":${Scratch.buildSeconds - z0}%.1f,"compiles":$compiles,"err":"$msg"}"""
         case None =>
           val pss = if (passes > 1) s""","passes":$passes""" else ""
           val cap = if (oc > 0 || ocMax > 0) s""","overcap_rows":$oc,"max_bucket":$ocMax""" else ""
-          f"""{"name":"$name","sec":$best%.1f,"zone_sec":$zoneSec%.1f$pss$cap}"""
+          f"""{"name":"$name","sec":$best%.1f,"zone_sec":$zoneSec%.1f,"compiles":$compiles$pss$cap}"""
       }
       append(line)
       setMarker("") // clean exit for this query — crash window closed

@@ -67,6 +67,14 @@ class SessionsSpec extends AnyFunSuite {
     assert(conf("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
 
+  test("conf: every session sizes the generated-class cache to the " +
+    "query registry and names whole-stage classes by their code, as " +
+    "fixed values") {
+    val conf = Sessions.confFor("/nonexistent-dir", 32)
+    assert(conf("spark.sql.codegen.cache.maxEntries") === "4096")
+    assert(conf("spark.sql.codegen.useIdInClassName") === "false")
+  }
+
   test("inputBytes sums regular files recursively") {
     val dir = SparkSpec.tempDir("sessions-spec")
     val sub = java.nio.file.Files.createDirectory(dir.resolve("t.parquet"))

@@ -31,7 +31,10 @@ import graft.util.Sessions
   * per-batch root honours the durability dial. One def per zone: each
   * `Scratch.memo`/`memoZone` name (an interpolated name by its literal
   * prefix) is spelled at exactly one call site in `src/main`, so no
-  * memo key can be built by two bodies. */
+  * memo key can be built by two bodies. One codegen policy: outside
+  * `util/Sessions.scala` no main source names a `spark.sql.codegen.`
+  * conf, so the generated-class cache is sized once, for every
+  * session. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
@@ -179,6 +182,16 @@ class SourceCheckSpec extends SparkSpec {
     } yield s"${root.relativize(p)}: $needle"
     assert(bad.isEmpty, s"declare listeners and confs in Sessions.confFor: $bad")
     assert(Files.readString(probe).contains("listenerManager.register"))
+  }
+
+  test("spark.sql.codegen. appears in src/main only in util/Sessions.scala") {
+    val main = root.resolve("src/main")
+    val bad = sources
+      .filter(p => p.startsWith(main) && p != sessions &&
+        Files.readString(p).contains("spark.sql.codegen."))
+      .map(root.relativize(_).toString)
+    assert(bad.isEmpty, s"declare codegen confs in Sessions.confFor: $bad")
+    assert(Files.readString(sessions).contains("spark.sql.codegen."))
   }
 
   test("the epoch layout is spelled in src/main only in sinks/SwapPublish.scala") {
