@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` aggregates every implemented operator's named query;
-  * `oracleSql` carries the DuckDB-equivalent SQL for each SQL-
-  * expressible one (driver's t2 correctness gate).
+  * Each module lists one [[Query]] record per query (name, Spark plan,
+  * DuckDB oracle SQL); `queries` and `oracleSql` index those records by
+  * name for the driver's t2 correctness gate.
   */
 object SparkEntry {
 
@@ -15,47 +15,55 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.CoreParity.cleanedTransform(spark, "/root/testdata/sf0.001")
 
-  /** Every contributing module's query map and oracle map, listed
-    * once: `queries` and `oracleSql` are their unions (a union keeps
-    * the LAST duplicate name — SparkEntrySpec counts contributions so
-    * a collision fails loudly). */
-  def modules: Seq[(Map[String, (SparkSession, String) => DataFrame],
-                    Map[String, String])] = Seq(
-    ops.CoreParity.queries -> ops.CoreParity.oracle,
-    ops.Relational.queries -> ops.Relational.oracle,
-    ops.Extras.queries -> ops.Extras.oracle,
-    text.TextAnalysis.queries -> text.TextAnalysis.oracle,
-    dedup.Dedup.queries -> dedup.Dedup.oracle,
-    sim.Similarity.queries -> sim.Similarity.oracle,
-    ops.EventOps.queries -> ops.EventOps.oracle,
-    multimodal.Multimodal.queries -> multimodal.Multimodal.oracle,
-    ops.SqlSurface.queries -> ops.SqlSurface.oracle,
-    ops.Advanced.queries -> ops.Advanced.oracle,
-    ops.Wave2.queries -> ops.Wave2.oracle,
-    ops.Wave3.queries -> ops.Wave3.oracle,
-    ops.SkewJoin.queries -> ops.SkewJoin.oracle,
-    ops.Sampling.queries -> ops.Sampling.oracle,
-    text.CorpusStats.queries -> text.CorpusStats.oracle,
-    text.Postings.queries -> text.Postings.oracle,
-    text.Normalize.queries -> text.Normalize.oracle,
-    multimodal.Perceptual.queries -> multimodal.Perceptual.oracle,
-    ops.Quality.queries -> ops.Quality.oracle,
-    ops.Blocklist.queries -> ops.Blocklist.oracle,
-    text.Bpe.queries -> text.Bpe.oracle,
-    sim.KMeans.queries -> sim.KMeans.oracle,
-    sim.Spectral.queries -> sim.Spectral.oracle,
-    text.Sketches.queries -> text.Sketches.oracle,
-    sim.Pq.queries -> sim.Pq.oracle,
-    text.TextVectors.queries -> text.TextVectors.oracle,
-    ops.Fuzzy.queries -> ops.Fuzzy.oracle,
-    text.RetrievalEval.queries -> text.RetrievalEval.oracle,
-    ops.Mining.queries -> ops.Mining.oracle)
+  /** Every module that registers queries, listed once. */
+  def modules: Seq[QueryModule] = Seq(
+    ops.CoreParity, ops.Relational, ops.Extras, text.TextAnalysis,
+    dedup.Dedup, sim.Similarity, ops.EventOps, multimodal.Multimodal,
+    ops.SqlSurface, ops.Advanced, ops.Wave2, ops.Wave3, ops.SkewJoin,
+    ops.Sampling, text.CorpusStats, text.Postings, text.Normalize,
+    multimodal.Perceptual, ops.Quality, ops.Blocklist, text.Bpe,
+    sim.KMeans, sim.Spectral, text.Sketches, sim.Pq, text.TextVectors,
+    ops.Fuzzy, text.RetrievalEval, ops.Mining)
+
+  private lazy val registry: Map[String, Query] =
+    Query.index(modules.flatMap(_.records))
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracle }
+}
+
+/** One registered query: its name, its Spark plan over a table
+  * directory, and the DuckDB SQL the driver's correctness gate checks
+  * its result against. */
+final case class Query(name: String,
+                       run: (SparkSession, String) => DataFrame,
+                       oracle: String)
+
+object Query {
+
+  /** The records by name; a name given twice fails here, naming it. */
+  def index(records: Seq[Query]): Map[String, Query] = {
+    val dups = records.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    records.map(q => q.name -> q).toMap
+  }
+}
+
+/** A module of queries: it lists each query's [[Query]] record once, and
+  * the name-keyed views are derived from those records. */
+trait QueryModule {
+  def records: Seq[Query]
+
+  private lazy val byName = Query.index(records)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, q) => n -> q.run }
+
+  lazy val oracle: Map[String, String] = byName.map { case (n, q) => n -> q.oracle }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Checkpoints, Tokens}
 
 /** Deduplication operators over the `documents` table — the dedup
@@ -115,7 +115,7 @@ case object Md5Prefix extends DedupHash(60) {
       .map(i => s"(${i}, ${PermA(i)}, ${PermB(i)})").mkString(", ")
 }
 
-object Dedup {
+object Dedup extends QueryModule {
 
   private def tokens(c: Column): Column = Tokens.whitespace(c)
 
@@ -1625,67 +1625,6 @@ object Dedup {
       s"winnow-labels:$dir")(winnowClustersDerive(s, dir))
       .orderBy("doc_id")
 
-  /** The public oracle map: the base plus the q302 witness, which
-    * composes the ALREADY-GATED q36 and q37 oracle texts as
-    * subqueries (the q237 embed-verbatim rule: a witness's inputs
-    * cannot drift from the relations it scores). */
-  lazy val oracle: Map[String, String] = oracleBase +
-    ("q302_minhash_witness" ->
-      s"""WITH ex AS MATERIALIZED (
-         |  SELECT id1, id2 FROM (
-         |${oracleBase("q36_jaccard_pairs")}
-         |  ) qx),
-         |ls AS MATERIALIZED (
-         |  SELECT id1, id2 FROM (
-         |${oracleBase("q37_minhash_lsh")}
-         |  ) ql)
-         |SELECT
-         |  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_exact,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM ls) AS n_lsh,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM ex
-         |     WHERE EXISTS (SELECT 1 FROM ls
-         |       WHERE ls.id1 = ex.id1 AND ls.id2 = ex.id2)) AS n_hit,
-         |  CAST((SELECT count(*) FROM ex
-         |     WHERE EXISTS (SELECT 1 FROM ls
-         |       WHERE ls.id1 = ex.id1 AND ls.id2 = ex.id2)) AS DOUBLE)
-         |    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall"""
-        .stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q165_lsh_precision_audit" -> (lshPrecisionAudit _),
-    "q167_winnow_clusters" -> (winnowClusters _),
-    "q161_winnow_pairs" -> ((s: SparkSession, d: String) =>
-      winnowPairs(s, d)),
-    "q246_winnow_explain" -> ((s: SparkSession, d: String) =>
-      winnowExplain(s, d)),
-    "q249_cluster_folds" -> ((s: SparkSession, d: String) =>
-      clusterFolds(s, d)),
-    "q34_dedup_exact"   -> (exactGroups _),
-    "q138_leakage_split" -> (leakageSafeSplit _),
-    "q139_source_overlap" -> (sourceOverlap _),
-    "q144_incremental_clusters" -> (incrementalClusters _),
-    "q35_dedup_keep_first" -> (keepFirst _),
-    "q36_jaccard_pairs" -> (jaccardPairs _),
-    "q274_dedup_threshold_sweep" -> (dedupThresholdSweep _),
-    "q293_effective_tokens" -> (effectiveTokens _),
-    "q302_minhash_witness" -> ((s: SparkSession, d: String) => minhashWitness(s, d)),
-    // the gate queries route through the collapse-expand identity
-    // (see minhashCollapsedPairs): same output on any corpus, priced
-    // by distinct content + output size instead of corpus²
-    "q37_minhash_lsh"   -> ((s: SparkSession, d: String) =>
-      minhashCollapsedPairs(s, d, hash = Md5Prefix)),
-    "q314_minhash_rep"  -> ((s: SparkSession, d: String) =>
-      minhashRepPairs(s, d, hash = Md5Prefix)),
-    "q38_simhash"       -> ((s: SparkSession, d: String) =>
-      simhashCollapsedPairs(s, d, hash = Md5Prefix)),
-    "q315_simhash_rep"  -> ((s: SparkSession, d: String) =>
-      simhashRepPairs(s, d, hash = Md5Prefix)),
-    "q115_delta_neardup" -> ((s: SparkSession, d: String) =>
-      minhashDeltaPairs(s, d, hash = Md5Prefix)),
-    "q98_dedup_clusters" -> (dedupClusters _),
-    "q207_best_survivor" -> (bestSurvivor _),
-    "q182_cluster_histogram" -> (clusterHistogram _))
-
   /** The q36 pair derivation as a bare SQL body — shared by the q36
     * oracle and q98's recursive-CTE clustering oracle so the two can
     * never drift. */
@@ -1823,10 +1762,52 @@ object Dedup {
       |  FROM sel x JOIN sel y ON x.fp = y.fp AND x.doc_id < y.doc_id
       |  GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
 
-  private val oracleBase: Map[String, String] = Map(
+  /** q36's oracle: the pair derivation, totally ordered. */
+  private lazy val JaccardOracleSql: String =
+    JaccardPairsSql + "\nORDER BY id1, id2"
+
+  /** q37's oracle: the banded MinHash candidates, verified by the
+    * signature-agreement estimate. */
+  private lazy val MinhashLshSql: String =
+    MinhashBandedCtes +
+      raw""", pairs AS (
+        |  SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2, a.sig AS s1, c.sig AS s2
+        |  FROM banded a JOIN banded c
+        |    ON a.b = c.b AND a.band = c.band AND a.doc_id < c.doc_id
+        |)
+        |SELECT id1, id2,
+        |  len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 AS est_jaccard
+        |FROM pairs
+        |WHERE len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 >= 0.5
+        |ORDER BY id1, id2""".stripMargin
+
+  /** q302's oracle composes the ALREADY-GATED q36 and q37 oracle texts
+    * as subqueries (the q237 embed-verbatim rule: a witness's inputs
+    * cannot drift from the relations it scores). */
+  private lazy val MinhashWitnessSql: String =
+    s"""WITH ex AS MATERIALIZED (
+       |  SELECT id1, id2 FROM (
+       |$JaccardOracleSql
+       |  ) qx),
+       |ls AS MATERIALIZED (
+       |  SELECT id1, id2 FROM (
+       |$MinhashLshSql
+       |  ) ql)
+       |SELECT
+       |  (SELECT CAST(count(*) AS BIGINT) FROM ex) AS n_exact,
+       |  (SELECT CAST(count(*) AS BIGINT) FROM ls) AS n_lsh,
+       |  (SELECT CAST(count(*) AS BIGINT) FROM ex
+       |     WHERE EXISTS (SELECT 1 FROM ls
+       |       WHERE ls.id1 = ex.id1 AND ls.id2 = ex.id2)) AS n_hit,
+       |  CAST((SELECT count(*) FROM ex
+       |     WHERE EXISTS (SELECT 1 FROM ls
+       |       WHERE ls.id1 = ex.id1 AND ls.id2 = ex.id2)) AS DOUBLE)
+       |    / CAST((SELECT count(*) FROM ex) AS DOUBLE) AS recall""".stripMargin
+
+  lazy val records: Seq[Query] = Seq(
     // the q37 pair derivation verified against exact shingle Jaccard
     // (q38's shingle-set spelling) — one integer compare per pair
-    "q165_lsh_precision_audit" ->
+    Query("q165_lsh_precision_audit", lshPrecisionAudit(_, _),
       (MinhashBandedCtes +
       raw""", lpairs AS (
         |  SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2,
@@ -1860,15 +1841,15 @@ object Dedup {
         |  CASE WHEN count(*) = 0 THEN NULL
         |       ELSE CAST(sum(CASE WHEN inter * 2 >= uni THEN 1 ELSE 0
         |         END) AS DOUBLE) / count(*) END AS precision_at_05
-        |FROM v""".stripMargin),
-    "q161_winnow_pairs" ->
+        |FROM v""".stripMargin)),
+    Query("q161_winnow_pairs", winnowPairs(_, _),
       ("WITH " + WinnowPairsCtes + raw"""
         |SELECT id1, id2, n_shared FROM wp
-        |ORDER BY id1, id2""".stripMargin),
+        |ORDER BY id1, id2""".stripMargin)),
     // the same CTE chain, with per-(doc, fp) earliest positions and
     // the qualifying-pair semi-join — the q161 spelling extended, not
     // re-derived
-    "q246_winnow_explain" ->
+    Query("q246_winnow_explain", winnowExplain(_, _),
       ("WITH " + WinnowPairsCtes + raw""",
         |selp AS (
         |  SELECT doc_id, fp, CAST(min(p) AS BIGINT) AS p FROM f
@@ -1880,9 +1861,9 @@ object Dedup {
         |    ON x.fp = y.fp AND x.doc_id < y.doc_id)
         |SELECT ex.id1, ex.id2, ex.fp, ex.p1, ex.p2
         |FROM ex JOIN wp ON wp.id1 = ex.id1 AND wp.id2 = ex.id2
-        |ORDER BY ex.id1, ex.id2, ex.fp""".stripMargin),
+        |ORDER BY ex.id1, ex.id2, ex.fp""".stripMargin)),
     // the winnow pair CTEs closed with the q98-family recursive CTE
-    "q167_winnow_clusters" ->
+    Query("q167_winnow_clusters", winnowClusters(_, _),
       ("WITH RECURSIVE " + WinnowPairsCtes + raw""",
         |e(src, dst) AS (
         |  SELECT id1, id2 FROM wp UNION ALL SELECT id2, id1 FROM wp
@@ -1893,20 +1874,20 @@ object Dedup {
         |)
         |SELECT id AS doc_id, min(label) AS cluster_id,
         |  (id = min(label)) AS keep
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
-    "q34_dedup_exact" ->
+        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin)),
+    Query("q34_dedup_exact", exactGroups(_, _),
       """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n
-        |FROM documents GROUP BY 1 ORDER BY h""".stripMargin,
-    "q35_dedup_keep_first" ->
+        |FROM documents GROUP BY 1 ORDER BY h""".stripMargin),
+    Query("q35_dedup_keep_first", keepFirst(_, _),
       """SELECT doc_id, source FROM (
         |  SELECT doc_id, source, row_number() OVER (
         |    PARTITION BY md5(text) ORDER BY doc_id) AS rn
         |  FROM documents) t
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "q36_jaccard_pairs" ->
-      (JaccardPairsSql + "\nORDER BY id1, id2"),
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+    Query("q36_jaccard_pairs", jaccardPairs(_, _), JaccardOracleSql),
+    Query("q302_minhash_witness", minhashWitness(_, _), MinhashWitnessSql),
     // the q36 pair relation × a 10-row threshold grid
-    "q274_dedup_threshold_sweep" ->
+    Query("q274_dedup_threshold_sweep", dedupThresholdSweep(_, _),
       ("WITH p AS MATERIALIZED (\n" + JaccardPairsSql + "\n)," +
         """
           |taus AS (SELECT range AS t,
@@ -1918,10 +1899,10 @@ object Dedup {
           |SELECT t, tau, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
           |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
           |FROM f GROUP BY t, tau
-          |ORDER BY t""".stripMargin),
-    "q98_dedup_clusters" -> ClustersOracleSql,
+          |ORDER BY t""".stripMargin)),
+    Query("q98_dedup_clusters", dedupClusters(_, _), ClustersOracleSql),
     // the q98 label chain + cluster sizes + one tokenize scan
-    "q293_effective_tokens" ->
+    Query("q293_effective_tokens", effectiveTokens(_, _),
       ("WITH RECURSIVE " + ClusterLabelCtes + raw""",
         |cs AS MATERIALIZED (
         |  SELECT cluster_id, CAST(count(*) AS BIGINT) AS csize
@@ -1941,9 +1922,9 @@ object Dedup {
         |FROM tk
         |JOIN lab ON lab.doc_id = tk.doc_id
         |JOIN cs ON cs.cluster_id = lab.cluster_id
-        |GROUP BY tk.source ORDER BY tk.source""".stripMargin),
+        |GROUP BY tk.source ORDER BY tk.source""".stripMargin)),
     // labels CTE + q154's score sum + the survivor window
-    "q207_best_survivor" ->
+    Query("q207_best_survivor", bestSurvivor(_, _),
       ("WITH RECURSIVE " + ClusterLabelCtes + raw""",
         |tokq AS (
         |  SELECT doc_id,
@@ -1965,10 +1946,10 @@ object Dedup {
         |  FROM j)
         |SELECT doc_id, cluster_id, quality_sum, survivor_id,
         |  (doc_id = survivor_id) AS keep_best
-        |FROM f ORDER BY doc_id""".stripMargin),
+        |FROM f ORDER BY doc_id""".stripMargin)),
     // the q98 label fixpoint wrapped as a subquery (one spelling),
     // folded to the size histogram + corpus dedup ratio
-    "q182_cluster_histogram" ->
+    Query("q182_cluster_histogram", clusterHistogram(_, _),
       s"""WITH lab AS MATERIALIZED (
          |  SELECT * FROM ($ClustersOracleSql) t),
          |sz AS (
@@ -1988,15 +1969,16 @@ object Dedup {
          |  cluster_size * n_clusters AS n_docs, dup_docs,
          |  CAST(dup_docs AS DOUBLE) / CAST(total_docs AS DOUBLE)
          |    AS dedup_ratio
-         |FROM h CROSS JOIN t ORDER BY cluster_size""".stripMargin,
+         |FROM h CROSS JOIN t ORDER BY cluster_size""".stripMargin),
     // the incremental fold must land EXACTLY on the full-graph
     // fixpoint — same oracle as q98, different Spark path
-    "q144_incremental_clusters" -> ClustersOracleSql,
+    Query("q144_incremental_clusters", incrementalClusters(_, _),
+      ClustersOracleSql),
     // q98's recursive-CTE labels + q102's md5-prefix bucket math,
     // applied to the LABEL — the whole leakage guarantee in one line
     // the q138 label chain with the salted cluster-fold hash and the
     // family-size rollup
-    "q249_cluster_folds" ->
+    Query("q249_cluster_folds", clusterFolds(_, _),
       ("WITH RECURSIVE p AS (\n" + JaccardPairsSql + "\n), " +
         """e(src, dst) AS (
         |  SELECT id1, id2 FROM p UNION ALL SELECT id2, id1 FROM p
@@ -2015,8 +1997,8 @@ object Dedup {
         |    1, 15))::BIGINT % 5 AS fold,
         |  sz.cluster_size
         |FROM lab JOIN sz USING (cluster_id)
-        |ORDER BY lab.doc_id""".stripMargin),
-    "q138_leakage_split" ->
+        |ORDER BY lab.doc_id""".stripMargin)),
+    Query("q138_leakage_split", leakageSafeSplit(_, _),
       ("WITH RECURSIVE p AS (\n" + JaccardPairsSql + "\n), " +
         """e(src, dst) AS (
         |  SELECT id1, id2 FROM p UNION ALL SELECT id2, id1 FROM p
@@ -2036,23 +2018,16 @@ object Dedup {
         |  CASE WHEN bucket < 900 THEN 'train'
         |       WHEN bucket < 950 THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin),
-    "q37_minhash_lsh" ->
-      (MinhashBandedCtes +
-      raw""", pairs AS (
-        |  SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2, a.sig AS s1, c.sig AS s2
-        |  FROM banded a JOIN banded c
-        |    ON a.b = c.b AND a.band = c.band AND a.doc_id < c.doc_id
-        |)
-        |SELECT id1, id2,
-        |  len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 AS est_jaccard
-        |FROM pairs
-        |WHERE len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 >= 0.5
-        |ORDER BY id1, id2""".stripMargin),
+        |FROM b ORDER BY doc_id""".stripMargin)),
+    // the gate queries route through the collapse-expand identity
+    // (see minhashCollapsedPairs): same output on any corpus, priced
+    // by distinct content + output size instead of corpus²
+    Query("q37_minhash_lsh", minhashCollapsedPairs(_, _, hash = Md5Prefix),
+      MinhashLshSql),
     // q37's pipeline restricted to the q34 digest survivors (the
     // production rep-level spelling) — reps replayed as a CTE over
     // the SAME banded prefix, so the two oracles cannot drift
-    "q314_minhash_rep" ->
+    Query("q314_minhash_rep", minhashRepPairs(_, _, hash = Md5Prefix),
       (MinhashBandedCtes +
       raw""", reps AS (
         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
@@ -2067,9 +2042,9 @@ object Dedup {
         |  len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 AS est_jaccard
         |FROM pairs
         |WHERE len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 >= 0.5
-        |ORDER BY id1, id2""".stripMargin),
+        |ORDER BY id1, id2""".stripMargin)),
     // the q37 pair derivation grouped by order-normalized source pair
-    "q139_source_overlap" ->
+    Query("q139_source_overlap", sourceOverlap(_, _),
       (MinhashBandedCtes +
       raw""", pairs AS (
         |  SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2, a.sig AS s1, c.sig AS s2
@@ -2090,8 +2065,8 @@ object Dedup {
         |  JOIN documents db ON db.doc_id = e.id2)
         |SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS n_pairs,
         |  avg(est_jaccard) AS avg_est
-        |FROM lab GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin),
-    "q115_delta_neardup" ->
+        |FROM lab GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin)),
+    Query("q115_delta_neardup", minhashDeltaPairs(_, _, hash = Md5Prefix),
       (MinhashBandedCtes +
       raw""", pairs AS (
         |  SELECT DISTINCT a.doc_id AS corpus_id, c.doc_id AS delta_id,
@@ -2105,8 +2080,8 @@ object Dedup {
         |  len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 AS est_jaccard
         |FROM pairs
         |WHERE len([i for i in range(0, 32) if s1[i+1] = s2[i+1]]) / 32.0 >= 0.5
-        |ORDER BY delta_id, corpus_id""".stripMargin),
-    "q38_simhash" ->
+        |ORDER BY delta_id, corpus_id""".stripMargin)),
+    Query("q38_simhash", simhashCollapsedPairs(_, _, hash = Md5Prefix),
       (SimhashBandedCtes +
       raw""", pairs AS (
         |  SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2,
@@ -2114,13 +2089,13 @@ object Dedup {
         |  FROM banded a JOIN banded c
         |    ON a.b = c.b AND a.bv = c.bv AND a.doc_id < c.doc_id
         |)
-        |SELECT id1, id2, hamming FROM pairs WHERE hamming <= 12 ORDER BY id1, id2""".stripMargin),
+        |SELECT id1, id2, hamming FROM pairs WHERE hamming <= 12 ORDER BY id1, id2""".stripMargin)),
     // q38's pipeline restricted to the q34 digest survivors (the
     // rep-level production spelling) — reps replayed as a CTE over
     // the SAME banded prefix, so the two oracles cannot drift
     // (SimHash is a pure per-doc function: restricting at the pair
     // stage ≡ computing over reps only)
-    "q315_simhash_rep" ->
+    Query("q315_simhash_rep", simhashRepPairs(_, _, hash = Md5Prefix),
       (SimhashBandedCtes +
       raw""", reps AS (
         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
@@ -2132,5 +2107,5 @@ object Dedup {
         |  JOIN reps ra ON ra.doc_id = a.doc_id
         |  JOIN reps rc ON rc.doc_id = c.doc_id
         |)
-        |SELECT id1, id2, hamming FROM pairs WHERE hamming <= 12 ORDER BY id1, id2""".stripMargin))
+        |SELECT id1, id2, hamming FROM pairs WHERE hamming <= 12 ORDER BY id1, id2""".stripMargin)))
 }

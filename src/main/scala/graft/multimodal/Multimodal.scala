@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Multimodal-column plumbing: images/audio/video as opaque `binary`
   * columns with typed metadata, plus decode / feature-extract /
@@ -41,7 +41,7 @@ import graft.Tables
   *  - frame sampling emits (id, frame_no, offset_ms) rows — an
   *    explode, not a collect.
   */
-object Multimodal {
+object Multimodal extends QueryModule {
 
   val PpmMime = "image/x-portable-pixmap"
   val PgmMime = "image/x-portable-graymap"
@@ -416,11 +416,6 @@ object Multimodal {
     graft.sim.Similarity.rankTopK(scored, k)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q70_multimodal_features" -> (mediaFeatures _),
-    "q137_media_embed_knn" -> ((s: SparkSession, d: String) =>
-      mediaEmbedKnn(s, d)))
-
   /** The q70 pipeline IS SQL-expressible after all: the raster is a
     * deterministic byte expansion of the document text, [[Ppm.features]]
     * is integer sums with one float division per output (float division
@@ -429,8 +424,8 @@ object Multimodal {
     * `encode()`+`hex()` and replays the whole decode, so the magic
     * sniff, header parse, and pixel-feature math are all hash-checked.
     * The quadrant populations are constant (8×8 → 16 per quadrant). */
-  val oracle: Map[String, String] = Map(
-    "q70_multimodal_features" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q70_multimodal_features", mediaFeatures(_, _),
       """WITH b AS (
         |  SELECT doc_id, hex(encode(coalesce(text, ''))) AS h,
         |    octet_length(encode(coalesce(text, ''))) AS n
@@ -469,13 +464,13 @@ object Multimodal {
         |SELECT doc_id AS media_id, 'image/x-portable-pixmap' AS mime,
         |  CAST(203 AS BIGINT) AS size_bytes, 8 AS img_width, 8 AS img_height,
         |  CAST(f0 AS DOUBLE) + f1 + f2 + f3 + f4 + f5 + f6 AS feature_sum
-        |FROM feats ORDER BY media_id""".stripMargin,
+        |FROM feats ORDER BY media_id""".stripMargin),
     // q137 replays the ENTIRE Spark chain: the q70 raster rendering,
     // the 4×4 mean-luma grid (integer luma floored, float mean over
     // the 4 pixels per cell), double sequential L2 norm, float
     // normalized components, then FloatDot's exact semantics (float
     // products, sequential double accumulation) and the rank window.
-    "q137_media_embed_knn" ->
+    Query("q137_media_embed_knn", mediaEmbedKnn(_, _),
       """WITH b AS (
         |  SELECT doc_id, hex(encode(coalesce(text, ''))) AS h,
         |    octet_length(encode(coalesce(text, ''))) AS n
@@ -527,5 +522,5 @@ object Multimodal {
         |  FROM scored
         |)
         |SELECT query_id, neighbor_id, cosine, rank
-        |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin)
+        |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.{Query, QueryModule}
+
 /** Perceptual image hashing — dHash (difference hash): REAL image
   * near-duplicate detection over decoded pixels, the visual analog of
   * the text MinHash/SimHash family. Two renderings of the same image
@@ -17,7 +19,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * band-equality self-join is LOSSLESS for the ≤ 7 threshold and the
   * oracle can be the brute-force all-pairs spelling.
   */
-object Perceptual {
+object Perceptual extends QueryModule {
 
   /** 56-bit dHash of a decoded image: integer luma
     * (299·R + 587·G + 114·B)/1000 — the same luma as [[Ppm.features]]
@@ -340,15 +342,6 @@ object Perceptual {
       s"mm-labels:$dir")(multimodalClustersDerive(s, dir))
       .orderBy("doc_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q122_image_neardup" -> ((s: SparkSession, d: String) =>
-      imageNearDup(s, d)),
-    "q124_audio_neardup" -> ((s: SparkSession, d: String) =>
-      audioNearDup(s, d)),
-    "q125_video_neardup" -> ((s: SparkSession, d: String) =>
-      videoNearDup(s, d)),
-    "q126_multimodal_clusters" -> (multimodalClusters _))
-
   // ---- oracle SQL, composed from ONE spelling of each hash chain ----
   // (q122/q124/q125 select straight off their chain; q126 unions all
   // three pair relations and closes them with a recursive CTE — a
@@ -442,19 +435,19 @@ object Perceptual {
       |  ON a.fhash = b2.fhash AND a.doc_id < b2.doc_id
       |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // brute force on purpose (banding is lossless at the threshold);
     // each chain replays the REAL decode pipeline in SQL
-    "q122_image_neardup" ->
+    Query("q122_image_neardup", imageNearDup(_, _),
       (s"WITH $hexCte,\n$imgDhCtes\n" +
-        hammingPairsSql("idh") + "\nORDER BY a, b"),
-    "q124_audio_neardup" ->
+        hammingPairsSql("idh") + "\nORDER BY a, b")),
+    Query("q124_audio_neardup", audioNearDup(_, _),
       (s"WITH $hexCte,\n$audDhCtes\n" +
-        hammingPairsSql("aah") + "\nORDER BY a, b"),
-    "q125_video_neardup" ->
+        hammingPairsSql("aah") + "\nORDER BY a, b")),
+    Query("q125_video_neardup", videoNearDup(_, _),
       (s"WITH $hexCte,\n$vidFhCtes\n" +
-        videoPairsSql + "\nORDER BY a, b"),
-    "q126_multimodal_clusters" ->
+        videoPairsSql + "\nORDER BY a, b")),
+    Query("q126_multimodal_clusters", multimodalClusters(_, _),
       (s"WITH RECURSIVE $hexCte,\n$imgDhCtes,\n$audDhCtes,\n$vidFhCtes,\n" +
         s"""ipairs AS (
            |${hammingPairsSql("idh")}),
@@ -473,5 +466,5 @@ object Perceptual {
            |  SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.id)
            |SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id,
            |  (id = min(label)) AS keep
-           |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin))
+           |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin)))
 }

@@ -3,14 +3,14 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Exact, Tokens}
 
 /** Third coverage tier: explicit GROUPING SETS with grouping_id
   * disambiguation, the TPC-H Q6 predicate-aggregate shape,
   * deterministic arg-max via struct ordering, and the array-function
   * family. */
-object Advanced {
+object Advanced extends QueryModule {
 
   /** q91: GROUPING SETS ((flag), (status), ()) with grouping_id so
     * subtotal NULLs are distinguishable from data NULLs. */
@@ -65,14 +65,8 @@ object Advanced {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q91_grouping_sets" -> (groupingSets _),
-    "q92_predicate_revenue" -> (predicateRevenue _),
-    "q93_argmax_struct" -> (argMaxOrder _),
-    "q94_array_funcs"   -> (arrayFuncs _))
-
-  val oracle: Map[String, String] = Map(
-    "q91_grouping_sets" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q91_grouping_sets", groupingSets(_, _),
       s"""SELECT l_returnflag, l_linestatus,
          |  grouping(l_returnflag) AS g_flag,
          |  grouping(l_linestatus) AS g_status,
@@ -81,18 +75,18 @@ object Advanced {
          |FROM lineitem
          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
          |ORDER BY g_flag, g_status, l_returnflag NULLS FIRST,
-         |  l_linestatus NULLS FIRST""".stripMargin,
-    "q92_predicate_revenue" ->
+         |  l_linestatus NULLS FIRST""".stripMargin),
+    Query("q92_predicate_revenue", predicateRevenue(_, _),
       s"""SELECT ${Exact.sqlDsumProd("l_extendedprice", "l_discount")} AS revenue,
          |  count(*) AS n
          |FROM lineitem
-         |WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-    "q93_argmax_struct" ->
+         |WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin),
+    Query("q93_argmax_struct", argMaxOrder(_, _),
       """SELECT o_custkey,
         |  (max(struct_pack(p := o_totalprice, k := o_orderkey))).p AS best_price,
         |  (max(struct_pack(p := o_totalprice, k := o_orderkey))).k AS best_order
-        |FROM orders GROUP BY 1 ORDER BY o_custkey""".stripMargin,
-    "q94_array_funcs" ->
+        |FROM orders GROUP BY 1 ORDER BY o_custkey""".stripMargin),
+    Query("q94_array_funcs", arrayFuncs(_, _),
       """SELECT doc_id,
         |  string_split_regex(trim(text), '[ \t\n\v\f\r]+')[1] AS first_tok,
         |  string_split_regex(trim(text), '[ \t\n\v\f\r]+')[-1] AS last_tok,
@@ -100,5 +94,5 @@ object Advanced {
         |  list_contains(string_split_regex(trim(text), '[ \t\n\v\f\r]+'), 'spark') AS has_spark,
         |  CAST(coalesce(list_position(string_split_regex(trim(text), '[ \t\n\v\f\r]+'), 'data'), 0) AS BIGINT) AS data_pos,
         |  list_sort(string_split_regex(trim(text), '[ \t\n\v\f\r]+'))[1] AS min_tok
-        |FROM documents ORDER BY doc_id""".stripMargin)
+        |FROM documents ORDER BY doc_id""".stripMargin))
 }

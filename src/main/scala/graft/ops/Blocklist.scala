@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** q157: bloom-filter blocklist scrub — the 100 TB way to apply a
   * content blocklist (known-bad digests: spam, CSAM hashes, opt-outs,
@@ -26,7 +26,7 @@ import graft.Tables
   * list drops in without changing any shape); membership is by TEXT
   * digest, so duplicates of a blocked document are blocked too.
   */
-object Blocklist {
+object Blocklist extends QueryModule {
 
   private val MBits = 4096
   private val WordBits = 32 // 32-bit words in BIGINT lanes: 1<<31 stays positive
@@ -115,11 +115,8 @@ object Blocklist {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q157_bloom_scrub" -> (bloomScrub _))
-
-  val oracle: Map[String, String] = Map(
-    "q157_bloom_scrub" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q157_bloom_scrub", bloomScrub(_, _),
       s"""WITH d AS (
          |  SELECT doc_id,
          |    ('0x' || substr(md5(text), 1, 15))::BIGINT AS h
@@ -151,5 +148,5 @@ object Blocklist {
          |  (p.h IN (SELECT h FROM bl)) AS true_member,
          |  NOT (p.h IN (SELECT h FROM bl)) AS keep,
          |  (p.bloom_hit OR NOT (p.h IN (SELECT h FROM bl))) AS caught
-         |FROM probe p ORDER BY doc_id""".stripMargin)
+         |FROM probe p ORDER BY doc_id""".stripMargin))
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Exact, Ordered}
 
 /** Reference-parity queries: the complete data path of the reference's
@@ -22,7 +22,7 @@ import graft.util.{Exact, Ordered}
   * aggregation (see [[graft.util.Exact]]) so results hash-match the
   * DuckDB oracle bit-for-bit at any parallelism.
   */
-object CoreParity {
+object CoreParity extends QueryModule {
 
   /** A1+A2: the reference's summary query — COUNT(*) plus three AVGs in
     * ONE pass (one partial+final hash-agg job, no extra scans). */
@@ -187,62 +187,51 @@ object CoreParity {
       .transform(Ordered.byAll)
       .limit(100)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_summary_stats"    -> (summaryStats _),
-    "q02_cleaned_transform"-> (cleanedTransform _),
-    "q03_datetime_extract" -> (datetimeExtract _),
-    "q04_case_binning"     -> (caseBinning _),
-    "q05_guarded_ratio_cap"-> (guardedRatioCap _),
-    "q06_decode_status"    -> (decodeStatus _),
-    "q07_json_extract"     -> (jsonExtract _),
-    "q209_variant_extract" -> (variantExtract _),
-    "q08_sample_limit"     -> (sampleLimit _))
-
-  val oracle: Map[String, String] = Map(
-    "q01_summary_stats" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q01_summary_stats", summaryStats(_, _),
       s"""SELECT count(*) AS n_rows,
          |  ${Exact.sqlDsum("l_quantity")} AS sum_qty,
          |  ${Exact.sqlDavg("l_quantity")} AS avg_qty,
          |  ${Exact.sqlDavg("l_extendedprice")} AS avg_price,
          |  ${Exact.sqlDavg("l_discount")} AS avg_disc
-         |FROM lineitem""".stripMargin,
-    "q02_cleaned_transform" -> cleanedTransformSql,
-    "q03_datetime_extract" ->
+         |FROM lineitem""".stripMargin),
+    Query("q02_cleaned_transform", cleanedTransform(_, _), cleanedTransformSql),
+    Query("q03_datetime_extract", datetimeExtract(_, _),
       """SELECT event_id, hour(ts) AS h, dayofweek(ts) AS dow_pg,
-        |  month(ts) AS m FROM events ORDER BY event_id""".stripMargin,
-    "q04_case_binning" ->
+        |  month(ts) AS m FROM events ORDER BY event_id""".stripMargin),
+    Query("q04_case_binning", caseBinning(_, _),
       """SELECT CASE WHEN l_quantity < 5 THEN 'Very Short'
         |  WHEN l_quantity < 15 THEN 'Short'
         |  WHEN l_quantity < 30 THEN 'Medium'
         |  WHEN l_quantity < 45 THEN 'Long'
         |  ELSE 'Very Long' END AS qty_bucket, count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY qty_bucket""".stripMargin,
-    "q05_guarded_ratio_cap" ->
+        |FROM lineitem GROUP BY 1 ORDER BY qty_bucket""".stripMargin),
+    Query("q05_guarded_ratio_cap", guardedRatioCap(_, _),
       """SELECT l_orderkey, l_linenumber,
         |  CASE WHEN l_discount > 0
         |       THEN LEAST(l_tax / l_discount * 100, 999.99)
         |       ELSE 0.0 END AS tax_over_disc
-        |FROM lineitem ORDER BY ALL""".stripMargin,
-    "q06_decode_status" ->
+        |FROM lineitem ORDER BY ALL""".stripMargin),
+    Query("q06_decode_status", decodeStatus(_, _),
       """SELECT CASE o_orderstatus WHEN 'O' THEN 'Open'
         |  WHEN 'F' THEN 'Fulfilled' WHEN 'P' THEN 'Pending'
         |  ELSE 'Other' END AS status_desc, count(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY status_desc""".stripMargin,
-    "q07_json_extract" ->
+        |FROM orders GROUP BY 1 ORDER BY status_desc""".stripMargin),
+    Query("q07_json_extract", jsonExtract(_, _),
       """SELECT event_id, CAST(props->>'$.k' AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q08_sample_limit" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q08_sample_limit", sampleLimit(_, _),
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY ALL LIMIT 100""".stripMargin,
+        |ORDER BY ALL LIMIT 100""".stripMargin),
     // the variant is engine-internal; the extracted values are the
     // surface — JSON path replay. A null props row would extract all
     // NULLs in both engines; is_variant_null is about the JSON value
     // `null`, which this generator never emits (gate pins FALSE).
-    "q209_variant_extract" ->
+    Query("q209_variant_extract", variantExtract(_, _),
       """SELECT event_id,
         |  CAST(props->>'$.k' AS INTEGER) AS k,
         |  props->>'$.k' AS k_str,
         |  CAST(props->>'$.missing' AS INTEGER) AS absent,
         |  (json_type(props::JSON) = 'NULL') AS v_is_null
-        |FROM events ORDER BY event_id""".stripMargin)
+        |FROM events ORDER BY event_id""".stripMargin))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Checkpoints
 
 /** Event-time operators over the `events` table: tumbling windows,
@@ -18,7 +18,7 @@ import graft.util.Checkpoints
   * a broadcast-nested-loop at cluster scale). Timestamps surface as
   * epoch millis (long) so cross-engine comparison is integer-exact.
   */
-object EventOps {
+object EventOps extends QueryModule {
 
   private val D = DecimalType(18, 2)
 
@@ -1092,40 +1092,6 @@ object EventOps {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q60_tumbling_hourly" -> (tumblingHourly _),
-    "q61_sessionize"      -> ((s: SparkSession, d: String) => sessionize(s, d)),
-    "q62_asof_join"       -> (asofLastClick _),
-    "q63_range_join"      -> (rangeJoinClicks _),
-    "q86_partition_prune" -> (partitionPruned _),
-    "q217_dpp_join" -> (dppJoin _),
-    "q218_scd2_intervals" -> (scd2Intervals _),
-    "q223_scd2_maintained" -> (scd2Maintained _),
-    "q224_pit_join" -> (pitJoin _),
-    "q227_ordered_funnel" -> ((s: SparkSession, d: String) =>
-      orderedFunnel(s, d)),
-    "q228_transition_matrix" -> (transitionMatrix _),
-    "q281_markov_stationary" -> (markovStationary _),
-    "q290_moving_median" -> (movingMedian _),
-    "q295_growth_accounting" -> (growthAccounting _),
-    "q229_ab_analysis" -> (abAnalysis _),
-    "q234_session_builtin" -> (sessionWindowBuiltin _),
-    "q241_group_regression" -> (groupRegression _),
-    "q242_bitemporal" -> (bitemporal _),
-    "q250_seasonal_naive" -> (seasonalNaive _),
-    "q252_count_anomaly" -> (countAnomaly _),
-    "q266_rfm_segments" -> (rfmSegments _),
-    "q257_top_paths" -> ((s: SparkSession, d: String) =>
-      topPaths(s, d)),
-    "q258_decay_attribution" -> (decayAttribution _),
-    "q261_interarrival" -> (interArrival _),
-    "q119_forward_fill"   -> (forwardFill _),
-    "q127_funnel"         -> ((s: SparkSession, d: String) => funnel(s, d)),
-    "q128_retention"      -> (retention _),
-    "q129_outliers"       -> (outliers _),
-    "q130_time_weighted"  -> (timeWeightedAvg _),
-    "q136_nearest_event"  -> (nearestClick _))
-
   /** The q218 interval-build SQL over an optionally-restricted event
     * set — ONE template shared by the batch gate (q218), the
     * maintained-zone gate (q223), and q242's per-epoch bitemporal
@@ -1159,13 +1125,13 @@ object EventOps {
 
   private val Scd2Sql: String = scd2SqlFor("")
 
-  val oracle: Map[String, String] = Map(
-    "q60_tumbling_hourly" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q60_tumbling_hourly", tumblingHourly(_, _),
       """SELECT epoch_ms(date_trunc('hour', ts)) AS hour_ms, event_type,
         |  count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_ms, event_type""".stripMargin,
-    "q61_sessionize" ->
+        |FROM events GROUP BY 1, 2 ORDER BY hour_ms, event_type""".stripMargin),
+    Query("q61_sessionize", sessionize(_, _),
       """WITH flagged AS (
         |  SELECT user_id, event_id, ts,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -1181,28 +1147,28 @@ object EventOps {
         |)
         |SELECT user_id, session_id, count(*) AS n_events,
         |  min(epoch_ms(ts)) AS start_ms, max(epoch_ms(ts)) AS end_ms
-        |FROM sessed GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin,
-    "q62_asof_join" ->
+        |FROM sessed GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin),
+    Query("q62_asof_join", asofLastClick(_, _),
       """SELECT e.event_id, e.user_id,
         |  (SELECT max(epoch_ms(c.ts)) FROM events c
         |   WHERE c.user_id = e.user_id AND c.event_type = 'click'
         |     AND c.ts <= e.ts) AS last_click_ms
         |FROM events e WHERE e.event_type = 'error'
-        |ORDER BY e.event_id""".stripMargin,
-    "q63_range_join" ->
+        |ORDER BY e.event_id""".stripMargin),
+    Query("q63_range_join", rangeJoinClicks(_, _),
       """SELECT p.event_id, p.user_id, count(c.ts) AS n_clicks_10m
         |FROM events p LEFT JOIN events c
         |  ON c.user_id = p.user_id AND c.event_type = 'click'
         |  AND epoch_ms(c.ts) BETWEEN epoch_ms(p.ts) - 600000 AND epoch_ms(p.ts)
         |WHERE p.event_type = 'purchase'
-        |GROUP BY 1, 2 ORDER BY p.event_id""".stripMargin,
-    "q218_scd2_intervals" -> Scd2Sql,
+        |GROUP BY 1, 2 ORDER BY p.event_id""".stripMargin),
+    Query("q218_scd2_intervals", scd2Intervals(_, _), Scd2Sql),
     // the maintained zone is gated by the IDENTICAL oracle — the
     // incremental fold must be invisible
-    "q223_scd2_maintained" -> Scd2Sql,
+    Query("q223_scd2_maintained", scd2Maintained(_, _), Scd2Sql),
     // each epoch = the interval build over exactly its ingested
     // slices (the shared template), PIT-filtered at the probe
-    "q242_bitemporal" -> (Seq(
+    Query("q242_bitemporal", bitemporal(_, _), (Seq(
       0 -> " WHERE event_id % 3 = 0",
       1 -> " WHERE event_id % 3 <= 1",
       2 -> "").map { case (e, w) =>
@@ -1215,8 +1181,8 @@ object EventOps {
            |  AND (valid_to_ms IS NULL
            |    OR $BitemporalProbeMs < valid_to_ms)
            |GROUP BY event_type""".stripMargin
-      }.mkString("\nUNION ALL\n") + "\nORDER BY epoch, event_type"),
-    "q261_interarrival" ->
+      }.mkString("\nUNION ALL\n") + "\nORDER BY epoch, event_type")),
+    Query("q261_interarrival", interArrival(_, _),
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms
         |  FROM events),
@@ -1234,8 +1200,8 @@ object EventOps {
         |    AS mean_gap_ms,
         |  CAST(n_gaps * 3600000 AS DOUBLE) / CAST(sum_gap_ms AS DOUBLE)
         |    AS rate_per_hour
-        |FROM a ORDER BY event_type""".stripMargin,
-    "q266_rfm_segments" ->
+        |FROM a ORDER BY event_type""".stripMargin),
+    Query("q266_rfm_segments", rfmSegments(_, _),
       """WITH p AS (
         |  SELECT user_id, epoch_ms(ts) // 86400000 AS day,
         |    CAST(floor(value * 100) AS BIGINT) AS cents
@@ -1291,8 +1257,8 @@ object EventOps {
         |  CAST(m_score AS BIGINT) AS m_score,
         |  CAST(count(*) AS BIGINT) AS n_users
         |FROM sc GROUP BY 1, 2, 3
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
-    "q258_decay_attribution" ->
+        |ORDER BY r_score, f_score, m_score""".stripMargin),
+    Query("q258_decay_attribution", decayAttribution(_, _),
       """WITH ev AS (
         |  SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms,
         |    value
@@ -1316,8 +1282,8 @@ object EventOps {
         |  CAST(sum(w) OVER (PARTITION BY p_id) AS BIGINT) AS total_w,
         |  CAST(w AS DOUBLE)
         |    / CAST(sum(w) OVER (PARTITION BY p_id) AS DOUBLE) AS credit
-        |FROM w ORDER BY p_id, c_id""".stripMargin,
-    "q257_top_paths" ->
+        |FROM w ORDER BY p_id, c_id""".stripMargin),
+    Query("q257_top_paths", topPaths(_, _),
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms
         |  FROM events),
@@ -1329,8 +1295,8 @@ object EventOps {
         |SELECT s1, s2, s3, CAST(count(*) AS BIGINT) AS n
         |FROM p WHERE s2 IS NOT NULL AND s3 IS NOT NULL
         |GROUP BY 1, 2, 3
-        |ORDER BY n DESC, s1, s2, s3 LIMIT 10""".stripMargin,
-    "q252_count_anomaly" ->
+        |ORDER BY n DESC, s1, s2, s3 LIMIT 10""".stripMargin),
+    Query("q252_count_anomaly", countAnomaly(_, _),
       """WITH ev AS (
         |  SELECT event_type, ts::DATE AS d,
         |    CAST(EXTRACT(hour FROM ts) AS BIGINT) AS h
@@ -1364,8 +1330,8 @@ object EventOps {
         |  FROM win WHERE nw = 24)
         |SELECT event_type, t, c, sw, ssw, z,
         |  coalesce(abs(z) > 3.0, false) AS anomalous
-        |FROM f ORDER BY event_type, t""".stripMargin,
-    "q250_seasonal_naive" ->
+        |FROM f ORDER BY event_type, t""".stripMargin),
+    Query("q250_seasonal_naive", seasonalNaive(_, _),
       """WITH ev AS (
         |  SELECT event_type, ts::DATE AS d,
         |    CAST(EXTRACT(hour FROM ts) AS BIGINT) AS h
@@ -1402,8 +1368,8 @@ object EventOps {
         |    / (CAST(nv.sae_naive1 AS DOUBLE)
         |      * CAST(seas.n_seasonal AS DOUBLE)) AS mase_x_ratio
         |FROM seas JOIN nv USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-    "q241_group_regression" ->
+        |ORDER BY event_type""".stripMargin),
+    Query("q241_group_regression", groupRegression(_, _),
       """WITH e AS (
         |  SELECT event_type,
         |    CAST(EXTRACT(hour FROM ts) AS BIGINT) AS x,
@@ -1425,8 +1391,8 @@ object EventOps {
         |  CAST(sy AS DOUBLE) AS sy, CAST(sxy AS DOUBLE) AS sxy, slope,
         |  (CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))
         |    / CAST(n AS DOUBLE) AS intercept
-        |FROM s ORDER BY event_type""".stripMargin,
-    "q234_session_builtin" ->
+        |FROM s ORDER BY event_type""".stripMargin),
+    Query("q234_session_builtin", sessionWindowBuiltin(_, _),
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
         |c AS (
@@ -1448,9 +1414,10 @@ object EventOps {
         |SELECT user_id, start_ms AS w_start_ms,
         |  last_ms + 1800000 AS w_end_ms,
         |  n_events, start_ms, last_ms
-        |FROM g ORDER BY user_id, start_ms""".stripMargin,
-    "q281_markov_stationary" -> markovStationarySql,
-    "q295_growth_accounting" ->
+        |FROM g ORDER BY user_id, start_ms""".stripMargin),
+    Query("q281_markov_stationary", markovStationary(_, _),
+      markovStationarySql),
+    Query("q295_growth_accounting", growthAccounting(_, _),
       """WITH ua AS (
         |  SELECT DISTINCT user_id,
         |    CAST((EXTRACT(year FROM ts) - 1970) * 12
@@ -1479,8 +1446,8 @@ object EventOps {
         |    AS BIGINT) AS n_resurrected,
         |  CAST(sum(CASE WHEN state = 'churned' THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_churned
-        |FROM st GROUP BY mo ORDER BY mo""".stripMargin,
-    "q290_moving_median" ->
+        |FROM st GROUP BY mo ORDER BY mo""".stripMargin),
+    Query("q290_moving_median", movingMedian(_, _),
       s"""WITH ev AS (
          |  SELECT event_type, ts::DATE AS d,
          |    CAST(EXTRACT(hour FROM ts) AS BIGINT) AS h
@@ -1506,8 +1473,8 @@ object EventOps {
          |SELECT event_type, t, c,
          |  frame[CAST((len(frame) + 1) // 2 AS INT)] AS med,
          |  c - frame[CAST((len(frame) + 1) // 2 AS INT)] AS dev
-         |FROM fr ORDER BY event_type, t""".stripMargin,
-    "q228_transition_matrix" ->
+         |FROM fr ORDER BY event_type, t""".stripMargin),
+    Query("q228_transition_matrix", transitionMatrix(_, _),
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms
         |  FROM events),
@@ -1525,8 +1492,8 @@ object EventOps {
         |  CAST(n AS DOUBLE)
         |    / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE)
         |    AS prob
-        |FROM g ORDER BY from_type, to_type""".stripMargin,
-    "q229_ab_analysis" ->
+        |FROM g ORDER BY from_type, to_type""".stripMargin),
+    Query("q229_ab_analysis", abAnalysis(_, _),
       """WITH e AS (
         |  SELECT user_id, event_type, value,
         |    ('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)),
@@ -1544,8 +1511,8 @@ object EventOps {
         |  CAST(count(DISTINCT CASE WHEN event_type = 'purchase'
         |    THEN user_id END) AS DOUBLE)
         |    / CAST(count(DISTINCT user_id) AS DOUBLE) AS conv_rate
-        |FROM e GROUP BY arm ORDER BY arm""".stripMargin,
-    "q227_ordered_funnel" ->
+        |FROM e GROUP BY arm ORDER BY arm""".stripMargin),
+    Query("q227_ordered_funnel", orderedFunnel(_, _),
       """WITH e AS (
         |  SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
         |s1 AS (
@@ -1570,9 +1537,9 @@ object EventOps {
         |FROM s1
         |LEFT JOIN s2 ON s1.user_id = s2.user_id
         |LEFT JOIN s3 ON s1.user_id = s3.user_id
-        |ORDER BY s1.user_id""".stripMargin,
+        |ORDER BY s1.user_id""".stripMargin),
     // the interval relation is the q218 oracle embedded verbatim
-    "q224_pit_join" ->
+    Query("q224_pit_join", pitJoin(_, _),
       s"""WITH p AS (
          |  SELECT event_id, user_id, epoch_ms(ts) + 30000 AS t
          |  FROM events)
@@ -1583,8 +1550,8 @@ object EventOps {
          |) i ON i.user_id = p.user_id
          |  AND i.valid_from_ms <= p.t
          |  AND (i.valid_to_ms IS NULL OR p.t < i.valid_to_ms)
-         |ORDER BY p.event_id""".stripMargin,
-    "q217_dpp_join" ->
+         |ORDER BY p.event_id""".stripMargin),
+    Query("q217_dpp_join", dppJoin(_, _),
       """WITH dim AS (
         |  SELECT ts::DATE AS d FROM events
         |  GROUP BY 1 HAVING count(*) % 2 = 0)
@@ -1592,14 +1559,14 @@ object EventOps {
         |  count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events JOIN dim ON ts::DATE = dim.d
-        |GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    "q86_partition_prune" ->
+        |GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    Query("q86_partition_prune", partitionPruned(_, _),
       """SELECT CAST(ts::DATE AS VARCHAR) AS day, event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events
         |WHERE ts::DATE BETWEEN '2024-01-10' AND '2024-01-12'
-        |GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    "q119_forward_fill" ->
+        |GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    Query("q119_forward_fill", forwardFill(_, _),
       """WITH v AS (
         |  SELECT user_id, event_id, ts,
         |    CASE WHEN event_id % 7 < 2 THEN NULL ELSE value END AS v
@@ -1610,8 +1577,8 @@ object EventOps {
         |FROM v
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q127_funnel" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q127_funnel", funnel(_, _),
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms
         |  FROM events),
@@ -1638,8 +1605,8 @@ object EventOps {
         |  CAST(sum(f_view) AS BIGINT) AS users_view,
         |  CAST(sum(f_vc) AS BIGINT) AS users_view_click,
         |  CAST(sum(f_full) AS BIGINT) AS users_full_funnel
-        |FROM flags""".stripMargin,
-    "q128_retention" ->
+        |FROM flags""".stripMargin),
+    Query("q128_retention", retention(_, _),
       """WITH act AS (
         |  SELECT DISTINCT user_id, ts::DATE AS day FROM events),
         |cohort AS (
@@ -1648,8 +1615,8 @@ object EventOps {
         |  date_diff('day', c.cohort_day, a.day) AS day_offset,
         |  CAST(count(*) AS BIGINT) AS n_users
         |FROM act a JOIN cohort c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q129_outliers" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q129_outliers", outliers(_, _),
       """WITH m AS (
         |  SELECT event_type, count(*) AS n,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
@@ -1665,8 +1632,8 @@ object EventOps {
         |      > 9 * m.variance THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_outliers
         |FROM events e JOIN m USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q130_time_weighted" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q130_time_weighted", timeWeightedAvg(_, _),
       """WITH g AS (
         |  SELECT user_id, epoch_ms(ts) AS ms, value,
         |    lead(epoch_ms(ts)) OVER (PARTITION BY user_id
@@ -1676,13 +1643,13 @@ object EventOps {
         |  CAST(sum(gap) AS BIGINT) AS sum_gap_ms,
         |  CAST(sum(CAST(value AS DECIMAL(18,2)) * gap) AS DOUBLE)
         |    / CAST(sum(gap) AS BIGINT) AS twa
-        |FROM g GROUP BY 1 ORDER BY user_id""".stripMargin,
-    "q136_nearest_event" ->
+        |FROM g GROUP BY 1 ORDER BY user_id""".stripMargin),
+    Query("q136_nearest_event", nearestClick(_, _),
       """SELECT e.event_id, e.user_id,
         |  (SELECT epoch_ms(c.ts) FROM events c
         |   WHERE c.user_id = e.user_id AND c.event_type = 'click'
         |   ORDER BY abs(epoch_ms(c.ts) - epoch_ms(e.ts)), epoch_ms(c.ts)
         |   LIMIT 1) AS nearest_click_ms
         |FROM events e WHERE e.event_type = 'error'
-        |ORDER BY e.event_id""".stripMargin)
+        |ORDER BY e.event_id""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Exact, Ordered}
 
 /** Second tier of relational/scalar coverage: set ops, CUBE, exact
@@ -11,7 +11,7 @@ import graft.util.{Exact, Ordered}
   * and moment-based statistics computed from exact decimal power sums
   * (the only way stddev/variance hash-match across engines — built-in
   * stddev accumulates doubles in engine-specific order). */
-object Extras {
+object Extras extends QueryModule {
 
   /** INTERSECT: customers appearing in both filter sets. */
   def intersectKeys(s: SparkSession, dir: String): DataFrame = {
@@ -195,23 +195,8 @@ object Extras {
       expr("split_part(p_type, ' ', -1)").as("tail_part"))
       .orderBy("p_partkey")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q97_string_edges"   -> (stringEdges _),
-    "q64_profile"        -> (profileTable _),
-    "q54_percentiles"    -> (percentiles _),
-    "q48_bpe_tokens"     -> (bpeTokenCount _),
-    "q49_salted_agg"     -> (saltedAgg _),
-    "q26_intersect"      -> (intersectKeys _),
-    "q27_except"         -> (exceptKeys _),
-    "q28_cube"           -> (cubeAgg _),
-    "q29_count_distinct" -> (countDistinctAgg _),
-    "q44_string_funcs"   -> (stringFuncs _),
-    "q45_date_funcs"     -> (dateFuncs _),
-    "q46_cross_join"     -> (crossJoinDims _),
-    "q47_moment_stats"   -> (momentStats _))
-
-  val oracle: Map[String, String] = Map(
-    "q97_string_edges" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q97_string_edges", stringEdges(_, _),
       """SELECT p_partkey,
         |  regexp_extract(p_type, '^(\w+)', 1) AS first_word,
         |  translate(p_brand, '#', 'n') AS trans,
@@ -219,8 +204,8 @@ object Extras {
         |  repeat('ab', 3) AS rep,
         |  split_part(p_type, ' ', 1) AS head_part,
         |  split_part(p_type, ' ', -1) AS tail_part
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q64_profile" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q64_profile", profileTable(_, _),
       s"""SELECT count(*) AS n_rows,
          |  CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_custkey,
          |  count(DISTINCT o_custkey) AS distinct_custkey,
@@ -230,50 +215,50 @@ object Extras {
          |  ${Exact.sqlDsum("o_totalprice")} AS sum_price,
          |  min(epoch_ms(o_orderdate)) AS min_date_ms,
          |  max(epoch_ms(o_orderdate)) AS max_date_ms
-         |FROM orders""".stripMargin,
-    "q54_percentiles" ->
+         |FROM orders""".stripMargin),
+    Query("q54_percentiles", percentiles(_, _),
       """SELECT l_returnflag,
         |  quantile_cont(l_quantity, 0.5) AS p50_qty,
         |  quantile_cont(l_extendedprice, 0.9) AS p90_price,
         |  quantile_cont(l_extendedprice, 0.25) AS p25_price
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "q48_bpe_tokens" ->
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
+    Query("q48_bpe_tokens", bpeTokenCount(_, _),
       """SELECT doc_id,
         |  len(regexp_extract_all(text, '[A-Za-z]+')) AS n_word_tokens,
         |  len(regexp_extract_all(text, '[0-9]+')) AS n_digit_tokens,
         |  len(regexp_extract_all(text, '[^A-Za-z0-9 \t\n\v\f\r]')) AS n_punct_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q49_salted_agg" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q49_salted_agg", saltedAgg(_, _),
       """SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "q26_intersect" ->
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin),
+    Query("q26_intersect", intersectKeys(_, _),
       """SELECT c_custkey AS k FROM customer WHERE c_acctbal > 5000
         |INTERSECT
         |SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'
-        |ORDER BY k""".stripMargin,
-    "q27_except" ->
+        |ORDER BY k""".stripMargin),
+    Query("q27_except", exceptKeys(_, _),
       """SELECT c_custkey AS k FROM customer WHERE c_acctbal > 5000
         |EXCEPT
         |SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'
-        |ORDER BY k""".stripMargin,
-    "q28_cube" ->
+        |ORDER BY k""".stripMargin),
+    Query("q28_cube", cubeAgg(_, _),
       """SELECT l_returnflag, l_linestatus, count(*) AS n
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q29_count_distinct" ->
+        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    Query("q29_count_distinct", countDistinctAgg(_, _),
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT l_suppkey) AS n_supps, count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "q44_string_funcs" ->
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
+    Query("q44_string_funcs", stringFuncs(_, _),
       """SELECT p_partkey, upper(p_name) AS u, lower(p_brand) AS l,
         |  substring(p_name, 1, 5) AS pre, length(p_name) AS len,
         |  concat_ws('|', p_brand, p_type) AS cat,
         |  regexp_replace(p_name, '[aeiou]', '_', 'g') AS devowel,
         |  strpos(p_type, 'E') AS epos,
         |  lpad(p_brand, 12, '#') AS padded
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q45_date_funcs" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q45_date_funcs", dateFuncs(_, _),
       """SELECT o_orderkey,
         |  year(o_orderdate) AS y, quarter(o_orderdate) AS q,
         |  dayofmonth(o_orderdate) AS dom,
@@ -282,16 +267,16 @@ object Extras {
         |  strftime(last_day(o_orderdate), '%Y-%m-%d') AS eom,
         |  date_diff('day', CAST(o_orderdate AS DATE), DATE '1998-01-01')
         |    AS days_to_98
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q46_cross_join" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q46_cross_join", crossJoinDims(_, _),
       """SELECT r_name, n_name FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
-    "q47_moment_stats" ->
+        |ORDER BY r_name, n_name""".stripMargin),
+    Query("q47_moment_stats", momentStats(_, _),
       """SELECT l_returnflag, count(l_quantity) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) / count(l_quantity) AS mean,
         |  (CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(28,4))) AS DOUBLE)
         |   - CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE)
         |     * CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) / count(l_quantity))
         |  / (count(l_quantity) - 1) AS variance
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin)
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Approximate-string (edit-distance) similarity self-join — the
   * record-linkage primitive the relational side of a curation
@@ -34,7 +34,7 @@ import graft.Tables
   * (the corpus-growing-side discipline) — the optimizer picks
   * broadcast below threshold, id-keyed shuffle above.
   */
-object Fuzzy {
+object Fuzzy extends QueryModule {
 
   /** Edit-distance radius of the gate query (the library API takes
     * any τ ∈ {1, 2}). */
@@ -266,14 +266,9 @@ object Fuzzy {
       .orderBy("p_partkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q196_fuzzy_name_join" -> (fuzzyNameJoin _),
-    "q200_fuzzy_delta_join" -> (fuzzyDeltaJoin _),
-    "q201_fuzzy_clusters" -> (fuzzyClusters _))
-
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // brute force: the blocking must be invisible
-    "q196_fuzzy_name_join" ->
+    Query("q196_fuzzy_name_join", fuzzyNameJoin(_, _),
       s"""SELECT a.c_custkey AS custkey_a, b.c_custkey AS custkey_b,
          |  a.c_name AS name_a, b.c_name AS name_b,
          |  CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
@@ -281,8 +276,8 @@ object Fuzzy {
          |  ON a.c_custkey < b.c_custkey
          |WHERE levenshtein(a.c_name, b.c_name) <= $MaxEdits
          |ORDER BY custkey_a, custkey_b
-         |""".stripMargin,
-    "q200_fuzzy_delta_join" ->
+         |""".stripMargin),
+    Query("q200_fuzzy_delta_join", fuzzyDeltaJoin(_, _),
       s"""SELECT b.c_custkey AS batch_key, c.c_custkey AS corpus_key,
          |  b.c_name AS name_batch, c.c_name AS name_corpus,
          |  CAST(levenshtein(b.c_name, c.c_name) AS BIGINT) AS dist
@@ -290,10 +285,10 @@ object Fuzzy {
          |  ON b.c_custkey % 20 = 0 AND c.c_custkey % 20 <> 0
          |WHERE levenshtein(b.c_name, c.c_name) <= $MaxEdits
          |ORDER BY batch_key, corpus_key
-         |""".stripMargin,
+         |""".stripMargin),
     // brute-force pair graph closed with the q98-family recursive
     // CTE; min-id canonical per entity
-    "q201_fuzzy_clusters" ->
+    Query("q201_fuzzy_clusters", fuzzyClusters(_, _),
       s"""WITH RECURSIVE p AS (
          |  SELECT a.p_partkey AS i, b.p_partkey AS j
          |  FROM part a JOIN part b ON a.p_partkey < b.p_partkey
@@ -310,5 +305,5 @@ object Fuzzy {
          |  (p.p_partkey = lab.entity_id) AS canonical
          |FROM part p JOIN lab ON lab.id = p.p_partkey
          |ORDER BY p.p_partkey
-         |""".stripMargin)
+         |""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Corpus mining and governance audits — four operator families a
   * training-data pipeline runs over the curated corpus once the
@@ -34,7 +34,7 @@ import graft.Tables
   * the summary rollup); these are the corpus-scale members of that
   * family.
   */
-object Mining {
+object Mining extends QueryModule {
 
   /** q214's anonymity threshold: groups smaller than K are at risk. */
   val K = 5
@@ -770,27 +770,6 @@ object Mining {
       .orderBy("day")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q277_moment_stats" -> (momentStats _),
-    "q287_l_diversity" -> (lDiversity _),
-    "q291_trimmed_mean" -> (trimmedMean _),
-    "q294_ks_drift" -> (ksDrift _),
-    "q260_stickiness" -> (stickiness _),
-    "q259_rolling_wau" -> (rollingWau _),
-    "q248_corpus_health" -> (corpusHealth _),
-    "q247_split_uniformity" -> (splitUniformity _),
-    "q243_gini_tokens" -> (giniTokens _),
-    "q240_benford" -> (benfordDigits _),
-    "q239_chisq_cells"    -> (chiSquareCells _),
-    "q226_digest_maintained" -> (digestMaintained _),
-    "q225_zone_digest"    -> (zoneDigest _),
-    "q219_erasure_scrub"  -> (erasureScrub _),
-    "q212_pareto_front"   -> (paretoFront _),
-    "q213_bitmap_distinct" -> (bitmapDistinct _),
-    "q214_k_anonymity"    -> ((s: SparkSession, d: String) =>
-      kAnonymity(s, d)),
-    "q215_assoc_rules"    -> (assocRules _))
-
   /** The Benford table as a VALUES relation, generated from
     * [[BenfordExpected]] itself — the literals cannot drift. */
   private def benfordValues: String =
@@ -798,11 +777,11 @@ object Mining {
       s"($d, CAST($p AS DOUBLE))"
     }.mkString(", ")
 
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // identical IEEE expression trees over the exact power sums —
     // lateral alias reuse (mean, m2…) is supported by DuckDB and
     // mirrors the withColumn chain symbolically
-    "q277_moment_stats" ->
+    Query("q277_moment_stats", momentStats(_, _),
       """WITH s AS (
         |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(v) AS BIGINT) AS s1,
@@ -833,8 +812,8 @@ object Mining {
         |  m2 AS variance,
         |  m3 / (m2 * sqrt(m2)) AS skewness,
         |  m4 / (m2 * m2) AS kurtosis
-        |FROM mm ORDER BY l_returnflag""".stripMargin,
-    "q260_stickiness" ->
+        |FROM mm ORDER BY l_returnflag""".stripMargin),
+    Query("q260_stickiness", stickiness(_, _),
       """WITH ev AS (
         |  SELECT ts::DATE AS d, user_id FROM events
         |  WHERE user_id IS NOT NULL),
@@ -851,9 +830,9 @@ object Mining {
         |  CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE)
         |    AS stickiness
         |FROM dau JOIN wau ON wau.d = dau.d
-        |ORDER BY day""".stripMargin,
+        |ORDER BY day""".stripMargin),
     // the quadratic containment join the bitmap windows must match
-    "q259_rolling_wau" ->
+    Query("q259_rolling_wau", rollingWau(_, _),
       """WITH ev AS (
         |  SELECT ts::DATE AS d, user_id FROM events
         |  WHERE user_id IS NOT NULL),
@@ -861,10 +840,10 @@ object Mining {
         |SELECT CAST(days.d AS VARCHAR) AS day,
         |  CAST(count(DISTINCT ev.user_id) AS BIGINT) AS wau
         |FROM days JOIN ev ON ev.d BETWEEN days.d - 6 AND days.d
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // each vital as a scalar subquery; the Gini embeds the q243
     // oracle verbatim, the quality parts the q154 tokenization
-    "q248_corpus_health" ->
+    Query("q248_corpus_health", corpusHealth(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -918,9 +897,9 @@ object Mining {
         |    CAST((SELECT sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
         |      FROM documents) AS DOUBLE)
         |      / CAST((SELECT count(*) FROM documents) AS DOUBLE)) t
-        |ORDER BY metric""".stripMargin,
+        |ORDER BY metric""".stripMargin),
     // the q102 split spelling embedded verbatim + the q239 cell math
-    "q247_split_uniformity" ->
+    Query("q247_split_uniformity", splitUniformity(_, _),
       s"""WITH sp AS MATERIALIZED (
          |  SELECT * FROM (
          |${Sampling.oracle("q102_hash_split")}
@@ -939,10 +918,10 @@ object Mining {
          |  (CAST(o * n - r * c AS DOUBLE) * CAST(o * n - r * c AS DOUBLE))
          |    / (CAST(r * c AS DOUBLE) * CAST(n AS DOUBLE))
          |    AS chi2_contrib
-         |FROM w ORDER BY split, source""".stripMargin,
+         |FROM w ORDER BY split, source""".stripMargin),
     // same histogram fold; the doc token counts are the q154
     // tokenization spelled verbatim
-    "q243_gini_tokens" ->
+    Query("q243_gini_tokens", giniTokens(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -966,8 +945,8 @@ object Mining {
         |SELECT n, s, si,
         |  CAST(2 * si AS DOUBLE) / CAST(n * s AS DOUBLE)
         |    - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE) AS gini
-        |FROM a""".stripMargin,
-    "q240_benford" ->
+        |FROM a""".stripMargin),
+    Query("q240_benford", benfordDigits(_, _),
       s"""WITH obs AS (
          |  SELECT CAST(substr(CAST(CAST(floor(value * 100) AS BIGINT)
          |      AS VARCHAR), 1, 1) AS INT) AS digit,
@@ -982,8 +961,8 @@ object Mining {
          |  CAST(obs.n AS DOUBLE) / CAST(t.n_total AS DOUBLE) AS prop,
          |  e.expected_prop
          |FROM obs JOIN e ON e.digit = obs.digit CROSS JOIN t
-         |ORDER BY obs.digit""".stripMargin,
-    "q239_chisq_cells" ->
+         |ORDER BY obs.digit""".stripMargin),
+    Query("q239_chisq_cells", chiSquareCells(_, _),
       """WITH ct AS (
         |  SELECT source, coalesce(lang, '??') AS lang,
         |    CAST(count(*) AS BIGINT) AS o
@@ -999,11 +978,11 @@ object Mining {
         |  (CAST(o * n - r * c AS DOUBLE) * CAST(o * n - r * c AS DOUBLE))
         |    / (CAST(r * c AS DOUBLE) * CAST(n AS DOUBLE))
         |    AS chi2_contrib
-        |FROM w ORDER BY source, lang""".stripMargin,
+        |FROM w ORDER BY source, lang""".stripMargin),
     // the oracle re-digests the reconciled view FROM SCRATCH (q219's
     // oracle embedded verbatim) — the Spark side must reach the same
     // relation purely by XOR-folding per-epoch diffs
-    "q226_digest_maintained" ->
+    Query("q226_digest_maintained", digestMaintained(_, _),
       s"""WITH v AS MATERIALIZED (
          |  SELECT * FROM (
          |SELECT doc_id, source, n_chars FROM documents
@@ -1020,10 +999,10 @@ object Mining {
          |  FROM v)
          |SELECT bucket, CAST(count(*) AS BIGINT) AS n_rows,
          |  bit_xor(h) AS digest
-         |FROM d GROUP BY 1 ORDER BY bucket""".stripMargin,
+         |FROM d GROUP BY 1 ORDER BY bucket""".stripMargin),
     // digest arithmetic recomputed from the table; the copy columns
     // equal it by definition — which is exactly the witness claim
-    "q225_zone_digest" ->
+    Query("q225_zone_digest", zoneDigest(_, _),
       s"""WITH d AS (
          |  SELECT doc_id % $DigestBuckets AS bucket,
          |    ('0x' || substr(md5(concat_ws('|',
@@ -1037,20 +1016,20 @@ object Mining {
          |SELECT bucket, n_rows, digest,
          |  n_rows AS copy_n_rows, digest AS copy_digest,
          |  true AS match_ok
-         |FROM g ORDER BY bucket""".stripMargin,
+         |FROM g ORDER BY bucket""".stripMargin),
     // erase-then-restore as plain set algebra: survivors keep their
     // source; the restored half comes back amended
-    "q219_erasure_scrub" ->
+    Query("q219_erasure_scrub", erasureScrub(_, _),
       """SELECT doc_id, source, n_chars FROM documents
         |WHERE doc_id % 97 <> 0
         |UNION ALL
         |SELECT doc_id, 'restored' AS source, n_chars FROM documents
         |WHERE doc_id % 97 = 0 AND doc_id % 2 = 0
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // quadratic NOT EXISTS dominance — the definition the distributed
     // sweep must reproduce; the score subtree is the q154 oracle
     // embedded verbatim (the q166 no-drift discipline)
-    "q212_pareto_front" ->
+    Query("q212_pareto_front", paretoFront(_, _),
       s"""WITH dq AS MATERIALIZED (
          |  SELECT * FROM (
          |${graft.text.CorpusStats.oracle("q154_linear_quality")}
@@ -1063,8 +1042,8 @@ object Mining {
          |    WHERE q.n_chars >= p.n_chars AND q.w_sum >= p.w_sum
          |      AND (q.n_chars > p.n_chars OR q.w_sum > p.w_sum))
          |    AS on_front
-         |FROM p ORDER BY p.doc_id""".stripMargin,
-    "q213_bitmap_distinct" ->
+         |FROM p ORDER BY p.doc_id""".stripMargin),
+    Query("q213_bitmap_distinct", bitmapDistinct(_, _),
       """WITH t AS (
         |  SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users_all
         |  FROM events WHERE user_id IS NOT NULL)
@@ -1073,8 +1052,8 @@ object Mining {
         |  t.n_users_all
         |FROM events, t WHERE user_id IS NOT NULL
         |GROUP BY event_type, t.n_users_all
-        |ORDER BY event_type""".stripMargin,
-    "q294_ks_drift" ->
+        |ORDER BY event_type""".stripMargin),
+    Query("q294_ks_drift", ksDrift(_, _),
       """WITH d AS (SELECT source, n_chars AS v FROM documents),
         |csv AS (
         |  SELECT source, v, CAST(count(*) AS BIGINT) AS c
@@ -1112,8 +1091,8 @@ object Mining {
         |  CAST(max(num) AS BIGINT) AS d_num,
         |  CAST(max(num) AS DOUBLE)
         |    / CAST(max(n_s) * max(n_r) AS DOUBLE) AS ks_d
-        |FROM nm GROUP BY source ORDER BY source""".stripMargin,
-    "q291_trimmed_mean" ->
+        |FROM nm GROUP BY source ORDER BY source""".stripMargin),
+    Query("q291_trimmed_mean", trimmedMean(_, _),
       s"""WITH hist AS (
          |  SELECT l_returnflag AS g,
          |    CAST(floor(l_quantity) AS BIGINT) AS v,
@@ -1141,15 +1120,15 @@ object Mining {
          |    AS DOUBLE) / CAST(max(n) - 2 * max(k) AS DOUBLE)
          |    AS trimmed_mean
          |FROM cut GROUP BY g
-         |ORDER BY l_returnflag""".stripMargin,
-    "q287_l_diversity" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q287_l_diversity", lDiversity(_, _),
       s"""SELECT source, n_chars // 256 AS len_bin,
          |  CAST(count(*) AS BIGINT) AS group_size,
          |  CAST(count(DISTINCT lang) AS BIGINT) AS n_sensitive,
          |  count(DISTINCT lang) >= $LDiv AS diverse
          |FROM documents GROUP BY 1, 2
-         |ORDER BY source, len_bin""".stripMargin,
-    "q214_k_anonymity" ->
+         |ORDER BY source, len_bin""".stripMargin),
+    Query("q214_k_anonymity", kAnonymity(_, _),
       s"""SELECT doc_id, source, lang, n_chars // 256 AS len_bin,
          |  CAST(count(*) OVER
          |    (PARTITION BY source, lang, n_chars // 256) AS BIGINT)
@@ -1157,10 +1136,10 @@ object Mining {
          |  count(*) OVER
          |    (PARTITION BY source, lang, n_chars // 256) < $K
          |    AS at_risk
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
     // the UNPRUNED definition: every pair of co-occurring tokens,
     // thresholded at the end — the Apriori semi-join must be invisible
-    "q215_assoc_rules" ->
+    Query("q215_assoc_rules", assocRules(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -1190,5 +1169,5 @@ object Mining {
         |WHERE bi.cab * 10 >= n.n_docs
         |  AND bi.cab * 5 >= 3 * fa.c
         |  AND bi.cab * n.n_docs > fa.c * fb.c
-        |ORDER BY bi.antecedent, bi.consequent""".stripMargin)
+        |ORDER BY bi.antecedent, bi.consequent""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Declarative data-quality auditing — the engine-side generalization
   * of the reference's empty-input quality gate
@@ -15,7 +15,7 @@ import graft.Tables
   * gates on (fail the run / quarantine the batch when a count
   * exceeds its budget).
   */
-object Quality {
+object Quality extends QueryModule {
 
   /** One scan → one row per rule (rule, n_violations, n_rows).
     * Violation predicates must be null-complete: a NULL predicate row
@@ -602,23 +602,11 @@ object Quality {
       .orderBy("decile")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q284_column_profile" -> (columnProfile _),
-    "q308_approx_profile" -> ((s: SparkSession, d: String) =>
-      approxColumnProfile(s, d)),
-    "q298_quality_auc" -> (qualityAuc _),
-    "q307_quality_lift" -> (qualityLift _),
-    "q253_pk_audit"   -> (pkAudit _),
-    "q131_dq_rules"   -> (dqRules _),
-    "q166_curation_verdict" -> (curationVerdict _),
-    "q181_quality_roc" -> (qualityRoc _),
-    "q195_source_funnel" -> (sourceFunnel _),
-    "q132_fk_orphans" -> (fkOrphans _))
-
-  val oracle: Map[String, String] = Map(
-    "q284_column_profile" -> columnProfileSql,
-    "q308_approx_profile" -> approxColumnProfileSql,
-    "q307_quality_lift" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q284_column_profile", columnProfile(_, _), columnProfileSql),
+    Query("q308_approx_profile", approxColumnProfile(_, _),
+      approxColumnProfileSql),
+    Query("q307_quality_lift", qualityLift(_, _),
       (raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -674,8 +662,8 @@ object Quality {
         |  (CAST(sum(np_k) AS DOUBLE) / CAST(sum(rows_k) AS DOUBLE))
         |    / (CAST(max(p) AS DOUBLE) / CAST(max(n) AS DOUBLE))
         |    AS lift
-        |FROM cells GROUP BY k ORDER BY decile""".stripMargin),
-    "q298_quality_auc" ->
+        |FROM cells GROUP BY k ORDER BY decile""".stripMargin)),
+    Query("q298_quality_auc", qualityAuc(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -710,8 +698,8 @@ object Quality {
         |  CAST(sum(2 * np * neg_below + np * nn) AS BIGINT) AS num2,
         |  CAST(sum(2 * np * neg_below + np * nn) AS DOUBLE)
         |    / CAST(2 * sum(np) * sum(nn) AS DOUBLE) AS auc
-        |FROM c""".stripMargin,
-    "q253_pk_audit" ->
+        |FROM c""".stripMargin),
+    Query("q253_pk_audit", pkAudit(_, _),
       """SELECT * FROM (
         |  SELECT 'customer.c_custkey' AS key,
         |    CAST(count(*) AS BIGINT) AS n_rows,
@@ -735,10 +723,10 @@ object Quality {
         |    CAST(count(DISTINCT o_orderkey) AS BIGINT),
         |    CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT)
         |  FROM orders) t
-        |ORDER BY key""".stripMargin,
+        |ORDER BY key""".stripMargin),
     // same offset-positive binning; the doc-score subtree is the q154
     // oracle's own spelling
-    "q181_quality_roc" ->
+    Query("q181_quality_roc", qualityRoc(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -774,10 +762,10 @@ object Quality {
         |  tp_all - tp AS fn, fp_all - fp AS tn,
         |  CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) AS prec,
         |  CAST(tp AS DOUBLE) / CAST(tp_all AS DOUBLE) AS rec
-        |FROM c CROSS JOIN t ORDER BY thr_bin""".stripMargin,
+        |FROM c CROSS JOIN t ORDER BY thr_bin""".stripMargin),
     // the q166 oracle embedded verbatim as a subquery — the funnel
     // cannot drift from the verdict
-    "q195_source_funnel" ->
+    Query("q195_source_funnel", sourceFunnel(_, _),
       s"""WITH v AS MATERIALIZED (
          |  SELECT * FROM (${"\n"}SELECT d.doc_id,
          |    l.keep AS keep_quality,
@@ -803,10 +791,10 @@ object Quality {
          |  CAST(sum(CASE WHEN v.keep THEN 1 ELSE 0 END) AS DOUBLE)
          |    / CAST(count(*) AS DOUBLE) AS keep_rate
          |FROM v JOIN documents d ON d.doc_id = v.doc_id
-         |GROUP BY 1 ORDER BY d.source""".stripMargin,
+         |GROUP BY 1 ORDER BY d.source""".stripMargin),
     // the three signals' EXISTING oracle strings embedded verbatim as
     // subqueries — the composition cannot drift from its parts
-    "q166_curation_verdict" ->
+    Query("q166_curation_verdict", curationVerdict(_, _),
       s"""SELECT d.doc_id, l.keep AS keep_quality,
          |  r.flagged AS flagged_repetition,
          |  b.true_member AS blocked,
@@ -818,8 +806,8 @@ object Quality {
          |) r ON r.doc_id = d.doc_id
          |JOIN (${Blocklist.oracle("q157_bloom_scrub")}
          |) b ON b.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q131_dq_rules" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("q131_dq_rules", dqRules(_, _),
       """WITH w AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n_rows,
         |    CAST(sum(CASE WHEN l_quantity <= 0 OR l_quantity IS NULL
@@ -846,8 +834,8 @@ object Quality {
         |  ('price_nonneg', w.price_nonneg),
         |  ('qty_le_45', w.qty_le_45),
         |  ('qty_positive', w.qty_positive)) r(rule, n_violations)
-        |ORDER BY r.rule""".stripMargin,
-    "q132_fk_orphans" ->
+        |ORDER BY r.rule""".stripMargin),
+    Query("q132_fk_orphans", fkOrphans(_, _),
       """SELECT * FROM (
         |  SELECT 'lineitem.l_orderkey->orders' AS relationship,
         |    CAST(count(*) AS BIGINT) AS n_child,
@@ -864,5 +852,5 @@ object Quality {
         |  FROM orders o2
         |  LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
         |    ON o2.o_custkey = c.c_custkey)
-        |ORDER BY relationship""".stripMargin)
+        |ORDER BY relationship""".stripMargin))
 }

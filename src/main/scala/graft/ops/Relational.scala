@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Exact, Ordered}
 
 /** Relational operator coverage beyond the reference's surface
@@ -19,7 +19,7 @@ import graft.util.{Exact, Ordered}
   * joins, explicit pivot values (no driver-side value collection),
   * window functions instead of self-joins.
   */
-object Relational {
+object Relational extends QueryModule {
 
   private val D = DecimalType(18, 2)
 
@@ -322,38 +322,15 @@ object Relational {
         col("o_orderstatus"))
       .orderBy("o_orderkey")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q267_min_cost_supplier" -> (minCostSupplier _),
-    "q270_join_view_maintained" -> (joinViewMaintained _),
-    "q230_custdist" -> (custDist _),
-    "q220_relational_division" -> (relationalDivision _),
-    "q10_groupby_agg"      -> (groupbyAgg _),
-    "q11_broadcast_join"   -> (broadcastJoinAgg _),
-    "q12_multi_join"       -> (multiJoinRevenue _),
-    "q13_semi_join"        -> (semiJoin _),
-    "q14_anti_join"        -> (antiJoin _),
-    "q15_window_topk"      -> (windowTopkPerGroup _),
-    "q16_window_running"   -> (windowRunningSum _),
-    "q17_window_lag"       -> (windowLag _),
-    "q96_window_rank_family" -> (windowRankFamily _),
-    "q18_distinct"         -> (distinctValues _),
-    "q19_topk_global"      -> (topkGlobal _),
-    "q20_union_distinct"   -> (unionDistinct _),
-    "q21_rollup"           -> (rollupAgg _),
-    "q22_having"           -> (havingFilter _),
-    "q23_scalar_subquery"  -> (scalarSubqueryFilter _),
-    "q24_in_subquery"      -> (inSubquery _),
-    "q25_pivot"            -> (pivotStatus _))
-
-  val oracle: Map[String, String] = Map(
-    "q267_min_cost_supplier" -> MinCostSql,
+  lazy val records: Seq[Query] = Seq(
+    Query("q267_min_cost_supplier", minCostSupplier(_, _), MinCostSql),
     // the one-shot join the five-batch IVM fold must equal
-    "q270_join_view_maintained" ->
+    Query("q270_join_view_maintained", joinViewMaintained(_, _),
       """SELECT o.o_orderkey, c.c_custkey AS custkey, c.c_name,
         |  o.o_orderstatus
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "q230_custdist" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q230_custdist", custDist(_, _),
       """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist FROM (
         |  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT)
         |    AS c_count
@@ -361,10 +338,10 @@ object Relational {
         |  LEFT JOIN orders o ON c.c_custkey = o.o_custkey
         |  GROUP BY c.c_custkey) t
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
     // the textbook double-NOT-EXISTS division the count-match plan
     // must reproduce
-    "q220_relational_division" ->
+    Query("q220_relational_division", relationalDivision(_, _),
       """SELECT DISTINCT e.user_id FROM events e
         |WHERE NOT EXISTS (
         |  SELECT 1 FROM (SELECT DISTINCT event_type FROM events) t
@@ -372,21 +349,21 @@ object Relational {
         |    SELECT 1 FROM events e2
         |    WHERE e2.user_id = e.user_id
         |      AND e2.event_type = t.event_type))
-        |ORDER BY user_id""".stripMargin,
-    "q10_groupby_agg" ->
+        |ORDER BY user_id""".stripMargin),
+    Query("q10_groupby_agg", groupbyAgg(_, _),
       s"""SELECT l_returnflag, l_linestatus,
          |  ${Exact.sqlDsum("l_quantity")} AS sum_qty,
          |  ${Exact.sqlDsum("l_extendedprice")} AS sum_base_price,
          |  ${Exact.sqlDsumProd("l_extendedprice", "1.0 - l_discount")} AS sum_disc_price,
          |  ${Exact.sqlDavg("l_quantity")} AS avg_qty,
          |  count(*) AS n
-         |FROM lineitem GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q11_broadcast_join" ->
+         |FROM lineitem GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q11_broadcast_join", broadcastJoinAgg(_, _),
       s"""SELECT p_brand, count(*) AS n,
          |  ${Exact.sqlDsum("l_extendedprice")} AS revenue
          |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY 1 ORDER BY p_brand""".stripMargin,
-    "q12_multi_join" ->
+         |GROUP BY 1 ORDER BY p_brand""".stripMargin),
+    Query("q12_multi_join", multiJoinRevenue(_, _),
       s"""SELECT r_name,
          |  ${Exact.sqlDsumProd("l_extendedprice", "1.0 - l_discount")} AS revenue,
          |  count(*) AS n
@@ -395,35 +372,35 @@ object Relational {
          |  JOIN customer ON o_custkey = c_custkey
          |  JOIN nation ON c_nationkey = n_nationkey
          |  JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY 1 ORDER BY r_name""".stripMargin,
-    "q13_semi_join" ->
+         |GROUP BY 1 ORDER BY r_name""".stripMargin),
+    Query("q13_semi_join", semiJoin(_, _),
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q14_anti_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q14_anti_join", antiJoin(_, _),
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q15_window_topk" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q15_window_topk", windowTopkPerGroup(_, _),
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "q16_window_running" ->
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
+    Query("q16_window_running", windowRunningSum(_, _),
       """SELECT user_id, event_id,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
         |    AS running_value
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q17_window_lag" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    Query("q17_window_lag", windowLag(_, _),
       """SELECT user_id, event_id,
         |  epoch_ms(ts) - epoch_ms(lag(ts, 1) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id)) AS gap_ms
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q96_window_rank_family" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    Query("q96_window_rank_family", windowRankFamily(_, _),
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  rank() OVER w AS rnk,
         |  dense_rank() OVER w AS drnk,
@@ -439,39 +416,39 @@ object Relational {
         |  wf AS (PARTITION BY o_custkey
         |    ORDER BY o_totalprice DESC, o_orderkey
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, rnk""".stripMargin,
-    "q18_distinct" ->
+        |ORDER BY o_custkey, rnk""".stripMargin),
+    Query("q18_distinct", distinctValues(_, _),
       """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q19_topk_global" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q19_topk_global", topkGlobal(_, _),
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q20_union_distinct" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin),
+    Query("q20_union_distinct", unionDistinct(_, _),
       """SELECT c_custkey AS k FROM customer WHERE c_acctbal > 9000
         |UNION
         |SELECT o_custkey AS k FROM orders WHERE o_totalprice > 400000
-        |ORDER BY k""".stripMargin,
-    "q21_rollup" ->
+        |ORDER BY k""".stripMargin),
+    Query("q21_rollup", rollupAgg(_, _),
       s"""SELECT l_returnflag, l_linestatus, count(*) AS n,
          |  ${Exact.sqlDsum("l_quantity")} AS sum_qty
          |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q22_having" ->
+         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    Query("q22_having", havingFilter(_, _),
       s"""SELECT o_custkey, count(*) AS n_orders,
          |  ${Exact.sqlDsum("o_totalprice")} AS total_spent
          |FROM orders GROUP BY 1 HAVING count(*) >= 15
-         |ORDER BY o_custkey""".stripMargin,
-    "q23_scalar_subquery" ->
+         |ORDER BY o_custkey""".stripMargin),
+    Query("q23_scalar_subquery", scalarSubqueryFilter(_, _),
       s"""SELECT o_orderkey, o_totalprice FROM orders
          |WHERE o_totalprice > (SELECT ${Exact.sqlDavg("o_totalprice")} FROM orders)
-         |ORDER BY o_orderkey""".stripMargin,
-    "q24_in_subquery" ->
+         |ORDER BY o_orderkey""".stripMargin),
+    Query("q24_in_subquery", inSubquery(_, _),
       """SELECT l_returnflag, count(*) AS n FROM lineitem
         |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 40)
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "q25_pivot" ->
+        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
+    Query("q25_pivot", pivotStatus(_, _),
       """SELECT l_returnflag,
         |  count(*) FILTER (WHERE l_linestatus = 'F') AS F,
         |  count(*) FILTER (WHERE l_linestatus = 'O') AS O
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin)
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin))
 }

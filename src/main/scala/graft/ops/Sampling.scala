@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Deterministic sampling/splitting operators — the corpus-assembly
   * primitives of a training-data pipeline: reproducible train/val/test
@@ -23,7 +23,7 @@ import graft.Tables
   * would need. The window spelling survives as the DuckDB oracle,
   * which is what proves the heap produces the identical keep-set.
   */
-object Sampling {
+object Sampling extends QueryModule {
 
   /** 60-bit md5 prefix of a column's string form — the ONE cross-engine
     * hash definition, [[graft.dedup.Md5Prefix]] (DuckDB:
@@ -585,28 +585,6 @@ object Sampling {
       .orderBy("q")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q310_sample_quantiles" -> ((s: SparkSession, d: String) =>
-      sampleQuantiles(s, d)),
-    "q254_budget_select" -> (budgetSelect _),
-    "q216_stable_ids" -> ((s: SparkSession, d: String) =>
-      stableIds(s, d)),
-    "q202_priority_sample" -> ((s: SparkSession, d: String) =>
-      prioritySample(s, d)),
-    "q160_temperature_mix" -> ((s: SparkSession, d: String) =>
-      temperatureMix(s, d)),
-    "q146_seeded_shuffle" -> ((s: SparkSession, d: String) =>
-      seededShuffle(s, d)),
-    "q147_token_budget" -> ((s: SparkSession, d: String) =>
-      tokenBudget(s, d)),
-    "q102_hash_split"   -> (hashSplit _),
-    "q103_quota_sample" -> ((s: SparkSession, d: String) => quotaSample(s, d)),
-    "q108_curated_corpus" -> ((s: SparkSession, d: String) =>
-      curatedCorpus(s, d)),
-    "q142_stratified_sample" -> ((s: SparkSession, d: String) =>
-      stratifiedSample(s, d)),
-    "q114_source_mix"   -> ((s: SparkSession, d: String) => sourceMix(s, d)))
-
   /** The default weight table as a DuckDB VALUES relation — generated
     * from [[DefaultMixWeights]] itself so the oracle can never drift. */
   private def mixSqlValues: String =
@@ -615,8 +593,8 @@ object Sampling {
       s"('$src', CAST($base AS BIGINT), CAST($thresh AS BIGINT))"
     }.mkString(", ")
 
-  val oracle: Map[String, String] = Map(
-    "q310_sample_quantiles" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q310_sample_quantiles", sampleQuantiles(_, _),
       s"""WITH smp AS (
          |  SELECT o_totalprice AS v,
          |    ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))
@@ -642,9 +620,9 @@ object Sampling {
          |  abs(CAST(pop_le AS DOUBLE) / CAST(n AS DOUBLE)
          |    - CAST(q AS DOUBLE) / 100.0) <= $QuantEps AS within_bound
          |FROM pop ORDER BY q
-         |""".stripMargin,
+         |""".stripMargin),
     // the q154 token/weight rollup per source + the greedy prefix
-    "q254_budget_select" ->
+    Query("q254_budget_select", budgetSelect(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -674,13 +652,13 @@ object Sampling {
         |  FROM bs)
         |SELECT r.source, r.tokens, r.quality, r.density, r.cum_before,
         |  t.total_tokens, r.cum_before * 2 <= t.total_tokens AS picked
-        |FROM r CROSS JOIN t ORDER BY r.source""".stripMargin,
+        |FROM r CROSS JOIN t ORDER BY r.source""".stripMargin),
     // the semantic contract the offset machinery must reproduce
-    "q216_stable_ids" ->
+    Query("q216_stable_ids", stableIds(_, _),
       """SELECT doc_id,
         |  CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS uid
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q202_priority_sample" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q202_priority_sample", prioritySample(_, _),
       raw"""WITH d AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+'))
@@ -720,8 +698,8 @@ object Sampling {
         |    / CAST(tot.true_total_tokens AS DOUBLE) - 1.0)
         |    <= $PrioBound AS within_bound
         |FROM smp, est, tot ORDER BY rank
-        |""".stripMargin,
-    "q160_temperature_mix" ->
+        |""".stripMargin),
+    Query("q160_temperature_mix", temperatureMix(_, _),
       raw"""WITH d AS (
         |  SELECT source,
         |    CAST(coalesce(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')), 0)
@@ -752,8 +730,8 @@ object Sampling {
         |SELECT source, n_tokens, w,
         |  CAST(base + CASE WHEN rr <= extra THEN 1 ELSE 0 END AS BIGINT)
         |    AS alloc
-        |FROM q CROSS JOIN x ORDER BY source""".stripMargin,
-    "q146_seeded_shuffle" ->
+        |FROM q CROSS JOIN x ORDER BY source""".stripMargin),
+    Query("q146_seeded_shuffle", seededShuffle(_, _),
       """WITH h AS (
         |  SELECT doc_id,
         |    ('0x' || substr(md5('42:' || CAST(doc_id AS VARCHAR)),
@@ -762,12 +740,12 @@ object Sampling {
         |SELECT doc_id, shuffle_key,
         |  CAST(row_number() OVER (ORDER BY shuffle_key, doc_id)
         |    AS BIGINT) AS position
-        |FROM h ORDER BY position""".stripMargin,
+        |FROM h ORDER BY position""".stripMargin),
     // the semantic spec of the two-level prefix sum: ONE global
     // cumulative window over the shared q31 quality formula (plain
     // concatenation, NOT s-interpolation — the interpolator would
     // cook the \t\n\v\f\r regex escapes)
-    "q147_token_budget" ->
+    Query("q147_token_budget", tokenBudget(_, _),
       ("""WITH q AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+'))
@@ -783,8 +761,8 @@ object Sampling {
         |  FROM q)
         |SELECT doc_id, n_tokens, quality, cum_tokens,
         |  (cum_tokens - n_tokens < 10000) AS kept
-        |FROM c ORDER BY doc_id""".stripMargin),
-    "q102_hash_split" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Query("q102_hash_split", hashSplit(_, _),
       """WITH b AS (
         |  SELECT doc_id, source,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
@@ -794,8 +772,8 @@ object Sampling {
         |  CASE WHEN bucket < 900 THEN 'train'
         |       WHEN bucket < 950 THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "q103_quota_sample" ->
+        |FROM b ORDER BY doc_id""".stripMargin),
+    Query("q103_quota_sample", quotaSample(_, _),
       """WITH h AS (
         |  SELECT doc_id, source,
         |    ('0x' || substr(md5(source || ':' || CAST(doc_id AS VARCHAR)),
@@ -806,10 +784,10 @@ object Sampling {
         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rn
         |  FROM h)
         |SELECT source, doc_id FROM r
-        |WHERE rn <= 100 ORDER BY source, doc_id""".stripMargin,
+        |WHERE rn <= 100 ORDER BY source, doc_id""".stripMargin),
     // largest-remainder allocation over the tiny source relation, then
     // the q103 hash-order rank gated by each source's exact allocation
-    "q142_stratified_sample" ->
+    Query("q142_stratified_sample", stratifiedSample(_, _),
       """WITH sz AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY 1),
@@ -837,8 +815,8 @@ object Sampling {
         |  FROM h)
         |SELECT doc_id, source, rk
         |FROM rk JOIN alloc USING (source)
-        |WHERE rk <= alloc ORDER BY source, rk""".stripMargin,
-    "q108_curated_corpus" ->
+        |WHERE rk <= alloc ORDER BY source, rk""".stripMargin),
+    Query("q108_curated_corpus", curatedCorpus(_, _),
       raw"""WITH survivors AS (
         |  SELECT doc_id, source, text FROM (
         |    SELECT doc_id, source, text, row_number() OVER (
@@ -860,8 +838,8 @@ object Sampling {
         |        CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT, doc_id) AS qrn
         |  FROM train)
         |SELECT doc_id, source, n_tokens FROM quota
-        |WHERE qrn <= 100 ORDER BY doc_id""".stripMargin,
-    "q114_source_mix" ->
+        |WHERE qrn <= 100 ORDER BY doc_id""".stripMargin),
+    Query("q114_source_mix", sourceMix(_, _),
       s"""WITH w(source, base, thresh) AS (VALUES $mixSqlValues),
          |d AS (
          |  SELECT doc_id, source,
@@ -877,5 +855,5 @@ object Sampling {
          |FROM n JOIN LATERAL (
          |  SELECT unnest(range(1, CAST(n_copies AS BIGINT) + 1)) AS c) u
          |  ON true
-         |ORDER BY doc_id, copy_no""".stripMargin)
+         |ORDER BY doc_id, copy_no""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Exact
 
 /** Salted equi-join — the manual skew dial for hot join keys.
@@ -25,7 +25,7 @@ import graft.util.Exact
   * right side inflates ×`salt`, so salt the FACT side and keep the
   * replicated side the smaller one.
   */
-object SkewJoin {
+object SkewJoin extends QueryModule {
 
   /** Equi-join `left` ⋈ `right` on `keys`, left side salted into
     * `salt` sub-keys. Inner and left_outer semantics supported (the
@@ -117,13 +117,10 @@ object SkewJoin {
       .orderBy("p_brand")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q101_salted_join" -> (saltedJoinRevenue _))
-
-  val oracle: Map[String, String] = Map(
-    "q101_salted_join" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q101_salted_join", saltedJoinRevenue(_, _),
       (s"""SELECT p_brand, count(*) AS n,
         |  ${Exact.sqlDsumProd("l_extendedprice", "(1.0 - l_discount)")} AS revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin))
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin)))
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, posexplode, row_number, sum}
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Exact
 
 /** The SQL front end: zone tables registered as views, queries issued
@@ -14,7 +14,7 @@ import graft.util.Exact
   * DataFrame spelling, so everything downstream (pushdown, AQE,
   * codegen) applies unchanged.
   */
-object SqlSurface {
+object SqlSurface extends QueryModule {
 
   /** Register the named testdata tables — those the caller's SQL
     * reads — as temp views (idempotent). */
@@ -616,42 +616,17 @@ object SqlSurface {
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q296_percentile_disc" -> (sqlPercentileDisc _),
-    "q299_rank_family" -> (sqlRankFamily _),
-    "q305_value_windows" -> (sqlValueWindows _),
-    "q297_mode_agg" -> (sqlModeAgg _),
-    "q278_sql_udf" -> (sqlUdf _),
-    "q279_sql_collation" -> (sqlCollation _),
-    "q282_sql_table_udf" -> (sqlTableUdf _),
-    "q271_sql_identifier" -> (sqlIdentifier _),
-    "q272_execute_immediate" -> (sqlExecuteImmediate _),
-    "q262_sql_rollup" -> (sqlRollup _),
-    "q263_sql_cube" -> (sqlCube _),
-    "q264_grouping_sets" -> (sqlGroupingSets _),
-    "q265_sql_unpivot" -> (sqlUnpivot _),
-    "q245_sql_pivot" -> (sqlPivotClause _),
-    "q244_greedy_decode" -> (sqlGreedyDecode _),
-    "q235_group_by_all" -> (sqlGroupByAll _),
-    "q236_pagination" -> (sqlPagination _),
-    "q222_sql_vars" -> (sqlSessionVars _),
-    "q221_param_sql" -> (sqlParameterized _),
-    "q90_sql_surface" -> (sqlTopRevenue _),
-    "q208_recursive_sql" -> (sqlRecursiveReach _),
-    "q211_lateral_topn" -> (sqlLateralTopN _),
-    "q83_join_hints"  -> (sqlJoinHints _))
-
-  val oracle: Map[String, String] = Map(
-    "q299_rank_family" -> RankFamilySql,
+  lazy val records: Seq[Query] = Seq(
+    Query("q299_rank_family", sqlRankFamily(_, _), RankFamilySql),
     // same semantics, DuckDB's IGNORE NULLS position (inside the
     // parens vs Spark's postfix) — the one divergent token
-    "q305_value_windows" ->
+    Query("q305_value_windows", sqlValueWindows(_, _),
       ValueWindowsSql.replace(
         "last_value(bal_vis) IGNORE NULLS OVER w",
-        "last_value(bal_vis IGNORE NULLS) OVER w"),
+        "last_value(bal_vis IGNORE NULLS) OVER w")),
     // percentile_disc's definition spelled via cume_dist — smallest
     // value whose CDF reaches p
-    "q296_percentile_disc" ->
+    Query("q296_percentile_disc", sqlPercentileDisc(_, _),
       """WITH cd AS (
         |  SELECT l_returnflag, l_extendedprice,
         |    cume_dist() OVER (PARTITION BY l_returnflag
@@ -661,10 +636,10 @@ object SqlSurface {
         |  min(CASE WHEN cd >= 0.5 THEN l_extendedprice END) AS p50,
         |  min(CASE WHEN cd >= 0.9 THEN l_extendedprice END) AS p90,
         |  min(CASE WHEN cd >= 0.99 THEN l_extendedprice END) AS p99
-        |FROM cd GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM cd GROUP BY 1 ORDER BY 1""".stripMargin),
     // mode's deterministic tie-break (count DESC, value ASC) spelled
     // as the argmax window
-    "q297_mode_agg" ->
+    Query("q297_mode_agg", sqlModeAgg(_, _),
       """WITH c AS (
         |  SELECT o_orderstatus, o_orderpriority,
         |    CAST(count(*) AS BIGINT) AS cnt
@@ -680,23 +655,23 @@ object SqlSurface {
         |SELECT r.o_orderstatus, r.o_orderpriority AS mode_priority,
         |  n.n
         |FROM r JOIN n ON n.o_orderstatus = r.o_orderstatus
-        |WHERE r.rn = 1 ORDER BY r.o_orderstatus""".stripMargin,
+        |WHERE r.rn = 1 ORDER BY r.o_orderstatus""".stripMargin),
     // the SQL UDF body, inlined at the call site
-    "q278_sql_udf" ->
+    Query("q278_sql_udf", sqlUdf(_, _),
       """SELECT l_returnflag,
         |  CAST(count(*) AS BIGINT) AS n_items,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE)
         |    AS revenue
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
     // the table-UDF body with the argument substituted
-    "q282_sql_table_udf" ->
+    Query("q282_sql_table_udf", sqlTableUdf(_, _),
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
         |FROM orders WHERE o_orderstatus = 'F'
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
     // UTF8_LCASE desugared to lower() — the ASCII contract
-    "q279_sql_collation" ->
+    Query("q279_sql_collation", sqlCollation(_, _),
       """WITH m AS (
         |  SELECT n_name AS name FROM nation
         |  UNION ALL
@@ -706,24 +681,24 @@ object SqlSurface {
         |  CAST(count(DISTINCT lower(name)) AS BIGINT) AS n_ci,
         |  CAST(sum(CASE WHEN lower(name) = 'france'
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_france
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
     // the IDENTIFIER(:tbl) resolution, inlined
-    "q271_sql_identifier" ->
+    Query("q271_sql_identifier", sqlIdentifier(_, _),
       """SELECT n_regionkey, CAST(count(*) AS BIGINT) AS n_nations
         |FROM nation
-        |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
+        |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
     // the static text the qtext variable carries
-    "q272_execute_immediate" ->
+    Query("q272_execute_immediate", sqlExecuteImmediate(_, _),
       """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |    AS sum_price
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
     // shared texts — DuckDB runs the identical string
-    "q262_sql_rollup" -> RollupSql,
-    "q263_sql_cube" -> CubeSql,
-    "q264_grouping_sets" -> GroupingSetsSql,
+    Query("q262_sql_rollup", sqlRollup(_, _), RollupSql),
+    Query("q263_sql_cube", sqlCube(_, _), CubeSql),
+    Query("q264_grouping_sets", sqlGroupingSets(_, _), GroupingSetsSql),
     // the UNION ALL desugaring of the UNPIVOT clause
-    "q265_sql_unpivot" ->
+    Query("q265_sql_unpivot", sqlUnpivot(_, _),
       """WITH m AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(n_chars) AS BIGINT) AS total_chars,
@@ -735,9 +710,9 @@ object SqlSurface {
         |  SELECT source, 'total_chars', total_chars FROM m
         |  UNION ALL
         |  SELECT source, 'max_chars', max_chars FROM m)
-        |ORDER BY source, metric""".stripMargin,
+        |ORDER BY source, metric""".stripMargin),
     // the conditional-aggregation desugaring of the PIVOT clause
-    "q245_sql_pivot" ->
+    Query("q245_sql_pivot", sqlPivotClause(_, _),
       """SELECT o_orderstatus,
         |  CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
         |    THEN 1 ELSE 0 END) AS BIGINT) AS urgent,
@@ -750,11 +725,11 @@ object SqlSurface {
         |  CAST(sum(CASE WHEN o_orderpriority = '5-LOW'
         |    THEN 1 ELSE 0 END) AS BIGINT) AS low
         |FROM orders GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
+        |ORDER BY o_orderstatus""".stripMargin),
     // identical recursion; the model tables inlined as CTEs (1-based
     // generate_subscripts vs 0-based posexplode only ever appears as
     // i+1/i+2 offsets, which cancel)
-    "q244_greedy_decode" ->
+    Query("q244_greedy_decode", sqlGreedyDecode(_, _),
       raw"""WITH RECURSIVE d AS (
         |  SELECT doc_id,
         |    string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS arr
@@ -787,18 +762,18 @@ object SqlSurface {
         |  FROM gen g JOIN bn b ON b.w1 = g.w1 AND b.w2 = g.w2
         |  WHERE g.step < 20
         |)
-        |SELECT step, w1, w2 FROM gen ORDER BY step""".stripMargin,
-    "q235_group_by_all" -> GroupByAllSql,
-    "q236_pagination" -> PaginationSql,
+        |SELECT step, w1, w2 FROM gen ORDER BY step""".stripMargin),
+    Query("q235_group_by_all", sqlGroupByAll(_, _), GroupByAllSql),
+    Query("q236_pagination", sqlPagination(_, _), PaginationSql),
     // the identical text with the parameters inlined as literals
-    "q221_param_sql" -> ParamSqlText
-      .replace(":minBal", "1000").replace(":seg", "'BUILDING'"),
+    Query("q221_param_sql", sqlParameterized(_, _), ParamSqlText
+      .replace(":minBal", "1000").replace(":seg", "'BUILDING'")),
     // same report with the session-variable knobs inlined
-    "q222_sql_vars" -> ParamSqlText
-      .replace(":minBal", "1000.0").replace(":seg", "'BUILDING'"),
-    "q211_lateral_topn" -> LateralSql,
+    Query("q222_sql_vars", sqlSessionVars(_, _), ParamSqlText
+      .replace(":minBal", "1000.0").replace(":seg", "'BUILDING'")),
+    Query("q211_lateral_topn", sqlLateralTopN(_, _), LateralSql),
     // identical recursive text; edges from the brute-force spelling
-    "q208_recursive_sql" ->
+    Query("q208_recursive_sql", sqlRecursiveReach(_, _),
       s"""WITH RECURSIVE np AS MATERIALIZED (
          |  SELECT DISTINCT a.c_name AS na, b.c_name AS nb
          |  FROM customer a JOIN customer b ON a.c_name < b.c_name
@@ -817,16 +792,16 @@ object SqlSurface {
          |)
          |SELECT c.c_custkey AS id, CAST(min(r.lvl) AS BIGINT) AS hops
          |FROM reach r JOIN customer c ON c.c_name = r.name
-         |GROUP BY c.c_custkey ORDER BY id""".stripMargin,
-    "q83_join_hints" ->
+         |GROUP BY c.c_custkey ORDER BY id""".stripMargin),
+    Query("q83_join_hints", sqlJoinHints(_, _),
       s"""SELECT /*+ BROADCAST(nation), SHUFFLE_MERGE(orders) */
          |  n_name, count(*) AS n_orders,
          |  ${Exact.sqlDsum("o_totalprice")} AS sum_price
          |FROM customer
          |  JOIN nation ON c_nationkey = n_nationkey
          |  JOIN orders ON o_custkey = c_custkey
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q90_sql_surface" ->
+         |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("q90_sql_surface", sqlTopRevenue(_, _),
       s"""SELECT o_orderkey,
          |  ${Exact.sqlDsumProd("l_extendedprice", "1.0 - l_discount")} AS revenue,
          |  count(*) AS n_items
@@ -835,5 +810,5 @@ object SqlSurface {
          |WHERE c_mktsegment = 'BUILDING'
          |GROUP BY o_orderkey
          |ORDER BY revenue DESC, o_orderkey
-         |LIMIT 10""".stripMargin)
+         |LIMIT 10""".stripMargin))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Exact, Scratch}
 
 /** Fourth coverage tier — the remaining relational/source surface:
@@ -20,7 +20,7 @@ import graft.util.{Exact, Scratch}
   * base tables; the RANGE frame sorts once per user partition; the
   * round-trips write through executor-parallel files, never the driver.
   */
-object Wave2 {
+object Wave2 extends QueryModule {
 
   private val D = DecimalType(18, 2)
 
@@ -311,51 +311,32 @@ object Wave2 {
         col("total_digest").cast("long").as("total_digest"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q233_manifest_sink" -> (manifestSink _),
-    "q231_dsv2_source" -> (dsv2Source _),
-    "q303_dsv2_agg_pushdown" -> (dsv2AggPushdown _),
-    "q304_dsv2_topn_pushdown" -> (dsv2TopNPushdown _),
-    "q75_try_cast"      -> (tryCastSurface _),
-    "q76_gap_fill"      -> (gapFillDaily _),
-    "q77_typed_agg"     -> (typedAgg _),
-    "q65_full_outer"    -> (fullOuter _),
-    "q66_range_frame"   -> (rangeFrame _),
-    "q67_corr"          -> (corrFromSums _),
-    "q68_setops_all"    -> (setOpsAll _),
-    "q69_unpivot"       -> (unpivotMeasures _),
-    "q71_csv_roundtrip" -> (csvRoundtrip _),
-    "q204_orc_roundtrip" -> (orcRoundtrip _),
-    "q72_json_roundtrip" -> (jsonRoundtrip _),
-    "q73_string_agg"    -> (stringAgg _),
-    "q74_bool_agg"      -> (boolAgg _))
-
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // the manifest totals replayed from the payload: 8 non-empty hash
     // partitions, exact row count, XOR of the q225 row-hash spelling
-    "q233_manifest_sink" ->
+    Query("q233_manifest_sink", manifestSink(_, _),
       """SELECT CAST(8 AS BIGINT) AS n_files,
         |  CAST(count(*) AS BIGINT) AS total_rows,
         |  bit_xor(('0x' || substr(md5(concat_ws('|',
         |    CAST(doc_id AS VARCHAR), source,
         |    CAST(n_chars AS VARCHAR))), 1, 15))::BIGINT)
         |    AS total_digest
-        |FROM documents""".stripMargin,
-    "q304_dsv2_topn_pushdown" ->
+        |FROM documents""".stripMargin),
+    Query("q304_dsv2_topn_pushdown", dsv2TopNPushdown(_, _),
       """SELECT id, CAST((id * id) % 97 AS BIGINT) AS sq,
         |  CAST(id % 7 AS VARCHAR) AS tag
         |FROM range(100000) t(id)
         |WHERE id >= 20000 AND id < 60000
-        |ORDER BY id DESC LIMIT 5""".stripMargin,
-    "q303_dsv2_agg_pushdown" ->
+        |ORDER BY id DESC LIMIT 5""".stripMargin),
+    Query("q303_dsv2_agg_pushdown", dsv2AggPushdown(_, _),
       """SELECT CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(min(id) AS BIGINT) AS min_id,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM range(100000) t(id)
-        |WHERE id >= 20000 AND id < 60000""".stripMargin,
+        |WHERE id >= 20000 AND id < 60000""".stripMargin),
     // the synthetic sequence replayed via range(): same id domain,
     // same derived columns, same filter — engine-independent truth
-    "q231_dsv2_source" ->
+    Query("q231_dsv2_source", dsv2Source(_, _),
       """SELECT CAST(id % 7 AS VARCHAR) AS tag,
         |  CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(sum((id * id) % 97) AS BIGINT) AS sum_sq,
@@ -363,15 +344,15 @@ object Wave2 {
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM range(100000) t(id)
         |WHERE id >= 20000 AND id < 60000
-        |GROUP BY 1 ORDER BY tag""".stripMargin,
-    "q75_try_cast" ->
+        |GROUP BY 1 ORDER BY tag""".stripMargin),
+    Query("q75_try_cast", tryCastSurface(_, _),
       """SELECT o_orderkey,
         |  TRY_CAST(split_part(o_orderpriority, '-', 1) AS INT) AS prio_num,
         |  CAST(TRY_CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price_dec,
         |  TRY_CAST(CASE WHEN o_orderkey % 100 = 0 THEN o_orderstatus
         |    ELSE CAST(o_orderkey % 1000 AS VARCHAR) END AS INT) AS mixed_num
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q76_gap_fill" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q76_gap_fill", gapFillDaily(_, _),
       """WITH daily AS (
         |  SELECT user_id, epoch_ms(ts) // 86400000 AS day, count(*) AS n
         |  FROM events GROUP BY 1, 2),
@@ -383,12 +364,12 @@ object Wave2 {
         |SELECT days.user_id, days.day, coalesce(daily.n, 0) AS n
         |FROM days LEFT JOIN daily
         |  ON days.user_id = daily.user_id AND days.day = daily.day
-        |ORDER BY days.user_id, days.day""".stripMargin,
-    "q77_typed_agg" ->
+        |ORDER BY days.user_id, days.day""".stripMargin),
+    Query("q77_typed_agg", typedAgg(_, _),
       """SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "q65_full_outer" ->
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin),
+    Query("q65_full_outer", fullOuter(_, _),
       """SELECT coalesce(c.ck, p.sk) AS nationkey,
         |  coalesce(c.n_cust, 0) AS n_cust,
         |  coalesce(p.n_supp, 0) AS n_supp
@@ -399,16 +380,16 @@ object Wave2 {
         |  (SELECT s_nationkey AS sk, count(*) AS n_supp FROM supplier
         |   WHERE s_acctbal > 8000 GROUP BY 1) p
         |ON c.ck = p.sk
-        |ORDER BY nationkey""".stripMargin,
-    "q66_range_frame" ->
+        |ORDER BY nationkey""".stripMargin),
+    Query("q66_range_frame", rangeFrame(_, _),
       """SELECT event_id, user_id, epoch_ms(ts) AS ms,
         |  count(*) OVER w AS n_1h,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts)
         |  RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "q67_corr" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q67_corr", corrFromSums(_, _),
       """WITH sums AS (
         |  SELECT l_returnflag,
         |    CAST(count(*) AS DOUBLE) AS n,
@@ -426,8 +407,8 @@ object Wave2 {
         |  round((sxy - sx * sy / n) / n, 4) AS cov_pop,
         |  round((n * sxy - sx * sy) / sqrt(n * sxx - sx * sx)
         |    / sqrt(n * syy - sy * sy), 9) AS corr
-        |FROM sums ORDER BY l_returnflag""".stripMargin,
-    "q68_setops_all" ->
+        |FROM sums ORDER BY l_returnflag""".stripMargin),
+    Query("q68_setops_all", setOpsAll(_, _),
       """SELECT * FROM (
         |  SELECT 'except_all' AS op, k FROM (
         |    SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'O'
@@ -438,8 +419,8 @@ object Wave2 {
         |    SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'O'
         |    INTERSECT ALL
         |    SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'F'))
-        |ORDER BY op, k""".stripMargin,
-    "q69_unpivot" ->
+        |ORDER BY op, k""".stripMargin),
+    Query("q69_unpivot", unpivotMeasures(_, _),
       """SELECT l_returnflag, measure, val FROM (
         |  UNPIVOT (
         |    SELECT l_returnflag,
@@ -448,27 +429,27 @@ object Wave2 {
         |      CAST(count(*) AS DOUBLE) AS n_rows
         |    FROM lineitem GROUP BY 1)
         |  ON sum_qty, sum_price, n_rows INTO NAME measure VALUE val)
-        |ORDER BY l_returnflag, measure""".stripMargin,
-    "q71_csv_roundtrip" ->
+        |ORDER BY l_returnflag, measure""".stripMargin),
+    Query("q71_csv_roundtrip", csvRoundtrip(_, _),
       """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q72_json_roundtrip" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Query("q72_json_roundtrip", jsonRoundtrip(_, _),
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
         |  epoch_ms(o_orderdate) AS odate_ms, o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q204_orc_roundtrip" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q204_orc_roundtrip", orcRoundtrip(_, _),
       """SELECT p_partkey, p_name, p_brand, p_size, p_retailprice
-        |FROM part WHERE p_size >= 25 ORDER BY p_partkey""".stripMargin,
-    "q73_string_agg" ->
+        |FROM part WHERE p_size >= 25 ORDER BY p_partkey""".stripMargin),
+    Query("q73_string_agg", stringAgg(_, _),
       """SELECT c_nationkey,
         |  string_agg(c_name, ',' ORDER BY c_name) AS names,
         |  count(*) AS n
-        |FROM customer GROUP BY 1 ORDER BY c_nationkey""".stripMargin,
-    "q74_bool_agg" ->
+        |FROM customer GROUP BY 1 ORDER BY c_nationkey""".stripMargin),
+    Query("q74_bool_agg", boolAgg(_, _),
       """SELECT l_returnflag,
         |  count(*) FILTER (WHERE l_discount > 0.05) AS n_disc,
         |  bool_and(l_quantity > 0) AS all_pos_qty,
         |  bool_or(l_discount > 0.09) AS any_deep_disc,
         |  count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin)
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin))
 }

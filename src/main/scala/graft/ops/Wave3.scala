@@ -5,14 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Fifth coverage tier: map-typed columns, null-safe equality joins,
   * bounded sliding ROWS frames, and the value window-function family
   * (first/last/nth). All scalar outputs (cross-engine array/map
   * comparison is representation-sensitive; extraction is the portable
   * contract). */
-object Wave3 {
+object Wave3 extends QueryModule {
 
   private val D = DecimalType(18, 2)
   private val D28 = DecimalType(28, 2)
@@ -245,21 +245,8 @@ object Wave3 {
       .orderBy("month")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q135_mom_growth"   -> (momGrowth _),
-    "q134_pct_of_total" -> (pctOfTotal _),
-    "q100_topk_plan"    -> (topkCustom _),
-    "q99_histogram"     -> ((s: SparkSession, d: String) => histogram(s, d)),
-    "q85_generators"    -> (generators _),
-    "q84_approx_stats"  -> (approxStats _),
-    "q82_misc_scalars"  -> (miscScalars _),
-    "q78_map_funcs"     -> (mapFuncs _),
-    "q79_null_safe_join" -> (nullSafeJoin _),
-    "q80_moving_rows"   -> (movingRowsFrame _),
-    "q81_value_funcs"   -> (valueFuncs _))
-
-  val oracle: Map[String, String] = Map(
-    "q135_mom_growth" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q135_mom_growth", momGrowth(_, _),
       """WITH m AS (
         |  SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m')
         |    AS month,
@@ -273,8 +260,8 @@ object Wave3 {
         |   - CAST(lag(rev_d) OVER (ORDER BY month) AS DOUBLE))
         |    / CAST(lag(rev_d) OVER (ORDER BY month) AS DOUBLE)
         |    AS mom_growth
-        |FROM m ORDER BY month""".stripMargin,
-    "q134_pct_of_total" ->
+        |FROM m ORDER BY month""".stripMargin),
+    Query("q134_pct_of_total", pctOfTotal(_, _),
       """WITH rev AS (
         |  SELECT r.r_name, n.n_name,
         |    SUM(CAST(o.o_totalprice AS DECIMAL(28,2))) AS rev_d
@@ -287,8 +274,8 @@ object Wave3 {
         |  CAST(rev_d AS DOUBLE) /
         |    CAST(SUM(rev_d) OVER (PARTITION BY r_name) AS DOUBLE)
         |    AS region_share
-        |FROM rev ORDER BY r_name, n_name""".stripMargin,
-    "q84_approx_stats" ->
+        |FROM rev ORDER BY r_name, n_name""".stripMargin),
+    Query("q84_approx_stats", approxStats(_, _),
       """SELECT l_returnflag,
         |  count(DISTINCT l_orderkey) AS exact_orders,
         |  count(*) AS n,
@@ -297,16 +284,16 @@ object Wave3 {
         |  TRUE AS cd_in_bound,
         |  TRUE AS p50_in_bound,
         |  TRUE AS p90_in_bound
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q100_topk_plan" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q100_topk_plan", topkCustom(_, _),
       """SELECT p_brand, p_partkey, p_retailprice FROM (
         |  SELECT p_brand, p_partkey, p_retailprice,
         |    row_number() OVER (PARTITION BY p_brand
         |      ORDER BY p_retailprice DESC, p_partkey) AS rn
         |  FROM part) t
         |WHERE rn <= 3
-        |ORDER BY p_brand, p_retailprice DESC, p_partkey""".stripMargin,
-    "q99_histogram" ->
+        |ORDER BY p_brand, p_retailprice DESC, p_partkey""".stripMargin),
+    Query("q99_histogram", histogram(_, _),
       """WITH b AS (
         |  SELECT CAST(LEAST(GREATEST(
         |    floor((l_extendedprice - 0.0) / 5000.0), 0.0), 23.0) AS BIGINT)
@@ -314,8 +301,8 @@ object Wave3 {
         |  FROM lineitem)
         |SELECT bucket, 0.0 + bucket * 5000.0 AS lo_edge,
         |  0.0 + (bucket + 1) * 5000.0 AS hi_edge, count(*) AS n
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q85_generators" ->
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
+    Query("q85_generators", generators(_, _),
       """WITH d AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(trim(text), '[ \t\n\v\f\r]+'),
@@ -325,8 +312,8 @@ object Wave3 {
         |FROM d LEFT JOIN LATERAL (
         |  SELECT unnest(arr) AS tok,
         |    generate_subscripts(arr, 1) - 1 AS pos) u ON true
-        |ORDER BY d.doc_id, u.pos NULLS FIRST""".stripMargin,
-    "q82_misc_scalars" ->
+        |ORDER BY d.doc_id, u.pos NULLS FIRST""".stripMargin),
+    Query("q82_misc_scalars", miscScalars(_, _),
       """SELECT p_partkey,
         |  levenshtein(p_brand, p_type) AS edit_dist,
         |  p_partkey & 255 AS b_and,
@@ -337,8 +324,8 @@ object Wave3 {
         |  bit_count(p_partkey) AS popcount,
         |  greatest(p_size, p_retailprice, 50.0) AS g3,
         |  least(p_size, p_retailprice, 50.0) AS l3
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q78_map_funcs" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q78_map_funcs", mapFuncs(_, _),
       """SELECT o_orderkey,
         |  m['status'][1] AS status_v,
         |  m['missing'][1] AS missing_v,
@@ -348,14 +335,14 @@ object Wave3 {
         |  SELECT o_orderkey,
         |    MAP {'status': o_orderstatus, 'prio': o_orderpriority} AS m
         |  FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q79_null_safe_join" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q79_null_safe_join", nullSafeJoin(_, _),
       """SELECT coalesce(k1, -1) AS nk, count(*) AS n_pairs
         |FROM (SELECT nullif(c_nationkey, 7) AS k1 FROM customer) c
         |JOIN (SELECT nullif(s_nationkey, 7) AS k2 FROM supplier) p
         |  ON k1 IS NOT DISTINCT FROM k2
-        |GROUP BY 1 ORDER BY nk""".stripMargin,
-    "q80_moving_rows" ->
+        |GROUP BY 1 ORDER BY nk""".stripMargin),
+    Query("q80_moving_rows", movingRowsFrame(_, _),
       """SELECT o_orderkey, o_custkey,
         |  count(*) OVER w AS n_win,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
@@ -363,8 +350,8 @@ object Wave3 {
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |  ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q81_value_funcs" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q81_value_funcs", valueFuncs(_, _),
       """SELECT o_orderkey, o_custkey,
         |  first_value(o_totalprice) OVER w AS first_price,
         |  last_value(o_totalprice) OVER w AS last_price,
@@ -372,5 +359,5 @@ object Wave3 {
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_orderkey""".stripMargin)
+        |ORDER BY o_orderkey""".stripMargin))
 }

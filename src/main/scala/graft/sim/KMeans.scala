@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** q173: distributed k-means topic clustering over the embedding
   * corpus — Lloyd's algorithm, the workhorse behind topic-balanced
@@ -36,7 +36,7 @@ import graft.Tables
   * minibatch sampling, which changes the input relation, not the
   * shape.
   */
-object KMeans {
+object KMeans extends QueryModule {
 
   /** Cluster count / Lloyd rounds / fixed-point scale — shared by the
     * Spark path and the code-generated oracle SQL. */
@@ -357,19 +357,9 @@ object KMeans {
       .orderBy("cluster", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q255_topic_terms" -> ((s: SparkSession, d: String) =>
-      topicTerms(s, d)),
-    "q173_kmeans_topics" -> ((s: SparkSession, d: String) =>
-      kmeansTopics(s, d)),
-    "q174_cluster_mix" -> ((s: SparkSession, d: String) =>
-      clusterMix(s, d)),
-    "q184_farthest_per_topic" -> ((s: SparkSession, d: String) =>
-      farthestPerTopic(s, d)))
-
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // the k-means CTE prefix + the q154 tokenization, lift-ranked
-    "q255_topic_terms" -> (kmeansOracleSql +
+    Query("q255_topic_terms", topicTerms(_, _), (kmeansOracleSql +
       raw"""
         |, lab AS MATERIALIZED (
         |  SELECT vec_id AS doc_id, cid AS cluster
@@ -401,15 +391,15 @@ object KMeans {
         |  FROM sc)
         |SELECT cluster, rank, tok, df_in, df_tot, size_c, n_docs, lift
         |FROM rk WHERE rank <= 5
-        |ORDER BY cluster, rank""".stripMargin),
-    "q173_kmeans_topics" -> (kmeansOracleSql +
+        |ORDER BY cluster, rank""".stripMargin)),
+    Query("q173_kmeans_topics", kmeansTopics(_, _), (kmeansOracleSql +
       """
         |SELECT vec_id, cid AS cluster, d2 AS dist2
-        |FROM af WHERE rn = 1 ORDER BY vec_id""".stripMargin),
-    "q174_cluster_mix" -> clusterMixOracleSql,
+        |FROM af WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
+    Query("q174_cluster_mix", clusterMix(_, _), clusterMixOracleSql),
     // same k-means CTE prefix; the heap operator's (dist2 DESC,
     // vec_id ASC) contract replayed as a window rank
-    "q184_farthest_per_topic" -> (kmeansOracleSql +
+    Query("q184_farthest_per_topic", farthestPerTopic(_, _), (kmeansOracleSql +
       s"""
         |, asg AS (
         |  SELECT vec_id, cid AS cluster, d2 FROM af WHERE rn = 1),
@@ -420,5 +410,5 @@ object KMeans {
         |  FROM asg)
         |SELECT cluster, vec_id, dist2, rank FROM rk
         |WHERE rank <= $FarthestK
-        |ORDER BY cluster, rank""".stripMargin))
+        |ORDER BY cluster, rank""".stripMargin)))
 }

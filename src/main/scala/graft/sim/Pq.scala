@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Query, QueryModule}
+
 /** Product quantization — the memory side of the production ANN
   * recipe (IVF routes, PQ compresses): split each 64-dim embedding
   * into [[M]] subspaces of [[SubDim]] dims, fit an independent
@@ -25,7 +27,7 @@ import org.apache.spark.sql.functions._
   * the encode pass is ONE corpus scan with all 8 argmins as literal
   * column math — no join; the codes zone is then what search reads
   * (32× less I/O than raw vectors, the point of PQ). */
-object Pq {
+object Pq extends QueryModule {
 
   /** Subspaces × dims (M·SubDim = embedding width) and codebook size.
     * Shared by the Spark path and the generated oracle SQL. */
@@ -425,13 +427,6 @@ object Pq {
        |  FROM fpz f)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q186_pq_codes" -> (pqCodes _),
-    "q187_pq_search" -> (pqSearch _),
-    "q188_ivfpq_search" -> ((s: SparkSession, d: String) =>
-      ivfPqSearch(s, d)),
-    "q189_pq_cell_stats" -> (pqCellStats _))
-
   /** One subspace's LUT rows (query_id, sub, j, d): the query's
     * exact integer distance to each of the Ksub centroids — spelled
     * as a plain cross join (DuckDB list-comprehension lambdas cannot
@@ -470,15 +465,15 @@ object Pq {
        |      ORDER BY adc_dist2, neighbor_id) AS INTEGER) AS rank
        |  FROM adc)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q186_pq_codes" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q186_pq_codes", pqCodes(_, _),
       s"""WITH $pqCtesSql
          |SELECT * FROM codes ORDER BY vec_id
-         |""".stripMargin,
+         |""".stripMargin),
     // the q173 coarse chain (v/c0/dN/aN/af names) and the PQ chains
     // (fpz/s{m}_*) compose without collision; cells from the former,
     // qerr from the latter
-    "q189_pq_cell_stats" ->
+    Query("q189_pq_cell_stats", pqCellStats(_, _),
       (KMeans.kmeansOracleSql + s""",
          |$pqCtesSql,
          |asg AS (SELECT vec_id, cid AS cluster FROM af WHERE rn = 1)
@@ -488,16 +483,16 @@ object Pq {
          |    AS mean_qerr
          |FROM asg JOIN codes ON codes.vec_id = asg.vec_id
          |GROUP BY 1 ORDER BY asg.cluster
-         |""".stripMargin),
-    "q188_ivfpq_search" ->
+         |""".stripMargin)),
+    Query("q188_ivfpq_search", ivfPqSearch(_, _),
       s"""WITH $pqCtesSql,
          |$adcCtesSql
          |SELECT query_id, neighbor_id, adc_dist2, rank,
          |  ${KMeans.K} AS n_cells_probed
          |FROM adcr WHERE rank <= $SearchK
          |ORDER BY query_id, rank
-         |""".stripMargin,
-    "q187_pq_search" ->
+         |""".stripMargin),
+    Query("q187_pq_search", pqSearch(_, _),
       s"""WITH $pqCtesSql,
          |$adcCtesSql,
          |ex AS (
@@ -530,5 +525,5 @@ object Pq {
          |CROSS JOIN tv
          |WHERE a.rank <= $SearchK
          |ORDER BY a.query_id, a.rank
-         |""".stripMargin)
+         |""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Checkpoints
 
 /** Similarity search over the `embeddings` table (unit-norm
@@ -36,7 +36,7 @@ import graft.util.Checkpoints
   * re-rank) under a hash-checkable oracle; the approximate nProbe <
   * nCells path keeps its measured-recall test in SimilaritySpec.
   */
-object Similarity {
+object Similarity extends QueryModule {
 
   val Dim = 64
   val SigBits = 16
@@ -1501,72 +1501,6 @@ object Similarity {
       min(col("cos")).as("min_cos"), max(col("cos")).as("max_cos"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q256_text_embed_align" -> (textEmbedAlign _),
-    "q251_knn_outliers" -> (knnOutliers _),
-    "q175_semantic_decontam" -> ((s: SparkSession, d: String) =>
-      semanticDecontam(s, d)),
-    "q148_hard_negatives" -> ((s: SparkSession, d: String) =>
-      hardNegatives(s, d)),
-    "q50_knn_brute" -> ((s: SparkSession, d: String) => knnBrute(s, d)),
-    "q312_dim_ablation" -> ((s: SparkSession, d: String) =>
-      dimAblation(s, d)),
-    "q51_knn_lsh"   -> ((s: SparkSession, d: String) => knnLsh(s, d)),
-    "q194_multiprobe_lsh" -> ((s: SparkSession, d: String) =>
-      knnLshMultiProbe(s, d)),
-    // Exact mode (probe all cells): the full IVF machinery runs, and
-    // the result ≡ brute force, so the k-means-free oracle applies.
-    "q53_knn_ivf"   -> ((s: SparkSession, d: String) =>
-      knnIvf(s, d, nCells = IvfCells, nProbe = IvfCells)),
-    "q52_embedding_neardup" ->
-      ((s: SparkSession, d: String) => nearDupPairs(s, d)),
-    "q143_knn_quantized" ->
-      ((s: SparkSession, d: String) => knnQuantized(s, d)),
-    "q155_knn_graph" -> ((s: SparkSession, d: String) => knnGraph(s, d)),
-    "q168_knn_banded_witness" -> ((s: SparkSession, d: String) =>
-      knnBandedWitness(s, d)),
-    "q198_graph_search" -> (graphSearch _),
-    "q203_triangle_stats" -> (triangleStats _),
-    "q156_semantic_dedup" -> (semanticDedup _),
-    // the BUILD→WRITE→SERVE round trip under the hash gate: probe-all
-    // from the cell-partitioned zone ≡ brute force (the q53 contract,
-    // now including the parquet partitioning round trip)
-    "q163_ivf_served" -> ((s: SparkSession, d: String) => {
-      // zone lives under the managed scratch root (memoized per dir):
-      // repeated gate runs serve ONE built artifact, and the copy is
-      // reclaimed by Scratch.clear / JVM-exit cleanup instead of
-      // leaking a corpus copy per invocation
-      val zoneDir = graft.util.Scratch.memoZone(s, "ivf-serve",
-        s"ivf-serve:$d")(p => IvfServe.build(s, d, p))
-      val q = corpus(s, d).where(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      IvfServe.search(s, zoneDir, q, k = 5, nProbe = IvfCells)
-    }),
-    "q164_domain_similarity" -> (domainSimilarity _),
-    // the INCREMENTAL serve path under the hash gate: zone built on a
-    // partial corpus (vec_id ≥ 50), the rest folded in as a
-    // maintenance batch (centroid-replay assignment, cell-local
-    // appends, NO re-fit), then probe-all search — candidates = the
-    // whole maintained zone, so the result ≡ brute force over the
-    // full corpus regardless of the partial fit (the q53/q163
-    // contract, now through applyBatch)
-    "q170_ivf_maintained" -> ((s: SparkSession, d: String) => {
-      val root = graft.util.Scratch.memoZone(s, "ivf-maint",
-        s"ivf-maint:$d") { p =>
-        val all = corpus(s, d)
-        all.where(col("vec_id") >= 50)
-          .write.mode("overwrite").parquet(s"$p/partial/embeddings.parquet")
-        IvfServe.build(s, s"$p/partial", s"$p/zone")
-        IvfServe.applyBatch(s, s"$p/zone",
-          all.where(col("vec_id") < 50)): Unit
-      }
-      val q = corpus(s, d).where(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      IvfServe.search(s, s"$root/zone", q, k = 5, nProbe = IvfCells)
-    }),
-    "q107_embedding_clusters" -> (embeddingClusters _),
-    "q309_scaled_neardup" -> (scaledNearDup _))
-
   /** The ±1 projection matrix as a DuckDB VALUES relation `proj(b, p)`
     * — generated from [[projections]] itself so the oracle can never
     * drift from the Spark-side constants. */
@@ -1738,10 +1672,10 @@ object Similarity {
        |SELECT query_id, neighbor_id, cosine, rank FROM ranked
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // the q37 pair oracle embedded verbatim; vectors re-attached as
     // the c/q aliases the shared int8 dot spelling expects
-    "q256_text_embed_align" ->
+    Query("q256_text_embed_align", textEmbedAlign(_, _),
       s"""WITH $int8CtesSql,
          |pr AS MATERIALIZED (
          |  SELECT id1, id2 FROM (
@@ -1758,13 +1692,13 @@ object Similarity {
          |  CAST(sum(CASE WHEN cos > 0.0 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_pos_cos,
          |  min(cos) AS min_cos, max(cos) AS max_cos
-         |FROM sc""".stripMargin,
-    "q251_knn_outliers" ->
+         |FROM sc""".stripMargin),
+    Query("q251_knn_outliers", knnOutliers(_, _),
       s"""WITH $knnGraphCtesSql
          |SELECT query_id AS vec_id, approx_cos AS kth_cos
          |FROM ranked WHERE rank = $GraphK
-         |ORDER BY kth_cos ASC, vec_id LIMIT $OutlierM""".stripMargin,
-    "q175_semantic_decontam" ->
+         |ORDER BY kth_cos ASC, vec_id LIMIT $OutlierM""".stripMargin),
+    Query("q175_semantic_decontam", semanticDecontam(_, _),
       s"""WITH $int8CtesSql,
          |ev0 AS (
          |  SELECT vec_id,
@@ -1789,8 +1723,8 @@ object Similarity {
          |SELECT tr.vec_id,
          |  coalesce(h.n_eval_hits, 0) AS n_eval_hits, h.max_cos,
          |  coalesce(h.n_eval_hits, 0) > 0 AS flagged
-         |FROM tr LEFT JOIN h USING (vec_id) ORDER BY tr.vec_id""".stripMargin,
-    "q148_hard_negatives" ->
+         |FROM tr LEFT JOIN h USING (vec_id) ORDER BY tr.vec_id""".stripMargin),
+    Query("q148_hard_negatives", hardNegatives(_, _),
       s"""WITH scored AS (
          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          |    c.label AS neg_label,
@@ -1805,15 +1739,51 @@ object Similarity {
          |  FROM scored
          |)
          |SELECT query_id, neighbor_id, neg_label, cosine, rank
-         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q50_knn_brute" -> bruteTopkSql,
-    "q312_dim_ablation" -> dimAblationSql,
-    "q53_knn_ivf" -> bruteTopkSql,
-    "q163_ivf_served" -> bruteTopkSql,
-    "q170_ivf_maintained" -> bruteTopkSql,
+         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    Query("q50_knn_brute", knnBrute(_, _), bruteTopkSql),
+    Query("q312_dim_ablation", dimAblation(_, _), dimAblationSql),
+    // Exact mode (probe all cells): the full IVF machinery runs, and
+    // the result ≡ brute force, so the k-means-free oracle applies.
+    Query("q53_knn_ivf", knnIvf(_, _, nCells = IvfCells, nProbe = IvfCells),
+      bruteTopkSql),
+    // the BUILD→WRITE→SERVE round trip under the hash gate: probe-all
+    // from the cell-partitioned zone ≡ brute force (the q53 contract,
+    // now including the parquet partitioning round trip)
+    Query("q163_ivf_served", (s, d) => {
+      // zone lives under the managed scratch root (memoized per dir):
+      // repeated gate runs serve ONE built artifact, and the copy is
+      // reclaimed by Scratch.clear / JVM-exit cleanup instead of
+      // leaking a corpus copy per invocation
+      val zoneDir = graft.util.Scratch.memoZone(s, "ivf-serve",
+        s"ivf-serve:$d")(p => IvfServe.build(s, d, p))
+      val q = corpus(s, d).where(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      IvfServe.search(s, zoneDir, q, k = 5, nProbe = IvfCells)
+    }, bruteTopkSql),
+    // the INCREMENTAL serve path under the hash gate: zone built on a
+    // partial corpus (vec_id ≥ 50), the rest folded in as a
+    // maintenance batch (centroid-replay assignment, cell-local
+    // appends, NO re-fit), then probe-all search — candidates = the
+    // whole maintained zone, so the result ≡ brute force over the
+    // full corpus regardless of the partial fit (the q53/q163
+    // contract, now through applyBatch)
+    Query("q170_ivf_maintained", (s, d) => {
+      val root = graft.util.Scratch.memoZone(s, "ivf-maint",
+        s"ivf-maint:$d") { p =>
+        val all = corpus(s, d)
+        all.where(col("vec_id") >= 50)
+          .write.mode("overwrite").parquet(s"$p/partial/embeddings.parquet")
+        IvfServe.build(s, s"$p/partial", s"$p/zone")
+        IvfServe.applyBatch(s, s"$p/zone",
+          all.where(col("vec_id") < 50)): Unit
+      }
+      val q = corpus(s, d).where(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      IvfServe.search(s, s"$root/zone", q, k = 5, nProbe = IvfCells)
+    }, bruteTopkSql),
     // fixed-point centroid replay: 10-bit rounds, BIGINT sums/dots,
     // one double cosine expression
-    "q164_domain_similarity" ->
+    Query("q164_domain_similarity", domainSimilarity(_, _),
       s"""WITH fx AS (
          |  SELECT label, u.d, CAST(round(CAST(u.x AS DOUBLE) * 1024)
          |    AS BIGINT) AS r
@@ -1842,10 +1812,10 @@ object Similarity {
          |    [b.cv[i] * b.cv[i] for i in range(1, ${Dim + 1})]),
          |    (acc, v) -> acc + v) AS DOUBLE))) AS cos_centroid
          |FROM wn a JOIN wn b ON a.label < b.label
-         |ORDER BY label_a, label_b""".stripMargin,
+         |ORDER BY label_a, label_b""".stripMargin),
     // full int8 replay: float max-abs scale, double-divide round-half-
     // away to TINYINT codes, exact BIGINT dot, one de-scale expression
-    "q143_knn_quantized" ->
+    Query("q143_knn_quantized", knnQuantized(_, _),
       s"""WITH $int8CtesSql, scored AS (
          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          |    $int8DotSql AS qdot,
@@ -1862,13 +1832,13 @@ object Similarity {
          |  FROM scored
          |)
          |SELECT query_id, neighbor_id, qdot, approx_cos, rank FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
     // the exact graph: q143's replay without the anchor-set filter
-    "q155_knn_graph" ->
+    Query("q155_knn_graph", knnGraph(_, _),
       s"""WITH $knnGraphCtesSql
          |SELECT query_id, neighbor_id, qdot, approx_cos, rank
          |FROM ranked WHERE rank <= $GraphK
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
     // full banded-pipeline replay: SRP signatures → band buckets
     // (sorted ids) → per-anchor capped candidates (the rank
     // arithmetic below ≡ Spark's slice(filter(ids, y != x), 1, cap)
@@ -1878,7 +1848,7 @@ object Similarity {
     // the banded side replays the CORPUS-SCALED banding at the shape
     // both gate SFs derive — scaledBandShape(500) = scaledBandShape
     // (2000) = (8 bands, 4 bits) — the q309 pinned-shape precedent
-    "q168_knn_banded_witness" ->
+    Query("q168_knn_banded_witness", knnBandedWitness(_, _),
       s"""WITH proj(b, p) AS (VALUES ${projScaledValues(ScaledBands * 4)}),
          |emb AS (SELECT vec_id, embedding FROM embeddings),
          |banded AS (
@@ -1949,12 +1919,12 @@ object Similarity {
          |  tot.recall_overall,
          |  tot.recall_overall >= $BandedRecallFloor AS recall_ok
          |FROM per, tot
-         |ORDER BY query_id""".stripMargin,
+         |ORDER BY query_id""".stripMargin),
     // full unrolled replay of the beam walk: entry → (expand beam
     // through the materialized q155 edges → exact int8 rescore →
     // top-beam) × WalkRounds → final top-k (self excluded) →
     // exact-top-k membership + pinned overall recall
-    "q198_graph_search" ->
+    Query("q198_graph_search", graphSearch(_, _),
       s"""WITH $knnEdgesSql,
          |exactk AS MATERIALIZED (
          |  SELECT query_id, neighbor_id FROM ranked
@@ -1995,10 +1965,10 @@ object Similarity {
          |  in_exact, recall_overall,
          |  recall_overall >= $WalkRecallFloor AS recall_ok
          |FROM fl, tot
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
     // symmetrized distinct edges → edge-iterator two-join (each
     // x<y<z once) → per-node explode + degree → coefficient ratios
-    "q203_triangle_stats" ->
+    Query("q203_triangle_stats", triangleStats(_, _),
       s"""WITH $knnEdgesSql,
          |und AS MATERIALIZED (
          |  SELECT DISTINCT least(query_id, neighbor_id) AS a,
@@ -2038,10 +2008,10 @@ object Similarity {
          |LEFT JOIN dg ON dg.id = v.vec_id
          |LEFT JOIN pn ON pn.id = v.vec_id
          |CROSS JOIN tot
-         |ORDER BY id""".stripMargin,
+         |ORDER BY id""".stripMargin),
     // graph edges above τ, symmetrized, closed with the q98-family
     // recursive CTE; min-id survivor per component
-    "q156_semantic_dedup" ->
+    Query("q156_semantic_dedup", semanticDedup(_, _),
       s"""WITH RECURSIVE $knnGraphCtesSql, g AS (
          |  SELECT DISTINCT least(query_id, neighbor_id) AS a,
          |    greatest(query_id, neighbor_id) AS b
@@ -2055,8 +2025,8 @@ object Similarity {
          |)
          |SELECT id AS vec_id, min(label) AS cluster_id,
          |  (id = min(label)) AS keep
-         |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin,
-    "q51_knn_lsh" ->
+         |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin),
+    Query("q51_knn_lsh", knnLsh(_, _),
       (sigCtes +
         s""",
          |qb AS (SELECT vec_id AS query_id, band, bandVal
@@ -2080,11 +2050,11 @@ object Similarity {
          |  FROM scored
          |)
          |SELECT query_id, neighbor_id, cosine, rank FROM ranked
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
     // q51's chain with the probe set widened to Hamming-1 band
     // values; single-probe and exact rankings re-derived for the
     // witness columns (`no_worse` is structural — see scaladoc)
-    "q194_multiprobe_lsh" ->
+    Query("q194_multiprobe_lsh", knnLshMultiProbe(_, _),
       (sigCtes +
         s""",
          |qb AS (SELECT vec_id AS query_id, band, bandVal
@@ -2156,8 +2126,8 @@ object Similarity {
          |LEFT JOIN hm ON hm.query_id = m.query_id
          |LEFT JOIN hs ON hs.query_id = m.query_id
          |WHERE m.rank <= 5
-         |ORDER BY m.query_id, m.rank""".stripMargin),
-    "q52_embedding_neardup" ->
+         |ORDER BY m.query_id, m.rank""".stripMargin)),
+    Query("q52_embedding_neardup", nearDupPairs(_, _),
       (sigCtes +
         s""",
          |cand AS (
@@ -2173,10 +2143,10 @@ object Similarity {
          |            JOIN emb e2 ON e2.vec_id = id2
          |)
          |SELECT id1, id2, cosine FROM scored
-         |WHERE cosine >= 0.45 ORDER BY id1, id2""".stripMargin),
+         |WHERE cosine >= 0.45 ORDER BY id1, id2""".stripMargin)),
     // the scaled path's fixed 8×4 shape: unpacked band values over 32
     // projections (bands 0–3 ≡ the q52 signature's draw)
-    "q309_scaled_neardup" ->
+    Query("q309_scaled_neardup", scaledNearDup(_, _),
       s"""WITH proj(b, p) AS (VALUES ${projScaledValues(ScaledBands * 4)}),
          |emb AS (SELECT vec_id, embedding FROM embeddings),
          |bnd AS (
@@ -2199,8 +2169,8 @@ object Similarity {
          |            JOIN emb e2 ON e2.vec_id = id2
          |)
          |SELECT id1, id2, cosine FROM scored
-         |WHERE cosine >= 0.45 ORDER BY id1, id2""".stripMargin,
-    "q107_embedding_clusters" ->
+         |WHERE cosine >= 0.45 ORDER BY id1, id2""".stripMargin),
+    Query("q107_embedding_clusters", embeddingClusters(_, _),
       (sigCtes.replaceFirst("^WITH ", "WITH RECURSIVE ") +
         s""",
          |cand AS (
@@ -2227,5 +2197,5 @@ object Similarity {
          |)
          |SELECT id AS vec_id, min(label) AS cluster_id,
          |  (id = min(label)) AS keep
-         |FROM reach GROUP BY id ORDER BY id""".stripMargin))
+         |FROM reach GROUP BY id ORDER BY id""".stripMargin)))
 }

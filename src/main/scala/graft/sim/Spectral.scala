@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Checkpoints
 
 /** Spectral embedding analysis: exact fixed-point covariance and a
@@ -49,7 +49,7 @@ import graft.util.Checkpoints
   * (raise_error on the 2080-row relation) past the centered bound;
   * beyond it, widen to per-shard decimal accumulation.
   */
-object Spectral {
+object Spectral extends QueryModule {
 
   /** 10-bit fixed point — the q143/q164 quantization contract. */
   val Fp = 1024
@@ -880,9 +880,9 @@ object Spectral {
     * contingency rollup (≤ |k₁|·|k₂| rows) → constant-size sums; the
     * label derivations ride their own memoized zones. */
   def randIndex(s: SparkSession, dir: String): DataFrame = {
-    val a = graft.sim.KMeans.queries("q173_kmeans_topics")(s, dir)
+    val a = KMeans.kmeansTopics(s, dir)
       .select(col("vec_id"), col("cluster").as("c1"))
-    val b = Similarity.queries("q107_embedding_clusters")(s, dir)
+    val b = Similarity.embeddingClusters(s, dir)
       .select(col("vec_id"), col("cluster_id").as("c2"))
     val ct = a.join(b, "vec_id")
       .groupBy(col("c1"), col("c2")).agg(count(lit(1)).as("nij"))
@@ -901,23 +901,8 @@ object Spectral {
           expr("(n * (n - 1)) div 2").cast("double")).as("rand_index"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q285_link_prediction" -> (linkPrediction _),
-    "q300_cluster_purity" -> (clusterPurity _),
-    "q306_knn_homophily" -> (knnHomophily _),
-    "q288_modularity" -> (modularity _),
-    "q289_assortativity" -> (assortativity _),
-    "q275_seed_distance" -> (seedDistance _),
-    "q276_personalized_pagerank" -> (personalizedPagerank _),
-    "q268_label_prop" -> (labelProp _),
-    "q237_rand_index" -> (randIndex _),
-    "q232_kcore" -> (kCore _),
-    "q176_embedding_covariance" -> (covarianceMatrix _),
-    "q177_pca_project" -> (pcaProject _),
-    "q180_pagerank_centrality" -> (pagerankCentrality _))
-
-  val oracle: Map[String, String] = Map(
-    "q306_knn_homophily" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q306_knn_homophily", knnHomophily(_, _),
       s"""WITH ${Similarity.knnEdgesSql}
          |SELECT a.source, CAST(count(*) AS BIGINT) AS n_edges,
          |  CAST(sum(CASE WHEN a.source = b.source THEN 1 ELSE 0 END)
@@ -927,8 +912,8 @@ object Spectral {
          |FROM edges e
          |JOIN documents a ON a.doc_id = e.query_id
          |JOIN documents b ON b.doc_id = e.neighbor_id
-         |GROUP BY 1 ORDER BY a.source""".stripMargin,
-    "q300_cluster_purity" ->
+         |GROUP BY 1 ORDER BY a.source""".stripMargin),
+    Query("q300_cluster_purity", clusterPurity(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |und AS MATERIALIZED (
          |  SELECT query_id AS src, neighbor_id AS dst FROM edges
@@ -950,8 +935,8 @@ object Spectral {
          |SELECT lbl AS community, csize, source AS majority_source,
          |  nij AS n_majority,
          |  CAST(nij AS DOUBLE) / CAST(csize AS DOUBLE) AS purity
-         |FROM rk WHERE rn = 1 ORDER BY community""".stripMargin,
-    "q288_modularity" ->
+         |FROM rk WHERE rn = 1 ORDER BY community""".stripMargin),
+    Query("q288_modularity", modularity(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |und AS MATERIALIZED (
          |  SELECT query_id AS src, neighbor_id AS dst FROM edges
@@ -983,8 +968,8 @@ object Spectral {
          |    * (CAST(ds.dsum AS DOUBLE) / CAST(m2t.m2 AS DOUBLE))
          |    AS q_c
          |FROM ds LEFT JOIN intra i ON i.lbl = ds.lbl, m2t
-         |ORDER BY community""".stripMargin,
-    "q289_assortativity" ->
+         |ORDER BY community""".stripMargin),
+    Query("q289_assortativity", assortativity(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |und AS MATERIALIZED (
          |  SELECT query_id AS src, neighbor_id AS dst FROM edges
@@ -1009,8 +994,8 @@ object Spectral {
          |  CAST(n * sxy - sx * sy AS DOUBLE)
          |    / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
          |      * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) AS r
-         |FROM sm""".stripMargin,
-    "q285_link_prediction" ->
+         |FROM sm""".stripMargin),
+    Query("q285_link_prediction", linkPrediction(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |und AS MATERIALIZED (
          |  SELECT query_id AS src, neighbor_id AS dst FROM edges
@@ -1033,8 +1018,8 @@ object Spectral {
          |FROM sc
          |WHERE NOT EXISTS (SELECT 1 FROM und u
          |  WHERE u.src = sc.x AND u.dst = sc.y)
-         |ORDER BY ra_fp DESC, id1, id2 LIMIT $RaTopK""".stripMargin,
-    "q275_seed_distance" ->
+         |ORDER BY ra_fp DESC, id1, id2 LIMIT $RaTopK""".stripMargin),
+    Query("q275_seed_distance", seedDistance(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |und AS MATERIALIZED (
          |  SELECT query_id AS src, neighbor_id AS dst FROM edges
@@ -1048,8 +1033,8 @@ object Spectral {
          |$bfsIterSql
          |SELECT id AS vec_id, ${seedSqlFor("id")} AS is_seed,
          |  d AS hops
-         |FROM d$BfsRounds ORDER BY vec_id""".stripMargin,
-    "q276_personalized_pagerank" ->
+         |FROM d$BfsRounds ORDER BY vec_id""".stripMargin),
+    Query("q276_personalized_pagerank", personalizedPagerank(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |nodes AS MATERIALIZED (
          |  SELECT vec_id AS id, ${seedSqlFor("vec_id")} AS seed
@@ -1063,8 +1048,8 @@ object Spectral {
          |$pprIterSql
          |SELECT n.id AS vec_id, n.seed AS is_seed, p.r AS ppr_fp
          |FROM p$PrIters p JOIN nodes n ON n.id = p.id
-         |ORDER BY vec_id""".stripMargin,
-    "q268_label_prop" ->
+         |ORDER BY vec_id""".stripMargin),
+    Query("q268_label_prop", labelProp(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |und AS MATERIALIZED (
          |  SELECT query_id AS src, neighbor_id AS dst FROM edges
@@ -1078,10 +1063,10 @@ object Spectral {
          |  FROM l$LpRounds GROUP BY 1)
          |SELECT l.id AS vec_id, l.lbl AS community, sz.csize
          |FROM l$LpRounds l JOIN sz ON sz.lbl = l.lbl
-         |ORDER BY vec_id""".stripMargin,
+         |ORDER BY vec_id""".stripMargin),
     // both clusterings' EXISTING oracle strings embedded verbatim —
     // the agreement metric cannot drift from its inputs
-    "q237_rand_index" ->
+    Query("q237_rand_index", randIndex(_, _),
       s"""WITH a AS MATERIALIZED (
          |  SELECT vec_id, cluster AS c1 FROM (
          |${graft.sim.KMeans.oracle("q173_kmeans_topics")}
@@ -1112,8 +1097,8 @@ object Spectral {
          |    - r.s_rows - c.s_cols AS DOUBLE)
          |    / CAST((cells.n * (cells.n - 1)) // 2 AS DOUBLE)
          |    AS rand_index
-         |FROM cells, r, c""".stripMargin,
-    "q232_kcore" ->
+         |FROM cells, r, c""".stripMargin),
+    Query("q232_kcore", kCore(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |und AS MATERIALIZED (
          |  SELECT e1.query_id AS src, e1.neighbor_id AS dst
@@ -1134,12 +1119,12 @@ object Spectral {
          |FROM nodes n
          |LEFT JOIN a$CoreRounds a ON a.id = n.id
          |LEFT JOIN df ON df.id = n.id
-         |ORDER BY vec_id""".stripMargin,
-    "q176_embedding_covariance" ->
+         |ORDER BY vec_id""".stripMargin),
+    Query("q176_embedding_covariance", covarianceMatrix(_, _),
       s"""WITH $covSql
          |SELECT i, j, n, s_i, s_j, s_ij FROM cov ORDER BY i, j
-         |""".stripMargin,
-    "q177_pca_project" ->
+         |""".stripMargin),
+    Query("q177_pca_project", pcaProject(_, _),
       s"""WITH $covSql,
          |cfull AS MATERIALIZED (
          |  SELECT i, j, n * s_ij - s_i * s_j AS c FROM cov
@@ -1163,8 +1148,8 @@ object Spectral {
          |FROM u JOIN v$PcaIters vv ON vv.d = u.d
          |JOIN embeddings e ON e.vec_id = u.vec_id
          |GROUP BY 1, 2 ORDER BY u.vec_id
-         |""".stripMargin,
-    "q180_pagerank_centrality" ->
+         |""".stripMargin),
+    Query("q180_pagerank_centrality", pagerankCentrality(_, _),
       s"""WITH ${Similarity.knnEdgesSql},
          |nodes AS MATERIALIZED (SELECT vec_id AS id FROM embeddings),
          |deg AS MATERIALIZED (
@@ -1174,5 +1159,5 @@ object Spectral {
          |  SELECT id, CAST($PrScale AS BIGINT) AS r FROM nodes),
          |$prIterSql
          |SELECT id AS vec_id, r AS pr_fp FROM r$PrIters ORDER BY id
-         |""".stripMargin)
+         |""".stripMargin))
 }

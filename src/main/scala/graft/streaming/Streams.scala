@@ -164,50 +164,6 @@ object Streams {
       .toDF("user_id", "n", "sum", "closed")
   }
 
-  /** The SAME running-totals state machine on `transformWithState`
-    * (Spark 4's stateful-v2 API — named typed state handles created
-    * in `init`, TTL config, timer surface) in its no-timeout mode.
-    * Output contract is identical to [[runningTotalsWithTimeout]]
-    * (StreamsSpec pins drain equality), so operators migrate between
-    * the APIs as a mechanical swap; state is still hash-partitioned
-    * by key in the state store and TTL-boundable via
-    * [[org.apache.spark.sql.streaming.TTLConfig]]. Requires the
-    * RocksDB state store provider (named state = column families,
-    * which the default HDFS-backed store rejects) — set
-    * `spark.sql.streaming.stateStore.providerClass` before starting
-    * the query, as the spec does. */
-  def runningTotalsV2(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TTLConfig,
-      TimeMode, TimerValues, ValueState}
-    import org.apache.spark.sql.Encoders
-    val spark = events.sparkSession
-    import spark.implicits._
-    class Totals extends StatefulProcessor[
-        Long, (Long, Double), (Long, Long, Double, Boolean)] {
-      @transient private var st: ValueState[(Long, Double)] = _
-      override def init(outputMode: OutputMode,
-                        timeMode: TimeMode): Unit =
-        st = getHandle.getValueState[(Long, Double)]("totals",
-          Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble),
-          TTLConfig.NONE)
-      override def handleInputRows(user: Long,
-          rows: Iterator[(Long, Double)], tv: TimerValues)
-          : Iterator[(Long, Long, Double, Boolean)] = {
-        val (n0, s0) = if (st.exists()) st.get() else (0L, 0.0)
-        val batch = rows.toSeq
-        val n = n0 + batch.size
-        val sum = s0 + batch.map(_._2).sum
-        st.update((n, sum))
-        Iterator((user, n, sum, false))
-      }
-    }
-    events.select(col("user_id"), col("value")).as[(Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(new Totals, TimeMode.None(),
-        OutputMode.Append())
-      .toDF("user_id", "n", "sum", "closed")
-  }
-
   /** Streaming NEAR-dup detection — the cross-batch LSH filter a
     * continuously-ingesting corpus needs: a doc arriving today that
     * near-duplicates one ingested last week is flagged the moment it

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Query, QueryModule}
 import graft.util.{Checkpoints, Tokens}
 
 /** Byte-pair-encoding tokenizer TRAINING — the producer for the vocab
@@ -25,7 +26,7 @@ import graft.util.{Checkpoints, Tokens}
   * Determinism: ties on pair count break lexicographically, so the
   * learned merge sequence is a pure function of the corpus.
   */
-object Bpe {
+object Bpe extends QueryModule {
 
   /** One learned merge: rank = order learned, (left, right) → fused. */
   final case class Merge(rank: Int, left: String, right: String)
@@ -221,10 +222,6 @@ object Bpe {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q169_bpe_encode" -> (encodeFrozen _),
-    "q190_bpe_fertility" -> (fertilityBySource _))
-
   private def sqlLit(s: String): String =
     "'" + s.replace("'", "''") + "'"
 
@@ -311,12 +308,12 @@ object Bpe {
          |  FROM documents d LEFT JOIN docstats s USING (doc_id))""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q169_bpe_encode" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q169_bpe_encode", encodeFrozen(_, _),
       s"""WITH $encodeCtesSql
          |SELECT doc_id, n_words, n_chars, n_bpe_tokens
-         |FROM percdoc ORDER BY doc_id""".stripMargin,
-    "q190_bpe_fertility" ->
+         |FROM percdoc ORDER BY doc_id""".stripMargin),
+    Query("q190_bpe_fertility", fertilityBySource(_, _),
       s"""WITH $encodeCtesSql,
          |bysrc AS (
          |  SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -330,5 +327,5 @@ object Bpe {
          |    AS fertility,
          |  CAST(n_bpe_tokens AS DOUBLE) / CAST(n_chars AS DOUBLE)
          |    AS tokens_per_char
-         |FROM bysrc ORDER BY source""".stripMargin)
+         |FROM bysrc ORDER BY source""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Checkpoints, Tokens}
 
 /** Corpus-relative document statistics — operators whose score for one
@@ -20,7 +20,7 @@ import graft.util.{Checkpoints, Tokens}
   * for fixed tf and needs no transcendentals. Consumers wanting the
   * float score compute it from the emitted (tf, df) pair.
   */
-object CorpusStats {
+object CorpusStats extends QueryModule {
 
   /** q104: top-k characteristic terms per document — highest in-doc
     * frequency, then rarest in the corpus (df ASC), then term. The
@@ -1340,54 +1340,6 @@ object CorpusStats {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q205_ppl_buckets" -> ((s: SparkSession, d: String) =>
-      pplBuckets(s, d)),
-    "q171_dsir_weights" -> ((s: SparkSession, d: String) =>
-      dsirWeights(s, d)),
-    "q172_bigram_lm" -> ((s: SparkSession, d: String) =>
-      bigramLm(s, d)),
-    "q185_trigram_backoff" -> ((s: SparkSession, d: String) =>
-      trigramPpl(s, d).orderBy("doc_id")),
-    "q153_ict_pairs" -> ((s: SparkSession, d: String) =>
-      ictPairs(s, d)),
-    "q149_repetition_filter" -> ((s: SparkSession, d: String) =>
-      repetitionFilter(s, d)),
-    "q150_keepfirst_scrub" -> ((s: SparkSession, d: String) =>
-      keepFirstScrub(s, d)),
-    "q151_surprisal" -> ((s: SparkSession, d: String) =>
-      surprisalFilter(s, d)),
-    "q154_linear_quality" -> ((s: SparkSession, d: String) =>
-      linearQuality(s, d)),
-    "q158_shard_manifest" -> ((s: SparkSession, d: String) =>
-      shardManifest(s, d)),
-    "q159_length_quantiles" -> ((s: SparkSession, d: String) =>
-      lengthQuantiles(s, d)),
-    "q162_pmi_collocations" -> ((s: SparkSession, d: String) =>
-      pmiCollocations(s, d)),
-    "q133_freq_items"     -> ((s: SparkSession, d: String) =>
-      freqItemsWitness(s, d)),
-    "q145_exact_span_scrub" -> ((s: SparkSession, d: String) =>
-      exactSpanScrub(s, d)),
-    "q269_dup_span_report" -> ((s: SparkSession, d: String) =>
-      dupSpanReport(s, d)),
-    "q140_dup_grams"      -> ((s: SparkSession, d: String) =>
-      dupGramFraction(s, d)),
-    "q313_dup_substrings" -> ((s: SparkSession, d: String) =>
-      dupSubstrings(s, d)),
-    "q104_tfidf_terms"    -> ((s: SparkSession, d: String) =>
-      tfidfTopTerms(s, d)),
-    "q105_bigram_novelty" -> (bigramNovelty _),
-    "q106_cdc_chunks"     -> (cdcChunks _),
-    "q110_source_scorecard" -> (sourceScorecard _),
-    "q111_vocab_coverage" -> ((s: SparkSession, d: String) =>
-      vocabCoverage(s, d)),
-    "q112_sequence_pack"  -> ((s: SparkSession, d: String) =>
-      sequencePack(s, d)),
-    "q113_span_scrub"     -> (sharedSpanScrub _),
-    "q116_length_batches" -> ((s: SparkSession, d: String) =>
-      lengthBatches(s, d)))
-
   /** Shared CDC-chunking CTE prefix (documents → per-token chunk_idx)
     * for the q106/q113 oracles — one spelling of boundary placement so
     * the two can never drift. */
@@ -1469,8 +1421,8 @@ object CorpusStats {
         |      AS mean_bits
         |  FROM sc GROUP BY doc_id, lang)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q171_dsir_weights" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q171_dsir_weights", dsirWeights(_, _),
       (raw"""WITH d AS (
         |  SELECT doc_id, lang,
         |    string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
@@ -1507,8 +1459,8 @@ object CorpusStats {
         |  FROM hc CROSS JOIN n)
         |SELECT doc_id, n_tokens, iw_q16,
         |  cw >= thr.p75 AS selected
-        |FROM dc CROSS JOIN thr ORDER BY doc_id""".stripMargin),
-    "q172_bigram_lm" ->
+        |FROM dc CROSS JOIN thr ORDER BY doc_id""".stripMargin)),
+    Query("q172_bigram_lm", bigramLm(_, _),
       raw"""WITH d AS (
         |  SELECT doc_id, lang,
         |    string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
@@ -1537,12 +1489,12 @@ object CorpusStats {
         |  CAST(sum(bits) AS BIGINT) AS sum_bits,
         |  CAST(sum(bits) AS BIGINT) / CAST(count(*) AS BIGINT)
         |    AS mean_bits
-        |FROM sc GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin,
-    "q185_trigram_backoff" ->
+        |FROM sc GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin),
+    Query("q185_trigram_backoff", (s, d) => trigramPpl(s, d).orderBy("doc_id"),
       (trigramSqlCtes +
         "\nSELECT doc_id, lang, n_trigrams, sum_bits, mean_bits" +
-        "\nFROM ppl ORDER BY doc_id"),
-    "q205_ppl_buckets" ->
+        "\nFROM ppl ORDER BY doc_id")),
+    Query("q205_ppl_buckets", pplBuckets(_, _),
       (trigramSqlCtes + raw""",
         |src AS (SELECT doc_id, source FROM documents),
         |r AS (
@@ -1558,10 +1510,10 @@ object CorpusStats {
         |       WHEN r.ppl_rank * 3 <= 2 * cnt.n THEN 'middle'
         |       ELSE 'tail' END AS bucket
         |FROM r JOIN cnt ON cnt.source = r.source
-        |ORDER BY r.doc_id""".stripMargin),
+        |ORDER BY r.doc_id""".stripMargin)),
     // the n<2/n<3 CASE arms mirror Tokens.ngramsOf's whole-text
     // fallback for short docs exactly
-    "q149_repetition_filter" ->
+    Query("q149_repetition_filter", repetitionFilter(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
         |  FROM documents),
@@ -1605,8 +1557,8 @@ object CorpusStats {
         |  (top_token_count / n_tokens > 0.2 OR
         |   top_bigram_count / n_bigrams > 0.18 OR
         |   dup_trigram_count / n_trigrams > 0.3) AS flagged
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "q153_ict_pairs" ->
+        |FROM p ORDER BY doc_id""".stripMargin),
+    Query("q153_ict_pairs", ictPairs(_, _),
       (cdcCtes +
         raw""",
         |ch AS (
@@ -1617,8 +1569,8 @@ object CorpusStats {
         |  a.ctext AS anchor, b.ctext AS positive
         |FROM ch a JOIN ch b
         |  ON a.doc_id = b.doc_id AND a.chunk_idx + 1 = b.chunk_idx
-        |ORDER BY a.doc_id, j""".stripMargin),
-    "q162_pmi_collocations" ->
+        |ORDER BY a.doc_id, j""".stripMargin)),
+    Query("q162_pmi_collocations", pmiCollocations(_, _),
       raw"""WITH d AS (
         |  SELECT doc_id,
         |    string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
@@ -1644,8 +1596,8 @@ object CorpusStats {
         |JOIN uni uy ON uy.t = bc.y
         |CROSS JOIN tt CROSS JOIN t2
         |WHERE bc.cxy >= 5
-        |ORDER BY pmi_bits DESC, bigram LIMIT 50""".stripMargin,
-    "q159_length_quantiles" ->
+        |ORDER BY pmi_bits DESC, bigram LIMIT 50""".stripMargin),
+    Query("q159_length_quantiles", lengthQuantiles(_, _),
       raw"""WITH d AS (
         |  SELECT source,
         |    CAST(coalesce(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')), 0)
@@ -1667,8 +1619,8 @@ object CorpusStats {
         |  min(CASE WHEN cum >= (tot * 95 + 99) // 100 THEN n END) AS p95,
         |  max(n) AS max_tokens
         |FROM cc JOIN t USING (source) GROUP BY cc.source, t.tot
-        |ORDER BY source""".stripMargin,
-    "q158_shard_manifest" ->
+        |ORDER BY source""".stripMargin),
+    Query("q158_shard_manifest", shardManifest(_, _),
       raw"""WITH d AS (
         |  SELECT doc_id,
         |    CAST(coalesce(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')), 0)
@@ -1691,8 +1643,8 @@ object CorpusStats {
         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
         |  CAST(min(start_off) AS BIGINT) AS first_off,
         |  CAST(max(start_off + n_tokens) AS BIGINT) AS end_off
-        |FROM a GROUP BY shard_id ORDER BY shard_id""".stripMargin,
-    "q154_linear_quality" ->
+        |FROM a GROUP BY shard_id ORDER BY shard_id""".stripMargin),
+    Query("q154_linear_quality", linearQuality(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -1705,8 +1657,8 @@ object CorpusStats {
         |  CAST(sum(wt) AS BIGINT) AS w_sum,
         |  CAST(sum(wt) AS BIGINT) / CAST(count(*) AS BIGINT) AS mean_w,
         |  sum(wt) >= 0 AS keep
-        |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q151_surprisal" ->
+        |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q151_surprisal", surprisalFilter(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
@@ -1722,11 +1674,11 @@ object CorpusStats {
         |  CAST(sum(bits) AS BIGINT) AS sum_bits,
         |  CAST(sum(bits) AS BIGINT) / CAST(count(*) AS BIGINT)
         |    AS mean_bits
-        |FROM b GROUP BY 1 ORDER BY doc_id""".stripMargin,
+        |FROM b GROUP BY 1 ORDER BY doc_id""".stripMargin),
     // survivor = lexicographic min (doc_id, chunk_idx) per
     // fingerprint, spelled as the two-level min the struct-min
     // computes on the Spark side
-    "q150_keepfirst_scrub" ->
+    Query("q150_keepfirst_scrub", keepFirstScrub(_, _),
       (cdcCtes +
         raw""",
         |ch AS (
@@ -1754,8 +1706,8 @@ object CorpusStats {
         |    FILTER (WHERE ch.doc_id = s2.sdoc AND ch.chunk_idx = s2.sj),
         |    ' '), '') AS cleaned_text
         |FROM ch JOIN s2 USING (chunk_hash)
-        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin),
-    "q133_freq_items" ->
+        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin)),
+    Query("q133_freq_items", freqItemsWitness(_, _),
       raw"""WITH tok AS (
         |  SELECT unnest(string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+'))
         |    AS t
@@ -1764,14 +1716,14 @@ object CorpusStats {
         |      FROM tok GROUP BY 1),
         |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok)
         |SELECT t AS token, cnt, TRUE AS captured
-        |FROM e, n WHERE cnt * 50 > n ORDER BY token""".stripMargin,
+        |FROM e, n WHERE cnt * 50 > n ORDER BY token""".stripMargin),
     // coverage replay: token at pos is scrubbed iff a cross-doc
     // shared 5-gram starts at any of pos-4..pos
     // brute-force spelling of the q313 contract: enumerate EVERY
     // m-gram for m in [minLen, window], keep the duplicated ones
     // (count >= 2 over all occurrences — within-doc repeats count),
     // take per-position max m, group into the substring inventory
-    "q313_dup_substrings" ->
+    Query("q313_dup_substrings", dupSubstrings(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
         |  FROM documents),
@@ -1795,9 +1747,9 @@ object CorpusStats {
         |  CAST(count(*) AS BIGINT) AS n_starts,
         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
         |FROM subs GROUP BY 1, 2
-        |ORDER BY tok_len DESC, sub""".stripMargin,
+        |ORDER BY tok_len DESC, sub""".stripMargin),
     // the q145 coverage CTE chain verbatim, then gaps-and-islands
-    "q269_dup_span_report" ->
+    Query("q269_dup_span_report", dupSpanReport(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
         |  FROM documents),
@@ -1821,8 +1773,8 @@ object CorpusStats {
         |  CAST(max(pos) AS BIGINT) AS span_end,
         |  CAST(count(*) AS BIGINT) AS span_len
         |FROM isl GROUP BY doc_id, grp
-        |ORDER BY doc_id, span_start""".stripMargin,
-    "q145_exact_span_scrub" ->
+        |ORDER BY doc_id, span_start""".stripMargin),
+    Query("q145_exact_span_scrub", exactSpanScrub(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
         |  FROM documents),
@@ -1855,10 +1807,10 @@ object CorpusStats {
         |  CAST(len(w.w) AS BIGINT) - coalesce(a.n_kept, 0) AS n_scrubbed,
         |  coalesce(a.cleaned_text, '') AS cleaned_text
         |FROM w LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // all 5-gram OCCURRENCES (not distinct — within-doc repeats each
     // count), dup = gram appears in >1 distinct doc
-    "q140_dup_grams" ->
+    Query("q140_dup_grams", dupGramFraction(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
         |  FROM documents),
@@ -1880,8 +1832,8 @@ object CorpusStats {
         |  CAST(sum(CASE WHEN nd.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) /
         |    CAST(count(*) AS BIGINT) AS dup_fraction
         |FROM g JOIN nd USING (g)
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "q111_vocab_coverage" ->
+        |GROUP BY 1 ORDER BY doc_id""".stripMargin),
+    Query("q111_vocab_coverage", vocabCoverage(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+')) AS tok
@@ -1897,16 +1849,16 @@ object CorpusStats {
         |  FROM tok t LEFT JOIN vocab v USING (tok)
         |  GROUP BY t.doc_id)
         |SELECT doc_id, n_tokens, n_oov, n_oov / n_tokens AS oov_ratio
-        |FROM scored ORDER BY doc_id""".stripMargin,
-    "q110_source_scorecard" ->
+        |FROM scored ORDER BY doc_id""".stripMargin),
+    Query("q110_source_scorecard", sourceScorecard(_, _),
       raw"""SELECT source, count(*) AS n_docs,
         |  count(DISTINCT md5(text)) AS distinct_texts,
         |  (count(*) - count(DISTINCT md5(text))) / count(*) AS dup_ratio,
         |  CAST(sum(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+'))) AS BIGINT)
         |    / count(*) AS avg_tokens,
         |  CAST(sum(length(text)) AS BIGINT) / count(*) AS avg_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q104_tfidf_terms" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    Query("q104_tfidf_terms", tfidfTopTerms(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+')) AS term
@@ -1920,8 +1872,8 @@ object CorpusStats {
         |      ORDER BY tf.tf DESC, df.df ASC, tf.term ASC) AS rn
         |  FROM tf JOIN df USING (term))
         |SELECT doc_id, term, tf, df, rn FROM r
-        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin,
-    "q105_bigram_novelty" ->
+        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin),
+    Query("q105_bigram_novelty", bigramNovelty(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id,
         |    string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+') AS w
@@ -1946,8 +1898,8 @@ object CorpusStats {
         |  CAST(sum(CASE WHEN c.c <= 1 THEN 1 ELSE 0 END) AS BIGINT)
         |    / count(*) AS hapax_ratio
         |FROM bg b JOIN c USING (bg)
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
-    "q106_cdc_chunks" ->
+        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin),
+    Query("q106_cdc_chunks", cdcChunks(_, _),
       (cdcCtes +
         raw""",
         |ch AS (
@@ -1963,8 +1915,8 @@ object CorpusStats {
         |  CAST(sum(CASE WHEN sh.ndocs > 1 THEN 1 ELSE 0 END) AS BIGINT)
         |    / count(*) AS shared_ratio
         |FROM ch JOIN sh USING (chunk_hash)
-        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin),
-    "q113_span_scrub" ->
+        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin)),
+    Query("q113_span_scrub", sharedSpanScrub(_, _),
       (cdcCtes +
         raw""",
         |ch AS (
@@ -1985,8 +1937,8 @@ object CorpusStats {
         |  coalesce(array_to_string(list(ctext ORDER BY chunk_idx)
         |    FILTER (WHERE sh.ndocs = 1), ' '), '') AS cleaned_text
         |FROM ch JOIN sh USING (chunk_hash)
-        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin),
-    "q116_length_batches" ->
+        |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin)),
+    Query("q116_length_batches", lengthBatches(_, _),
       raw"""WITH d AS (
         |  SELECT doc_id,
         |    CAST(coalesce(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')), 0)
@@ -2006,8 +1958,8 @@ object CorpusStats {
         |SELECT doc_id, n_tokens, bucket, batch_no,
         |  CAST(max(n_tokens) OVER (PARTITION BY bucket, batch_no)
         |    - n_tokens AS BIGINT) AS pad
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "q112_sequence_pack" ->
+        |FROM b ORDER BY doc_id""".stripMargin),
+    Query("q112_sequence_pack", sequencePack(_, _),
       raw"""WITH d AS (
         |  SELECT doc_id,
         |    CAST(coalesce(len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')), 0)
@@ -2028,5 +1980,5 @@ object CorpusStats {
         |  CASE WHEN n_tokens > 0
         |    THEN (start_off + n_tokens - 1) // 512 - start_off // 512 + 1
         |    ELSE CAST(0 AS BIGINT) END AS n_seqs
-        |FROM o ORDER BY doc_id""".stripMargin)
+        |FROM o ORDER BY doc_id""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Text canonicalization — the normalize-before-hash step of a dedup
   * pipeline: Unicode NFC ([[graft.functions.NfcNormalize]], native
@@ -12,7 +12,7 @@ import graft.Tables
   * spacing canonicalize to identical bytes, so the exact-dedup digest
   * (q34) sees them as the duplicates they are.
   */
-object Normalize {
+object Normalize extends QueryModule {
 
   /** The canonical text: NFC → lower → collapse runs of whitespace →
     * trim. NFC runs FIRST so case-folding sees composed code points.
@@ -56,11 +56,8 @@ object Normalize {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q120_nfc_clean" -> (nfcClean _))
-
-  val oracle: Map[String, String] = Map(
-    "q120_nfc_clean" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q120_nfc_clean", nfcClean(_, _),
       raw"""WITH r AS (
         |  SELECT doc_id,
         |    'Cafe' || chr(769) || ' ' || chr(8491) || 'ngstro' ||
@@ -71,5 +68,5 @@ object Normalize {
         |    '[ \t\n\v\f\r]+', ' ', 'g')) AS clean,
         |  length(trim(regexp_replace(lower(nfc_normalize(raw)),
         |    '[ \t\n\v\f\r]+', ' ', 'g'))) AS clean_chars
-        |FROM r ORDER BY doc_id""".stripMargin)
+        |FROM r ORDER BY doc_id""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.{Checkpoints, Tokens}
 
 /** Postings-relation operators: the EXACT set-similarity self-join
@@ -16,7 +16,7 @@ import graft.util.{Checkpoints, Tokens}
   * cleaning); these are the corpus-scale extensions a training-data
   * curation pipeline layers on top.
   */
-object Postings {
+object Postings extends QueryModule {
 
   /** (doc_id, sh) distinct-shingle-set relation, materialized ONCE to
     * a parquet scratch zone ([[graft.util.Scratch]]) = one corpus scan
@@ -938,26 +938,8 @@ object Postings {
       .orderBy("k")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q301_vocab_growth" -> (vocabGrowth _),
-    "q283_bm25_topk" -> ((s: SparkSession, d: String) =>
-      bm25TopK(s, d)),
-    "q311_rrf_fusion" -> (rrfFusion _),
-    "q280_textrank_terms" -> (textrankTerms _),
-    "q273_hits_hubs" -> (hitsHubs _),
-    "q152_phrase_search" -> ((s: SparkSession, d: String) =>
-      phraseSearch(s, d)),
-    "q117_setsim_join" -> ((s: SparkSession, d: String) =>
-      setSimJoin(s, d)),
-    "q118_inverted_index" -> ((s: SparkSession, d: String) =>
-      invertedIndex(s, d)),
-    "q121_containment_join" -> ((s: SparkSession, d: String) =>
-      containmentJoin(s, d)),
-    "q123_keyword_search" -> ((s: SparkSession, d: String) =>
-      keywordSearch(s, d)))
-
-  val oracle: Map[String, String] = Map(
-    "q301_vocab_growth" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q301_vocab_growth", vocabGrowth(_, _),
       (raw"""WITH w AS (
         |  SELECT doc_id,
         |    string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+') AS w
@@ -993,14 +975,14 @@ object Postings {
         |LEFT JOIN dt ON dt.k = g.k
         |WINDOW wk AS (ORDER BY g.k
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY k""".stripMargin),
-    "q283_bm25_topk" -> bm25OracleSql,
-    "q311_rrf_fusion" -> rrfOracleSql,
-    "q280_textrank_terms" -> textrankOracleSql,
-    "q273_hits_hubs" -> hitsOracleSql,
+        |ORDER BY k""".stripMargin)),
+    Query("q283_bm25_topk", bm25TopK(_, _), bm25OracleSql),
+    Query("q311_rrf_fusion", rrfFusion(_, _), rrfOracleSql),
+    Query("q280_textrank_terms", textrankTerms(_, _), textrankOracleSql),
+    Query("q273_hits_hubs", hitsHubs(_, _), hitsOracleSql),
     // n_matches is INTEGER in the comprehension replay; the engine
     // side emits BIGINT — cast to match
-    "q152_phrase_search" ->
+    Query("q152_phrase_search", phraseSearch(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id,
         |    string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+') AS w
@@ -1012,10 +994,10 @@ object Postings {
         |  FROM w WHERE len(w) >= 2)
         |SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
         |  array_to_string(hits, ',') AS positions
-        |FROM h WHERE len(hits) > 0 ORDER BY doc_id""".stripMargin,
+        |FROM h WHERE len(hits) > 0 ORDER BY doc_id""".stripMargin),
     // brute force on purpose: prefix filtering is lossless, so the
     // result must equal the all-candidate spelling exactly
-    "q117_setsim_join" ->
+    Query("q117_setsim_join", setSimJoin(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
         |  FROM documents),
@@ -1039,8 +1021,8 @@ object Postings {
         |JOIN sz sa ON sa.doc_id = p.a
         |JOIN sz sb ON sb.doc_id = p.b
         |WHERE p.inter * 5 >= (sa.sz + sb.sz - p.inter) * 3
-        |ORDER BY a, b""".stripMargin,
-    "q118_inverted_index" ->
+        |ORDER BY a, b""".stripMargin),
+    Query("q118_inverted_index", invertedIndex(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+')) AS term
@@ -1052,8 +1034,8 @@ object Postings {
         |  CAST(sum(tf) AS BIGINT) AS cf,
         |  array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings,
         |  array_to_string(list(tf ORDER BY doc_id), ',') AS tfs
-        |FROM tf GROUP BY 1, 2 ORDER BY term, blk""".stripMargin,
-    "q121_containment_join" ->
+        |FROM tf GROUP BY 1, 2 ORDER BY term, blk""".stripMargin),
+    Query("q121_containment_join", containmentJoin(_, _),
       raw"""WITH w AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
         |  FROM documents),
@@ -1077,8 +1059,8 @@ object Postings {
         |JOIN sz sa ON sa.doc_id = p.a
         |JOIN sz sb ON sb.doc_id = p.b
         |WHERE p.inter * 5 >= sa.sz * 4
-        |ORDER BY a, b""".stripMargin,
-    "q123_keyword_search" ->
+        |ORDER BY a, b""".stripMargin),
+    Query("q123_keyword_search", keywordSearch(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+')) AS term
@@ -1094,5 +1076,5 @@ object Postings {
         |  CAST(sum(tf.tf * (n.n // df.df)) AS BIGINT) AS score
         |FROM tf JOIN df USING (term) CROSS JOIN n
         |GROUP BY 1
-        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin)
+        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin))
 }

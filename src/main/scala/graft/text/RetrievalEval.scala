@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 
 /** Retrieval-quality evaluation — the feedback loop a training-data
   * pipeline runs over its own retriever: take the q153 inverse-cloze
@@ -31,7 +31,7 @@ import graft.Tables
   * The per-source rollup is a partial agg over per-query rows. No
   * broadcast hints (the sampled query side still grows with the
   * corpus). */
-object RetrievalEval {
+object RetrievalEval extends QueryModule {
 
   /** 1-in-N deterministic hash sample of the gold pairs. */
   val SampleMod = 11
@@ -220,13 +220,10 @@ object RetrievalEval {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q199_retrieval_eval" -> ((s: SparkSession, d: String) => retrievalEval(s, d)))
-
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // sparse dim-join replay: the dot>0 pair set arises naturally
     // from the term join — identical to the dense path's filter
-    "q199_retrieval_eval" ->
+    Query("q199_retrieval_eval", retrievalEval(_, _),
       (CorpusStats.cdcCtes +
         s""",
          |ch AS MATERIALIZED (
@@ -314,5 +311,5 @@ object RetrievalEval {
          |  CAST(mrr_fp AS DOUBLE) / 65536.0 / CAST(n_queries AS DOUBLE)
          |    AS mrr
          |FROM agg ORDER BY source
-         |""".stripMargin))
+         |""".stripMargin)))
 }

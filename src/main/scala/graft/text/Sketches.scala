@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Tokens
 
 /** Mergeable cardinality sketches over the token stream — the
@@ -36,7 +36,7 @@ import graft.util.Tokens
   * the sketch). The error bound uses 4σ — loose enough to be stable
   * at every SF, tight enough that a broken sketch fails the gate.
   */
-object Sketches {
+object Sketches extends QueryModule {
 
   /** KMV size: σ ≈ 1/√62 ≈ 12.7%. */
   val KmvK = 64
@@ -487,15 +487,8 @@ object Sketches {
     s"CAST((('0x' || substr(md5(CAST($r AS VARCHAR) || ':' || $e), " +
       s"1, 15))::BIGINT % $CmW) AS INT)"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q178_kmv_distinct" -> (kmvDistinct _),
-    "q179_hll_distinct" -> (hllDistinct _),
-    "q183_kmv_source_jaccard" -> (kmvSourceJaccard _),
-    "q197_cm_sketch" -> (cmSketchFreq _),
-    "q206_token_drift" -> (tokenDrift _))
-
-  val oracle: Map[String, String] = Map(
-    "q178_kmv_distinct" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q178_kmv_distinct", kmvDistinct(_, _),
       s"""WITH $tokSql,
          |dh AS (SELECT DISTINCT source, h FROM tok),
          |rk AS (
@@ -520,8 +513,8 @@ object Sketches {
          |    AS within_bound
          |FROM agg JOIN ex ON ex.source = agg.source
          |ORDER BY agg.source
-         |""".stripMargin,
-    "q179_hll_distinct" ->
+         |""".stripMargin),
+    Query("q179_hll_distinct", hllDistinct(_, _),
       s"""WITH $tokSql,
          |r AS (
          |  SELECT source, CAST(h % $HllM AS INT) AS reg,
@@ -549,8 +542,8 @@ object Sketches {
          |    <= ${4.0 * 1.04 / math.sqrt(HllM.toDouble)}
          |      * CAST(n_exact AS DOUBLE) AS within_bound
          |FROM est ORDER BY source
-         |""".stripMargin,
-    "q183_kmv_source_jaccard" ->
+         |""".stripMargin),
+    Query("q183_kmv_source_jaccard", kmvSourceJaccard(_, _),
       s"""WITH $tokSql,
          |dh AS MATERIALIZED (SELECT DISTINCT source, h FROM tok),
          |rk AS (
@@ -596,8 +589,8 @@ object Sketches {
          |  est_jaccard, exact_jaccard,
          |  abs(est_jaccard - exact_jaccard) <= 0.25 AS within_bound
          |FROM f ORDER BY source_a, source_b
-         |""".stripMargin,
-    "q197_cm_sketch" ->
+         |""".stripMargin),
+    Query("q197_cm_sketch", cmSketchFreq(_, _),
       s"""WITH $gramSql,
          |cnt AS MATERIALIZED (
          |  SELECT t.r, ${cmBucketSql("t.r", "g")} AS bucket,
@@ -620,8 +613,8 @@ object Sketches {
          |    <= ${CmBound / CmW} * CAST(n_total AS DOUBLE))
          |    AS within_bound
          |FROM est, tot ORDER BY n_exact DESC, g
-         |""".stripMargin,
-    "q206_token_drift" ->
+         |""".stripMargin),
+    Query("q206_token_drift", tokenDrift(_, _),
       (raw"""WITH tok AS (
          |  SELECT source,
          |    ('0x' || substr(md5('drift:' || CAST(doc_id AS VARCHAR)),
@@ -661,5 +654,5 @@ object Sketches {
          |  CASE WHEN tv_drift IS NOT NULL
          |    THEN tv_drift > """.stripMargin + DriftTau + raw""" END AS drifted
          |FROM f ORDER BY source
-         |""".stripMargin))
+         |""".stripMargin)))
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Tokens
 
 /** Text-analysis operators for a training-data pipeline, over the
@@ -16,7 +16,7 @@ import graft.util.Tokens
   * ANSI/DuckDB SQL with bit-identical results (integer counts, fixed
   * double-arithmetic order), so the whole module is oracle-checked.
   */
-object TextAnalysis {
+object TextAnalysis extends QueryModule {
 
   /** Whitespace tokenization, both engines split on the same RE2/Java
     * compatible pattern. */
@@ -334,22 +334,6 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q238_readability" -> (readability _),
-    "q95_token_freq"    -> (tokenFrequency _),
-    "q30_token_stats"   -> (tokenStats _),
-    "q31_quality_score" -> (qualityScore _),
-    "q32_langid"        -> (langId _),
-    "q210_langid_eval"  -> (langidEval _),
-    "q33_fingerprint"   -> (fingerprint _),
-    "q87_contamination" -> ((s: SparkSession, d: String) => contamination(s, d)),
-    "q88_pii_redact"    -> (piiRedact _),
-    "q89_repetition"    -> (repetition _),
-    "q109_split_contamination" -> ((s: SparkSession, d: String) =>
-      splitContamination(s, d)),
-    "q141_decontaminate" -> ((s: SparkSession, d: String) =>
-      decontaminate(s, d)))
-
   /** The q31 quality formula as ONE DuckDB expression over `text` —
     * spliced into q31's oracle AND q147's (token-budget selection), so
     * the double-arithmetic order (which both engines must reproduce
@@ -379,11 +363,11 @@ object TextAnalysis {
       |      len(regexp_extract_all(text, '\b(der|die|und|das)\b')) THEN 'es'
       |    ELSE 'de' END AS lang_pred""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  lazy val records: Seq[Query] = Seq(
     // length DIFFERENCES count regex runs, so UTF-16-unit vs
     // codepoint length semantics cancel; DuckDB regexp_replace needs
     // the explicit 'g' flag to match Spark's replace-all
-    "q238_readability" ->
+    Query("q238_readability", readability(_, _),
       raw"""WITH d AS (
         |  SELECT doc_id,
         |    len(string_split_regex(trim(text), '[ \t\n\v\f\r]+'))
@@ -408,31 +392,31 @@ object TextAnalysis {
         |      - CAST(84.6 AS DOUBLE)
         |        * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))
         |  END AS flesch
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q95_token_freq" ->
+        |FROM m ORDER BY doc_id""".stripMargin),
+    Query("q95_token_freq", tokenFrequency(_, _),
       """SELECT t.tok, count(*) AS n
         |FROM documents, UNNEST(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS t(tok)
-        |GROUP BY 1 ORDER BY n DESC, tok""".stripMargin,
-    "q30_token_stats" ->
+        |GROUP BY 1 ORDER BY n DESC, tok""".stripMargin),
+    Query("q30_token_stats", tokenStats(_, _),
       """SELECT doc_id,
         |  len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS n_tokens,
         |  len(list_distinct(string_split_regex(trim(text), '[ \t\n\v\f\r]+'))) AS n_distinct_tokens,
         |  length(text) AS len_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // concatenation, NOT s-interpolation: the interpolator would cook
     // the \t\n\v\f\r regex escapes
-    "q31_quality_score" ->
+    Query("q31_quality_score", qualityScore(_, _),
       ("""SELECT doc_id,
         |  len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS n_tokens,
         |  """.stripMargin + qualitySql + """ AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin),
-    "q32_langid" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("q32_langid", langId(_, _),
       ("SELECT doc_id,\n" + LangPredCaseSql +
-        "\nFROM documents ORDER BY doc_id"),
+        "\nFROM documents ORDER BY doc_id")),
     // q32's prediction CTE joined to the truth label: row-normalized
     // confusion matrix + overall accuracy (exact integer counts, two
     // final double ratios)
-    "q210_langid_eval" ->
+    Query("q210_langid_eval", langidEval(_, _),
       ("""WITH pred AS (
         |  SELECT doc_id,
         |""".stripMargin + LangPredCaseSql + """
@@ -454,13 +438,13 @@ object TextAnalysis {
         |  CAST(cm.n AS DOUBLE) / CAST(tr.n_truth AS DOUBLE) AS frac,
         |  acc.accuracy
         |FROM cm JOIN tr ON tr.lang = cm.lang CROSS JOIN acc
-        |ORDER BY cm.lang, cm.lang_pred""".stripMargin),
-    "q33_fingerprint" ->
+        |ORDER BY cm.lang, cm.lang_pred""".stripMargin)),
+    Query("q33_fingerprint", fingerprint(_, _),
       """SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(
         |    string_split_regex(trim(lower(text)), '[ \t\n\v\f\r]+'))), ' ')) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q109_split_contamination" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q109_split_contamination", splitContamination(_, _),
       raw"""WITH words AS (
         |  SELECT doc_id,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
@@ -483,10 +467,10 @@ object TextAnalysis {
         |    / count(*) AS contamination
         |FROM (SELECT * FROM g WHERE NOT is_train) c
         |LEFT JOIN train t USING (gh)
-        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin),
     // q109 with the sides swapped: train docs probed against the
     // distinct EVAL gram set, integer-threshold kept verdict
-    "q141_decontaminate" ->
+    Query("q141_decontaminate", decontaminate(_, _),
       raw"""WITH words AS (
         |  SELECT doc_id,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
@@ -509,8 +493,8 @@ object TextAnalysis {
         |    * 20 <= count(*) AS kept
         |FROM (SELECT * FROM g WHERE is_train) c
         |LEFT JOIN ev e USING (gh)
-        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin,
-    "q87_contamination" ->
+        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin),
+    Query("q87_contamination", contamination(_, _),
       raw"""WITH words AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w FROM documents
         |), g AS (
@@ -529,8 +513,8 @@ object TextAnalysis {
         |    / count(*) AS contamination
         |FROM (SELECT * FROM g WHERE doc_id % 20 >= 3) c
         |LEFT JOIN bench b USING (gh)
-        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin,
-    "q88_pii_redact" ->
+        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin),
+    Query("q88_pii_redact", piiRedact(_, _),
       raw"""WITH c AS (
         |  SELECT c_custkey,
         |    c_name || ' <user' || c_custkey || '@example.com>' ||
@@ -547,8 +531,8 @@ object TextAnalysis {
         |  regexp_replace(
         |    regexp_replace(contact, '[a-z0-9.]+@[a-z0-9.-]+', '[EMAIL]', 'g'),
         |    '\+1-[0-9]{3}-[0-9]{4}', '[PHONE]', 'g') AS redacted
-        |FROM c ORDER BY c_custkey""".stripMargin,
-    "q89_repetition" ->
+        |FROM c ORDER BY c_custkey""".stripMargin),
+    Query("q89_repetition", repetition(_, _),
       raw"""WITH t AS (
         |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w,
         |    CASE WHEN len(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) < 2
@@ -561,5 +545,5 @@ object TextAnalysis {
         |  1.0 - len(list_distinct(g2)) / len(g2) AS dup_2gram_ratio,
         |  len([i for i in range(1, len(w)) if w[i] = w[i+1]]) / len(g2)
         |    AS adj_repeat_ratio
-        |FROM t ORDER BY doc_id""".stripMargin)
+        |FROM t ORDER BY doc_id""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, QueryModule, Tables}
 import graft.util.Tokens
 
 /** Hashed-TF document vectors — the bridge from RAW TEXT to the
@@ -27,7 +27,7 @@ import graft.util.Tokens
   * paths (q143/q52/q186) — the representation, not the operator,
   * is what this module adds. Overflow: v ≤ doc tokens, so norms²
   * stay ≤ 64·maxTf² — BIGINT-safe to ~10⁸-token documents. */
-object TextVectors {
+object TextVectors extends QueryModule {
 
   val Dim = 64
 
@@ -233,12 +233,6 @@ object TextVectors {
       .orderBy("true_source", "predicted")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q191_hashed_tf" -> (hashedTf _),
-    "q192_tf_cosine_pairs" -> (tfCosinePairs _),
-    "q292_rocchio_confusion" -> (rocchioConfusion _),
-    "q193_tf_clusters" -> (tfClusters _))
-
   private val tfSql: String =
     raw"""tok AS (
       |  SELECT doc_id, unnest(string_split_regex(trim(text),
@@ -251,8 +245,8 @@ object TextVectors {
       |    CAST(count(*) AS BIGINT) AS v
       |  FROM tok GROUP BY 1, 2)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q292_rocchio_confusion" ->
+  lazy val records: Seq[Query] = Seq(
+    Query("q292_rocchio_confusion", rocchioConfusion(_, _),
       s"""WITH $tfSql,
          |dx AS MATERIALIZED (
          |  SELECT doc_id, source,
@@ -285,12 +279,12 @@ object TextVectors {
          |SELECT d.source AS true_source, p.predicted,
          |  CAST(count(*) AS BIGINT) AS n
          |FROM pred p JOIN dx d USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY true_source, predicted""".stripMargin,
-    "q191_hashed_tf" ->
+         |GROUP BY 1, 2 ORDER BY true_source, predicted""".stripMargin),
+    Query("q191_hashed_tf", hashedTf(_, _),
       s"""WITH $tfSql
          |SELECT doc_id, dim, v FROM tf ORDER BY doc_id, dim
-         |""".stripMargin,
-    "q192_tf_cosine_pairs" ->
+         |""".stripMargin),
+    Query("q192_tf_cosine_pairs", tfCosinePairs(_, _),
       s"""WITH $tfSql,
          |nrm AS (SELECT doc_id, CAST(sum(v * v) AS BIGINT) AS n2
          |        FROM tf GROUP BY 1),
@@ -308,10 +302,10 @@ object TextVectors {
          |WHERE CAST(dot AS DOUBLE)
          |    / sqrt(CAST(na.n2 * nb.n2 AS DOUBLE)) >= $Tau
          |ORDER BY id1, id2
-         |""".stripMargin,
+         |""".stripMargin),
     // the q98-family recursive-CTE min-label fixpoint over the q192
     // pair derivation
-    "q193_tf_clusters" ->
+    Query("q193_tf_clusters", tfClusters(_, _),
       s"""WITH RECURSIVE $tfSql,
          |nrm AS (SELECT doc_id, CAST(sum(v * v) AS BIGINT) AS n2
          |        FROM tf GROUP BY 1),
@@ -336,5 +330,5 @@ object TextVectors {
          |SELECT id AS doc_id, min(label) AS cluster_id,
          |  (id = min(label)) AS keep
          |FROM reach GROUP BY id ORDER BY doc_id
-         |""".stripMargin)
+         |""".stripMargin))
 }

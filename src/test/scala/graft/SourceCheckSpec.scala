@@ -34,7 +34,9 @@ import graft.util.Sessions
   * memo key can be built by two bodies. One codegen policy: outside
   * `util/Sessions.scala` no main source names a `spark.sql.codegen.`
   * conf, so the generated-class cache is sized once, for every
-  * session. */
+  * session. One record per query: no main source holds a query or
+  * oracle map literal, so each query's run and oracle are one
+  * `Query` record and cannot drift apart. */
 class SourceCheckSpec extends SparkSpec {
   private val root = Paths.get(sys.props("user.dir"))
   private val sessions = root.resolve("src/main/scala/graft/util/Sessions.scala")
@@ -204,6 +206,19 @@ class SourceCheckSpec extends SparkSpec {
     } yield s"${root.relativize(p)}: $needle"
     assert(bad.isEmpty, s"go through the SwapPublish epoch store: $bad")
     assert(Files.readString(store).contains(".backup-$"))
+  }
+
+  test("no query or oracle map literal in src/main: modules list Query records") {
+    val main = root.resolve("src/main")
+    val entry = main.resolve("scala/graft/SparkEntry.scala")
+    val bad = for {
+      p <- sources if p.startsWith(main)
+      needle <- Seq("DataFrame] = Map(", "val oracle: Map", "val queries: Map")
+      // SparkEntry.scala derives the two views from the records
+      if (p != entry || needle.endsWith("Map(")) && Files.readString(p).contains(needle)
+    } yield s"${root.relativize(p)}: $needle"
+    assert(bad.isEmpty, s"list one Query(name, run, oracle) per query: $bad")
+    assert(Files.readString(entry).contains("val oracle: Map"))
   }
 
   test("Sessions.cpus honours SPARK_GRAFT_CPUS, else the processor count") {

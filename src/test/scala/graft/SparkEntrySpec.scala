@@ -1,27 +1,21 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver contract's own invariants — no SparkSession needed.
-  * Catches silent drift between the query map and the oracle map: a
-  * query without an oracle silently downgrades the driver's check to
-  * rows-only; an oracle without a query is dead SQL. */
+/** The driver contract's own invariants — no SparkSession needed. Each
+  * query is one [[Query]] record, so a query cannot lack its oracle;
+  * what is left to check is that no name is registered twice. */
 class SparkEntrySpec extends AnyFunSuite {
 
-  test("every query has an oracle and every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries missing oracles: ${q -- o}")
-    assert((o -- q).isEmpty, s"orphan oracles: ${o -- q}")
-  }
-
   test("query names are unique across contributing modules") {
-    // the map union silently keeps the LAST duplicate — count the
-    // contributions so a collision fails loudly instead
-    val parts = SparkEntry.modules.map(_._1)
-    val all = parts.flatMap(_.keys)
-    val dups = all.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dups.isEmpty, s"duplicate query names: $dups")
-    assert(all.size == SparkEntry.queries.size)
+    // the registry indexes every module's records, failing on a repeat
+    assert(SparkEntry.queries.size == SparkEntry.modules.map(_.records.size).sum)
+    val run = (_: SparkSession, _: String) => (null: DataFrame)
+    val e = intercept[IllegalArgumentException] {
+      Query.index(Seq(Query("qa", run, "SELECT 1"), Query("qb", run, "SELECT 2"),
+        Query("qa", run, "SELECT 3")))
+    }
+    assert(e.getMessage.contains("qa") && !e.getMessage.contains("qb"), e.getMessage)
   }
 }

@@ -239,40 +239,6 @@ class StreamsSpec extends SparkSpec {
     assert(rows == Set((1L, 2L, 4.0, false), (2L, 1L, 4.0, false)))
   }
 
-  test("transformWithState mirrors the v1 running totals across batches") {
-    val in = SparkSpec.tempDir("stream_tws_in").toString
-    // two batches so the second read genuinely loads v2 state
-    writeBatch(in, "b1.json",
-      """{"event_id":1,"ts":"2024-01-01T00:00:00Z","user_id":1,"event_type":"click","value":1.5}""",
-      """{"event_id":2,"ts":"2024-01-01T00:01:00Z","user_id":2,"event_type":"view","value":4.0}""")
-    writeBatch(in, "b2.json",
-      """{"event_id":3,"ts":"2024-01-01T00:02:00Z","user_id":1,"event_type":"click","value":2.5}""")
-    // stateful v2 needs column families → the RocksDB state store;
-    // scope the provider to this query and restore the default after
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    try {
-      val totals = Streams.runningTotalsV2(
-        Streams.rateLimitedStream(spark, in, schema,
-          maxFilesPerTrigger = 1))
-      Streams.runToMemory(totals, "totals_v2", OutputMode.Append)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
-    val rows = spark.table("totals_v2").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n"),
-        r.getAs[Double]("sum"), r.getAs[Boolean]("closed"))).toSet
-    // user 1 emits once per batch (1, 1.5) then the folded (2, 4.0) —
-    // the same rows the v1 operator emits under the same split
-    assert(rows == Set((1L, 1L, 1.5, false), (1L, 2L, 4.0, false),
-      (2L, 1L, 4.0, false)))
-  }
-
   test("session windows close on gap") {
     val in = SparkSpec.tempDir("stream_in3").toString
     writeBatch(in, "b1.json",
