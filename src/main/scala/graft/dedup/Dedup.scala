@@ -717,10 +717,9 @@ object Dedup extends QueryModule {
     * members and delta members and only corpus × delta pairs expand —
     * intra-corpus pairs (the quadratic bulk q37 pays) are never
     * generated. At production scale the corpus half of the bucket
-    * table is PRECOMPUTED and stored sorted/bucketed by band key
-    * ([[graft.sinks.Bucketing]] layout), so a batch pays only its own
-    * signatures plus a co-located join: cost tracks the delta, not the
-    * corpus. */
+    * table is PRECOMPUTED and stored sorted/bucketed by band key, so
+    * a batch pays only its own signatures plus a co-located join:
+    * cost tracks the delta, not the corpus. */
   /** Delta membership for q115 — ONE definition, negative-id-safe
     * (`pmod` ≡ floorMod; the oracle spells it `((x % 10) + 10) % 10`
     * and DedupSpec uses `Math.floorMod`, so all three agree on any
@@ -774,12 +773,14 @@ object Dedup extends QueryModule {
     * is (band, bandValue); at larger corpora widen bands to keep
     * buckets small). Threshold 12 chosen empirically: on this corpus
     * true near-dups (shingle J ≥ 0.9) land at Hamming 0-10 and
-    * unrelated docs at ≥ 14 — clean margin both sides. */
-  def simhashPairs(s: SparkSession, dir: String,
-                   maxHamming: Int = 12,
-                   hash: DedupHash = XxHash64,
-                   bandBits: Int = 4,
-                   maxBucket: Int = Int.MaxValue): DataFrame =
+    * unrelated docs at ≥ 14 — clean margin both sides. The
+    * per-document reference DedupSpec checks q315 and the q38
+    * collapse and grid gates against. */
+  private[graft] def simhashPairs(s: SparkSession, dir: String,
+                                  maxHamming: Int = 12,
+                                  hash: DedupHash = XxHash64,
+                                  bandBits: Int = 4,
+                                  maxBucket: Int = Int.MaxValue): DataFrame =
     simhashPairsOf(s, dir, simhashSignatures(s, dir, hash),
       s"simhash-bands:$hash:$bandBits:$dir",
       maxHamming, hash, bandBits, maxBucket)
@@ -1014,9 +1015,9 @@ object Dedup extends QueryModule {
     connectedComponents(edges0, DriverEdges)
 
   /** ≤ 500k edges fold on the driver: 8 MB as two longs each (the
-    * bounded-collect discipline of IndexMaintain's touched blocks); a
-    * distributed contraction on a graph this size pays shuffle rounds
-    * for milliseconds of union-find. */
+    * bounded-collect discipline); a distributed contraction on a
+    * graph this size pays shuffle rounds for milliseconds of
+    * union-find. */
   private val DriverEdges = 500000
 
   private val LabelSchema = StructType(Seq(
@@ -1332,8 +1333,8 @@ object Dedup extends QueryModule {
   private[graft] def applyEdgeBatch(labels: DataFrame, edges: DataFrame,
                                     driverEdges: Int): DataFrame = {
     // The meta graph is batch-bounded BY CONTRACT (≤ 2·|batch| nodes)
-    // — metadata-scale, like IndexMaintain's touched-block set; the
-    // operator roots it once, so the two label joins run once
+    // — metadata-scale; the operator roots it once, so the two label
+    // joins run once
     val meta = connectedComponents(edges
       .join(labels.select(col("id").as("a"), col("label").as("la0")),
         Seq("a"), "left")
@@ -1768,7 +1769,7 @@ object Dedup extends QueryModule {
 
   /** q37's oracle: the banded MinHash candidates, verified by the
     * signature-agreement estimate. */
-  private lazy val MinhashLshSql: String =
+  private[graft] lazy val MinhashLshSql: String =
     MinhashBandedCtes +
       raw""", pairs AS (
         |  SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2, a.sig AS s1, c.sig AS s2

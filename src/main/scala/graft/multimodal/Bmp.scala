@@ -23,7 +23,7 @@ object Bmp {
   private val MaxDim = 1 << 20
 
   /** Encode an RGB raster as bottom-up 24-bit BMP. */
-  def encode(img: Ppm.Image): Array[Byte] = {
+  private[graft] def encode(img: Ppm.Image): Array[Byte] = {
     require(img.rgb.length == img.width * img.height * 3,
       s"raster size ${img.rgb.length} != ${img.width}x${img.height}x3")
     val rowBytes = stride(img.width).toInt

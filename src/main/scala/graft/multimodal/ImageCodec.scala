@@ -10,7 +10,7 @@ import javax.imageio.ImageIO
   * the last honest stub in the multimodal surface: previously these
   * formats carried hash-derived fake dimensions.
   *
-  * Decodes into the shared RGB [[Ppm.Image]], so features / resize /
+  * Decodes into the shared RGB [[Ppm.Image]], so features, hashes and
   * re-encode work unchanged. Hostile-input posture matches the PNM
   * codecs: corrupt blobs are data (None, never throws), and the
   * header dimensions are read BEFORE any pixel decode so a
@@ -92,8 +92,7 @@ object ImageCodec {
   /** REAL PNG encode via the JDK's built-in writer — the write-side
     * counterpart to [[decode]]. PNG is lossless, so
     * `decode(encodePng(img))` returns the exact pixels (round-trip
-    * pinned in ImageCodecSpec); with [[Multimodal.transcodePng]] this
-    * completes the read-AND-write transcode story for a compressed
+    * pinned in ImageCodecSpec) — the write side for a compressed
     * format (PNM/BMP/WAV/Y4M writers are hand-rolled; PNG's zlib +
     * filter machinery is exactly what the JDK already ships). */
   def encodePng(img: Ppm.Image): Array[Byte] = {

@@ -7,23 +7,21 @@ import org.apache.spark.sql.types._
 import graft.{Query, QueryModule, Tables}
 
 /** Multimodal-column plumbing: images/audio/video as opaque `binary`
-  * columns with typed metadata, plus decode / feature-extract /
-  * resize / frame-sample operators.
+  * columns with typed metadata, plus decode / feature-extract
+  * operators.
   *
-  * Decode is REAL for every format: hand-parsed pure byte parsing for
-  * the uncompressed ones — PPM/PGM images ([[Ppm]]/[[Pgm]]: header
-  * dims, channel/quadrant features, nearest-neighbor resize — see
-  * [[decodeImages]] / [[resizePpm]]), 24-bit BMP ([[Bmp]]), PCM WAV
-  * audio ([[Wav]]: sample-rate/channels/duration, signal features —
-  * [[decodeAudio]]), and Y4M video ([[Y4m]]: demux, per-frame luma,
-  * frame extraction — [[sampleVideoFrames]]) — and the JDK's headless
-  * ImageIO for the compressed ones ([[ImageCodec]]: JPEG/PNG/GIF,
-  * zero added dependencies). The QUICK metadata in [[asMediaTable]] is
-  * a real header parse too — fixed-offset / regex column expressions
-  * over the first bytes, nulls where a header genuinely can't say
-  * (JPEG dims need a marker walk, Y4M duration needs a frame scan —
-  * the decode operators supply those). [[extractFeatures]] is real
-  * too: an L2-normalized mean-luma-grid embedding from decoded pixels
+  * Image decode is REAL for every format: hand-parsed pure byte
+  * parsing for the uncompressed ones — PPM/PGM images ([[Ppm]]/[[Pgm]]:
+  * header dims, channel/quadrant features — see [[decodeImages]]),
+  * 24-bit BMP ([[Bmp]]) — and the JDK's headless ImageIO for the
+  * compressed ones ([[ImageCodec]]: JPEG/PNG/GIF, zero added
+  * dependencies). PCM WAV audio ([[Wav]]) and Y4M video ([[Y4m]])
+  * decode for the perceptual hashes in [[Perceptual]]. The QUICK
+  * metadata in [[asMediaTable]] is a real header parse too —
+  * fixed-offset / regex column expressions over the first bytes, nulls
+  * where a header genuinely can't say (JPEG dims need a marker walk,
+  * Y4M duration needs a frame scan). [[extractFeatures]] is real too:
+  * an L2-normalized mean-luma-grid embedding from decoded pixels
   * ([[Ppm.lumaGrid]]) — a simple visual embedding, not a model, but
   * every float comes from image content. The plumbing is the real
   * 100 TB design:
@@ -37,9 +35,7 @@ import graft.{Query, QueryModule, Tables}
   *    codec/model needs), streaming through rows without
   *    materializing a partition in memory;
   *  - feature vectors come back as `Array[Float]` columns that feed
-  *    straight into [[graft.sim.Similarity]];
-  *  - frame sampling emits (id, frame_no, offset_ms) rows — an
-  *    explode, not a collect.
+  *    straight into [[graft.sim.Similarity]].
   */
 object Multimodal extends QueryModule {
 
@@ -48,8 +44,10 @@ object Multimodal extends QueryModule {
   val Y4mMime = "video/x-yuv4mpeg"
   val BmpMime = "image/bmp"
 
-  /** Magic-byte MIME sniffing (real: PPM/PGM/BMP/Y4M/PNG/JPEG/RIFF). */
-  def sniffMime(bytes: Array[Byte]): String = {
+  /** Magic-byte MIME sniffing (real: PPM/PGM/BMP/Y4M/PNG/JPEG/RIFF) on
+    * the driver: the reference for [[asMediaTable]]'s `meta.mime`
+    * column expression. */
+  private[graft] def sniffMime(bytes: Array[Byte]): String = {
     if (bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == '6') PpmMime
     else if (bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == '5') PgmMime
     else if (bytes.length >= 2 && bytes(0) == 'B' && bytes(1) == 'M') BmpMime
@@ -224,136 +222,6 @@ object Multimodal extends QueryModule {
     }
     spark.createDataFrame(rdd, outSchema)
   }
-
-  /** REAL resize for PPM content: nearest-neighbor resample and
-    * re-encode — a distributed binary→binary column transform.
-    * Non-PPM (or corrupt) content passes through unchanged; metadata
-    * dims are updated only for transcoded rows. */
-  def resizePpm(media: DataFrame, w: Int, h: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.rdd.mapPartitions { it =>
-      it.map { r =>
-        val idx = r.fieldIndex("content")
-        Ppm.decode(r.getAs[Array[Byte]](idx)) match {
-          case Some(img) =>
-            val out = Ppm.encode(Ppm.resizeNearest(img, w, h))
-            val metaIdx = r.fieldIndex("meta")
-            val meta = r.getStruct(metaIdx)
-            val newMeta = Row(meta.get(0), out.length.toLong,
-              w, h, meta.get(4))
-            Row.fromSeq(r.toSeq.updated(idx, out).updated(metaIdx, newMeta))
-          case None => r
-        }
-      }
-    }
-    spark.createDataFrame(rdd, media.schema)
-  }
-
-  /** REAL PNG transcode: decode ANY supported image content (PPM/PGM/
-    * BMP natively, JPEG/PNG/GIF via ImageIO) and re-encode as PNG —
-    * the write-side compressed-format path ([[ImageCodec.encodePng]]).
-    * Non-image/corrupt content passes through unchanged; meta mime,
-    * size, and dims are rewritten only for transcoded rows. Same
-    * distributed binary→binary column shape as [[resizePpm]]. */
-  def transcodePng(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.rdd.mapPartitions { it =>
-      it.map { r =>
-        val idx = r.fieldIndex("content")
-        val bytes = r.getAs[Array[Byte]](idx)
-        val img =
-          if (bytes == null) None
-          else Ppm.decode(bytes).orElse(Bmp.decode(bytes))
-            .orElse(Pgm.decode(bytes)).orElse(ImageCodec.decode(bytes))
-        img match {
-          case Some(im) =>
-            val out = ImageCodec.encodePng(im)
-            val metaIdx = r.fieldIndex("meta")
-            val newMeta = Row("image/png", out.length.toLong,
-              im.width, im.height, r.getStruct(metaIdx).get(4))
-            Row.fromSeq(r.toSeq.updated(idx, out).updated(metaIdx, newMeta))
-          case None => r
-        }
-      }
-    }
-    spark.createDataFrame(rdd, media.schema)
-  }
-
-  /** REAL audio decode: PCM-WAV rows get actual sample rate, channel
-    * count, header-derived duration, and signal features (RMS,
-    * zero-crossing rate, windowed energy — [[Wav.features]]); non-WAV
-    * rows get nulls. Same streaming mapPartitions shape as
-    * [[decodeImages]]. */
-  def decodeAudio(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(media.schema.fields.toSeq ++ Seq(
-      StructField("sample_rate", IntegerType),
-      StructField("n_channels", IntegerType),
-      StructField("audio_ms", LongType),
-      StructField("audio_features", ArrayType(FloatType))))
-    val rdd = media.rdd.mapPartitions { it =>
-      it.map { r =>
-        Wav.decode(r.getAs[Array[Byte]]("content")) match {
-          case Some(a) =>
-            Row.fromSeq(r.toSeq ++ Seq(a.sampleRate, a.channels,
-              a.durationMs, Wav.features(a).toSeq))
-          case None => Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
-  /** REAL video frame sampling: Y4M rows demux to every `stride`-th
-    * frame, each emitted as (frame_no, offset_ms, mean_luma, and the
-    * frame itself transcoded to a grayscale PPM blob) — the
-    * video→image bridge, so sampled frames feed [[decodeImages]] /
-    * [[resizePpm]] directly. flatMap shape: one input row → k frame
-    * rows, streamed, never collected. */
-  def sampleVideoFrames(media: DataFrame, stride: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_no", IntegerType),
-      StructField("offset_ms", LongType),
-      StructField("mean_luma", DoubleType),
-      StructField("frame_ppm", BinaryType)))
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getAs[Long]("media_id")
-        Y4m.decode(r.getAs[Array[Byte]]("content")) match {
-          case Some(v) =>
-            (0 until v.frameCount by stride).iterator.map { f =>
-              val offsetMs =
-                f.toLong * 1000L * v.fpsDen / v.fpsNum
-              Row(id, f, offsetMs, Y4m.meanLuma(v, f),
-                Ppm.encode(Y4m.frameAsPpm(v, f)))
-            }
-          case None => Iterator.empty
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
-  /** Frame sampling for video-like media: emit one row per sampled
-    * frame offset — pure explode, deterministic stride (metadata-level;
-    * see [[sampleVideoFrames]] for the real Y4M demux). */
-  def sampleFrames(media: DataFrame, everyMs: Long = 10000L): DataFrame =
-    media
-      .withColumn("frame_no",
-        explode(sequence(lit(0),
-          greatest(lit(0), (col("meta.duration_ms") / everyMs).cast("long")))))
-      .select(col("media_id"), col("frame_no"),
-        (col("frame_no") * everyMs).as("offset_ms"))
-
-  /** Resize: content-preserving metadata rewrite (STUB — a real impl
-    * transcodes bytes; the plumbing point is that it is a map-side
-    * binary→binary column op). */
-  def resize(media: DataFrame, w: Int, h: Int): DataFrame =
-    media.withColumn("meta",
-      struct(col("meta.mime"), col("meta.size_bytes"),
-        lit(w).as("width"), lit(h).as("height"), col("meta.duration_ms")))
 
   /** The synthetic media corpus: each document's UTF-8 bytes tiled
     * into an 8×8 PPM raster (empty/null text → a black frame). Shared

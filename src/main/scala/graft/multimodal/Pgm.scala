@@ -4,12 +4,12 @@ package graft.multimodal
   * grayscale sibling of [[Ppm]]: ASCII header `P5 <width> <height>
   * <maxval>` then a raw 1-byte-per-pixel raster. Decodes to the same
   * RGB [[Ppm.Image]] (gray replicated into all three channels) so
-  * every downstream transform — features, resize, re-encode — works
+  * every downstream transform — features and hashes — works
   * unchanged on grayscale inputs.
   */
 object Pgm {
 
-  def encode(width: Int, height: Int, gray: Array[Byte]): Array[Byte] = {
+  private[graft] def encode(width: Int, height: Int, gray: Array[Byte]): Array[Byte] = {
     require(gray.length == width * height,
       s"raster size ${gray.length} != ${width}x$height")
     val header = s"P5\n$width $height\n255\n"

@@ -36,27 +36,6 @@ object Ppm {
         java.util.Arrays.copyOfRange(bytes, i, i + (wh * 3L).toInt)))
     }
 
-  /** Nearest-neighbor resample — the real resize kernel. */
-  def resizeNearest(img: Image, w2: Int, h2: Int): Image = {
-    require(w2 > 0 && h2 > 0)
-    val out = new Array[Byte](w2 * h2 * 3)
-    var y = 0
-    while (y < h2) {
-      val sy = y * img.height / h2
-      var x = 0
-      while (x < w2) {
-        val sx = x * img.width / w2
-        val si = (sy * img.width + sx) * 3
-        val di = (y * w2 + x) * 3
-        out(di) = img.rgb(si); out(di + 1) = img.rgb(si + 1)
-        out(di + 2) = img.rgb(si + 2)
-        x += 1
-      }
-      y += 1
-    }
-    Image(w2, h2, out)
-  }
-
   /** g×g mean-luma grid, L2-normalized — a real (if simple) visual
     * embedding from actual pixels: pixel (x, y) belongs to grid cell
     * (y·g/h, x·g/w); each cell's value is the float mean of its

@@ -79,31 +79,4 @@ object Wav {
       case _ => None
     }
   }
-
-  /** Real signal features: [RMS, zero-crossing rate, then mean |x| of
-    * 4 equal time windows] — 6 floats from actual samples. */
-  def features(a: Audio): Array[Float] = {
-    val n = a.samples.length
-    if (n == 0) return new Array[Float](6)
-    var sq = 0.0; var zc = 0L
-    val win = new Array[Double](4); val winN = new Array[Long](4)
-    var i = 0
-    while (i < n) {
-      val s = a.samples(i).toDouble / 32768.0
-      sq += s * s
-      if (i > 0 && (a.samples(i) >= 0) != (a.samples(i - 1) >= 0)) zc += 1
-      val w = math.min(3, i * 4 / n)
-      win(w) += math.abs(s); winN(w) += 1
-      i += 1
-    }
-    val out = new Array[Float](6)
-    out(0) = math.sqrt(sq / n).toFloat
-    out(1) = zc.toFloat / n
-    var w = 0
-    while (w < 4) {
-      out(2 + w) = if (winN(w) == 0) 0f else (win(w) / winN(w)).toFloat
-      w += 1
-    }
-    out
-  }
 }

@@ -95,17 +95,8 @@ object Y4m {
     else Some(Video(w, h, num, den, cs, fs))
   }
 
-  /** Mean luma (0-255) of frame i — a real per-frame signal. */
-  def meanLuma(v: Video, i: Int): Double = {
-    val y = v.luma(i)
-    var s = 0L
-    var j = 0
-    while (j < y.length) { s += (y(j) & 0xff); j += 1 }
-    s.toDouble / y.length
-  }
-
   /** Extract frame i's luma plane as a grayscale PPM image — the
-    * video→image bridge (feeds [[Ppm]] features/resize). */
+    * video→image bridge (feeds the [[Perceptual]] frame hashes). */
   def frameAsPpm(v: Video, i: Int): Ppm.Image = {
     val y = v.luma(i)
     val rgb = new Array[Byte](y.length * 3)

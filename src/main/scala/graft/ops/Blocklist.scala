@@ -49,18 +49,6 @@ object Blocklist extends QueryModule {
           .as("m"))
       .groupBy(col("w")).agg(expr("bit_or(m)").as("om"))
 
-  /** The dense word array as a DRIVER value (128 longs) — what a
-    * deployment ships to a stream as a broadcast constant. The
-    * blocklist is batch/static by definition, so the one collect here
-    * is a bounded artifact build, not a data-path collect. */
-  private[graft] def filterWordsArray(blocked: DataFrame): Array[Long] = {
-    val dense = Array.fill(NWords)(0L)
-    wordsOf(blocked).collect().foreach { r =>
-      dense(r.getAs[Long]("w").toInt) = r.getAs[Long]("om")
-    }
-    dense
-  }
-
   /** The probe predicate over columns `h` (60-bit digest) and `arr`
     * (the [[NWords]]-long filter array): 3 shifts + 3 element_at,
     * pure map-side column math — ONE spelling for batch and
@@ -115,9 +103,9 @@ object Blocklist extends QueryModule {
       .orderBy("doc_id")
   }
 
-  lazy val records: Seq[Query] = Seq(
-    Query("q157_bloom_scrub", bloomScrub(_, _),
-      s"""WITH d AS (
+  /** q157's oracle; Quality's oracles splice it. */
+  private[graft] lazy val BloomScrubSql: String =
+    s"""WITH d AS (
          |  SELECT doc_id,
          |    ('0x' || substr(md5(text), 1, 15))::BIGINT AS h
          |  FROM documents),
@@ -148,5 +136,8 @@ object Blocklist extends QueryModule {
          |  (p.h IN (SELECT h FROM bl)) AS true_member,
          |  NOT (p.h IN (SELECT h FROM bl)) AS keep,
          |  (p.bloom_hit OR NOT (p.h IN (SELECT h FROM bl))) AS caught
-         |FROM probe p ORDER BY doc_id""".stripMargin))
+         |FROM probe p ORDER BY doc_id""".stripMargin
+
+  lazy val records: Seq[Query] = Seq(
+    Query("q157_bloom_scrub", bloomScrub(_, _), BloomScrubSql))
 }

@@ -138,10 +138,8 @@ object EventOps extends QueryModule {
     }
 
   /** The dense grid from any (event_type, ts) relation — the batch
-    * derivation of [[hourlyGrid]], shared with the streaming hourly-
-    * count zone ([[graft.streaming.HourlyCountMaint]]) so the
-    * monitoring stream and the batch scan can never drift. */
-  private[graft] def denseGridOf(events: DataFrame): DataFrame = {
+    * derivation of [[hourlyGrid]]. */
+  private def denseGridOf(events: DataFrame): DataFrame = {
     val s = events.sparkSession
     val ev = events
       .select(col("event_type"), to_date(col("ts")).as("d"),
@@ -156,24 +154,6 @@ object EventOps extends QueryModule {
       .select(col("event_type"),
         (datediff(col("d"), lit("1970-01-01")).cast("long") * 24 +
           col("h")).as("t"),
-        coalesce(col("c"), lit(0L)).as("c"))
-  }
-
-  /** Re-densify a SPARSE (event_type, t, c) count relation — missing
-    * hours of every observed (date × type) become explicit zeros,
-    * exactly the [[denseGridOf]] grid (a date is "observed" iff any
-    * type has an event in it, which is also when the batch grid
-    * includes it). The streaming readout path. */
-  private[graft] def densify(sparse: DataFrame): DataFrame = {
-    val s = sparse.sparkSession
-    // t ≥ 0 always (hours since epoch), so expr-div ≡ floor division
-    val dates = sparse.select(expr("t div 24").as("day")).distinct()
-    val types = sparse.select(col("event_type")).distinct()
-    dates.crossJoin(types)
-      .crossJoin(s.range(0, 24).select(col("id").as("h")))
-      .select(col("event_type"), (col("day") * 24 + col("h")).as("t"))
-      .join(sparse, Seq("event_type", "t"), "left")
-      .select(col("event_type"), col("t"),
         coalesce(col("c"), lit(0L)).as("c"))
   }
 
@@ -828,12 +808,9 @@ object EventOps extends QueryModule {
       .select(col("user_id"), col("event_type"),
         unix_millis(col("ts")).as("ms")), windowMs)
 
-  /** The q227 transform over any (user_id, event_type, ms) relation —
-    * [[graft.streaming.Streams.funnelStream]]'s spec gates its keyed
-    * state machine against THIS spelling, so the streaming funnel can
-    * never drift from the batch parse. */
-  private[graft] def orderedFunnelOf(ev: DataFrame,
-                                     windowMs: Long): DataFrame = {
+  /** The q227 transform over any (user_id, event_type, ms) relation. */
+  private def orderedFunnelOf(ev: DataFrame,
+                              windowMs: Long): DataFrame = {
     val s1 = ev.where(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ms")).as("t1"))
     val s2 = ev.where(col("event_type") === "click").join(s1, "user_id")
@@ -1002,9 +979,7 @@ object EventOps extends QueryModule {
     * double, so mean and variance are identical doubles in both
     * engines, and the per-row (v−mean)² > 9·var comparison can never
     * disagree at the boundary. The 5-row moment table broadcasts; one
-    * corpus scan per side, no window. A streaming deployment keeps
-    * the same moments as [[graft.sinks.IncrementalAgg]] mergeable
-    * state. */
+    * corpus scan per side, no window. */
   def outliers(s: SparkSession, dir: String): DataFrame = {
     val D4 = DecimalType(28, 4)
     val ev = Tables.load(s, dir, "events")

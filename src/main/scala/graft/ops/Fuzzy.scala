@@ -61,10 +61,6 @@ object Fuzzy extends QueryModule {
     }
   }
 
-  /** Edit-distance ≤ τ self-join of a (id, name) relation. Output:
-    * one row per unordered id pair, id-ordered, with both names and
-    * the exact distance. Null names never match (both engines'
-    * levenshtein(NULL) is NULL → filtered). */
   /** (name → sorted member ids) of a non-null-name relation. */
   private[ops] def famOf(rel: DataFrame, idCol: String,
                     nameCol: String): DataFrame =
@@ -90,9 +86,15 @@ object Fuzzy extends QueryModule {
       .where(levenshtein(col("na"), col("nb")) <= maxEdits)
   }
 
-  def editDistanceJoin(s: SparkSession, rel: DataFrame,
-                       idCol: String, nameCol: String,
-                       maxEdits: Int = MaxEdits): DataFrame = {
+  /** Edit-distance ≤ τ self-join of a (id, name) relation. Output:
+    * one row per unordered id pair, id-ordered, with both names and
+    * the exact distance. Null names never match (both engines'
+    * levenshtein(NULL) is NULL → filtered). The seam that runs q196's
+    * famOf → nameMatches → expandNamePairs chain on any relation and
+    * τ, for FuzzySpec's brute-force checks. */
+  private[graft] def editDistanceJoin(s: SparkSession, rel: DataFrame,
+                                     idCol: String, nameCol: String,
+                                     maxEdits: Int = MaxEdits): DataFrame = {
     val fam = famOf(rel, idCol, nameCol)
     val matched = nameMatches(s, fam, maxEdits)
     expandNamePairs(matched, fam).orderBy("id_a", "id_b")

@@ -902,7 +902,7 @@ object Mining extends QueryModule {
     Query("q247_split_uniformity", splitUniformity(_, _),
       s"""WITH sp AS MATERIALIZED (
          |  SELECT * FROM (
-         |${Sampling.oracle("q102_hash_split")}
+         |${Sampling.HashSplitSql}
          |  ) t),
          |ct AS (
          |  SELECT split, source, CAST(count(*) AS BIGINT) AS o
@@ -1032,7 +1032,7 @@ object Mining extends QueryModule {
     Query("q212_pareto_front", paretoFront(_, _),
       s"""WITH dq AS MATERIALIZED (
          |  SELECT * FROM (
-         |${graft.text.CorpusStats.oracle("q154_linear_quality")}
+         |${graft.text.CorpusStats.LinearQualitySql}
          |  ) q154),
          |p AS MATERIALIZED (
          |  SELECT d.doc_id, d.n_chars, dq.w_sum

@@ -773,11 +773,11 @@ object Quality extends QueryModule {
          |    b.true_member AS blocked,
          |    (l.keep AND NOT r.flagged AND NOT b.true_member) AS keep
          |  FROM documents d
-         |  JOIN (${graft.text.CorpusStats.oracle("q154_linear_quality")}
+         |  JOIN (${graft.text.CorpusStats.LinearQualitySql}
          |  ) l ON l.doc_id = d.doc_id
-         |  JOIN (${graft.text.CorpusStats.oracle("q149_repetition_filter")}
+         |  JOIN (${graft.text.CorpusStats.RepetitionFilterSql}
          |  ) r ON r.doc_id = d.doc_id
-         |  JOIN (${Blocklist.oracle("q157_bloom_scrub")}
+         |  JOIN (${Blocklist.BloomScrubSql}
          |  ) b ON b.doc_id = d.doc_id) t)
          |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(CASE WHEN NOT v.keep_quality THEN 1 ELSE 0 END)
@@ -800,11 +800,11 @@ object Quality extends QueryModule {
          |  b.true_member AS blocked,
          |  (l.keep AND NOT r.flagged AND NOT b.true_member) AS keep
          |FROM documents d
-         |JOIN (${graft.text.CorpusStats.oracle("q154_linear_quality")}
+         |JOIN (${graft.text.CorpusStats.LinearQualitySql}
          |) l ON l.doc_id = d.doc_id
-         |JOIN (${graft.text.CorpusStats.oracle("q149_repetition_filter")}
+         |JOIN (${graft.text.CorpusStats.RepetitionFilterSql}
          |) r ON r.doc_id = d.doc_id
-         |JOIN (${Blocklist.oracle("q157_bloom_scrub")}
+         |JOIN (${Blocklist.BloomScrubSql}
          |) b ON b.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin),
     Query("q131_dq_rules", dqRules(_, _),

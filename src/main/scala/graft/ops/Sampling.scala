@@ -593,6 +593,19 @@ object Sampling extends QueryModule {
       s"('$src', CAST($base AS BIGINT), CAST($thresh AS BIGINT))"
     }.mkString(", ")
 
+  /** q102's oracle; Mining's oracles splice it. */
+  private[graft] lazy val HashSplitSql: String =
+    """WITH b AS (
+        |  SELECT doc_id, source,
+        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+        |      % 1000 AS bucket
+        |  FROM documents)
+        |SELECT doc_id, source, bucket,
+        |  CASE WHEN bucket < 900 THEN 'train'
+        |       WHEN bucket < 950 THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM b ORDER BY doc_id""".stripMargin
+
   lazy val records: Seq[Query] = Seq(
     Query("q310_sample_quantiles", sampleQuantiles(_, _),
       s"""WITH smp AS (
@@ -762,17 +775,7 @@ object Sampling extends QueryModule {
         |SELECT doc_id, n_tokens, quality, cum_tokens,
         |  (cum_tokens - n_tokens < 10000) AS kept
         |FROM c ORDER BY doc_id""".stripMargin)),
-    Query("q102_hash_split", hashSplit(_, _),
-      """WITH b AS (
-        |  SELECT doc_id, source,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        |      % 1000 AS bucket
-        |  FROM documents)
-        |SELECT doc_id, source, bucket,
-        |  CASE WHEN bucket < 900 THEN 'train'
-        |       WHEN bucket < 950 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin),
+    Query("q102_hash_split", hashSplit(_, _), HashSplitSql),
     Query("q103_quota_sample", quotaSample(_, _),
       """WITH h AS (
         |  SELECT doc_id, source,

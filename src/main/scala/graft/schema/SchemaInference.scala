@@ -1,6 +1,6 @@
 package graft.schema
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Sample-N CSV schema inference with the reference's exact semantics:
@@ -21,13 +21,9 @@ object SchemaInference {
     * sample actually contained (≤ sampleRows for short files). */
   final case class InferredSample(schema: StructType, rowsSampled: Int)
 
-  /** Infer a lattice schema for a header-ful CSV. */
-  def inferCsv(spark: SparkSession, path: String,
-               sampleRows: Int = DefaultSampleRows): StructType =
-    inferCsvSample(spark, path, sampleRows).schema
-
-  /** As [[inferCsv]], but also report the sampled row count (one read,
-    * one collect — no separate counting job). */
+  /** Infer a lattice schema for a header-ful CSV and report the
+    * sampled row count (one read, one collect — no separate counting
+    * job). */
   def inferCsvSample(spark: SparkSession, path: String,
                      sampleRows: Int = DefaultSampleRows): InferredSample = {
     val sample = spark.read
@@ -37,10 +33,6 @@ object SchemaInference {
     val rows = sample.collect() // bounded: ≤ sampleRows rows
     InferredSample(inferFields(sample.columns, rows), rows.length)
   }
-
-  /** Infer from an all-string sample DataFrame (header already parsed). */
-  def infer(sample: DataFrame): StructType =
-    inferFields(sample.columns, sample.collect())
 
   private def inferFields(names: Array[String],
                           rows: Array[Row]): StructType = {

@@ -18,11 +18,6 @@ object TypeLattice {
   case object Postgres extends Dialect { val name = "postgres" }
   case object MySql extends Dialect { val name = "mysql" }
 
-  /** The five lattice points, least-general (Boolean/Long/...) to the
-    * catch-all String. */
-  val LatticeTypes: Seq[DataType] =
-    Seq(BooleanType, LongType, DoubleType, TimestampType, StringType)
-
   /** Spark type → warehouse SQL type (both reference dialects emit the
     * same spellings for these five, agent-schema/app.py:36-44). */
   def sqlType(dt: DataType, dialect: Dialect = Postgres): String = dt match {
@@ -31,16 +26,6 @@ object TypeLattice {
     case FloatType | DoubleType               => "FLOAT"
     case TimestampType | TimestampNTZType | DateType => "TIMESTAMP"
     case _                                    => "VARCHAR(255)"
-  }
-
-  /** Project an arbitrary Spark type onto the lattice (what the
-    * reference's inference is able to express). */
-  def toLattice(dt: DataType): DataType = dt match {
-    case BooleanType => BooleanType
-    case ByteType | ShortType | IntegerType | LongType => LongType
-    case FloatType | DoubleType | _: DecimalType => DoubleType
-    case TimestampType | TimestampNTZType | DateType => TimestampType
-    case _ => StringType
   }
 
   /** Identifier sanitization: hyphens and spaces → underscores

@@ -15,9 +15,7 @@ import graft.util.Checkpoints
   * zone scan carries a LITERAL cell predicate, so parquet prunes at
   * the directory level — a 16-cell index with nProbe 4 reads 1/4 of
   * the corpus BY CONSTRUCTION, visible as `PartitionFilters` in the
-  * plan (pinned in IvfServeSpec). The mirror of
-  * [[graft.sinks.IndexMaintain]]'s "serve from the maintained zone"
-  * move, for vectors instead of postings.
+  * plan (pinned in IvfServeSpec).
   *
   * The fit/assignment spelling is [[Similarity.ivfFit]] — the same
   * code q53 runs — so the served index can never disagree with the
@@ -28,44 +26,13 @@ import graft.util.Checkpoints
 object IvfServe {
 
   /** Fit the seeded quantizer and write the serving zone:
-    * `zoneDir/corpus` (cell-partitioned) + `zoneDir/centroids` +
-    * `zoneDir/stats` (the build-time k-means objective — the drift
-    * baseline [[driftNeeded]] compares against). */
+    * `zoneDir/corpus` (cell-partitioned) + `zoneDir/centroids`. */
   def build(s: SparkSession, dir: String, zoneDir: String,
             nCells: Int = Similarity.IvfCells): Unit = {
     val (assigned, cdf) = Similarity.ivfFit(s, dir, nCells)
     assigned.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$zoneDir/corpus")
     cdf.write.mode("overwrite").parquet(s"$zoneDir/centroids")
-    writeStats(s, zoneDir, "build",
-      withD2(s, zoneDir, assigned), overwrite = true)
-  }
-
-  /** Squared-Euclidean distance of each row's `embedding` to its
-    * assigned cell's centroid — the per-row k-means objective. */
-  private def withD2(s: SparkSession, zoneDir: String,
-                     assigned: DataFrame): DataFrame = {
-    val cdf = Tables.read(s, s"$zoneDir/centroids")
-      .withColumnRenamed("cell", "c_cell")
-    assigned.join(broadcast(cdf), col("cell") === col("c_cell"))
-      .withColumn("d2", expr(
-        "aggregate(zip_with(embedding, cvec, (x, c) -> " +
-          "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE)) * " +
-          "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE))), " +
-          "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"))
-      .select(assigned.columns.map(col) :+ col("d2"): _*)
-  }
-
-  private def writeStats(s: SparkSession, zoneDir: String, kind: String,
-                         withD2Rows: DataFrame,
-                         overwrite: Boolean): Unit = {
-    import s.implicits._
-    val agg = withD2Rows
-      .agg(count(lit(1)), coalesce(sum(col("d2")), lit(0.0))).head()
-    Seq((kind, agg.getLong(0), agg.getDouble(1)))
-      .toDF("kind", "n", "sum_d2")
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"$zoneDir/stats")
   }
 
   /** The served quantizer's `predict`, replayed from the centroid
@@ -96,40 +63,18 @@ object IvfServe {
   }
 
   /** Fold a batch of NEW vectors into the served zone WITHOUT
-    * re-fitting — the [[graft.sinks.IndexMaintain]] move for the
-    * vector index: assignment is a broadcast-centroid argmin
+    * re-fitting: assignment is a broadcast-centroid argmin
     * (map-side, O(batch)), and the append-mode partitioned write
     * touches ONLY the batch's cell directories — never the corpus.
-    * Batch d2 stats append to the zone so [[driftNeeded]] can judge
-    * the frozen quantizer against its build-time objective. Contract:
-    * each vec_id arrives exactly once across build + batches (the
-    * IndexMaintain exactly-once contract). Returns rows appended. */
+    * Contract: each vec_id arrives exactly once across build +
+    * batches. Returns rows appended. */
   def applyBatch(s: SparkSession, zoneDir: String,
                  batch: DataFrame): Long = Checkpoints.scoped { rooted =>
     val assigned = rooted(assignByCentroids(s, zoneDir, batch))
     assigned.select(col("vec_id"), col("embedding"), col("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(s"$zoneDir/corpus")
-    writeStats(s, zoneDir, "batch", assigned, overwrite = false)
     assigned.count()
-  }
-
-  /** Quantizer drift check: TRUE when the post-build mean k-means
-    * objective (mean d2 of every batch-appended vector) exceeds the
-    * build-time mean by more than `tol` — the signal to re-fit
-    * ([[build]]) rather than keep folding batches into centroids
-    * that no longer describe the data. Reads only the KB-scale stats
-    * relation; O(1) in the corpus. No batches yet → no drift. */
-  def driftNeeded(s: SparkSession, zoneDir: String,
-                  tol: Double = 0.2): Boolean = {
-    val st = Tables.read(s, s"$zoneDir/stats")
-      .groupBy(col("kind"))
-      .agg(sum(col("n")).as("n"), sum(col("sum_d2")).as("sd"))
-      .collect().map(r => r.getString(0) ->
-        (r.getAs[Long]("n"), r.getAs[Double]("sd"))).toMap
-    val (bn, bs) = st.getOrElse("build", (0L, 0.0))
-    val (an, as_) = st.getOrElse("batch", (0L, 0.0))
-    an > 0 && bn > 0 && (as_ / an) > (bs / bn) * (1.0 + tol)
   }
 
   /** Top-k from the zone. `queries` carries (query_id, qv). The

@@ -357,6 +357,13 @@ object KMeans extends QueryModule {
       .orderBy("cluster", "rank")
   }
 
+  /** q173's oracle; Spectral's oracles splice it. */
+  private[graft] lazy val KmeansTopicsSql: String =
+    kmeansOracleSql +
+      """
+        |SELECT vec_id, cid AS cluster, d2 AS dist2
+        |FROM af WHERE rn = 1 ORDER BY vec_id""".stripMargin
+
   lazy val records: Seq[Query] = Seq(
     // the k-means CTE prefix + the q154 tokenization, lift-ranked
     Query("q255_topic_terms", topicTerms(_, _), (kmeansOracleSql +
@@ -392,10 +399,7 @@ object KMeans extends QueryModule {
         |SELECT cluster, rank, tok, df_in, df_tot, size_c, n_docs, lift
         |FROM rk WHERE rank <= 5
         |ORDER BY cluster, rank""".stripMargin)),
-    Query("q173_kmeans_topics", kmeansTopics(_, _), (kmeansOracleSql +
-      """
-        |SELECT vec_id, cid AS cluster, d2 AS dist2
-        |FROM af WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
+    Query("q173_kmeans_topics", kmeansTopics(_, _), KmeansTopicsSql),
     Query("q174_cluster_mix", clusterMix(_, _), clusterMixOracleSql),
     // same k-means CTE prefix; the heap operator's (dist2 DESC,
     // vec_id ASC) contract replayed as a window rank

@@ -124,8 +124,8 @@ object Pq extends QueryModule {
     * new vectors (fit is slow-moving; encode is per-row). Stream ≡
     * batch bit-identically because the expressions are stateless
     * (pinned in PqSpec). */
-  def encode(books: IndexedSeq[Seq[Array[Long]]],
-             vectors: DataFrame): DataFrame = {
+  private[graft] def encode(books: IndexedSeq[Seq[Array[Long]]],
+                            vectors: DataFrame): DataFrame = {
     val fx = vectors.select(col("vec_id"),
       expr(s"transform(embedding, x -> " +
         s"CAST(round(CAST(x AS DOUBLE) * ${KMeans.Fp}.0) AS BIGINT))")
@@ -325,10 +325,8 @@ object Pq extends QueryModule {
     * many vectors, their total and mean quantization error. The
     * index-operations dashboard behind the re-fit decision ("which
     * cells does the codebook fit badly" — drifted or out-of-
-    * distribution regions show up as high-mean-qerr cells; the
-    * serve-side drift check in [[IvfServe.driftNeeded]] is the
-    * trigger, this is the diagnosis). Joins the two compact zones
-    * (codes + assignment); the report is K rows.
+    * distribution regions show up as high-mean-qerr cells). Joins the
+    * two compact zones (codes + assignment); the report is K rows.
     *
     * The mean is ONE double division per cell from exact integers
     * (the module discipline). */

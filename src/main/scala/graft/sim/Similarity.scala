@@ -586,27 +586,21 @@ object Similarity extends QueryModule {
     * scale (q36's gate-mode ruling). Not oracle-gated: q52's fixed
     * signature IS the verified contract; this path is
     * recall-witnessed against brute force in SimilaritySpec and sf10
-    * probed (PLANS.md round-9). */
-  def nearDupPairsScaled(s: SparkSession, dir: String,
-                         threshold: Double = 0.45): DataFrame = {
+    * probed (PLANS.md round-9). The seam that runs the banded pipeline
+    * at the corpus-sized shape on any corpus. */
+  private[graft] def nearDupPairsScaled(s: SparkSession, dir: String,
+                                        threshold: Double = 0.45)
+      : DataFrame = {
     // metadata-cheap corpus count (parquet row-group stats) sizes the
     // banding — the one driver-side scalar this path needs
     val (bands, bits) = scaledBandShape(corpus(s, dir).count())
     nearDupPairsShaped(s, dir, bands, bits, threshold)
   }
 
-  /** The fixed-shape core of [[nearDupPairsScaled]] — (bands, bits)
-    * explicit, so the unpacked-banding pipeline itself is
-    * hash-gateable at any scale (q309 pins it at 8 × 4; the adaptive
-    * sizing on top is pure arithmetic, pinned in SimilaritySpec). */
   /** The unpacked scaled-SRP band-value ARRAY expression over an
     * `embedding` column — THE one derivation of the (band, bandVal)
-    * banding, used by the batch pair path, the bucket probe, the
-    * graph banding and the streaming admission twin. One spelling on
-    * purpose: NearDupMaintSpec pins stream ≡ batch on the premise
-    * that both sides band identically, which only holds structurally
-    * if there is exactly one copy of this arithmetic to edit. */
-  private[graft] def scaledBandVals(bands: Int, bits: Int): Column =
+    * banding, used by the batch pair path and the graph banding. */
+  private def scaledBandVals(bands: Int, bits: Int): Column =
     array((0 until bands).map { b =>
       (0 until bits).map { i =>
         when(dotLit(col("embedding"), projRow(b * bits + i)) > 0,
@@ -616,14 +610,16 @@ object Similarity extends QueryModule {
 
   /** The unpacked (vec_id, band, bandVal) relation of the scaled SRP
     * shape over any (vec_id, embedding) relation —
-    * [[scaledBandVals]] exploded; the spelling the streaming
-    * admission twin ([[graft.streaming.NearDupMaint]]) and the graph
-    * banding share with the batch path. */
-  private[graft] def bandRows(emb: DataFrame, bands: Int,
-                              bits: Int): DataFrame =
+    * [[scaledBandVals]] exploded, for the graph banding. */
+  private def bandRows(emb: DataFrame, bands: Int,
+                       bits: Int): DataFrame =
     emb.select(col("vec_id"),
       posexplode(scaledBandVals(bands, bits)).as(Seq("band", "bandVal")))
 
+  /** The fixed-shape core of [[nearDupPairsScaled]] — (bands, bits)
+    * explicit, so the unpacked-banding pipeline itself is
+    * hash-gateable at any scale (q309 pins it at 8 × 4; the adaptive
+    * sizing on top is pure arithmetic, pinned in SimilaritySpec). */
   def nearDupPairsShaped(s: SparkSession, dir: String, bands: Int,
                          bits: Int, threshold: Double): DataFrame = {
     val emb = corpus(s, dir).select(col("vec_id"), col("embedding"))
@@ -685,8 +681,9 @@ object Similarity extends QueryModule {
         expr(s"transform($vecCol, x -> CAST(round(x / q_scale * 127.0) " +
           "AS TINYINT))"))
 
-  /** Reconstruct float vectors from int8 (for re-rank or audit). */
-  def dequantize(df: DataFrame): DataFrame =
+  /** Reconstruct float vectors from int8: the reference SimilaritySpec
+    * bounds [[quantize]]'s reconstruction error against. */
+  private[graft] def dequantize(df: DataFrame): DataFrame =
     df.withColumn("dq_vec",
       expr("transform(q_vec, b -> CAST(b * q_scale / 127.0 AS FLOAT))"))
 
@@ -1672,6 +1669,36 @@ object Similarity extends QueryModule {
        |SELECT query_id, neighbor_id, cosine, rank FROM ranked
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
+  /** q107's oracle; Spectral's oracles splice it. */
+  private[graft] lazy val EmbeddingClustersSql: String =
+    sigCtes.replaceFirst("^WITH ", "WITH RECURSIVE ") +
+      s""",
+         |cand AS (
+         |  SELECT DISTINCT a.vec_id AS id1, c.vec_id AS id2
+         |  FROM banded a JOIN banded c
+         |    ON a.band = c.band AND a.bandVal = c.bandVal
+         |      AND a.vec_id < c.vec_id
+         |),
+         |p AS (
+         |  SELECT id1, id2 FROM (
+         |    SELECT id1, id2,
+         |      ${dotSql("e1.embedding", "e2.embedding")} AS cosine
+         |    FROM cand JOIN emb e1 ON e1.vec_id = id1
+         |              JOIN emb e2 ON e2.vec_id = id2)
+         |  WHERE cosine >= 0.45
+         |),
+         |e(src, dst) AS (
+         |  SELECT id1, id2 FROM p UNION ALL SELECT id2, id1 FROM p
+         |),
+         |reach(id, label) AS (
+         |  SELECT vec_id, vec_id FROM embeddings
+         |  UNION
+         |  SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.id
+         |)
+         |SELECT id AS vec_id, min(label) AS cluster_id,
+         |  (id = min(label)) AS keep
+         |FROM reach GROUP BY id ORDER BY id""".stripMargin
+
   lazy val records: Seq[Query] = Seq(
     // the q37 pair oracle embedded verbatim; vectors re-attached as
     // the c/q aliases the shared int8 dot spelling expects
@@ -1679,7 +1706,7 @@ object Similarity extends QueryModule {
       s"""WITH $int8CtesSql,
          |pr AS MATERIALIZED (
          |  SELECT id1, id2 FROM (
-         |${graft.dedup.Dedup.oracle("q37_minhash_lsh")}
+         |${graft.dedup.Dedup.MinhashLshSql}
          |  ) t),
          |sc AS (
          |  SELECT CAST($int8DotSql AS DOUBLE)
@@ -2170,32 +2197,5 @@ object Similarity extends QueryModule {
          |)
          |SELECT id1, id2, cosine FROM scored
          |WHERE cosine >= 0.45 ORDER BY id1, id2""".stripMargin),
-    Query("q107_embedding_clusters", embeddingClusters(_, _),
-      (sigCtes.replaceFirst("^WITH ", "WITH RECURSIVE ") +
-        s""",
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS id1, c.vec_id AS id2
-         |  FROM banded a JOIN banded c
-         |    ON a.band = c.band AND a.bandVal = c.bandVal
-         |      AND a.vec_id < c.vec_id
-         |),
-         |p AS (
-         |  SELECT id1, id2 FROM (
-         |    SELECT id1, id2,
-         |      ${dotSql("e1.embedding", "e2.embedding")} AS cosine
-         |    FROM cand JOIN emb e1 ON e1.vec_id = id1
-         |              JOIN emb e2 ON e2.vec_id = id2)
-         |  WHERE cosine >= 0.45
-         |),
-         |e(src, dst) AS (
-         |  SELECT id1, id2 FROM p UNION ALL SELECT id2, id1 FROM p
-         |),
-         |reach(id, label) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.id
-         |)
-         |SELECT id AS vec_id, min(label) AS cluster_id,
-         |  (id = min(label)) AS keep
-         |FROM reach GROUP BY id ORDER BY id""".stripMargin)))
+    Query("q107_embedding_clusters", embeddingClusters(_, _), EmbeddingClustersSql))
 }

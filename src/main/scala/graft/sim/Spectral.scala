@@ -549,8 +549,7 @@ object Spectral extends QueryModule {
     * survivor set feeds TWO joins per round, so the lineage would
     * recompute 2^rounds times if left lazy — each round's survivors
     * (and the shared undirected relation) are eagerly rooted through
-    * [[Checkpoints]], the single-app spelling of the ClusterMaint
-    * per-round zone write (the q208 UnionLoop lesson).
+    * [[Checkpoints]] (the q208 UnionLoop lesson).
     * Emits every node with its membership flag and in-core degree. */
   def kCore(s: SparkSession, dir: String): DataFrame = {
     val e = Similarity.knnGraphZone(s, dir)
@@ -1069,11 +1068,11 @@ object Spectral extends QueryModule {
     Query("q237_rand_index", randIndex(_, _),
       s"""WITH a AS MATERIALIZED (
          |  SELECT vec_id, cluster AS c1 FROM (
-         |${graft.sim.KMeans.oracle("q173_kmeans_topics")}
+         |${graft.sim.KMeans.KmeansTopicsSql}
          |  ) qa),
          |b AS MATERIALIZED (
          |  SELECT vec_id, cluster_id AS c2 FROM (
-         |${Similarity.oracle("q107_embedding_clusters")}
+         |${Similarity.EmbeddingClustersSql}
          |  ) qb),
          |ct AS MATERIALIZED (
          |  SELECT c1, c2, CAST(count(*) AS BIGINT) AS nij

@@ -6,12 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Incremental maintenance of a materialized equi-JOIN view — the
-  * third member of the IVM family ([[IncrementalAgg]] = scalar
-  * aggregates, [[IndexMaintain]] = collect-style aggregates, this =
-  * the join itself): keep `V = fact ⋈ dim` current as INSERT batches
-  * arrive on EITHER side, in any interleaving, without ever
-  * recomputing the full join.
+/** Incremental maintenance of a materialized equi-JOIN view: keep
+  * `V = fact ⋈ dim` current as INSERT batches arrive on EITHER side,
+  * in any interleaving, without ever recomputing the full join.
   *
   * The insert-only delta rule (Griffin & Libkin 1995, specialized):
   * on a fact batch, `ΔV = Δfact ⋈ dim_current`; on a dim batch,
@@ -32,9 +29,8 @@ import graft.Tables
   * O(fact). A fact batch joins only against the dim store (the small
   * side at 100 TB — customer/part-sized, not lineitem-sized).
   *
-  * Crash/replay exactly-once (the [[graft.streaming.HourlyCountMaint]]
-  * discipline): every apply is keyed by a caller-supplied `batchId`
-  * (foreachBatch's id). All three writes of one batch are
+  * Crash/replay exactly-once: every apply is keyed by a caller-supplied
+  * `batchId` (foreachBatch's id). All three writes of one batch are
   * deterministic, batch-keyed, and idempotent — the view delta lands
   * at `view/epoch=<batchId>` (swap-published), the side-store append
   * lands at `<side>/batch=<batchId>` (overwrite), and a `commits/`

@@ -117,8 +117,7 @@ object MergeOnRead {
     * cannot change the argmax within a kept one. [[diff]] depends on
     * this placement for its O(delta) contract: a semi-join ABOVE the
     * window would still shuffle the entire base ∪ deltas through the
-    * reconcile and only then discard untouched keys (the same
-    * join-above-window trap `IndexMaintain.applyBatch` documents). */
+    * reconcile and only then discard untouched keys. */
   private def readView(spark: SparkSession, root: String,
                        keyCols: Seq[String], asOf: Long,
                        touched: Option[DataFrame]): DataFrame = {

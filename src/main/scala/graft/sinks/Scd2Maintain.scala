@@ -4,13 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained SCD Type-2 zone — the IVM companion of
-  * [[graft.ops.EventOps.scd2Intervals]] (q218), following the
-  * [[IndexMaintain]] touched-blocks pattern: raw events append into a
-  * bucket-partitioned epoch chain, and each ingest batch recomputes
-  * intervals ONLY for the users the batch touches, merging the result
-  * into a [[MergeOnRead]] table that stores one row per user (the
-  * interval list as an array column — so the MERGE contract "one row
-  * per key" holds exactly).
+  * [[graft.ops.EventOps.scd2Intervals]] (q218), by touched keys: raw
+  * events append into a bucket-partitioned epoch chain, and each
+  * ingest batch recomputes intervals ONLY for the users the batch
+  * touches, merging the result into a [[MergeOnRead]] table that
+  * stores one row per user (the interval list as an array column — so
+  * the MERGE contract "one row per key" holds exactly).
   *
   * Cost per batch: O(touched users' event history), not O(corpus) —
   * the recompute reads only the touched users' bucket directories
@@ -37,24 +36,15 @@ object Scd2Maintain {
   private def withBucket(batch: DataFrame): DataFrame =
     batch.withColumn("bucket", pmod(col("user_id"), lit(Buckets)))
 
-  /** Publish `batch` as raw-events epoch `epoch`, bucket-partitioned:
-    * staged, so the epoch directory appears only complete. */
-  private def commitEvents(batch: DataFrame, root: String,
-                           epoch: Long): Unit =
-    SwapPublish.writeEpoch(withBucket(batch), eventsRoot(root), epoch,
-      "bucket")
-
-  /** Publish `batch` as the next sequential epoch. Sequential epochs
-    * live below [[StreamEpochBase]]: numbered past the newest stream
-    * epoch, one would take a later stream batch's commit marker and
-    * that batch would be skipped as committed. */
+  /** Publish `batch` as the next raw-events epoch (newest + 1),
+    * bucket-partitioned: staged, so the epoch directory appears only
+    * complete. */
   private def appendEvents(s: SparkSession, root: String,
                            batch: DataFrame): Unit = {
     val epoch = SwapPublish.listEpochs(s, eventsRoot(root))
-      .filter(_ < StreamEpochBase).lastOption.getOrElse(0L) + 1L
-    require(epoch < StreamEpochBase,
-      s"$root: sequential event epochs 1..${StreamEpochBase - 1} are all taken")
-    commitEvents(batch, root, epoch)
+      .lastOption.getOrElse(0L) + 1L
+    SwapPublish.writeEpoch(withBucket(batch), eventsRoot(root), epoch,
+      "bucket")
   }
 
   /** One row per user: the interval list packed as a sorted array —
@@ -102,56 +92,6 @@ object Scd2Maintain {
     MergeOnRead.merge(s, ivRoot(root),
       pack(graft.ops.EventOps.scd2Of(touchedEvents(s, root, users))),
       Seq("user_id"))
-  }
-
-  /** Epoch-dir namespace offset for stream batches, so retried
-    * foreachBatch ids can never collide with [[applyBatch]]'s
-    * sequential epochs, which stay below it. */
-  private val StreamEpochBase = 1000L
-
-  /** [[applyBatch]] keyed by a CALLER-supplied batch id — the
-    * foreachBatch retry contract. The raw-events epoch is the
-    * idempotency marker and is committed LAST: a batch whose epoch
-    * exists is skipped entirely (returns false); a crash after the
-    * interval MERGE but before the commit makes the retry re-merge
-    * the same rows, which converges (a later epoch re-asserting
-    * identical values leaves the reconciled view unchanged). The
-    * commit is staged, so a crash mid-write leaves a `.staging-` dir,
-    * not a half-written epoch that would read as committed. So the
-    * zone is exactly-once in effect under at-least-once delivery. */
-  def applyBatchIdempotent(s: SparkSession, root: String,
-                           batch: DataFrame, batchId: Long): Boolean = {
-    val epoch = StreamEpochBase + batchId
-    if (SwapPublish.listEpochs(s, eventsRoot(root)).contains(epoch)) false
-    else {
-      val b = batch.persist() // read twice: recompute + marker commit
-      try {
-        val users = b.select(col("user_id")).distinct()
-        // touched history = committed zone events ∪ this (uncommitted)
-        // batch — the batch is not in the chain until the marker lands
-        val ev = touchedEvents(s, root, users)
-          .unionByName(b.select(col("user_id"), col("event_id"),
-            col("event_type"), col("ms")))
-        MergeOnRead.merge(s, ivRoot(root),
-          pack(graft.ops.EventOps.scd2Of(ev)), Seq("user_id"))
-        commitEvents(b, root, epoch)
-      } finally b.unpersist()
-      true
-    }
-  }
-
-  /** Drive the zone from a stream: every micro-batch folds through
-    * [[applyBatchIdempotent]] under its batch id. */
-  def streamApply(s: SparkSession, root: String,
-                  stream: DataFrame, checkpoint: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        applyBatchIdempotent(s, root, df, id); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   /** The reconciled interval view, unpacked back to one row per

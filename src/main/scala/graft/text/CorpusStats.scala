@@ -748,12 +748,9 @@ object CorpusStats extends QueryModule {
     * quadratic all-pairs match relation is never formed).
     */
   /** THE one derivation of the window-truncated suffix relation over
-    * a tokenized (doc_id, w) corpus — shared by [[dupSubstrings]] and
-    * the incremental admission twin
-    * ([[graft.streaming.SuffixMaint]]), so the two sides cannot drift
-    * (the NearDupMaint/bandRows discipline). */
-  private[graft] def suffixRows(docs: DataFrame, minLen: Int,
-                                window: Int): DataFrame =
+    * a tokenized (doc_id, w) corpus, for [[dupSubstrings]]. */
+  private def suffixRows(docs: DataFrame, minLen: Int,
+                         window: Int): DataFrame =
     docs.where(size(col("w")) >= minLen)
       .select(col("doc_id"), col("w"),
         explode(sequence(lit(0), size(col("w")) - minLen)).as("p"))
@@ -761,8 +758,8 @@ object CorpusStats extends QueryModule {
         slice(col("w"), col("p") + lit(1), lit(window)).as("key"))
 
   /** Token-wise longest common prefix; null-tolerant (no neighbor =
-    * 0). Shared with [[graft.streaming.SuffixMaint]]. */
-  private[graft] def lcpTokens(a: Array[String], b: Array[String]): Int = {
+    * 0). */
+  private def lcpTokens(a: Array[String], b: Array[String]): Int = {
     if (a == null || b == null) return 0
     val n = math.min(a.length, b.length)
     var i = 0
@@ -1421,6 +1418,69 @@ object CorpusStats extends QueryModule {
         |      AS mean_bits
         |  FROM sc GROUP BY doc_id, lang)""".stripMargin
 
+  /** q154's oracle; Quality's and Mining's oracles splice it. */
+  private[graft] lazy val LinearQualitySql: String =
+    raw"""WITH tok AS (
+        |  SELECT doc_id,
+        |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
+        |  FROM documents),
+        |w AS (
+        |  SELECT doc_id,
+        |    ('0x' || substr(md5(tok), 1, 15))::BIGINT % 2001 - 1000 AS wt
+        |  FROM tok)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |  CAST(sum(wt) AS BIGINT) AS w_sum,
+        |  CAST(sum(wt) AS BIGINT) / CAST(count(*) AS BIGINT) AS mean_w,
+        |  sum(wt) >= 0 AS keep
+        |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  /** q149's oracle; Quality's oracles splice it. */
+  private[graft] lazy val RepetitionFilterSql: String =
+    raw"""WITH w AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
+        |  FROM documents),
+        |g AS (
+        |  SELECT doc_id, 1 AS n, unnest(w) AS g FROM w
+        |  UNION ALL
+        |  SELECT doc_id, 2 AS n, unnest(
+        |    CASE WHEN len(w) < 2 THEN [array_to_string(w, ' ')]
+        |         ELSE [array_to_string(w[i+1:i+2], ' ')
+        |               for i in range(0, len(w) - 1)] END) FROM w
+        |  UNION ALL
+        |  SELECT doc_id, 3 AS n, unnest(
+        |    CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
+        |         ELSE [array_to_string(w[i+1:i+3], ' ')
+        |               for i in range(0, len(w) - 2)] END) FROM w),
+        |c AS (
+        |  SELECT doc_id, n,
+        |    ('0x' || substr(md5(g), 1, 15))::BIGINT AS gh,
+        |    CAST(count(*) AS BIGINT) AS c
+        |  FROM g GROUP BY 1, 2, 3),
+        |a AS (
+        |  SELECT doc_id, n, CAST(sum(c) AS BIGINT) AS tot,
+        |    CAST(max(c) AS BIGINT) AS mx,
+        |    CAST(coalesce(sum(c) FILTER (WHERE c > 1), 0) AS BIGINT) AS dup
+        |  FROM c GROUP BY 1, 2),
+        |p AS (
+        |  SELECT doc_id,
+        |    max(CASE WHEN n = 1 THEN tot END) AS n_tokens,
+        |    max(CASE WHEN n = 1 THEN mx END) AS top_token_count,
+        |    max(CASE WHEN n = 2 THEN tot END) AS n_bigrams,
+        |    max(CASE WHEN n = 2 THEN mx END) AS top_bigram_count,
+        |    max(CASE WHEN n = 3 THEN tot END) AS n_trigrams,
+        |    max(CASE WHEN n = 3 THEN dup END) AS dup_trigram_count
+        |  FROM a GROUP BY 1)
+        |SELECT doc_id, n_tokens, top_token_count,
+        |  top_token_count / n_tokens AS top_token_frac,
+        |  n_bigrams, top_bigram_count,
+        |  top_bigram_count / n_bigrams AS top_bigram_frac,
+        |  n_trigrams, dup_trigram_count,
+        |  dup_trigram_count / n_trigrams AS dup_trigram_frac,
+        |  (top_token_count / n_tokens > 0.2 OR
+        |   top_bigram_count / n_bigrams > 0.18 OR
+        |   dup_trigram_count / n_trigrams > 0.3) AS flagged
+        |FROM p ORDER BY doc_id""".stripMargin
+
   lazy val records: Seq[Query] = Seq(
     Query("q171_dsir_weights", dsirWeights(_, _),
       (raw"""WITH d AS (
@@ -1513,51 +1573,7 @@ object CorpusStats extends QueryModule {
         |ORDER BY r.doc_id""".stripMargin)),
     // the n<2/n<3 CASE arms mirror Tokens.ngramsOf's whole-text
     // fallback for short docs exactly
-    Query("q149_repetition_filter", repetitionFilter(_, _),
-      raw"""WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\v\f\r]+') AS w
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, 1 AS n, unnest(w) AS g FROM w
-        |  UNION ALL
-        |  SELECT doc_id, 2 AS n, unnest(
-        |    CASE WHEN len(w) < 2 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i+1:i+2], ' ')
-        |               for i in range(0, len(w) - 1)] END) FROM w
-        |  UNION ALL
-        |  SELECT doc_id, 3 AS n, unnest(
-        |    CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i+1:i+3], ' ')
-        |               for i in range(0, len(w) - 2)] END) FROM w),
-        |c AS (
-        |  SELECT doc_id, n,
-        |    ('0x' || substr(md5(g), 1, 15))::BIGINT AS gh,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM g GROUP BY 1, 2, 3),
-        |a AS (
-        |  SELECT doc_id, n, CAST(sum(c) AS BIGINT) AS tot,
-        |    CAST(max(c) AS BIGINT) AS mx,
-        |    CAST(coalesce(sum(c) FILTER (WHERE c > 1), 0) AS BIGINT) AS dup
-        |  FROM c GROUP BY 1, 2),
-        |p AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN n = 1 THEN tot END) AS n_tokens,
-        |    max(CASE WHEN n = 1 THEN mx END) AS top_token_count,
-        |    max(CASE WHEN n = 2 THEN tot END) AS n_bigrams,
-        |    max(CASE WHEN n = 2 THEN mx END) AS top_bigram_count,
-        |    max(CASE WHEN n = 3 THEN tot END) AS n_trigrams,
-        |    max(CASE WHEN n = 3 THEN dup END) AS dup_trigram_count
-        |  FROM a GROUP BY 1)
-        |SELECT doc_id, n_tokens, top_token_count,
-        |  top_token_count / n_tokens AS top_token_frac,
-        |  n_bigrams, top_bigram_count,
-        |  top_bigram_count / n_bigrams AS top_bigram_frac,
-        |  n_trigrams, dup_trigram_count,
-        |  dup_trigram_count / n_trigrams AS dup_trigram_frac,
-        |  (top_token_count / n_tokens > 0.2 OR
-        |   top_bigram_count / n_bigrams > 0.18 OR
-        |   dup_trigram_count / n_trigrams > 0.3) AS flagged
-        |FROM p ORDER BY doc_id""".stripMargin),
+    Query("q149_repetition_filter", repetitionFilter(_, _), RepetitionFilterSql),
     Query("q153_ict_pairs", ictPairs(_, _),
       (cdcCtes +
         raw""",
@@ -1644,20 +1660,7 @@ object CorpusStats extends QueryModule {
         |  CAST(min(start_off) AS BIGINT) AS first_off,
         |  CAST(max(start_off + n_tokens) AS BIGINT) AS end_off
         |FROM a GROUP BY shard_id ORDER BY shard_id""".stripMargin),
-    Query("q154_linear_quality", linearQuality(_, _),
-      raw"""WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(text), '[ \t\n\v\f\r]+')) AS tok
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(tok), 1, 15))::BIGINT % 2001 - 1000 AS wt
-        |  FROM tok)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(wt) AS BIGINT) AS w_sum,
-        |  CAST(sum(wt) AS BIGINT) / CAST(count(*) AS BIGINT) AS mean_w,
-        |  sum(wt) >= 0 AS keep
-        |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q154_linear_quality", linearQuality(_, _), LinearQualitySql),
     Query("q151_surprisal", surprisalFilter(_, _),
       raw"""WITH tok AS (
         |  SELECT doc_id,

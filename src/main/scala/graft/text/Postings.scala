@@ -269,9 +269,7 @@ object Postings extends QueryModule {
     * array columns engine-specifically, strings identically).
     */
   /** (term, doc_id, tf, blk) postings of a documents relation — the
-    * ONE tokenize→tf→block spelling behind both the q118 index query
-    * and [[graft.sinks.IndexMaintain]]'s incremental zone, so the
-    * maintained index can never drift from the query's definition. */
+    * ONE tokenize→tf→block spelling behind the q118 index query. */
   private[graft] def tfRelation(docs: DataFrame,
                                 blockSize: Int): DataFrame =
     docs.select(col("doc_id"),
@@ -280,21 +278,15 @@ object Postings extends QueryModule {
       .agg(count(lit(1)).as("tf"))
       // FLOOR division, spelled exactly: Spark's DIV truncates toward
       // zero while the DuckDB oracle's `//` floors, so a negative
-      // doc_id would land in a different block per engine (and route
-      // IndexMaintain's touched-block maintenance differently).
+      // doc_id would land in a different block per engine.
       // pmod >= 0 makes the numerator exactly divisible, so the DIV
       // is an exact integer quotient == floor — no double arithmetic.
-      // MIGRATION: an IndexMaintain zone persisted under the earlier
-      // truncate-toward-zero spelling keys negative-id postings under
-      // blk+1; such zones (negative doc ids only) must be rebuilt
-      // (IndexMaintain.rebuild) once, or stale rows are never
-      // reconciled by later batches.
       .withColumn("blk",
         expr(s"(doc_id - pmod(doc_id, $blockSize)) DIV $blockSize"))
 
   /** The index relation over a tf relation: per (term, blk) — df, cf,
-    * doc-sorted postings/tfs ARRAYS. Shared with IndexMaintain (the
-    * zone keeps arrays; q118 projects the comma-joined export form). */
+    * doc-sorted postings/tfs ARRAYS (q118 projects the comma-joined
+    * export form). */
   private[graft] def aggIndex(tf: DataFrame): DataFrame =
     tf.groupBy(col("term"), col("blk"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),

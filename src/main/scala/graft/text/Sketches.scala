@@ -228,22 +228,6 @@ object Sketches extends QueryModule {
       .select(explode(Tokens.ngramsOf(col("w"), 3)).as("g"))
   }
 
-  /** Count-Min counter table of a shingle stream: (row, bucket) →
-    * count. Each occurrence feeds all d rows (bucket = salted 60-bit
-    * hash mod w), and partial aggregation shrinks every map task to
-    * ≤ d·w cells before the shuffle — the sketch IS the partial-agg
-    * state, which is why it merges by plain `sum` ([[cmApplyBatch]]). */
-  private[text] def cmCounters(grams: DataFrame): DataFrame =
-    grams
-      .select(explode(expr(s"sequence(0, ${CmD - 1})")).as("r"),
-        col("g"))
-      .select(col("r"),
-        (graft.dedup.Md5Prefix.h(
-          concat(col("r").cast("string"), lit(":"), col("g"))) % CmW)
-          .cast("int").as("bucket"))
-      .groupBy(col("r"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-
   /** q197: Count-Min frequency estimates for the top-[[CmTop]]
     * shingles — point estimate = min over rows of the salted-bucket
     * counter, against the exact count as the gate-affordable audit
@@ -260,9 +244,7 @@ object Sketches extends QueryModule {
     // runs once (runtime-reused) and each branch reduces distinct
     // grams, not occurrences:
     //  - counters: a Count-Min cell is Σ n_exact(g) over the grams
-    //    salting into it — identical BIGINTs to counting occurrences
-    //    (the cmCounters spelling, kept for the streaming zone whose
-    //    input arrives in batches);
+    //    salting into it — identical BIGINTs to counting occurrences;
     //  - total: Σ n_exact ≡ count(*) over the stream.
     // At 100 TB this is strictly better: one corpus pass, and the
     // sketch build aggregates |distinct shingles|·d rows instead of
@@ -303,36 +285,6 @@ object Sketches extends QueryModule {
             lit(CmBound / CmW) * col("n_total").cast("double"))
           .as("within_bound"))
       .orderBy(col("n_exact").desc, col("g"))
-  }
-
-  /** Build the Count-Min counter ZONE (≤ d·w rows at any corpus
-    * size) for a documents relation. */
-  def cmZoneBuild(docs: DataFrame, path: String): Unit =
-    cmCounters(
-      docs.select(Tokens.whitespace(col("text")).as("w"))
-        .where(size(col("w")) >= 3)
-        .select(explode(Tokens.ngramsOf(col("w"), 3)).as("g")))
-      .write.mode("overwrite").parquet(path)
-
-  /** Fold a batch into the counter zone WITHOUT rescanning the
-    * corpus — cellwise SUM is the Count-Min merge, so maintained ≡
-    * rebuilt bit-identically (the [[hllZoneApplyBatch]] discipline;
-    * spec-pinned). */
-  def cmZoneApplyBatch(s: SparkSession, path: String,
-                       batch: DataFrame): Unit = {
-    val merged = Tables.read(s, path)
-      .unionByName(cmCounters(
-        batch.select(Tokens.whitespace(col("text")).as("w"))
-          .where(size(col("w")) >= 3)
-          .select(explode(Tokens.ngramsOf(col("w"), 3)).as("g"))))
-      .groupBy(col("r"), col("bucket"))
-      .agg(sum(col("c")).as("c"))
-      .collect() // constant-bounded: ≤ d·w rows
-    import scala.jdk.CollectionConverters._
-    val out = s.createDataFrame(
-      merged.toSeq.asJava,
-      Tables.read(s, path).schema)
-    out.write.mode("overwrite").parquet(path)
   }
 
   /** Hashed-bucket count and drift flag threshold of q206. */
@@ -399,63 +351,6 @@ object Sketches extends QueryModule {
         when(col("tv_drift").isNotNull, col("tv_drift") > DriftTau))
       .orderBy("source")
   }
-
-  /** The per-(source, reg) register relation of a documents
-    * relation — the mergeable state both the zone maintenance and
-    * [[hllDistinct]] derive from. */
-  private def registersOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("source"), Tokens.whitespace(col("text")).as("w"))
-      .where(size(col("w")) >= 3)
-      .select(col("source"),
-        explode(Tokens.ngramsOf(col("w"), 3)).as("g"))
-      .select(col("source"), graft.dedup.Md5Prefix.h(col("g")).as("h"))
-      .select(col("source"),
-        (col("h") % HllM).cast("int").as("reg"),
-        shiftright(col("h"), 6).as("wbits"))
-      .select(col("source"), col("reg"),
-        expr("CASE WHEN wbits = 0 THEN 55 " +
-          "ELSE 55 - length(bin(wbits)) END").as("rank"))
-      .groupBy(col("source"), col("reg"))
-      .agg(max(col("rank")).as("m"))
-
-  /** Build the HLL register ZONE for a documents relation — the
-    * persisted form of the q179 sketch (≤ |sources|·64 rows at ANY
-    * corpus size: the zone is state, not data). */
-  def hllZoneBuild(docs: DataFrame, path: String): Unit =
-    registersOf(docs).write.mode("overwrite").parquet(path)
-
-  /** Fold a batch of new documents into the register zone WITHOUT
-    * rescanning the corpus — elementwise max IS the HLL merge, so
-    * maintained ≡ rebuilt bit-identically (the IndexMaintain /
-    * IvfServe.applyBatch discipline for the sketch family; spec-
-    * pinned). Cost: O(batch) to sketch the batch + a rewrite of the
-    * constant-bounded zone. */
-  def hllZoneApplyBatch(s: SparkSession, path: String,
-                        batch: DataFrame): Unit = {
-    val merged = Tables.read(s, path)
-      .unionByName(registersOf(batch))
-      .groupBy(col("source"), col("reg"))
-      .agg(max(col("m")).as("m"))
-      .collect() // constant-bounded: ≤ |sources|·64 rows
-    import scala.jdk.CollectionConverters._
-    val out = s.createDataFrame(
-      merged.toSeq.asJava,
-      Tables.read(s, path).schema)
-    out.write.mode("overwrite").parquet(path)
-  }
-
-  /** Read a register zone back as the q179-shaped summary. */
-  def hllZoneSummary(s: SparkSession, path: String): DataFrame =
-    Tables.read(s, path)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_regs_hit"),
-        sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(55 - m AS INT))"))
-          .as("z_hit"))
-      .select(col("source"), col("n_regs_hit"),
-        (col("z_hit") + (lit(HllM.toLong) - col("n_regs_hit")) *
-          expr("shiftleft(CAST(1 AS BIGINT), 55)")).as("z_scaled"))
-      .orderBy("source")
 
   // ---------------------------------------------------------------- oracle
 

@@ -31,23 +31,22 @@ class BlocklistSpec extends SparkSpec {
     import org.scalacheck.rng.Seed
     import spark.implicits._
     // arbitrary content — unicode included — through the REAL
-    // production path (blocklistAdmission runs the same column math
-    // on a batch DataFrame): every blocked text must hit
+    // production path: q157 over a documents table of generated text,
+    // where every blocked (17th) text must hit
     val gen = Gen.nonEmptyListOf(Gen.frequency(
       4 -> Gen.alphaNumChar, 1 -> Gen.oneOf('é', 'ß', '中', '☃', '\t')))
       .map(_.mkString)
     val texts = (0 until 300).flatMap(i =>
       gen.apply(Gen.Parameters.default, Seed(99L + i))).distinct
-    val docs = texts.zipWithIndex
+    val dir = SparkSpec.tempDir("bloom_unicode").toString
+    texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val blocked = texts.zipWithIndex.collect {
-      case (t, i) if i % 3 == 0 => t }.toDF("text")
-    val out = graft.streaming.Streams.blocklistAdmission(docs, blocked)
-      .collect().map(r =>
-        r.getAs[Long]("doc_id") -> r.getAs[Boolean]("bloom_hit")).toMap
-    texts.zipWithIndex.foreach { case (_, i) =>
-      if (i % 3 == 0)
-        assert(out(i.toLong), s"false negative at doc $i")
+      .write.parquet(s"$dir/documents.parquet")
+    val got = Blocklist.bloomScrub(spark, dir).collect().map(r =>
+      r.getAs[Long]("doc_id") -> r.getAs[Boolean]("bloom_hit")).toMap
+    assert(got.size == texts.size)
+    texts.indices.filter(_ % 17 == 0).foreach { i =>
+      assert(got(i.toLong), s"false negative at doc $i")
     }
   }
 

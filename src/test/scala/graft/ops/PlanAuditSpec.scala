@@ -5,7 +5,7 @@ import graft.SparkSpec
 /** Pins the plan properties the 100 TB design depends on — a Spark
   * upgrade or refactor that silently loses pushdown, pruning, or a
   * broadcast should fail here, not in a production plan audit.
-  * (Complements HintsSpec/BucketingSpec/DedupSpec's plan assertions.) */
+  * (Complements HintsSpec/DedupSpec's plan assertions.) */
 class PlanAuditSpec extends SparkSpec {
 
   private def planOf(q: String): String =

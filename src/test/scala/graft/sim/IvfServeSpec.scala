@@ -82,16 +82,6 @@ class IvfServeSpec extends SparkSpec {
       nProbe = Similarity.IvfCells).collect()
     val brute = Similarity.knnBrute(spark, sf(), k = 5).collect()
     assert(served.sameElements(brute))
-    // same-distribution batch does not trip the drift check…
-    assert(!IvfServe.driftNeeded(spark, zone2))
-    // …but a distribution shift (norm-3 vectors, far off the unit
-    // shell the quantizer was fit on) must
-    IvfServe.applyBatch(spark, zone2,
-      all.where(col("vec_id") < 50)
-        .select((col("vec_id") + 1000000).as("vec_id"),
-          expr("transform(embedding, x -> x * CAST(3.0 AS FLOAT))")
-            .as("embedding")))
-    assert(IvfServe.driftNeeded(spark, zone2))
   }
 
   test("partial probe keeps usable recall vs brute force") {

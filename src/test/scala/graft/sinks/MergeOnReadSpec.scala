@@ -156,4 +156,23 @@ class MergeOnReadSpec extends SparkSpec {
       MergeOnRead.init(spark, root, df)
     }
   }
+
+  test("a key predicate on the reconciled view reaches the parquet scans") {
+    import org.apache.spark.sql.functions.col
+    import graft.text.Postings
+    // a predicate on a key column must push BELOW the reconcile window
+    // (the keys are its partition keys) into the scan — a join-shaped
+    // filter would reconcile the whole table per touched-key lookup
+    val docs = graft.Tables.load(spark, sf(), "documents")
+    val root = newRoot()
+    MergeOnRead.init(spark, root, Postings.aggIndex(
+      Postings.tfRelation(docs.where(col("doc_id") < 40), blockSize = 8)))
+    val reconciled = MergeOnRead.read(spark, root, Seq("term", "blk"))
+      .where(col("blk").isInCollection(Seq(4L, 5L)))
+    val plan = reconciled.queryExecution.executedPlan.toString
+    // Catalyst may spell a small set as In(...) or fold it to EqualTo
+    assert(plan.matches(
+      "(?s).*PushedFilters: \\[[^\\]]*(In|EqualTo)\\(blk[^\\]]*\\].*"),
+      "blk IN (...) did not reach the parquet scan:\n" + plan)
+  }
 }

@@ -63,7 +63,7 @@ class WarehouseSpec extends SparkSpec {
       conn.createStatement().execute(
         "CREATE TABLE nation_ddl (" + nation.schema.fields.map(f =>
           s"${TypeLattice.sanitize(f.name)} " +
-            TypeLattice.sqlType(TypeLattice.toLattice(f.dataType)))
+            TypeLattice.sqlType(f.dataType))
           .mkString(", ") + ")")
       Warehouse.jdbcWriter(nation, url, "nation_ddl", "app", "app")
         .mode("overwrite").save()

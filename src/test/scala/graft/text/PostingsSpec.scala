@@ -157,8 +157,7 @@ class PostingsSpec extends SparkSpec {
     import spark.implicits._
     // Spark's DIV truncates toward zero; DuckDB's // floors. The blk
     // spelling must floor on both engines or a negative doc_id lands
-    // in different blocks per engine AND in a different block than
-    // IndexMaintain would touch.
+    // in different blocks per engine.
     val docs = Seq((-150L, "x"), (-100L, "x"), (-1L, "x"), (0L, "x"),
       (99L, "x"), (100L, "x")).toDF("doc_id", "text")
     val blk = Postings.tfRelation(docs, blockSize = 100)

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.dedup.Dedup
-import graft.sim.Spectral
-import graft.sinks.IndexMaintain
+import graft.sim.{IvfServe, Spectral}
 
 /** The durability dial: with `graft.checkpoint.dir` set, iterative
   * loops must root each round on RELIABLE checkpoints (files in the
@@ -210,18 +209,23 @@ class CheckpointsSpec extends SparkSpec {
   }
 
   test("a maintenance batch under the reliable dial: same state, roots freed") {
-    val docs = graft.Tables.load(spark, sf(), "documents")
-    def state(): Set[Seq[Any]] = {
-      val root = SparkSpec.tempDir("graft-ckpt-idx").toString + "/zone"
-      IndexMaintain.init(spark, root, docs.where(col("doc_id") < 40),
-        blockSize = 8)
-      IndexMaintain.applyBatch(spark, root,
-        docs.where(col("doc_id") >= 40), blockSize = 8)
-      IndexMaintain.read(spark, root).collect().map(_.toSeq).toSet
+    val emb = graft.Tables.load(spark, sf(), "embeddings")
+    // the zone is built outside the dial; only the batch runs under it
+    def zone(): String = {
+      val base = SparkSpec.tempDir("graft-ckpt-ivf").toString
+      emb.where(col("vec_id") >= 50).write.parquet(s"$base/embeddings.parquet")
+      IvfServe.build(spark, base, s"$base/zone")
+      s"$base/zone"
     }
-    val local = state()
-    withDial("graft-ckpt-idx-dial") { dir =>
-      assert(state() == local)
+    def state(z: String): Set[Seq[Any]] = {
+      IvfServe.applyBatch(spark, z, emb.where(col("vec_id") < 50))
+      spark.read.parquet(s"$z/corpus").select("vec_id", "cell")
+        .collect().map(_.toSeq).toSet
+    }
+    val local = state(zone())
+    val z = zone()
+    withDial("graft-ckpt-ivf-dial") { dir =>
+      assert(state(z) == local)
       assert(spark.sparkContext.getCheckpointDir
           .exists(_.contains(dir.getFileName.toString)),
         "applyBatch must root through the reliable dial")
